@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** The measured action: reference EVERY output column (see the long
     * comment at the call site — a bare .count() lets column pruning
@@ -28,17 +27,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // optional comma-separated subset for local iteration
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -99,7 +88,7 @@ object Bench {
     // aggregate functions from the counted plan — q_tpcds_rollup's
     // three revenue aggregates (and the price columns feeding them)
     // vanished, so its bench row timed a keys-only star join (r14
-    // finding, tools/TopkDebug.scala). Hashing every column into a
+    // finding, PLANS_r15.md). Hashing every column into a
     // summed xxhash64 and COLLECTING the one-row sum pins the full
     // declared plan (a .count() on the sum would let pruning cascade
     // right back through the hash). Map-typed columns are JSON-ified

@@ -1,0 +1,37 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one place a graft session is built. Every main and the test
+  * suites start from [[local]], so the engine's semantics cannot drift
+  * between them:
+  *
+  *  - `GraftExtensions` (the `graft_*` SQL functions and parser);
+  *  - `local[cpus]` with `cpus` shuffle partitions;
+  *  - UTC session time zone;
+  *  - ANSI off — reference parity with Spark 3.5 (`x/0 → NULL`,
+  *    SURVEY.md §7.5), which Spark 4 flips by default;
+  *  - AQE on;
+  *  - `legacy.parquet.nanosAsLong` — events.parquet stores
+  *    TIMESTAMP(NANOS), read as long and converted in `Tables.load`;
+  *  - no UI.
+  *
+  * Callers add only deployment settings: master URL, app name and
+  * warehouse dir. */
+object Session {
+
+  /** `SPARK_GRAFT_CPUS`, else `default` — the core count mains run on. */
+  def envCpus(default: Int = 4): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.toInt)
+
+  def local(cpus: Int = envCpus()): SparkSession.Builder =
+    SparkSession.builder()
+      .withExtensions(new graft.functions.GraftExtensions)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.ansi.enabled", "false")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+}

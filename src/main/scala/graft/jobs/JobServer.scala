@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 import java.util.concurrent.atomic.AtomicLong
-import java.util.concurrent.{ConcurrentHashMap, Executors, ScheduledExecutorService, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, ExecutorService, Executors, ScheduledExecutorService, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
@@ -44,6 +44,7 @@ class JobServer(
   private val scheduler: ScheduledExecutorService =
     Executors.newScheduledThreadPool(1)
   private var server: HttpServer = _
+  private var handlers: ExecutorService = _
 
   private val tsFmt = DateTimeFormatter.ofPattern("uuuu-MM-dd HH:mm:ss")
     .withZone(ZoneOffset.UTC)
@@ -82,13 +83,18 @@ class JobServer(
         respond(ex, 200, ok("Spark job scheduled"))
       }
     })
-    server.setExecutor(Executors.newFixedThreadPool(4))
+    handlers = Executors.newFixedThreadPool(4)
+    server.setExecutor(handlers)
     server.start()
     server.getAddress.getPort
   }
 
   def stop(): Unit = {
     if (server != null) server.stop(0)
+    if (handlers != null) {
+      handlers.shutdownNow()
+      handlers.awaitTermination(5, TimeUnit.SECONDS)
+    }
     scheduler.shutdownNow()
   }
 

@@ -26,8 +26,10 @@ object MarketJob {
           jobId: String, datasetPath: String, outputRoot: String): Unit = {
     val market = Csv.readInferred(spark, datasetPath)
     val (returns, average) = MarketPipeline.run(market, initialDate, finalDate)
-    Csv.writeSingle(returns, s"$outputRoot/$jobId/daily_returns")
-    Csv.writeSingle(average, s"$outputRoot/$jobId/average_daily_return")
+    try {
+      Csv.writeSingle(returns, s"$outputRoot/$jobId/daily_returns")
+      Csv.writeSingle(average, s"$outputRoot/$jobId/average_daily_return")
+    } finally returns.unpersist() // a long-lived server runs many jobs
   }
 
   def main(args: Array[String]): Unit = {
@@ -43,15 +45,9 @@ object MarketJob {
       System.err.println(s"invalid yyyy-MM-dd date(s): ${dateErrs.mkString(", ")}")
       sys.exit(-1)
     }
-    val spark = SparkSession.builder()
-      .appName(s"graft-market-job-$jobId")
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val builder = graft.Session.local().appName(s"graft-market-job-$jobId")
+    sys.env.get("SPARK_MASTER").foreach(builder.master)
+    val spark = builder.getOrCreate()
     try run(spark, initial, fin, jobId, dataset, outputRoot)
     catch { case e: Throwable =>
       System.err.println(s"job $jobId failed: $e")

@@ -31,9 +31,6 @@ import graft.ops.Versioned
   */
 object LakeFixtures {
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** First-staging seconds per fixture key — same attribution contract
     * as [[Memo.buildLog]] (r17): the bench warm-up absorbs each
     * fixture's one-time staging; the artifact records it. */
@@ -45,33 +42,28 @@ object LakeFixtures {
       .select(col("o_orderkey").as("k"), col("o_custkey").as("c"),
         col("o_orderstatus").as("st"), col("o_totalprice").as("p"))
 
-  private def build(key: String, prefix: String)(init: String => Unit): String =
-    cache.computeIfAbsent(key, _ => {
-      val dir = java.nio.file.Files.createTempDirectory(prefix).toString
-      val t0 = System.nanoTime()
-      init(dir)
-      buildLog.put(key, (System.nanoTime() - t0) / 1e9)
-      dir
-    })
-
-  /** [[build]] for callers outside this object: JVM-lifetime memo of
-    * any immutable derived directory fixture (clustered layouts,
+  /** JVM-lifetime memo ([[graft.Scratch.memo]]) of any immutable
+    * derived directory fixture (base lakes, clustered layouts,
     * multi-commit replay bases). Only READ-ONLY fixtures may memoize —
     * anything a query mutates must stay per-run. */
   def memoDir(key: String, prefix: String)(init: String => Unit): String =
-    build(key, prefix)(init)
+    graft.Scratch.memo(prefix, key) { dir =>
+      val t0 = System.nanoTime()
+      init(dir)
+      buildLog.put(key, (System.nanoTime() - t0) / 1e9)
+    }
 
   /** Full orders, range-clustered on the customer key into 16 files —
     * the erasure-locality layout (one customer ⇒ one file). */
   def ordersRange16(s: SparkSession, d: String): String =
-    build(s"r16|$d", "graft_base_r16") { dir =>
+    memoDir(s"r16|$d", "graft_base_r16") { dir =>
       Versioned.init(ordersBase(s, d).repartitionByRange(16, col("c")), dir)
     }
 
   /** Even order keys in 16 round-robin files — the wave-25/32
     * merge-round base. */
   def ordersEvens16(s: SparkSession, d: String): String =
-    build(s"e16|$d", "graft_base_e16") { dir =>
+    memoDir(s"e16|$d", "graft_base_e16") { dir =>
       Versioned.init(ordersBase(s, d).filter(col("k") % 2 === 0)
         .repartition(16), dir)
     }
@@ -79,7 +71,7 @@ object LakeFixtures {
   /** (o_orderkey, o_orderstatus, o_totalprice) partitioned by status —
     * the partition-scoped merge base. */
   def ordersByStatus(s: SparkSession, d: String): String =
-    build(s"st|$d", "graft_base_st") { dir =>
+    memoDir(s"st|$d", "graft_base_st") { dir =>
       Versioned.init(Tables.load(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice")),
         dir, partitionCol = Some("o_orderstatus"))
@@ -90,7 +82,7 @@ object LakeFixtures {
     * sidecar on k — the read-only layout for the data-skipping and
     * point-lookup probes and the metadata-only aggregates. */
   def ordersBuckets(s: SparkSession, d: String): String =
-    build(s"bkt|$d", "graft_base_bkt") { dir =>
+    memoDir(s"bkt|$d", "graft_base_bkt") { dir =>
       val base = Tables.load(s, d, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("c"),
           col("o_totalprice").as("p"))
@@ -104,7 +96,7 @@ object LakeFixtures {
     * lake base shared by the change-feed / incremental-aggregate /
     * stream-merge / time-travel queries. */
   def docsEvensFp(s: SparkSession, d: String): String =
-    build(s"defp|$d", "graft_base_defp") { dir =>
+    memoDir(s"defp|$d", "graft_base_defp") { dir =>
       val all = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("source"),
           graft.text.TextStats.fingerprint(
@@ -115,7 +107,7 @@ object LakeFixtures {
   /** Even-doc_id documents as (doc_id, source, text) — the payload-
     * bearing CDC lake base (signature maintenance). */
   def docsEvensText(s: SparkSession, d: String): String =
-    build(s"detx|$d", "graft_base_detx") { dir =>
+    memoDir(s"detx|$d", "graft_base_detx") { dir =>
       val base = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("source"),
           coalesce(col("text"), lit("")).as("text"))
@@ -126,7 +118,7 @@ object LakeFixtures {
     * commit-log-follower base: a partition-scoped merge's change feed
     * opens one partition's files, not the table. */
   def ordersEvensByStatus(s: SparkSession, d: String): String =
-    build(s"est|$d", "graft_base_est") { dir =>
+    memoDir(s"est|$d", "graft_base_est") { dir =>
       Versioned.init(ordersBase(s, d).filter(col("k") % 2 === 0)
         .select(col("k"), col("st"), col("p")), dir,
         partitionCol = Some("st"))
@@ -139,7 +131,7 @@ object LakeFixtures {
     * its own temp dir): v1 base, v2 merge, v3 DV delete, v4 DV
     * update. */
   def ordersEvensStatusHistory(s: SparkSession, d: String): String =
-    build(s"esth|$d", "graft_base_esth") { dir =>
+    memoDir(s"esth|$d", "graft_base_esth") { dir =>
       Versioned.clone(s, ordersEvensByStatus(s, d), dir + "/t")
       val t = dir + "/t"
       val base = ordersBase(s, d)
@@ -156,7 +148,7 @@ object LakeFixtures {
   /** Odd order keys in 8 round-robin files — the second leg of the
     * multi-table-transaction catalog. */
   def ordersOdds8(s: SparkSession, d: String): String =
-    build(s"o8|$d", "graft_base_o8") { dir =>
+    memoDir(s"o8|$d", "graft_base_o8") { dir =>
       Versioned.init(ordersBase(s, d).filter(col("k") % 2 === 1)
         .repartition(8), dir)
     }
@@ -164,7 +156,7 @@ object LakeFixtures {
   /** (k, c, p) orders under the HIDDEN `c div 100` transform — the
     * hidden-partitioning base. */
   def ordersHidden(s: SparkSession, d: String): String =
-    build(s"hid|$d", "graft_base_hid") { dir =>
+    memoDir(s"hid|$d", "graft_base_hid") { dir =>
       Versioned.initHidden(Tables.load(s, d, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("c"),
           col("o_totalprice").as("p")),
@@ -176,7 +168,7 @@ object LakeFixtures {
     * transform: the column is user-visible but its value is engine-
     * derived, so writers can omit it and cannot mis-derive it. */
   def ordersGenPart(s: SparkSession, d: String): String =
-    build(s"gen|$d", "graft_base_gen") { dir =>
+    memoDir(s"gen|$d", "graft_base_gen") { dir =>
       val base = Tables.load(s, d, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("c"),
           col("o_totalprice").as("p"))
@@ -186,12 +178,13 @@ object LakeFixtures {
       Versioned.addGeneratedColumn(s, dir, "bkt", "c div 100")
     }
 
-  /** A fresh isolated clone of `base` in its own temp directory; the
-    * caller owns (and should delete) the returned directory. */
-  def cloneOf(s: SparkSession, base: String, prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-      .resolve("t").toString
-    Versioned.clone(s, base, dir)
-    dir
-  }
+  /** Run `body` on a fresh isolated clone of `base`, deleted (with its
+    * scratch parent) when `body` exits. */
+  def withClone[A](s: SparkSession, base: String, prefix: String)(
+      body: String => A): A =
+    graft.Scratch.withDir(prefix) { root =>
+      val dir = root + "/t"
+      Versioned.clone(s, base, dir)
+      body(dir)
+    }
 }

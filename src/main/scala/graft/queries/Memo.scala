@@ -23,8 +23,6 @@ import graft.text.Dedup
   */
 object Memo {
 
-  private val cache = scala.collection.concurrent.TrieMap[String, String]()
-
   /** First-materialization seconds per memo key (r17, r16 VERDICT #3):
     * the bench's untimed warm-up run absorbs each memo's one-time
     * build, so the timed rows exclude it — this log makes that
@@ -32,24 +30,16 @@ object Memo {
     * target/bench-latest.json) instead of silently vanishing. */
   val buildLog = scala.collection.concurrent.TrieMap[String, Double]()
 
-  /** Build-once/read-many parquet memo; `key` must uniquely determine
-    * the frame's content. Builders may NEST (a memoized frame built
-    * from another memoized frame), so this is a reentrant
-    * double-checked lock rather than `computeIfAbsent` (which forbids
-    * recursive update). */
+  /** Build-once/read-many parquet memo under [[graft.Scratch.memo]];
+    * `key` must uniquely determine the frame's content. Builders may
+    * nest. */
   def parquet(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val path = cache.get(key).getOrElse(synchronized {
-      cache.get(key).getOrElse {
-        val dir = java.nio.file.Files.createTempDirectory("graft_memo")
-          .resolve("m").toString
-        val t0 = System.nanoTime()
-        build.write.mode("overwrite").parquet(dir)
-        buildLog.put(key, (System.nanoTime() - t0) / 1e9)
-        cache.put(key, dir)
-        dir
-      }
-    })
-    s.read.parquet(path)
+    val dir = graft.Scratch.memo("parquet", key) { dir =>
+      val t0 = System.nanoTime()
+      build.write.mode("overwrite").parquet(dir + "/m")
+      buildLog.put(key, (System.nanoTime() - t0) / 1e9)
+    }
+    s.read.parquet(dir + "/m")
   }
 
   private def docs(s: SparkSession, d: String) =

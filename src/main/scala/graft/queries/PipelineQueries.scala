@@ -147,7 +147,7 @@ object PipelineQueries {
     * dial (16 lists / 4 probes) lost recall as the corpus grew
     * (0.52 → 0.64); the auto dial (nLists = ⌈√n⌉, half probed —
     * [[Similarity.ivfTopK]]'s default since r15) measures 0.82 / 0.88
-    * / 0.92 at sf0.001/0.01/0.1 (`tools/AnnDialSweep`), RISING with
+    * / 0.92 at sf0.001/0.01/0.1 (PLANS_r15.md), RISING with
     * corpus size at a constant probed fraction. Floor 0.7 sits under
     * the measured band with margin. */
   def qAnnIvf(s: SparkSession, d: String): DataFrame = {

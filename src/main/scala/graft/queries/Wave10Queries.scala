@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import graft.Scratch
 import graft.io.Tables
 import graft.ops.Versioned
 import graft.streaming.Events
@@ -94,52 +95,47 @@ object Wave10Queries {
         hfs.setTimes(in, 10000L * (b + 1), -1L)
       }
     }
-    val ck = Events.scratchCheckpoint("smerge")
-    val work = java.nio.file.Files.createTempDirectory("graft_smerge").toString
-    val lakePath = s"$work/lake"
-    try {
-      Versioned.clone(s, LakeFixtures.docsEvensFp(s, d), lakePath)
-      val schema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("source", StringType),
-        StructField("fp", StringType)))
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
-      val q = stream.writeStream
-        .foreachBatch { (bdf: DataFrame, batchId: Long) =>
-          val committed = Versioned.currentVersion(s, lakePath).getOrElse(0L)
-          if (committed < batchId + 2) { // replay-idempotent: batch b → v(b+2)
-            val w = Window.partitionBy("fp").orderBy(col("doc_id").desc)
-            val deduped = bdf.withColumn("rk", row_number().over(w))
-              .filter(col("rk") === 1).drop("rk")
-            Versioned.merge(deduped, lakePath, Seq("fp"))
-            ()
+    Scratch.withCheckpoint("smerge") { ck =>
+      Scratch.withDir("graft_smerge") { work =>
+        val lakePath = s"$work/lake"
+        Versioned.clone(s, LakeFixtures.docsEvensFp(s, d), lakePath)
+        val schema = StructType(Seq(
+          StructField("doc_id", LongType), StructField("source", StringType),
+          StructField("fp", StringType)))
+        val stream = s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
+        val q = stream.writeStream
+          .foreachBatch { (bdf: DataFrame, batchId: Long) =>
+            val committed = Versioned.currentVersion(s, lakePath).getOrElse(0L)
+            if (committed < batchId + 2) { // replay-idempotent: batch b → v(b+2)
+              val w = Window.partitionBy("fp").orderBy(col("doc_id").desc)
+              val deduped = bdf.withColumn("rk", row_number().over(w))
+                .filter(col("rk") === 1).drop("rk")
+              Versioned.merge(deduped, lakePath, Seq("fp"))
+              ()
+            }
           }
-        }
-        .option("checkpointLocation", ck)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      // wait for AvailableNow self-termination (see Events.runToCompletion
-      // — processAllAvailable alone races the final micro-batch)
-      try {
-        q.processAllAvailable()
-        if (!q.awaitTermination(300000L))
-          sys.error("stream-merge replay did not terminate within 300s")
-      } finally q.stop()
-      val nv = Versioned.currentVersion(s, lakePath).getOrElse(0L)
-      import s.implicits._
-      Versioned.read(s, lakePath)
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("doc_id") % 2 === 1, 1L).otherwise(0L))
-            .as("n_from_stream"))
-        .orderBy("source")
-        .collect().toSeq
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), nv))
-        .toDF("source", "n_docs", "n_from_stream", "n_versions")
-    } finally {
-      Seq(ck, work).foreach { p0 =>
-        val p = new org.apache.hadoop.fs.Path(p0)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+          .option("checkpointLocation", ck)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        // wait for AvailableNow self-termination (see Events.runToCompletion
+        // — processAllAvailable alone races the final micro-batch)
+        try {
+          q.processAllAvailable()
+          if (!q.awaitTermination(300000L))
+            sys.error("stream-merge replay did not terminate within 300s")
+        } finally q.stop()
+        val nv = Versioned.currentVersion(s, lakePath).getOrElse(0L)
+        import s.implicits._
+        Versioned.read(s, lakePath)
+          .groupBy("source")
+          .agg(count(lit(1)).as("n_docs"),
+            sum(when(col("doc_id") % 2 === 1, 1L).otherwise(0L))
+              .as("n_from_stream"))
+          .orderBy("source")
+          .collect().toSeq
+          .map(r => (r.getString(0), r.getLong(1), r.getLong(2), nv))
+          .toDF("source", "n_docs", "n_from_stream", "n_versions")
       }
     }
   }
@@ -155,9 +151,8 @@ object Wave10Queries {
     * + union" hash-checks that time travel neither leaks v2 rows into
     * v1 nor loses v1 files. */
   def qTimeTravel(s: SparkSession, d: String): DataFrame = {
-    val dir = LakeFixtures.cloneOf(s,
-      LakeFixtures.docsEvensFp(s, d), "graft_travel")
-    try {
+    LakeFixtures.withClone(s,
+      LakeFixtures.docsEvensFp(s, d), "graft_travel") { dir =>
       val all = fpDocs(s, d)
       val w = Window.partitionBy("fp").orderBy(col("doc_id").desc)
       val batch = all.filter(col("doc_id") % 2 === 1)
@@ -177,9 +172,6 @@ object Wave10Queries {
       Seq(summarize(1L), summarize(2L))
         .toDF("version", "n_rows", "n_from_batch", "content_xor")
         .orderBy("version")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

@@ -44,9 +44,8 @@ object Wave13Queries {
     * snapshots; at 100 TB both sides prune to the partitions the merge
     * touched. */
   def qChangeFeed(s: SparkSession, d: String): DataFrame = {
-    val dir = LakeFixtures.cloneOf(s,
-      LakeFixtures.docsEvensFp(s, d), "graft_cdc")
-    try {
+    LakeFixtures.withClone(s,
+      LakeFixtures.docsEvensFp(s, d), "graft_cdc") { dir =>
       val all = docs(s, d).select(col("doc_id"), col("source"),
         TextStats.fingerprint(coalesce(col("text"), lit(""))).as("fp"))
       val evens = all.filter(col("doc_id") % 2 === 0)
@@ -80,9 +79,6 @@ object Wave13Queries {
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       import s.implicits._
       out.toDF("change_type", "n_keys", "key_xor")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

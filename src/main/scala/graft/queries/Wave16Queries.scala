@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.io.Tables
 import graft.text.{LangId, QualityModel, TextStats}
 
@@ -148,8 +149,7 @@ object Wave16Queries {
     * the live-set algebra directly from `documents`. */
   def qExternalSnapshot(s: SparkSession, d: String): DataFrame = {
     import graft.io.ExternalLog
-    val dir = java.nio.file.Files.createTempDirectory("graft_ext").toString
-    try {
+    Scratch.withDir("graft_ext") { dir =>
       val dd = docs(s, d).select(col("doc_id"), col("source"), col("n_chars"))
       dd.filter(col("doc_id") % 2 === 0).write.parquet(s"$dir/data-0")
       dd.filter(col("doc_id") % 2 === 1).write.parquet(s"$dir/data-1")
@@ -172,9 +172,6 @@ object Wave16Queries {
       import s.implicits._
       out.toDF("version", "n_docs", "id_xor", "sum_chars")
         .orderBy("version")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
@@ -187,8 +184,7 @@ object Wave16Queries {
     * proves). */
   def qSchemaEvolution(s: SparkSession, d: String): DataFrame = {
     import graft.io.ExternalLog
-    val dir = java.nio.file.Files.createTempDirectory("graft_evo").toString
-    try {
+    Scratch.withDir("graft_evo") { dir =>
       val dd = docs(s, d)
       dd.filter(col("doc_id") % 2 === 0).select(col("doc_id"), col("source"))
         .write.parquet(s"$dir/data-0")
@@ -208,9 +204,6 @@ object Wave16Queries {
       import s.implicits._
       out.toDF("source", "n_docs", "n_evolved", "sum_chars")
         .orderBy("source")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

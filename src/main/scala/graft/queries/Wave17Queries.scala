@@ -143,9 +143,8 @@ object Wave17Queries {
     * exact. Same merge construction as `q_change_feed` (updates shift
     * ids by 1e6, every 7th even doc deletes, every 5th odd inserts). */
   def qIncrAgg(s: SparkSession, d: String): DataFrame = {
-    val dir = LakeFixtures.cloneOf(s,
-      LakeFixtures.docsEvensFp(s, d), "graft_incragg")
-    try {
+    LakeFixtures.withClone(s,
+      LakeFixtures.docsEvensFp(s, d), "graft_incragg") { dir =>
       val all = docs(s, d).select(col("doc_id"), col("source"),
         TextStats.fingerprint(coalesce(col("text"), lit(""))).as("fp"))
       val evens = all.filter(col("doc_id") % 2 === 0)
@@ -177,7 +176,7 @@ object Wave17Queries {
             coalesce(col("old_id"), lit(0L))).as("ds"))
       val delta = cdc.groupBy("source")
         .agg(sum(col("dd")).as("d_docs"), sum(col("ds")).as("d_sum"))
-      // materialize before the finally-cleanup deletes the lake files
+      // materialize before the block's cleanup deletes the lake files
       // (bounded: one row per source) — the q_change_feed idiom
       val out = a1.join(a2, Seq("source"), "full_outer")
         .join(delta, Seq("source"), "full_outer")
@@ -199,9 +198,6 @@ object Wave17Queries {
       import s.implicits._
       out.toDF("source", "n_v1", "sum_v1", "d_docs", "d_sum",
         "n_v2", "sum_v2", "docs_ok", "sum_ok")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
@@ -251,10 +247,6 @@ object Wave17Queries {
     concat_ws("", entWord((k * 5 + 1) % 24), lit(" "),
       entWord((k * 7 + 2) % 24), lit(" "),
       entWord((k * 11 + 3) % 24), lit("-"), (k % 1000).cast("string"))
-
-  /** [[entName]] for builder tooling (tools/EntitySkewDebug — the
-    * r17 join-key skew receipt replicates the exact derivation). */
-  private[graft] def entNameFor(k: Column): Column = entName(k)
 
   private def ENT_NAME(k: String): String =
     s"${ENT_WORD(s"(($k) * 5 + 1) % 24")} || ' ' || " +

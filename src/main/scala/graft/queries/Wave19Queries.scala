@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.io.Tables
 import graft.ops.Versioned
 import graft.text.Dedup
@@ -58,7 +59,7 @@ object Wave19Queries {
     // hash-partitioned by src ONCE and cached, so each hop's frontier
     // equi-join needs no exchange on the (large) edge side — the
     // frontier side alone shuffles. CacheManager dedupes the
-    // canonically-identical plan across calls (no ScopedCache swap —
+    // canonically-identical plan across calls (no Scratch generation —
     // see Wave29Queries).
     val ed = und.select(col("u").as("src"), col("v").as("dst"))
       .unionByName(und.select(col("v").as("src"), col("u").as("dst")))
@@ -118,8 +119,7 @@ object Wave19Queries {
     val base = docs(s, d).repartition(col("doc_id"))
       .select(arr.as("ts"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.ops.ScopedCache.swap(
-      graft.ops.ScopedCache.sessionKey("qTextrank", s), Seq(base))
+    Scratch.generation("qTextrank", s).hold(base)
     val ts = col("ts")
     val toks = base.select(explode(ts).as("tok"))
     val vocab = toks.groupBy("tok").agg(count(lit(1)).as("c"))
@@ -144,7 +144,7 @@ object Wave19Queries {
     // ([[Q.pageRankLocal]], bit-identical float semantics) instead of
     // 5 eager checkpoint rounds (each ~3 Spark jobs of scheduler
     // overhead at any SF). This also retires the edges/weighted/nodes
-    // caches ADVICE r16 #1 flagged as outside the ScopedCache swap —
+    // caches ADVICE r16 #1 flagged as outside the Scratch generation —
     // the only persisted frame left is `base`, already registered.
     // The distributed work that REMAINS is the part that scales with
     // data: corpus tokenize → vocab top-100 → pair aggregate.
@@ -200,8 +200,7 @@ object Wave19Queries {
     * vs corrected knowledge at tx 2. Snapshot selection is
     * O(manifest); the probe scan prunes to the snapshot's files. */
   def qBitemporal(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bitemp").toString
-    try {
+    Scratch.withDir("graft_bitemp") { dir =>
       val orders = Tables.load(s, d, "orders")
       Versioned.init(scd2(orders.filter(col("o_orderdate") < lit(txCut))),
         dir)
@@ -224,9 +223,6 @@ object Wave19Queries {
       out.toDF("tx_version", "probe_date", "priority", "n_customers",
           "cust_xor")
         .orderBy("tx_version", "probe_date", "priority")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.io.Tables
 import graft.ops.Versioned
 import graft.text.Dedup
@@ -85,8 +86,7 @@ object Wave25Queries {
   /** Compaction: v3 (post-compact) receipts vs v2 (pre-compact), plus
     * the deterministic post-compaction file count. */
   def qCompaction(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    try {
+    Scratch.withDir("graft_compact") { dir =>
       val (v2, v3) = buildLake(s, d, dir)
       val nFiles = Versioned.files(s, dir, Some(v3)).length
       val after = receipts(Versioned.read(s, dir, Some(v3)))
@@ -109,17 +109,13 @@ object Wave25Queries {
           nFiles, v3.toInt)
       }.toDF("o_orderstatus", "n_rows", "sum_price", "xor_fp", "ok",
           "n_files_after", "version")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
   /** Vacuum: after compact, drop all but the current manifest and
     * reference-count-delete dead files; re-read the survivor. */
   def qVacuum(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vacuum").toString
-    try {
+    Scratch.withDir("graft_vacuum") { dir =>
       val (_, v3) = buildLake(s, d, dir)
       val deleted = Versioned.vacuum(s, dir, keepLast = 1)
       val fs = new org.apache.hadoop.fs.Path(dir)
@@ -142,9 +138,6 @@ object Wave25Queries {
           Q.receipt(deleted > 0, s"deleted=$deleted")))
         .toDF("n_rows", "sum_price", "xor_fp", "n_manifests",
           "current_version", "v1_gone", "deleted_gt0")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

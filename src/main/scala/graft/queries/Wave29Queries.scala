@@ -52,7 +52,7 @@ object Wave29Queries {
       .unionByName(und.select(col("v").as("src"), col("u").as("dst")))
       .repartition(col("src"))
       .cache()
-    // no ScopedCache swap here: und/ed plans are canonically identical
+    // no Scratch generation here: und/ed plans are canonically identical
     // per (session, dir), so CacheManager dedupes repeated .cache()
     // calls onto ONE entry — registering them in a swap would
     // unpersist that shared entry and force every later call to

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
+import graft.Scratch
 import graft.io.Tables
 import graft.ops.Versioned
 import graft.text.Dedup
@@ -30,13 +31,12 @@ import graft.text.Dedup
 object Wave32Queries {
 
   def qShallowClone(s: SparkSession, d: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_clone")
-    val dst = root.resolve("dst").toString
     // the "production" source IS the shared immutable base — cloning
     // it is the exact scenario the fixture registry models; the clone
     // diverges under its own directory and the source is never written
     val src = LakeFixtures.ordersEvens16(s, d)
-    try {
+    Scratch.withDir("graft_clone") { root =>
+      val dst = root + "/dst"
       val base = Tables.load(s, d, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("c"),
           col("o_orderstatus").as("st"), col("o_totalprice").as("p"))
@@ -69,9 +69,6 @@ object Wave32Queries {
         .toDF("src_rows", "src_xor", "clone_rows", "clone_xor",
           "n_shared_before", "n_shared_after", "src_version",
           "clone_version")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(root.toString)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.io.Tables
 import graft.ops.Versioned
 import graft.text.Dedup
@@ -46,8 +47,7 @@ object Wave33Queries {
   }
 
   def qWap(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wap").toString
-    try {
+    Scratch.withDir("graft_wap") { dir =>
       val base = Tables.load(s, d, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("c"),
           col("o_orderstatus").as("st"), col("o_totalprice").as("p"))
@@ -97,15 +97,11 @@ object Wave33Queries {
           "bad_rejected", "version_held", "rows_after_reject",
           "xor_after_reject", "clean_violations", "clean_published",
           "final_version", "rows_final", "xor_final")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
   def qPartitionEvolution(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pevo").toString
-    try {
+    Scratch.withDir("graft_pevo") { dir =>
       val base = Tables.load(s, d, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("c"),
           col("o_orderstatus").as("st"), col("o_totalprice").as("p"))
@@ -141,9 +137,6 @@ object Wave33Queries {
           r.getString(7)))
         .toDF("st", "n_rows", "sum_price", "xor_fp", "evolved_version",
           "final_version", "carried_gt0", "untouched_by_ref")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

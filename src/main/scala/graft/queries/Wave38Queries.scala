@@ -45,9 +45,8 @@ object Wave38Queries {
     // exactly one of 16 range files), obtained as a zero-copy clone of
     // the shared immutable base — the erasure rewrites against the
     // clone, staging its files under the clone's own directory
-    val dir = LakeFixtures.cloneOf(s,
-      LakeFixtures.ordersRange16(s, d), "graft_gdpr")
-    try {
+    LakeFixtures.withClone(s,
+      LakeFixtures.ordersRange16(s, d), "graft_gdpr") { dir =>
       val nFilesV1 = Versioned.files(s, dir, Some(1L)).length
       val e = Versioned.delete(s, dir, col("c") === 1L)
       val v1Match = Versioned.read(s, dir, Some(1L))
@@ -68,9 +67,6 @@ object Wave38Queries {
         .toDF("n_rows", "sum_price", "xor_fp", "deleted_rows",
           "one_file_rewritten", "carried_rest", "v1_intact", "cur_clean",
           "version")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.io.{ExternalLog, Tables}
 import graft.ops.Versioned
 import graft.text.Dedup
@@ -59,9 +60,8 @@ object Wave39Queries {
     // zero-copy clone of the shared range-clustered base (see
     // [[LakeFixtures]]): the vector commit and the materializing
     // compact stage everything under the clone's own directory
-    val dir = LakeFixtures.cloneOf(s,
-      LakeFixtures.ordersRange16(s, d), "graft_dv")
-    try {
+    LakeFixtures.withClone(s,
+      LakeFixtures.ordersRange16(s, d), "graft_dv") { dir =>
       val v1Files = Versioned.files(s, dir, Some(1L))
       val e = Versioned.deleteVectored(s, dir, col("c") === 1L)
       val filesIdentical =
@@ -98,18 +98,14 @@ object Wave39Queries {
         .toDF("n_rows", "sum_price", "xor_fp", "deleted_rows",
           "zero_rewritten", "carried_all", "files_identical", "v1_intact",
           "dv_present", "dv_cleared", "fp_stable", "version")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
   def qLakeSchemaEvolution(s: SparkSession, d: String): DataFrame = {
     // the evolving merge is a full rewrite (no partitionCol), so the
     // base's physical layout is irrelevant — share the range-16 clone
-    val dir = LakeFixtures.cloneOf(s,
-      LakeFixtures.ordersRange16(s, d), "graft_evo2")
-    try {
+    LakeFixtures.withClone(s,
+      LakeFixtures.ordersRange16(s, d), "graft_evo2") { dir =>
       val batch = Tables.load(s, d, "orders")
         .filter(col("o_custkey") % 10 === 3)
         .select(col("o_orderkey").as("k"), col("o_custkey").as("c"),
@@ -131,15 +127,11 @@ object Wave39Queries {
           r.getLong(4), cur.columns.length, oldCols, 2))
         .toDF("n_rows", "n_with_prio", "n_prio_vals", "sum_price",
           "xor_fp", "evolved_cols", "old_cols", "version")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
   def qExternalRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rt").toString
-    try {
+    Scratch.withDir("graft_rt") { dir =>
       val base = ordersBase(s, d)
       Versioned.init(base.repartition(4), dir)
       // a real change: flag every fifth order, then publish the log
@@ -168,9 +160,6 @@ object Wave39Queries {
           ExternalLog.versions(s, dir).length))
         .toDF("n_rows", "sum_price", "xor_fp", "current_matches",
           "history_matches", "log_is_tail", "n_log_versions")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

@@ -65,9 +65,8 @@ object Wave40Queries {
   }
 
   def qUpdateVectored(s: SparkSession, d: String): DataFrame = {
-    val dir = LakeFixtures.cloneOf(s,
-      LakeFixtures.ordersRange16(s, d), "graft_upd")
-    try {
+    LakeFixtures.withClone(s,
+      LakeFixtures.ordersRange16(s, d), "graft_upd") { dir =>
       val u = Versioned.updateVectored(s, dir, col("c") % 10 === 7,
         Map("st" -> lit("X"), "p" -> (col("p") + lit(100.0))))
       def receipt(df: DataFrame) = df
@@ -97,9 +96,6 @@ object Wave40Queries {
         .toDF("n_rows", "sum_price", "xor_fp", "updated_rows",
           "carried_all", "v1_intact", "dv_present", "dv_cleared",
           "fp_stable", "version")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

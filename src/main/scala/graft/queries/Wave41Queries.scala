@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.io.Tables
 import graft.ops.Versioned
 import graft.text.Dedup
@@ -38,9 +39,8 @@ object Wave41Queries {
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)
 
   def qCdcPruned(s: SparkSession, d: String): DataFrame = {
-    val dir = LakeFixtures.cloneOf(s,
-      LakeFixtures.ordersByStatus(s, d), "graft_cdc")
-    try {
+    LakeFixtures.withClone(s,
+      LakeFixtures.ordersByStatus(s, d), "graft_cdc") { dir =>
       val orders = Tables.load(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val f = orders.filter(col("o_orderstatus") === "F")
@@ -73,15 +73,11 @@ object Wave41Queries {
       out.map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
           r.getLong(3), r.getString(4)))
         .toDF("op", "n_rows", "sum_price", "xor_fp", "pruned")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
   def qClusterCompact(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_clus").toString
-    try {
+    Scratch.withDir("graft_clus") { dir =>
       val base = Tables.load(s, d, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("c"),
           col("o_totalprice").as("p"))
@@ -104,9 +100,6 @@ object Wave41Queries {
           after.filesTotal))
         .toDF("n_rows", "sum_price", "xor_fp", "unclustered_reads_all",
           "clustered_prunes", "files_total")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

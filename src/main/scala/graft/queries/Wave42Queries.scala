@@ -38,9 +38,8 @@ object Wave42Queries {
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)
 
   def qCompactSmall(s: SparkSession, d: String): DataFrame = {
-    val dir = LakeFixtures.cloneOf(s,
-      LakeFixtures.ordersRange16(s, d), "graft_csm")
-    try {
+    LakeFixtures.withClone(s,
+      LakeFixtures.ordersRange16(s, d), "graft_csm") { dir =>
       (1L to 3L).foreach { c =>
         Versioned.updateVectored(s, dir, col("c") === c,
           Map("p" -> (col("p") + lit(100.0))))
@@ -79,9 +78,6 @@ object Wave42Queries {
           c.version.toInt))
         .toDF("n_rows", "sum_price", "xor_fp", "coalesced_all_slivers",
           "carried_all", "bulk_by_reference", "dv_intact", "version")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.Scratch
 import graft.ops.Versioned
 import graft.streaming.Events
 import graft.text.Dedup
@@ -57,57 +58,52 @@ object Wave44Queries {
         hfs.setTimes(in, 10000L * (b + 1), -1L)
       }
     }
-    val ck = Events.scratchCheckpoint("sdv")
-    val lakePath = LakeFixtures.cloneOf(s,
-      LakeFixtures.ordersRange16(s, d), "graft_sdv_lake")
-    try {
-      import s.implicits._
-      val v1Files = Versioned.files(s, lakePath, Some(1L))
-      val stream = s.readStream
-        .schema(StructType(Seq(StructField("c", LongType))))
-        .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
-      val q = stream.writeStream
-        .foreachBatch { (bdf: DataFrame, batchId: Long) =>
-          val committed = Versioned.currentVersion(s, lakePath).getOrElse(0L)
-          if (committed < batchId + 2) { // replay-idempotent: b → v(b+2)
-            val ids = bdf.select("c").distinct().collect()
-              .map(_.getLong(0)).toSeq
-            if (ids.nonEmpty) {
-              Versioned.deleteVectored(s, lakePath, col("c").isin(ids: _*))
-              ()
+    Scratch.withCheckpoint("sdv") { ck =>
+      LakeFixtures.withClone(s,
+        LakeFixtures.ordersRange16(s, d), "graft_sdv_lake") { lakePath =>
+        import s.implicits._
+        val v1Files = Versioned.files(s, lakePath, Some(1L))
+        val stream = s.readStream
+          .schema(StructType(Seq(StructField("c", LongType))))
+          .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
+        val q = stream.writeStream
+          .foreachBatch { (bdf: DataFrame, batchId: Long) =>
+            val committed = Versioned.currentVersion(s, lakePath).getOrElse(0L)
+            if (committed < batchId + 2) { // replay-idempotent: b → v(b+2)
+              val ids = bdf.select("c").distinct().collect()
+                .map(_.getLong(0)).toSeq
+              if (ids.nonEmpty) {
+                Versioned.deleteVectored(s, lakePath, col("c").isin(ids: _*))
+                ()
+              }
             }
           }
-        }
-        .option("checkpointLocation", ck)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.processAllAvailable()
-        if (!q.awaitTermination(300000L))
-          sys.error("stream-dv replay did not terminate within 300s")
-      } finally q.stop()
-      val nv = Versioned.currentVersion(s, lakePath).getOrElse(0L)
-      val filesIdentical = Versioned.files(s, lakePath) == v1Files
-      val dvRows = Versioned.deletionVector(s, lakePath)
-        .map(_.count()).getOrElse(0L)
-      val v1Erased = Versioned.read(s, lakePath, Some(1L))
-        .filter(col("c").isin(1L, 2L, 3L)).count()
-      val r = Versioned.read(s, lakePath)
-        .withColumn("fp", fpCol(col("k"), col("c"), col("st"),
-          floor(col("p") * lit(100.0) + lit(0.5)).cast("long")))
-        .agg(count(lit(1)).as("n_rows"), Q.dsum(col("p")).as("sum_price"),
-          expr("bit_xor(fp)").as("xor_fp")).head()
-      Seq((r.getLong(0), r.getDouble(1), r.getLong(2),
-          Q.receipt(filesIdentical, "final file list differs from v1"),
-          Q.receipt(dvRows == v1Erased,
-            s"dvRows=$dvRows v1Erased=$v1Erased"),
-          nv.toInt))
-        .toDF("n_rows", "sum_price", "xor_fp", "zero_rewrite",
-          "dv_complete", "n_versions")
-    } finally {
-      Seq(ck, lakePath).foreach { p0 =>
-        val p = new org.apache.hadoop.fs.Path(p0)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+          .option("checkpointLocation", ck)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        try {
+          q.processAllAvailable()
+          if (!q.awaitTermination(300000L))
+            sys.error("stream-dv replay did not terminate within 300s")
+        } finally q.stop()
+        val nv = Versioned.currentVersion(s, lakePath).getOrElse(0L)
+        val filesIdentical = Versioned.files(s, lakePath) == v1Files
+        val dvRows = Versioned.deletionVector(s, lakePath)
+          .map(_.count()).getOrElse(0L)
+        val v1Erased = Versioned.read(s, lakePath, Some(1L))
+          .filter(col("c").isin(1L, 2L, 3L)).count()
+        val r = Versioned.read(s, lakePath)
+          .withColumn("fp", fpCol(col("k"), col("c"), col("st"),
+            floor(col("p") * lit(100.0) + lit(0.5)).cast("long")))
+          .agg(count(lit(1)).as("n_rows"), Q.dsum(col("p")).as("sum_price"),
+            expr("bit_xor(fp)").as("xor_fp")).head()
+        Seq((r.getLong(0), r.getDouble(1), r.getLong(2),
+            Q.receipt(filesIdentical, "final file list differs from v1"),
+            Q.receipt(dvRows == v1Erased,
+              s"dvRows=$dvRows v1Erased=$v1Erased"),
+            nv.toInt))
+          .toDF("n_rows", "sum_price", "xor_fp", "zero_rewrite",
+            "dv_complete", "n_versions")
       }
     }
   }

@@ -33,9 +33,8 @@ object Wave45Queries {
   def qHiddenPartitioning(s: SparkSession, d: String): DataFrame = {
     // zero-copy clone of the shared hidden-layout base (clone carries
     // the transform property with it)
-    val dir = LakeFixtures.cloneOf(s,
-      LakeFixtures.ordersHidden(s, d), "graft_hp")
-    try {
+    LakeFixtures.withClone(s,
+      LakeFixtures.ordersHidden(s, d), "graft_hp") { dir =>
       val base = Tables.load(s, d, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("c"),
           col("o_totalprice").as("p"))
@@ -66,9 +65,6 @@ object Wave45Queries {
           2))
         .toDF("n_rows", "sum_price", "xor_fp", "untouched_carried",
           "touched_rewritten", "layout_hidden", "version")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

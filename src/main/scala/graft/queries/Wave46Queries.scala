@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.io.Tables
 import graft.ops.Versioned
 import graft.text.Dedup
@@ -40,8 +41,7 @@ object Wave46Queries {
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)
 
   def qMergeInto(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mi").toString
-    try {
+    Scratch.withDir("graft_mi") { dir =>
       val base = Tables.load(s, d, "orders")
         .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
           col("o_totalprice").as("p"))
@@ -74,15 +74,11 @@ object Wave46Queries {
           stats.updated, stats.deleted, stats.inserted))
         .toDF("n_rows", "sum_price", "xor_fp", "updated", "deleted",
           "inserted")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
   def qZorderLake(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zl").toString
-    try {
+    Scratch.withDir("graft_zl") { dir =>
       // the trailing dimension is a HASH SPREAD of the customer key,
       // not the raw key: scaled corpora (tools/ScaleUp) shift both
       // o_orderkey and o_custkey by replica, so the raw pair is
@@ -129,9 +125,6 @@ object Wave46Queries {
         .toDF("probe", "n_rows", "sum_price", "xor_fp", "z_prunes",
           "z_beats_linear")
         .orderBy("probe")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

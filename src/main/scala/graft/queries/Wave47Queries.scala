@@ -49,9 +49,8 @@ object Wave47Queries {
   }
 
   def qRestore(s: SparkSession, d: String): DataFrame = {
-    val dir = LakeFixtures.cloneOf(s, LakeFixtures.ordersEvens16(s, d),
-      "graft_restore")
-    try {
+    LakeFixtures.withClone(s, LakeFixtures.ordersEvens16(s, d),
+      "graft_restore") { dir =>
       // v2: reprice a slice (vectored update — cheap, content-changing)
       Versioned.updateVectored(s, dir, col("k") % 4 === 0,
         Map("p" -> (col("p") + lit(100.0))))
@@ -72,16 +71,12 @@ object Wave47Queries {
           Q.receipt(v3n < n, s"v3 rows=$v3n restored rows=$n")))
         .toDF("n_rows", "sum_price", "xor_fp", "version",
           "equals_v1", "bad_history_kept")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
   def qLakeHistory(s: SparkSession, d: String): DataFrame = {
-    val dir = LakeFixtures.cloneOf(s, LakeFixtures.ordersEvens16(s, d),
-      "graft_hist")
-    try {
+    LakeFixtures.withClone(s, LakeFixtures.ordersEvens16(s, d),
+      "graft_hist") { dir =>
       val base = LakeFixtures.ordersBase(s, d)
       // v2 MERGE: insert the odd multiples of 5 (disjoint from evens)
       Versioned.merge(base.filter(col("k") % 2 === 1 && col("k") % 5 === 0),
@@ -97,16 +92,12 @@ object Wave47Queries {
           Versioned.read(s, dir, Some(ci.version)).count()))
         .toDF("version", "operation", "n_rows")
         .orderBy("version")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
   def qCheckConstraint(s: SparkSession, d: String): DataFrame = {
-    val dir = LakeFixtures.cloneOf(s, LakeFixtures.ordersEvens16(s, d),
-      "graft_chk")
-    try {
+    LakeFixtures.withClone(s, LakeFixtures.ordersEvens16(s, d),
+      "graft_chk") { dir =>
       val base = LakeFixtures.ordersBase(s, d)
       Versioned.addConstraint(s, dir, "p_nonneg", "p >= 0")
       // a batch with a poisoned row: rejected before staging
@@ -136,9 +127,6 @@ object Wave47Queries {
       Seq((n, sp, xf, badRejected, unchanged, addRejected))
         .toDF("n_rows", "sum_price", "xor_fp", "bad_rejected",
           "version_unchanged", "add_rejected")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

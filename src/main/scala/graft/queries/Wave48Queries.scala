@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.io.Tables
 import graft.ops.{Catalog, Versioned}
 import graft.text.Dedup
@@ -52,12 +53,10 @@ object Wave48Queries {
   }
 
   def qMultiTableTx(s: SparkSession, d: String): DataFrame = {
-    val dirA = LakeFixtures.cloneOf(s, LakeFixtures.ordersEvens16(s, d),
-      "graft_txa")
-    val dirB = LakeFixtures.cloneOf(s, LakeFixtures.ordersOdds8(s, d),
-      "graft_txb")
-    val root = java.nio.file.Files.createTempDirectory("graft_cat").toString
-    try {
+    Scratch.withDir("graft_tx") { work =>
+      val (dirA, dirB, root) = (s"$work/a", s"$work/b", s"$work/cat")
+      Versioned.clone(s, LakeFixtures.ordersEvens16(s, d), dirA)
+      Versioned.clone(s, LakeFixtures.ordersOdds8(s, d), dirB)
       Catalog.init(s, root, Map("a" -> dirA, "b" -> dirB))
       // the transaction: move every k%10=6 row (an evens slice) A → B
       Catalog.transact(s, root, { ents =>
@@ -88,11 +87,6 @@ object Wave48Queries {
           2))
         .toDF("n_total", "sum_price", "xor_fp", "n_a", "n_b",
           "conserved", "cat_version")
-    } finally {
-      Seq(dirA, dirB, root).foreach { dd =>
-        val p = new org.apache.hadoop.fs.Path(dd)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
     }
   }
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.ops.Versioned
 import graft.text.Dedup
 
@@ -40,9 +41,8 @@ object Wave49Queries {
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)
 
   def qDropPartition(s: SparkSession, d: String): DataFrame = {
-    val dir = LakeFixtures.cloneOf(s, LakeFixtures.ordersByStatus(s, d),
-      "graft_dp")
-    try {
+    LakeFixtures.withClone(s, LakeFixtures.ordersByStatus(s, d),
+      "graft_dp") { dir =>
       val v1Files = Versioned.files(s, dir, Some(1L)).toSet
       val r0 = Versioned.dropPartitions(s, dir, "o_orderstatus", Seq("F"))
       val v2Files = Versioned.files(s, dir, Some(r0.version)).toSet
@@ -61,16 +61,12 @@ object Wave49Queries {
           r0.version))
         .toDF("n_rows", "sum_price", "xor_fp", "dropped_some",
           "metadata_only", "version")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
   def qTaggedSnapshot(s: SparkSession, d: String): DataFrame = {
-    val dir = LakeFixtures.cloneOf(s, LakeFixtures.ordersEvens16(s, d),
-      "graft_tag")
-    try {
+    LakeFixtures.withClone(s, LakeFixtures.ordersEvens16(s, d),
+      "graft_tag") { dir =>
       Versioned.tag(s, dir, "audit") // pins v1
       // two more commits, then a retention pass that would expire v1
       Versioned.updateVectored(s, dir, col("k") % 4 === 0,
@@ -92,9 +88,6 @@ object Wave49Queries {
             s"current n=$curN tagged n=${r.getLong(0)}")))
         .toDF("n_rows", "sum_price", "xor_fp", "tag_survived_vacuum",
           "count_preserved")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
@@ -106,9 +99,9 @@ object Wave49Queries {
     // diffs), so they live in the shared read-only history fixture —
     // only the consumer CHECKPOINT is per-run state
     val dir = LakeFixtures.ordersEvensStatusHistory(s, d)
-    val cp = java.nio.file.Files.createTempDirectory("graft_flcp")
-      .resolve("offsets").toString
-    try {
+    // the lake is the SHARED fixture — only the checkpoint is ours
+    Scratch.withDir("graft_flcp") { scratch =>
+      val cp = scratch + "/offsets"
       var netRows = 0L
       var netCents = 0L
       val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -148,12 +141,6 @@ object Wave49Queries {
               s"n=${curAgg.getLong(0)} cents=${curAgg.getLong(1)}")))
         .toDF("n_rows", "sum_cents", "run1_versions", "run2_versions",
           "exactly_once", "reconciled")
-    } finally {
-      // the lake is the SHARED fixture — only the per-run checkpoint
-      // directory is ours to delete
-      val p = new org.apache.hadoop.fs.Path(
-        new java.io.File(cp).getParent)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

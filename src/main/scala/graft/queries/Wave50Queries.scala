@@ -25,9 +25,8 @@ object Wave50Queries {
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)
 
   def qGeneratedColumns(s: SparkSession, d: String): DataFrame = {
-    val dir = LakeFixtures.cloneOf(s, LakeFixtures.ordersGenPart(s, d),
-      "graft_gc")
-    try {
+    LakeFixtures.withClone(s, LakeFixtures.ordersGenPart(s, d),
+      "graft_gc") { dir =>
       val base = LakeFixtures.ordersBase(s, d)
         .select(col("k"), col("c"), col("p"))
       val v1Files = Versioned.files(s, dir, Some(1L))
@@ -62,9 +61,6 @@ object Wave50Queries {
           badRejected, unchanged))
         .toDF("n_rows", "sum_price", "xor_fp", "untouched_carried",
           "bad_rejected", "version_unchanged")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.ops.Versioned
 import graft.text.Dedup
 
@@ -23,11 +24,9 @@ object Wave51Queries {
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)
 
   def qExpectations(s: SparkSession, d: String): DataFrame = {
-    val dir = LakeFixtures.cloneOf(s, LakeFixtures.ordersEvens16(s, d),
-      "graft_exp")
-    val qdir = java.nio.file.Files.createTempDirectory("graft_expq")
-      .resolve("t").toString
-    try {
+    Scratch.withDir("graft_exp") { work =>
+      val (dir, qdir) = (s"$work/t", s"$work/q")
+      Versioned.clone(s, LakeFixtures.ordersEvens16(s, d), dir)
       val base = LakeFixtures.ordersBase(s, d)
       Versioned.addConstraint(s, dir, "p_nonneg", "p >= 0")
       val batch = base.filter(col("k") % 2 === 1 && col("k") % 5 === 0)
@@ -50,11 +49,6 @@ object Wave51Queries {
             s"quarantined=${qRow.getLong(0)} named=${qRow.getLong(1)}")))
         .toDF("n_rows", "sum_price", "xor_fp", "merged", "diverted",
           "q_rows", "q_named")
-    } finally {
-      Seq(dir, qdir).foreach { dd =>
-        val p = new org.apache.hadoop.fs.Path(dd)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
     }
   }
 

@@ -24,9 +24,8 @@ object Wave52Queries {
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)
 
   def qRenameColumn(s: SparkSession, d: String): DataFrame = {
-    val dir = LakeFixtures.cloneOf(s, LakeFixtures.ordersEvens16(s, d),
-      "graft_rn")
-    try {
+    LakeFixtures.withClone(s, LakeFixtures.ordersEvens16(s, d),
+      "graft_rn") { dir =>
       val v1Files = Versioned.files(s, dir, Some(1L)).toSet
       Versioned.renameColumn(s, dir, "p", "amount")
       val metadataOnly =
@@ -50,16 +49,12 @@ object Wave52Queries {
           Q.receipt(oldNameKept, "v1 time travel lost the old name"), 3))
         .toDF("n_rows", "sum_amount", "xor_fp", "metadata_only",
           "old_name_kept", "version")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
   def qDropColumn(s: SparkSession, d: String): DataFrame = {
-    val dir = LakeFixtures.cloneOf(s, LakeFixtures.ordersEvens16(s, d),
-      "graft_dc")
-    try {
+    LakeFixtures.withClone(s, LakeFixtures.ordersEvens16(s, d),
+      "graft_dc") { dir =>
       val v1Files = Versioned.files(s, dir, Some(1L)).toSet
       Versioned.dropColumn(s, dir, "c")
       val metadataOnly =
@@ -90,9 +85,6 @@ object Wave52Queries {
             "carried rows surfaced the dropped column's dead bytes")))
         .toDF("n_rows", "sum_price", "xor_fp", "metadata_only",
           "old_name_kept", "dead_bytes_dead")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.io.Tables
 
 /** Round-9 wave 54 — dynamic partition pruning in the registry:
@@ -22,9 +23,8 @@ import graft.io.Tables
 object Wave54Queries {
 
   def qDynamicPruning(s: SparkSession, d: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_dpp")
-      .resolve("fact").toString
-    try {
+    Scratch.withDir("graft_dpp") { scratch =>
+      val root = scratch + "/fact"
       // fact: orders partitioned by status (the join dimension)
       Tables.load(s, d, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -54,10 +54,6 @@ object Wave54Queries {
       val rows = agg.collect()
       s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1),
         agg.schema)
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(
-        new java.io.File(root).getParent)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

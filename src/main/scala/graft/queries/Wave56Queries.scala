@@ -34,9 +34,8 @@ object Wave56Queries {
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)
 
   def qOccRebase(s: SparkSession, d: String): DataFrame = {
-    val dir = LakeFixtures.cloneOf(s,
-      LakeFixtures.ordersEvensByStatus(s, d), "graft_occ")
-    try {
+    LakeFixtures.withClone(s,
+      LakeFixtures.ordersEvensByStatus(s, d), "graft_occ") { dir =>
       val v1 = Versioned.read(s, dir, Some(1L)).select("k", "st", "p")
       def src(st: String, mod10: Int, bump: Double) =
         v1.filter(col("st") === st && col("k") % 10 === mod10)
@@ -71,9 +70,6 @@ object Wave56Queries {
           4L))
         .toDF("n_rows", "sum_price", "xor_fp", "ops_ok",
           "rebase_reused_staging", "version")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.io.Tables
 import graft.ops.Versioned
 import graft.sources.LakeSource
@@ -61,12 +62,9 @@ object Wave57Queries {
   }
 
   def qDsv2Stream(s: SparkSession, d: String): DataFrame = {
-    val dir = LakeFixtures.cloneOf(s,
-      LakeFixtures.ordersEvensByStatus(s, d), "graft_dstr")
-    val work = java.nio.file.Files.createTempDirectory("graft_dstrw")
-    val out = work.resolve("out").toString
-    val cp = work.resolve("cp").toString
-    try {
+    Scratch.withDir("graft_dstr") { work =>
+      val (dir, out, cp) = (s"$work/t", s"$work/out", s"$work/cp")
+      Versioned.clone(s, LakeFixtures.ordersEvensByStatus(s, d), dir)
       // v2: INSERT-ONLY commit (fresh partition X) — append contract
       Versioned.merge(Tables.load(s, d, "orders")
         .filter(col("o_orderkey") % 2 === 1 && col("o_orderkey") % 5 === 0)
@@ -85,11 +83,6 @@ object Wave57Queries {
       import s.implicits._
       Seq((r.getLong(0), r.getDouble(1), r.getLong(2), 2L))
         .toDF("n_rows", "sum_price", "xor_fp", "versions_consumed")
-    } finally {
-      Seq(dir, work.toString).foreach { dd =>
-        val p = new org.apache.hadoop.fs.Path(dd)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
     }
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.io.Tables
 import graft.ops.Versioned
 import graft.text.Dedup
@@ -32,9 +33,8 @@ object Wave59Queries {
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)
 
   def qIdentityColumns(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_idc")
-      .resolve("t").toString
-    try {
+    Scratch.withDir("graft_idc") { scratch =>
+      val dir = scratch + "/t"
       val orders = Tables.load(s, d, "orders")
       // v1: even keys, ids = dense rank by key (bounded init-time
       // window; allocation afterwards never re-sorts the table)
@@ -74,10 +74,6 @@ object Wave59Queries {
           Q.receipt(drift == 0L, s"updated keys with drifted id=$drift")))
         .toDF("n_rows", "sum_price", "xor_fp", "ids_unique",
           "max_id", "ids_preserved")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(
-        new java.io.File(dir).getParent)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

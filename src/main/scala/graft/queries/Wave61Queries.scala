@@ -30,9 +30,8 @@ object Wave61Queries {
 
   def qSqlInsert(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-    val dir = LakeFixtures.cloneOf(s, LakeFixtures.ordersEvens16(s, d),
-      "graft_sqlins")
-    try {
+    LakeFixtures.withClone(s, LakeFixtures.ordersEvens16(s, d),
+      "graft_sqlins") { dir =>
       Tables.load(s, d, "orders")
         .filter(col("o_orderkey") % 2 === 1 && col("o_orderkey") % 5 === 0)
         .createOrReplaceTempView("graft_ins_src")
@@ -55,9 +54,6 @@ object Wave61Queries {
           Q.receipt(appended,
             s"history=${Versioned.history(s, dir).map(_.operation)}")))
         .toDF("n_rows", "sum_price", "xor_fp", "no_rewrite", "appended")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

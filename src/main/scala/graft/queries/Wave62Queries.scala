@@ -29,9 +29,8 @@ object Wave62Queries {
 
   def qSqlDelete(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-    val dir = LakeFixtures.cloneOf(s, LakeFixtures.ordersByStatus(s, d),
-      "graft_sqldel")
-    try {
+    LakeFixtures.withClone(s, LakeFixtures.ordersByStatus(s, d),
+      "graft_sqldel") { dir =>
       val v1Files = Versioned.files(s, dir, Some(1L)).toSet
       s.sql(s"DELETE FROM lake.`$dir` WHERE o_orderstatus = 'F'")
       val v2Files = Versioned.files(s, dir).toSet
@@ -53,9 +52,6 @@ object Wave62Queries {
             s"last op=${Versioned.history(s, dir).last.operation}")))
         .toDF("n_rows", "sum_price", "xor_fp", "no_rewrite",
           "dv_present", "op_ok")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

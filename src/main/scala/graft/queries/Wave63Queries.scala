@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.ops.Versioned
 import graft.text.Dedup
 
@@ -30,10 +31,8 @@ object Wave63Queries {
 
   def qStreamSink(s: SparkSession, d: String): DataFrame = {
     val src = LakeFixtures.ordersEvens16(s, d) // read-only source
-    val work = java.nio.file.Files.createTempDirectory("graft_ssk")
-    val dst = work.resolve("t").toString
-    val cp = work.resolve("cp").toString
-    try {
+    Scratch.withDir("graft_ssk") { work =>
+      val (dst, cp) = (s"$work/t", s"$work/cp")
       import s.implicits._
       Versioned.init(Seq.empty[(Long, Long, String, Double)]
         .toDF("k", "c", "st", "p"), dst)
@@ -56,9 +55,6 @@ object Wave63Queries {
           Q.receipt(txnOk && cur >= 2L,
             s"current version=$cur txnOk=$txnOk")))
         .toDF("n_rows", "sum_price", "xor_fp", "op_ok", "committed")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(work.toString)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

@@ -43,9 +43,8 @@ object Wave64Queries {
 
   def qSqlUpdate(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-    val dir = LakeFixtures.cloneOf(s, LakeFixtures.ordersByStatus(s, d),
-      "graft_sqlupd")
-    try {
+    LakeFixtures.withClone(s, LakeFixtures.ordersByStatus(s, d),
+      "graft_sqlupd") { dir =>
       val v1Files = Versioned.files(s, dir, Some(1L)).toSet
       s.sql(s"UPDATE lake.`$dir` SET o_totalprice = o_totalprice + 100.0 " +
         "WHERE o_orderkey % 7 = 3")
@@ -68,17 +67,13 @@ object Wave64Queries {
             s"history=${ops.mkString(",")}")))
         .toDF("n_rows", "sum_price", "xor_fp", "no_rewrite",
           "dv_present", "op_ok")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
   def qSqlMerge(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-    val dir = LakeFixtures.cloneOf(s, LakeFixtures.ordersEvens16(s, d),
-      "graft_sqlmrg")
-    try {
+    LakeFixtures.withClone(s, LakeFixtures.ordersEvens16(s, d),
+      "graft_sqlmrg") { dir =>
       val orders = LakeFixtures.ordersBase(s, d)
       // matched rows: even ∧ k%3=0; unmatched: odd ∧ k%5=0
       orders.filter((col("k") % 2 === 0 && col("k") % 3 === 0) ||
@@ -105,17 +100,13 @@ object Wave64Queries {
           Q.receipt(ops == Seq("CLONE", "MERGE_SQL"),
             s"history=${ops.mkString(",")}")))
         .toDF("n_rows", "sum_price", "xor_fp", "no_rewrite", "op_ok")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
   def qDsv2Write(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-    val dir = LakeFixtures.cloneOf(s, LakeFixtures.ordersEvens16(s, d),
-      "graft_v2wr")
-    try {
+    LakeFixtures.withClone(s, LakeFixtures.ordersEvens16(s, d),
+      "graft_v2wr") { dir =>
       val v1Files = Versioned.files(s, dir, Some(1L)).toSet
       LakeFixtures.ordersBase(s, d)
         .filter(col("k") % 2 === 1 && col("k") % 7 === 0)
@@ -138,9 +129,6 @@ object Wave64Queries {
             s"history=${ops.mkString(",")}")))
         .toDF("n_rows", "sum_price", "xor_fp", "no_rewrite",
           "executor_staged", "op_ok")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

@@ -45,9 +45,8 @@ object Wave65Queries {
 
   def qSqlOptimize(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-    val dir = LakeFixtures.cloneOf(s, LakeFixtures.ordersEvens16(s, d),
-      "graft_sqlopt")
-    try {
+    LakeFixtures.withClone(s, LakeFixtures.ordersEvens16(s, d),
+      "graft_sqlopt") { dir =>
       val opt1 = s.sql(s"CALL lake.optimize('$dir', 4)").head()
       val opt = s.sql(s"CALL lake.optimize('$dir', 2)").head()
       val vac = s.sql(
@@ -74,16 +73,12 @@ object Wave65Queries {
             s"history=${hist.mkString(",")}")))
         .toDF("n_rows", "sum_price", "xor_fp", "compacted",
           "vacuumed", "history_ok")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
   def qSqlChanges(s: SparkSession, d: String): DataFrame = {
-    val dir = LakeFixtures.cloneOf(s,
-      LakeFixtures.ordersByStatus(s, d), "graft_sqlcdc")
-    try {
+    LakeFixtures.withClone(s,
+      LakeFixtures.ordersByStatus(s, d), "graft_sqlcdc") { dir =>
       val f = Tables.load(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         .filter(col("o_orderstatus") === "F")
@@ -113,9 +108,6 @@ object Wave65Queries {
       rows.map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
           r.getLong(3)))
         .toDF("op", "n_rows", "sum_price", "xor_fp")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

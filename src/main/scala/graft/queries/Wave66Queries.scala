@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Scratch
 import graft.io.Tables
 import graft.ops.Versioned
 
@@ -85,18 +86,10 @@ object Wave66Queries {
   // SQL DDL lifecycle
   // ------------------------------------------------------------------
 
-  private def scratch(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
-
-  private def rm(s: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir).getParent
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-  }
-
   def qSqlDdl(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-    val dir = scratch("graft_sqlddl")
-    try {
+    Scratch.withDir("graft_sqlddl") { scratch =>
+      val dir = scratch + "/t"
       t(s, d, "orders").createOrReplaceTempView("graft_w66_ddl_src")
       s.sql(s"CREATE TABLE lake.`$dir` (k BIGINT, st STRING, p DOUBLE)")
       s.sql(s"INSERT INTO lake.`$dir` SELECT o_orderkey, o_orderstatus, " +
@@ -119,8 +112,8 @@ object Wave66Queries {
       val expectedOps = Seq("CREATE", "APPEND", "ADD_COLUMN(note)",
         "APPEND", "RENAME_COLUMN(st->status)", "DROP_COLUMN(note)")
       import s.implicits._
-      // materialize BEFORE the finally: the returned frame must not
-      // lazily re-read the scratch table this block deletes
+      // materialize BEFORE the block exits: the returned frame must not
+      // lazily re-read the scratch table it deletes
       val agg = s.sql(s"SELECT status, count(*) AS n_rows, " +
           s"${Q.DSUM_SPARK("p")} AS sum_price " +
           s"FROM lake.`$dir` GROUP BY status ORDER BY status")
@@ -134,13 +127,13 @@ object Wave66Queries {
         .toDF("status", "n_rows", "sum_price", "add_meta_only",
           "alter_meta_only", "tt_ok", "ops_ok")
         .orderBy("status")
-    } finally rm(s, dir)
+    }
   }
 
   def qSqlDescribe(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-    val dir = scratch("graft_sqldesc")
-    try {
+    Scratch.withDir("graft_sqldesc") { scratch =>
+      val dir = scratch + "/t"
       t(s, d, "orders").createOrReplaceTempView("graft_w66_desc_src")
       s.sql(s"CREATE TABLE lake.`$dir` (k BIGINT, st STRING, p DOUBLE) " +
         "PARTITIONED BY (st) " +
@@ -164,7 +157,7 @@ object Wave66Queries {
           "n_columns", "stats_cols", "bloom_cols", "n_commits",
           "column_mapped", "n_foreign_files", "n_segments",
           "describe_detail_sugar")
-    } finally rm(s, dir)
+    }
   }
 
   // ------------------------------------------------------------------

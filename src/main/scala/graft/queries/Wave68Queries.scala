@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.io.Tables
 import graft.ops.Versioned
 
@@ -29,9 +30,8 @@ import graft.ops.Versioned
 object Wave68Queries {
 
   def qLakeCbo(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cbo")
-      .resolve("t").toString
-    try {
+    Scratch.withDir("graft_cbo") { scratch =>
+      val dir = scratch + "/t"
       // no statsCols on purpose: every commit logs per-file `#rows`
       // unconditionally (parquet footers), so planner statistics are
       // universal — not an opt-in of range-stats registration
@@ -60,16 +60,12 @@ object Wave68Queries {
           lit(Q.receipt(bhj && lakeSize > 0 && lakeSize <= threshold,
             s"bhj=$bhj lakeSize=$lakeSize threshold=$threshold")))
         .orderBy("c_mktsegment")
-      // materialize before the finally-cleanup deletes the lake
+      // materialize before the block's cleanup deletes the lake
       import s.implicits._
       out.collect().toSeq
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
           r.getString(3)))
         .toDF("c_mktsegment", "n_orders", "revenue", "stats_broadcast")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(
-        new java.io.File(dir).getParent)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
@@ -90,12 +86,9 @@ object Wave68Queries {
           expr("bit_xor(fp)").as("xf")).head()
       (r.getLong(0), r.getDouble(1), r.getLong(2))
     }
-    val main = LakeFixtures.cloneOf(s, LakeFixtures.ordersEvens16(s, d),
-      "graft_brmain")
-    val work = java.nio.file.Files.createTempDirectory("graft_br")
-    val br = work.resolve("b1").toString
-    val stale = work.resolve("b2").toString
-    try {
+    Scratch.withDir("graft_br") { work =>
+      val (main, br, stale) = (s"$work/t", s"$work/b1", s"$work/b2")
+      Versioned.clone(s, LakeFixtures.ordersEvens16(s, d), main)
       val (n0, sp0, xf0) = receipt(Versioned.read(s, main))
       Versioned.branch(s, main, br)
       Versioned.branch(s, main, stale) // sibling cut at the same base
@@ -134,7 +127,7 @@ object Wave68Queries {
       // localize: a publish that COPIES its staged files under the
       // source root makes the branch directory disposable — drop it
       // for real and the source still reads
-      val b3 = work.resolve("b3").toString
+      val b3 = s"$work/b3"
       Versioned.branch(s, main, b3)
       Versioned.merge(Versioned.read(s, b3).filter(col("k") % 11 === 0)
         .withColumn("p", col("p") + lit(5.0)), b3, Seq("k"))
@@ -165,11 +158,6 @@ object Wave68Queries {
         .toDF("n_rows", "sum_price", "xor_fp", "branch_invisible",
           "publish_metadata_only", "op_ok", "stale_refused",
           "drop_guarded", "localized_disposable", "version")
-    } finally {
-      Seq(main, work.toString).foreach { dd =>
-        val p = new org.apache.hadoop.fs.Path(dd)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
     }
   }
 
@@ -180,11 +168,9 @@ object Wave68Queries {
     * while the branch works, and the PUBLISH history label. */
   def qSqlBranch(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-    val main = LakeFixtures.cloneOf(s, LakeFixtures.ordersEvens16(s, d),
-      "graft_sqlbrm")
-    val work = java.nio.file.Files.createTempDirectory("graft_sqlbr")
-    val br = work.resolve("b1").toString
-    try {
+    Scratch.withDir("graft_sqlbr") { work =>
+      val (main, br) = (s"$work/t", s"$work/b1")
+      Versioned.clone(s, LakeFixtures.ordersEvens16(s, d), main)
       val cut = s.sql(s"CALL lake.branch('$main', '$br')").head()
       Tables.load(s, d, "orders")
         .filter(col("o_orderkey") % 2 === 1 && col("o_orderkey") % 5 === 0)
@@ -213,11 +199,6 @@ object Wave68Queries {
           pub.toInt))
         .toDF("n_rows", "sum_price", "xor_fp", "cut_ok",
           "branch_invisible", "op_ok", "published_as")
-    } finally {
-      Seq(main, work.toString).foreach { dd =>
-        val p = new org.apache.hadoop.fs.Path(dd)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
     }
   }
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.io.Tables
 import graft.ops.Versioned
 import graft.text.Dedup
@@ -35,9 +36,7 @@ object Wave69Queries {
 
   def qSqlOptimizeCluster(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sqloc")
-      .toString
-    try {
+    Scratch.withDir("graft_sqloc") { dir =>
       val base = Tables.load(s, d, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("c"),
           col("o_totalprice").as("p"))
@@ -89,19 +88,14 @@ object Wave69Queries {
               s"c=${zc.filesRead}/${zc.filesTotal}")))
         .toDF("n_probe", "sum_probe", "xor_probe", "n_all", "xor_all",
           "calls_ok", "cluster_prunes", "zorder_prunes_both")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
   def qSqlBranchAt(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-    val main = LakeFixtures.cloneOf(s, LakeFixtures.ordersEvens16(s, d),
-      "graft_sqlatm")
-    val work = java.nio.file.Files.createTempDirectory("graft_sqlat")
-    val br = work.resolve("b1").toString
-    try {
+    Scratch.withDir("graft_sqlat") { work =>
+      val (main, br) = (s"$work/t", s"$work/b1")
+      Versioned.clone(s, LakeFixtures.ordersEvens16(s, d), main)
       s.sql(s"CALL lake.branch('$main', '$br')").collect()
       val n0 = s.sql(s"SELECT count(*) FROM lake.`$main`")
         .head().getLong(0)
@@ -135,11 +129,6 @@ object Wave69Queries {
               "must land on the branch only")))
         .toDF("n_rows", "sum_price", "xor_fp", "source_unmoved",
           "ref_history_ok", "write_isolated")
-    } finally {
-      Seq(main, work.toString).foreach { dd =>
-        val p = new org.apache.hadoop.fs.Path(dd)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
     }
   }
 

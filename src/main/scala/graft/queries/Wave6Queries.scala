@@ -87,11 +87,9 @@ object Wave6Queries {
     val bg = base.select(col("doc_id"), col("source"),
         explode(Dedup.ngramsFromTokens(col("tk"), n = 2)).as("bg"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one-generation cache discipline (see ScopedCache): the next
-    // call releases this call's spilled blocks, not session end;
-    // collision-free per-session key (r15 ADVICE #4)
-    graft.ops.ScopedCache.swap(
-      graft.ops.ScopedCache.sessionKey("qLmBigram", s), Seq(base, bg))
+    // one-generation cache discipline ([[graft.Scratch.generation]]):
+    // the next call releases this call's spilled blocks, not session end
+    graft.Scratch.generation("qLmBigram", s).hold(base, bg)
     val toks = base.select(col("doc_id"), col("source"),
       explode(col("tk")).as("tok"))
     val uni = toks.groupBy("source", "tok").agg(count(lit(1)).as("c"))

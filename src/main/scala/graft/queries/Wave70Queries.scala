@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.io.Tables
 import graft.ops.Versioned
 import graft.text.Dedup
@@ -37,11 +38,10 @@ object Wave70Queries {
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)
 
   def qManifestSegments(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mseg")
-      .resolve("t").toString
     val prev = s.conf.getOption("graft.lake.manifestInlineRows")
     s.conf.set("graft.lake.manifestInlineRows", "8")
-    try {
+    try Scratch.withDir("graft_mseg") { scratch =>
+      val dir = scratch + "/t"
       val o = Tables.load(s, d, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("c"),
           col("o_totalprice").as("p"))
@@ -78,9 +78,6 @@ object Wave70Queries {
         case Some(v) => s.conf.set("graft.lake.manifestInlineRows", v)
         case None => s.conf.unset("graft.lake.manifestInlineRows")
       }
-      val p = new org.apache.hadoop.fs.Path(
-        new java.io.File(dir).getParent)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
@@ -93,9 +90,8 @@ object Wave70Queries {
     * right (max_k > Int.MaxValue is only representable because the
     * widen is real). */
   def qTypeWidening(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_twq")
-      .resolve("t").toString
-    try {
+    Scratch.withDir("graft_twq") { scratch =>
+      val dir = scratch + "/t"
       val o = Tables.load(s, d, "orders")
         .select(col("o_orderkey").cast("int").as("k"),
           col("o_totalprice").as("p"))
@@ -123,10 +119,6 @@ object Wave70Queries {
             s"schema-per-version: head=$headT v1=$v1T")))
         .toDF("n_rows", "sum_k", "max_k", "sum_price",
           "alter_metadata_only", "schema_versions_ok")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(
-        new java.io.File(dir).getParent)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
@@ -141,9 +133,8 @@ object Wave70Queries {
     * down to one file) with matching receipt counts. */
   def qOptimizeWhere(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-    val dir = java.nio.file.Files.createTempDirectory("graft_oww")
-      .resolve("t").toString
-    try {
+    Scratch.withDir("graft_oww") { scratch =>
+      val dir = scratch + "/t"
       val o = Tables.load(s, d, "orders")
         .select(col("o_orderkey").as("k"), col("o_totalprice").as("p"))
         .withColumn("g", pmod(col("k"), lit(3)).cast("int"))
@@ -179,10 +170,6 @@ object Wave70Queries {
               s"carried=${ow.getInt(2)}/${g01.size}")))
         .toDF("n_rows", "sum_price", "xor_fp", "rewrite_meta_only",
           "optimize_scoped")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(
-        new java.io.File(dir).getParent)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
@@ -195,9 +182,8 @@ object Wave70Queries {
     * probe still prunes across BOTH clustered groups; data columns
     * prove the union reads exactly right. */
   def qClusterIncr(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cinc")
-      .resolve("t").toString
-    try {
+    Scratch.withDir("graft_cinc") { scratch =>
+      val dir = scratch + "/t"
       val o = Tables.load(s, d, "orders")
         .select(col("o_orderkey").as("k"), col("o_totalprice").as("p"))
       Versioned.init(o.filter(col("k") % 2 === 0).repartition(6), dir,
@@ -231,10 +217,6 @@ object Wave70Queries {
               s"${pr.filesRead}/${pr.filesTotal}")))
         .toDF("n_probe", "sum_probe", "n_all", "xor_all",
           "incr_scoped", "prunes_both_groups")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(
-        new java.io.File(dir).getParent)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
@@ -245,9 +227,8 @@ object Wave70Queries {
     * and still reads the EXACT pinned content afterwards. */
   def qSqlTagTravel(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-    val dir = java.nio.file.Files.createTempDirectory("graft_tagq")
-      .resolve("t").toString
-    try {
+    Scratch.withDir("graft_tagq") { scratch =>
+      val dir = scratch + "/t"
       val o = Tables.load(s, d, "orders")
         .select(col("o_orderkey").as("k"), col("o_totalprice").as("p"))
       Versioned.init(o.filter(col("k") % 2 === 0).repartition(4), dir)
@@ -275,10 +256,6 @@ object Wave70Queries {
               s"${!Versioned.manifestExists(s, dir, 2L)}")))
         .toDF("n_tag", "sum_tag", "n_head", "sum_head",
           "tag_survives_vacuum")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(
-        new java.io.File(dir).getParent)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
@@ -301,11 +278,10 @@ object Wave70Queries {
       Versioned.append(o.filter(col("k") % 3 === 1).repartition(2), dir0)
       Versioned.append(o.filter(col("k") % 3 === 2).repartition(2), dir0)
     }
-    val work = java.nio.file.Files.createTempDirectory("graft_paced_run")
-    val cp = work.resolve("cp").toString
     val sink = s"graft_paced_${java.util.UUID.randomUUID()
       .toString.take(8)}"
-    try {
+    try Scratch.withDir("graft_paced_run") { work =>
+      val cp = s"$work/cp"
       val q = s.readStream.format("graft-lake").option("path", dir)
         .option("maxFilesPerTrigger", 3).load()
         .writeStream.format("memory").queryName(sink)
@@ -324,11 +300,7 @@ object Wave70Queries {
               s"micro-batches, got $batches: " +
               q.recentProgress.map(_.numInputRows).mkString(","))))
         .toDF("n_rows", "sum_price", "xor_fp", "paced_batches")
-    } finally {
-      s.catalog.dropTempView(sink)
-      val p = new org.apache.hadoop.fs.Path(work.toString)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    }
+    } finally s.catalog.dropTempView(sink)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

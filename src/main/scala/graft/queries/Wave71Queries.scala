@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Scratch
 import graft.io.Tables
 import graft.text.Similarity
 
@@ -176,7 +177,7 @@ object Wave71Queries {
     * SCALES with the corpus (the r14 fixed 8/5/64 dial decayed
     * 0.88 → 0.76 as SF grew): nLists = ⌈√n⌉, 60 % probed, shortlist
     * 4√n — measured recall@5 0.94 / 0.96 / 0.94 at sf0.001/0.01/0.1
-    * (`tools/AnnDialSweep`), flat across corpus size because both the
+    * (PLANS_r15.md), flat across corpus size because both the
     * cell count and the re-rank budget grow with √n. Floor 0.8 under
     * the band with margin. */
   def qAnnIvfPq(s: SparkSession, d: String): DataFrame = {
@@ -205,12 +206,10 @@ object Wave71Queries {
     * plans and the CBO's estimated aggregate row count; data columns
     * prove the broadcast plan computes the right answer. */
   def qLakeNdvCbo(s: SparkSession, d: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_ndv")
-    val withS = work.resolve("a").toString
-    val noS = work.resolve("b").toString
     val cboPrev = s.conf.getOption("spark.sql.cbo.enabled")
     val thrPrev = s.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    try {
+    try Scratch.withDir("graft_ndv") { work =>
+      val (withS, noS) = (s"$work/a", s"$work/b")
       val data = Tables.load(s, d, "orders").select(
         col("o_orderkey").as("k"), col("o_totalprice").as("p"),
         (col("o_orderkey") % 5).as("g"))
@@ -268,8 +267,6 @@ object Wave71Queries {
         case None =>
           s.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       }
-      val p = new org.apache.hadoop.fs.Path(work.toString)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
@@ -282,10 +279,8 @@ object Wave71Queries {
     * stage under its own root (receipt pins the source unchanged). */
   def qSqlClone(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-    val work = java.nio.file.Files.createTempDirectory("graft_sqlclone")
-    val a = work.resolve("a").toString
-    val b = work.resolve("b").toString
-    try {
+    Scratch.withDir("graft_sqlclone") { work =>
+      val (a, b) = (s"$work/a", s"$work/b")
       val o = Tables.load(s, d, "orders").select(
         col("o_orderkey").as("k"), col("o_totalprice").as("p"))
       graft.ops.Versioned.init(
@@ -315,9 +310,6 @@ object Wave71Queries {
       Seq((nSrc, spSrc, nCl, spCl, rZero, rInd))
         .toDF("n_src", "sum_src", "n_clone", "sum_clone",
           "zero_copy", "independent")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(work.toString)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

@@ -57,33 +57,24 @@ object Wave72Queries {
   // clearCache() can't evict it and reuse can't observe staleness
   // (lake tables are immutable once built here)
   // ---------------------------------------------------------------
-  private val fixtures =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   private def lakeStarDir(s: SparkSession, d: String): String =
-    fixtures.get(d).getOrElse(synchronized {
-      fixtures.get(d).getOrElse {
-        val work = java.nio.file.Files
-          .createTempDirectory("graft_dslake").toString
-        Versioned.init(
-          Tables.load(s, d, "orders").select(
-            col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-            .repartition(4),
-          s"$work/orders", statsCols = Seq("o_custkey"))
-        Versioned.init(
-          Tables.load(s, d, "customer").select(
-            col("c_custkey"), col("c_nationkey"), col("c_mktsegment"),
-            col("c_acctbal")).repartition(2),
-          s"$work/customer", statsCols = Seq("c_custkey", "c_nationkey"))
-        Versioned.init(Tables.load(s, d, "nation"),
-          s"$work/nation",
-          statsCols = Seq("n_nationkey", "n_regionkey", "n_name"))
-        Versioned.init(Tables.load(s, d, "region"),
-          s"$work/region", statsCols = Seq("r_regionkey", "r_name"))
-        fixtures.put(d, work)
-        work
-      }
-    })
+    LakeFixtures.memoDir(s"star|$d", "graft_dslake") { work =>
+      Versioned.init(
+        Tables.load(s, d, "orders").select(
+          col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+          .repartition(4),
+        s"$work/orders", statsCols = Seq("o_custkey"))
+      Versioned.init(
+        Tables.load(s, d, "customer").select(
+          col("c_custkey"), col("c_nationkey"), col("c_mktsegment"),
+          col("c_acctbal")).repartition(2),
+        s"$work/customer", statsCols = Seq("c_custkey", "c_nationkey"))
+      Versioned.init(Tables.load(s, d, "nation"),
+        s"$work/nation",
+        statsCols = Seq("n_nationkey", "n_regionkey", "n_name"))
+      Versioned.init(Tables.load(s, d, "region"),
+        s"$work/region", statsCols = Seq("r_regionkey", "r_name"))
+    }
 
   private def lakeTable(s: SparkSession, dir: String, t: String) =
     s.read.format("graft-lake").option("path", s"$dir/$t").load()
@@ -98,10 +89,6 @@ object Wave72Queries {
       .join(lakeTable(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
       .join(lakeTable(s, dir, "region"), col("n_regionkey") === col("r_regionkey"))
   }
-
-  /** Debug hook for tools/ShareLakeDebug (not a registry entry). */
-  private[graft] def qTpcdsShareLakeDebugStar(s: SparkSession,
-      d: String): DataFrame = lakeStar(s, d)
 
   /** Plan receipts shared by the two multi-grain lake reports: the
     * manifest stats must have bought (a) broadcast dims — no

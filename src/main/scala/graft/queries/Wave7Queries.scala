@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.io.Tables
 import graft.ops.Versioned
 import graft.text.{Bpe, TextStats}
@@ -113,9 +114,8 @@ object Wave7Queries {
     // zero-copy clone of the shared status-partitioned base
     // ([[LakeFixtures]]); the merge's touched-partition rewrite stages
     // under the clone, untouched partitions keep referencing the base
-    val dir = LakeFixtures.cloneOf(s,
-      LakeFixtures.ordersByStatus(s, d), "graft_merge_q")
-    try {
+    LakeFixtures.withClone(s,
+      LakeFixtures.ordersByStatus(s, d), "graft_merge_q") { dir =>
       val f = orders.filter(col("o_orderstatus") === "F")
       val batch =
         f.filter(col("o_orderkey") % 7 === 3)
@@ -137,9 +137,6 @@ object Wave7Queries {
         .collect().toSeq
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), v))
         .toDF("o_orderstatus", "n_orders", "total", "version")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 
@@ -182,8 +179,7 @@ object Wave7Queries {
   def qFormatRoundtrip(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val base = docs(s, d).select(col("doc_id"), col("source"), col("text"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_fmt").toString
-    try {
+    Scratch.withDir("graft_fmt") { dir =>
       def summarize(fmt: String, df: DataFrame): (String, Long, Long) = {
         val r = df.select(shiftrightunsigned(graft.text.Dedup.md5Hash64(
             concat_ws("\u0001", col("doc_id").cast("string"),
@@ -215,9 +211,6 @@ object Wave7Queries {
         }),
         summarize("parquet", base))
       out.toDF("format", "n_docs", "content_xor").orderBy("format")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

@@ -118,28 +118,15 @@ object Events {
     if (wideState) spark.conf.set(
       "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // checkpoint scratch: a BOUNDED AvailableNow replay into a memory
-    // sink is ephemeral by construction — its checkpoint (offset log,
-    // commit log, one state snapshot per store per batch) has zero
-    // recovery value, yet on the default java.io.tmpdir it pays real
-    // disk I/O every micro-batch. Point it at RAM-backed scratch when
-    // available (`graft.streaming.scratchDir`, default /dev/shm on
-    // hosts that have it); durable pipelines (the lake sink, the
-    // restart-shape queries) pass their OWN checkpointLocation and
-    // never come through here.
-    val ckRoot = spark.conf.get("graft.streaming.scratchDir", {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    })
-    val ck = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(ckRoot), s"graft_ck_$name")
-    try {
+    // a BOUNDED AvailableNow replay into a memory sink is ephemeral by
+    // construction — its checkpoint (offset log, commit log, one state
+    // snapshot per store per batch) has zero recovery value
+    try graft.Scratch.withCheckpoint(name) { ck =>
       val q = agg.writeStream
         .outputMode(mode)
         .format("memory")
         .queryName(name)
-        .option("checkpointLocation", ck.toString)
+        .option("checkpointLocation", ck)
         .trigger(Trigger.AvailableNow())
         .start()
       // AvailableNow self-terminates AFTER its final no-data batch — the
@@ -164,8 +151,6 @@ object Events {
         spark.conf.set("spark.sql.streaming.stateStore.providerClass", prevProvider)
       else if (wideState)
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      try org.apache.commons.io.FileUtils.deleteDirectory(ck.toFile)
-      catch { case _: java.io.IOException => () } // scratch — best effort
     }
     spark.table(name)
   }
@@ -446,6 +431,21 @@ object Events {
       .orderBy("hour", "event_type")
   }
 
+  /** JVM-lifetime memo of staged STREAM-INPUT fixtures (the
+    * mtime-ordered batch files a replay query feeds its file source).
+    * The staged bytes are a pure function of the builder's key, and
+    * the file-source queries only READ them — so the build cost
+    * (full-table scans + single-task writes, the dominant fixed cost
+    * of the replay-shape rows) is paid once per JVM, not on every
+    * bench warm-up + timed run + re-measure (the r14 lateStageCache
+    * lesson, generalized). The checkpoint and any MUTATED fixture
+    * (lake clones) stay per-invocation — isolation lives there, not
+    * in the immutable inputs. */
+  def stagedInputs(key: String)(build: String => Unit): String =
+    graft.Scratch.memo("graft_stage", key)(build)
+
+  private val lateLock = new Object
+
   /** Watermark LATE-DATA DROP made observable, via the production
     * restart shape: a DURABLE parquet sink + checkpoint runs TWICE —
     * first over everything from `cut` onward, then RESTARTED from the
@@ -462,63 +462,6 @@ object Events {
     * end ≤ final watermark (= ms-floored max recent ts − 1 h).
     * `replayLate = false` skips the second pass — the spec's handle
     * for proving the late replay adds exactly nothing. */
-  /** Staged late-replay source files are a pure function of
-    * (sf dir, cut): build them once per JVM and COPY into each
-    * invocation's scratch `in/` directory — the two full events scans
-    * + single-task writes per invocation become one file copy. */
-  private val lateStageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** JVM-lifetime memo of staged STREAM-INPUT fixtures (the
-    * mtime-ordered batch files a replay query feeds its file source).
-    * The staged bytes are a pure function of the builder's key, and
-    * the file-source queries only READ them — so the build cost
-    * (full-table scans + single-task writes, the dominant fixed cost
-    * of the replay-shape rows) is paid once per JVM, not on every
-    * bench warm-up + timed run + re-measure (the r14 lateStageCache
-    * lesson, generalized). The checkpoint and any MUTATED fixture
-    * (lake clones) stay per-invocation — isolation lives there, not
-    * in the immutable inputs. */
-  private val inputStageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def stagedInputs(key: String)(build: String => Unit): String =
-    inputStageCache.computeIfAbsent(key, _ => {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_stage").toString
-      build(dir)
-      dir
-    })
-
-  /** Per-invocation checkpoint scratch on the RAM-backed dir when
-    * available — the runToCompletion discipline, for the replay
-    * queries that drive their own writeStream (foreachBatch sinks). */
-  def scratchCheckpoint(name: String): String = {
-    val root = {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    }
-    java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(root), s"graft_ck_$name").toString
-  }
-
-  /** The whole POST-PASS-1 state (input dir with b0, parquet sink,
-    * checkpoint) is ALSO a pure function of (sf dir, cut): it is the
-    * scenario's FIXTURE — "a streaming job has been running" — while
-    * the behavior under test is the late-replay restart. Built once
-    * per JVM and snapshotted; each invocation restores the snapshot
-    * and runs ONLY the replay pass. The working directory must be a
-    * FIXED path per key because the checkpoint's offset log records
-    * absolute source-file paths; restoring to a fresh temp dir would
-    * make b0 look unseen and double-count it. b0's mtime is re-pinned
-    * after the copy — the file source ignores files older than
-    * maxFileAge relative to the NEWEST mtime, so a fresh-copied b0
-    * next to the epoch-pinned late file would otherwise hide it. */
-  private val lateStateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val lateLock = new Object
-
   def hourlyWithLateReplay(spark: SparkSession, sfDir: String,
       cut: String, replayLate: Boolean = true): DataFrame =
     lateLock.synchronized {
@@ -529,20 +472,17 @@ object Events {
       cut: String, replayLate: Boolean): DataFrame = {
     val key = s"$sfDir|$cut"
     // fixed per (key, JVM) — the checkpoint records absolute paths so
-    // the dir must be stable across invocations, but the pid namespace
-    // keeps two concurrent JVMs (bench + test run) from sharing and
-    // clobbering the directory and its checkpoint mid-run; the mask
-    // (not math.abs, whose Int.MinValue result is negative) keeps the
-    // dir name well-formed on every hash
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_late_fixed_" +
-      s"p${ProcessHandle.current().pid()}_" +
-      (key.hashCode & 0x7fffffff).toHexString
+    // the dir must be stable across invocations; the per-JVM scratch
+    // root keeps two concurrent JVMs (bench + test run) apart
+    val dir = graft.Scratch.memo("graft_late_fixed", key)(_ => ())
     val hfs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     locally {
-      val stagedBase = lateStageCache.computeIfAbsent(key, _ => {
-        val sdir = java.nio.file.Files
-          .createTempDirectory("graft_late_src").toString
+      // the staged late-replay source files are a pure function of
+      // (sf dir, cut): built once per JVM and COPIED into each
+      // invocation's `in/` — two full events scans + single-task
+      // writes per invocation become one file copy
+      val stagedBase = graft.Scratch.memo("graft_late_src", key) { sdir =>
         val ev = graft.io.Tables.load(spark, sfDir, "events")
           .select(col("event_id"), col("ts"), col("event_type"), col("value"))
         // The drop proof needs the recovered watermark (max post-cut ts
@@ -569,8 +509,7 @@ object Events {
         }
         build("b0", col("ts") >= lit(cut).cast("timestamp"))
         build("b1", col("ts") < lit(cut).cast("timestamp"))
-        sdir
-      })
+      }
       val schema = StructType(Seq(
         StructField("event_id", LongType),
         StructField("ts", TimestampType),
@@ -607,17 +546,26 @@ object Events {
       }
       val conf = spark.sparkContext.hadoopConfiguration
       val dirP = new org.apache.hadoop.fs.Path(dir)
-      val snap = lateStateCache.computeIfAbsent(key, _ => {
+      // The whole POST-PASS-1 state (input dir with b0, parquet sink,
+      // checkpoint) is ALSO a pure function of (sf dir, cut): it is the
+      // scenario's FIXTURE — "a streaming job has been running" — while
+      // the behavior under test is the late-replay restart. Built once
+      // per JVM and snapshotted; each invocation restores the snapshot
+      // and runs ONLY the replay pass. The working directory must be a
+      // FIXED path per key because the checkpoint's offset log records
+      // absolute source-file paths; restoring to a fresh temp dir would
+      // make b0 look unseen and double-count it. b0's mtime is
+      // re-pinned after the copy — the file source ignores files older
+      // than maxFileAge relative to the NEWEST mtime, so a fresh-copied
+      // b0 next to the epoch-pinned late file would otherwise hide it.
+      val snap = graft.Scratch.memo("graft_late_state", key) { sd =>
         // PASS 1 at the fixed path, then snapshot its whole state
         hfs.delete(dirP, true)
         stage("b0", 10000L)
         runPass()
-        val sd = java.nio.file.Files
-          .createTempDirectory("graft_late_state").resolve("s").toString
         org.apache.hadoop.fs.FileUtil.copy(hfs, dirP, hfs,
-          new org.apache.hadoop.fs.Path(sd), false, conf)
-        sd
-      })
+          new org.apache.hadoop.fs.Path(sd + "/s"), false, conf)
+      } + "/s"
       // restore the pass-1 fixture state
       hfs.delete(dirP, true)
       org.apache.hadoop.fs.FileUtil.copy(hfs,

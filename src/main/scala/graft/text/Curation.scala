@@ -94,20 +94,13 @@ object Curation {
     * intermediate table). `cacheKey` must uniquely name (corpus dir,
     * threshold, gate); results are immutable per key for the JVM's
     * life. */
-  private val flagsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def flagsCached(docs: DataFrame, cacheKey: String, jacThreshold: Double,
       langKeep: Option[DataFrame] = None): DataFrame = {
-    val s = docs.sparkSession
-    val path = flagsCache.computeIfAbsent(cacheKey, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_flags")
-        .resolve("f").toString
+    val dir = graft.Scratch.memo("graft_flags", cacheKey) { dir =>
       flags(docs, jacThreshold, langKeep)
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
-    s.read.parquet(path)
+        .write.mode("overwrite").parquet(dir + "/f")
+    }
+    docs.sparkSession.read.parquet(dir + "/f")
   }
 
   /** [[funnel]] over [[flagsCached]]. */

@@ -106,7 +106,7 @@ object Dsir {
     // crossJoin — and without a persist each re-runs the ratio
     // broadcast join + per-doc groupBy over the (cached) bucket
     // counts. One row per doc, narrow; MEMORY_AND_DISK degrades to
-    // recompute. No ScopedCache swap for the same reason as
+    // recompute. No Scratch generation for the same reason as
     // docBuckets above: the plan is canonically identical per
     // (session, corpus), so CacheManager dedupes repeated calls onto
     // one entry — an explicit swap would unpersist the live entry

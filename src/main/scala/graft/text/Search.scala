@@ -148,17 +148,13 @@ object Search {
     val q2 = queryTerms.select("query_id", "term")
       .unionByName(expansion).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one-generation cache discipline: the NEXT rm3TopK call (not
-    // session end) releases this call's tok/q2 blocks — disk-spilled
-    // MEMORY_AND_DISK blocks are never evicted by memory pressure,
-    // so without this a long-lived session accumulates dead spill
-    // collision-free per-session key (r15 ADVICE #4): hashCode is
-    // collision-prone across sessions — two sessions colliding would
-    // unpersist each other's live generation (correct via recompute,
-    // but a silent cache loss); ScopedCache mints a UUID per session
-    graft.ops.ScopedCache.swap(
-      graft.ops.ScopedCache.sessionKey("rm3TopK", docsDf.sparkSession),
-      if (tokFresh) Seq(tok, q2) else Seq(q2))
+    // one-generation cache discipline ([[graft.Scratch.generation]]):
+    // the NEXT rm3TopK call (not session end) releases this call's
+    // tok/q2 blocks — disk-spilled MEMORY_AND_DISK blocks are never
+    // evicted by memory pressure, so without this a long-lived session
+    // accumulates dead spill
+    graft.Scratch.generation("rm3TopK", docsDf.sparkSession)
+      .hold((if (tokFresh) Seq(tok, q2) else Seq(q2)): _*)
     bm25TopK(docsDf, q2, k, dlOpt, Some(tok))
   }
 

@@ -214,7 +214,7 @@ object Similarity {
     * Dial: `nLists`/`nProbe` ≤ 0 means AUTO — nLists = ⌈√n⌉ (the
     * standard rule; fixed dials lose recall as the corpus grows:
     * 16/4 measured 0.52 → 0.64 recall@5 across sf0.001→0.1 while
-    * √n at 50 % probe measures 0.82 → 0.92, `tools/AnnDialSweep`),
+    * √n at 50 % probe measures 0.82 → 0.92, PLANS_r15.md),
     * nProbe = ⌈nLists/2⌉. nLists caps at 4096 so the driver-local
     * sample fit stays bounded at any corpus size — past the cap the
     * probe FRACTION (not the list count) is the recall dial. */

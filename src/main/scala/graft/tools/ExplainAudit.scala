@@ -1,20 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 
 /** Dev tool: dump formatted physical plans for the queries whose plan
   * shape matters at scale (pushdown, broadcast, partial agg, codegen).
   * Run: `sbt "runMain graft.tools.ExplainAudit [queryName...]"`. */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q_filter_project", "q_segment_revenue", "q_region_revenue",

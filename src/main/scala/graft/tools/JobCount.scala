@@ -1,10 +1,10 @@
 package graft.tools
 
+import graft.Session
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Builder-side evidence harness for ITERATIVE queries whose final
   * plan dump is checkpoint/collect-truncated (the plan file shows a
@@ -17,17 +17,7 @@ import org.apache.spark.sql.SparkSession
 object JobCount {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.local(Session.envCpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)

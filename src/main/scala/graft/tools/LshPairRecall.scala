@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -11,13 +11,7 @@ import graft.text.Similarity
   * dial — picks the floor for q_cosine_pairs_lsh. */
 object LshPairRecall {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
       val e = Tables.load(spark, s"/root/testdata/$sf", "embeddings")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 
 /** Builder-side profiling harness: time any registry query (cold+warm)
   * and dump its formatted physical plan. Usage:
@@ -11,17 +11,7 @@ object ProfileQuery {
     val sfDir = args(0)
     val name = args(1)
     val doExplain = args.length > 2 && args(2) == "explain"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.local(Session.envCpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // comma-separated names profile several queries in ONE session
     name.split(",").map(_.trim).filter(_.nonEmpty).foreach { nm =>

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Session
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -47,14 +48,7 @@ object ScaleUp {
     val perturb = args.lift(3).forall(_ != "verbatim")
     val factor = factorS.toInt
     require(factor >= 1)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.local(16).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def load(t: String) = spark.read.parquet(s"$src/$t.parquet")

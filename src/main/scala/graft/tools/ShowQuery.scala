@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 
 /** Builder-side inspection harness: print the first rows of any
   * registry query. Usage:
@@ -11,17 +11,7 @@ object ShowQuery {
     val sfDir = args(0)
     val name = args(1)
     val n = if (args.length > 2) args(2).toInt else 20
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.local(Session.envCpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.SparkEntry.queries(name)(spark, sfDir).show(n, false)
     spark.stop()

@@ -108,4 +108,18 @@ class JobServerSpec extends SparkSuite {
       assert(get(port, "/api/jobs").body().contains("\"status\":\"failed\""))
     } finally srv.stop()
   }
+
+  test("stop() ends the HTTP handler threads") {
+    @volatile var handler: Thread = null
+    val srv = new JobServer((_, _, _) => handler = Thread.currentThread())
+    val port = srv.start()
+    try {
+      val r = post(port, "/api/submit",
+        """{"initial_date":"2024-09-13","final_date":"2024-09-18","email":"a@b.com"}""")
+      assert(r.statusCode() == 200)
+    } finally srv.stop()
+    assert(handler != null)
+    handler.join(5000L)
+    assert(!handler.isAlive, s"${handler.getName} outlived stop()")
+  }
 }

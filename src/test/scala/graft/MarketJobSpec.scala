@@ -39,4 +39,20 @@ class MarketJobSpec extends SparkSuite {
     assert(math.abs(dolar - (((5.54 / 5.55 - 1) * 100 - 100.0) / 2)) < 1e-9)
     assert(sp > 0 - 1 && sp < 1) // small daily pct moves
   }
+
+  test("repeated MarketJob runs on one session leave no cached relation behind") {
+    val dir = Files.createTempDirectory("job").toString
+    val csv = s"$dir/market_data.csv"
+    Files.writeString(java.nio.file.Paths.get(csv),
+      """Date,DOLAR,S&P500
+        |2024-09-13,5.55,5626.02
+        |2024-09-16,5.54,5633.09
+        |2024-09-17,0,5634.58
+        |""".stripMargin)
+    val before = spark.sparkContext.getPersistentRDDs.size
+    (1 to 3).foreach { i =>
+      MarketJob.run(spark, "2024-09-13", "2024-09-17", s"job$i", csv, s"$dir/out")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size <= before)
+  }
 }

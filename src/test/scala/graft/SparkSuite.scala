@@ -3,21 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs — one per suite (lazy), config matching
-  * Verify/Bench (UTC, non-ANSI, AQE, few shuffle partitions). */
+/** Shared local session for specs — one per suite (lazy), built by
+  * [[Session]] like Verify/Bench, with few shuffle partitions. */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .withExtensions(new graft.functions.GraftExtensions)
-    .master("local[4]")
+  lazy val spark: SparkSession = Session.local(4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-wh").toString)
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   def sf(name: String): String = s"/root/testdata/$name"
