@@ -806,6 +806,20 @@ object Versioned {
 
   private[graft] def fileKeyOf(f: String): String = fileKey(f)
 
+  /** The Hive-style `col=value` directory segments (raw, escaped) of a
+    * data file, taken from its file KEY alone: a table root that sits
+    * under a `col=value` directory of its own contributes none. Empty
+    * for a file outside a data root. */
+  private[graft] def partitionSegmentsOf(f: String): Map[String, String] = {
+    val i = f.lastIndexOf(s"/data/$batchCol=")
+    if (i < 0) Map.empty
+    else f.substring(i + "/data/".length).split('/').toSeq
+      .drop(1).dropRight(1).flatMap { s =>
+        val e = s.indexOf('=')
+        if (e > 0) Some(s.substring(0, e) -> s.substring(e + 1)) else None
+      }.toMap
+  }
+
   /** Pre-parsed stats document: parse each manifest entry's stats JSON
     * ONCE per scan and probe the tree for every required column —
     * string-based probes re-parsed per (file × column × probe), an
@@ -1046,7 +1060,8 @@ object Versioned {
     else Some(spark.read.schema(dvFields).parquet(p.toString))
   }
 
-  private val dvFields = StructType(Seq(
+  /** Deletion-vector rows, also the connector's DV sidecar schema. */
+  private[graft] val dvFields = StructType(Seq(
     StructField("f", StringType),
     StructField("pos", org.apache.spark.sql.types.LongType)))
 

@@ -40,8 +40,8 @@ object LakeMetaTables {
     StructField("files", LongType)))
 }
 
-/** `$files`: the manifest's own parquet parts through the lake's row
-  * decoder. */
+/** `$files`: the manifest's own parquet parts through the lake's
+  * reader. */
 final class LakeFilesTable(path: String, version: Option[Long])
   extends Table with SupportsRead {
 
@@ -65,9 +65,7 @@ final class LakeFilesTable(path: String, version: Option[Long])
           LakeInputPartition(f, Array.empty): InputPartition).toArray
       }
       override def createReaderFactory(): PartitionReaderFactory =
-        new LakeReaderFactory(LakeMetaTables.filesSchema,
-          new SerializableHadoopConf(
-            SparkSession.active.sparkContext.hadoopConfiguration))
+        LakeReaderFactory(SparkSession.active, LakeMetaTables.filesSchema)
     }
 }
 

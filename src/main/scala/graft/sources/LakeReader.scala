@@ -1,159 +1,152 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow, Literal}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.ops.Versioned
 
-/** One lake file plus the row positions its deletion vector voids. */
+/** One lake file plus the row positions its deletion vector voids,
+  * sorted ascending. */
 final case class LakeInputPartition(file: String,
     dvPositions: Array[Long]) extends InputPartition
 
-/** Decodes lake parquet files into `InternalRow`s of the requested
-  * LOGICAL schema. Resolution order per field: the file's parquet
-  * schema under the field's PHYSICAL name (column mapping), else the
-  * partition directory segment in the file path, else NULL (additive
-  * schema evolution — the file predates the column). Deleted
-  * positions are skipped by row index, which is exactly the identity
-  * [[graft.ops.Versioned]]'s vectors key on. Row-by-row Group
-  * decoding, deliberately simple: the connector is the interop
-  * surface, not the vectorized hot path. */
-final class LakeReaderFactory(schema: StructType,
-    conf: SerializableHadoopConf) extends PartitionReaderFactory {
+/** Reads lake parquet files into `InternalRow`s of the requested
+  * LOGICAL schema through Spark's own `ParquetFileFormat`, the codec
+  * [[graft.ops.Versioned.read]] scans with. The reader function is
+  * built ONCE per scan on the driver; each [[LakeInputPartition]]
+  * becomes a `PartitionedFile`.
+  *
+  * Per field: the file's column under the field's PHYSICAL name
+  * (column mapping; rows are positional, so logical names come for
+  * free), else — when the file lacks it, as partitioned writes never
+  * store their partition column — the file's partition directory
+  * segment, else NULL (additive schema evolution). The row index
+  * Spark's reader computes is exactly the identity
+  * [[graft.ops.Versioned]]'s deletion vectors key on, so deleted
+  * positions are skipped by walking the sorted vector with a cursor.
+  * No data filter is passed: file pruning stays in the manifest. */
+final class LakeReaderFactory private (schema: StructType,
+    read: PartitionedFile => Iterator[InternalRow], timeZone: String)
+  extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val lp = p.asInstanceOf[LakeInputPartition]
-    new LakePartitionReader(lp.file, lp.dvPositions, schema, conf.value)
+    val file = PartitionedFile(InternalRow.empty,
+      SparkPath.fromPathString(lp.file), 0L, Long.MaxValue)
+    new LakePartitionReader(lp.file, lp.dvPositions, schema,
+      read(file), timeZone)
+  }
+}
+
+object LakeReaderFactory {
+
+  /** The reader row's row-index column, after the data fields. It
+    * must be nullable: a required column absent from the file fails
+    * the scan with "Required column is missing". */
+  private val rowIndex = StructField(
+    ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType,
+    nullable = true)
+
+  /** The requested fields the file supplies (everything but the
+    * row-id metadata columns), under their physical names. */
+  private[sources] def dataFields(schema: StructType): Seq[StructField] =
+    schema.fields.toSeq
+      .filterNot(f => f.name == LakeRowLevel.FileCol ||
+        f.name == LakeRowLevel.PosCol)
+      .map(f => f.copy(name = Versioned.physicalNameOf(f), nullable = true))
+
+  def apply(spark: SparkSession, schema: StructType): LakeReaderFactory = {
+    val required = StructType(dataFields(schema) :+ rowIndex)
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, required, StructType(Nil), required, Seq.empty,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConf())
+    new LakeReaderFactory(schema, read,
+      spark.sessionState.conf.sessionLocalTimeZone)
   }
 }
 
 final class LakePartitionReader(file: String, dv: Array[Long],
-    schema: StructType, conf: Configuration)
+    schema: StructType, rows: Iterator[InternalRow], timeZone: String)
   extends PartitionReader[InternalRow] {
 
-  private val reader: ParquetReader[Group] =
-    ParquetReader.builder(new GroupReadSupport(), new Path(file))
-      .withConf(conf).build()
+  private val FileSlot = -1
+  private val PosSlot = -2
 
-  private val deleted: java.util.HashSet[java.lang.Long] = {
-    val s = new java.util.HashSet[java.lang.Long](dv.length * 2 + 1)
-    dv.foreach(s.add(_))
-    s
+  /** Per output field, its ordinal in the reader row (or a slot). */
+  private val source: Array[Int] = {
+    var next = 0
+    schema.fields.map { f =>
+      if (f.name == LakeRowLevel.FileCol) FileSlot
+      else if (f.name == LakeRowLevel.PosCol) PosSlot
+      else { next += 1; next - 1 }
+    }
   }
 
-  private val phys = schema.fields.map(Versioned.physicalNameOf)
+  private val posOrdinal = source.count(_ >= 0)
 
-  /** Partition-directory value per field (None = not a partition
-    * column of this file), parsed once per file. */
-  private val partValue: Array[Option[Any]] =
-    schema.fields.zip(phys).map { case (f, p) =>
-      val re = ("/" + java.util.regex.Pattern.quote(p) + "=([^/]*)/").r
-      re.findFirstMatchIn(file).map { m =>
-        val raw = ExternalCatalogUtils.unescapePathName(m.group(1))
-        if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
-        else f.dataType match {
-          case StringType => UTF8String.fromString(raw)
-          case LongType => raw.toLong
-          case IntegerType => raw.toInt
-          case DoubleType => raw.toDouble
-          case FloatType => raw.toFloat
-          case BooleanType => raw.toBoolean
-          case dt => throw new UnsupportedOperationException(
-            s"graft-lake: partition column '${f.name}' of type $dt")
-        }
+  private val types = schema.fields.map(_.dataType)
+
+  /** Partition-directory value per field (null when the file has no
+    * segment for it), parsed once per file from the file KEY only. */
+  private val partValue: Array[Any] = {
+    val segs = Versioned.partitionSegmentsOf(file)
+    schema.fields.map { f =>
+      segs.get(ExternalCatalogUtils.escapePathName(
+          Versioned.physicalNameOf(f))) match {
+        case Some(raw0) =>
+          val raw = ExternalCatalogUtils.unescapePathName(raw0)
+          if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+          else Cast(Literal(raw), f.dataType, Some(timeZone)).eval()
+        case None => null
       }
     }
+  }
 
-  private var pos = -1L
-  private var cur: Group = _
-
-  // row-id metadata columns (SQL row-level DML's identity): the file's
-  // manifest KEY — the deletion vectors' own keying — and the row's
-  // physical position, which [[next]] counts over ALL physical rows
-  // (deleted ones included), so emitted positions match the file.
-  // Lazy: manifest-scan readers ($files) read files OUTSIDE a data
-  // root, where the key is undefined — and they never request it.
+  // the file's manifest KEY — the deletion vectors' own keying. Lazy:
+  // manifest-scan readers ($files) read files OUTSIDE a data root,
+  // where the key is undefined — and they never request it.
   private lazy val fileKeyStr =
     UTF8String.fromString(Versioned.fileKeyOf(file))
 
-  private val int96Cache = new java.util.HashMap[Integer, java.lang.Boolean]()
-  private def isInt96(idx: Int): Boolean = {
-    val hit = int96Cache.get(idx)
-    if (hit != null) hit.booleanValue()
-    else {
-      val v = cur.getType.getType(idx).asPrimitiveType()
-        .getPrimitiveTypeName ==
-        org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96
-      int96Cache.put(idx, v)
-      v
-    }
-  }
+  private val out = new GenericInternalRow(schema.length)
+  private var cur: InternalRow = _
+  private var d = 0
 
   override def next(): Boolean = {
-    var g = reader.read()
-    pos += 1
-    while (g != null && deleted.contains(pos)) {
-      g = reader.read()
-      pos += 1
+    while (rows.hasNext) {
+      cur = rows.next()
+      val pos = cur.getLong(posOrdinal)
+      while (d < dv.length && dv(d) < pos) d += 1
+      if (d == dv.length || dv(d) != pos) return true
     }
-    cur = g
-    cur != null
+    false
   }
 
   override def get(): InternalRow = {
-    val t = cur.getType
-    val vals = new Array[Any](schema.length)
     var i = 0
-    while (i < schema.length) {
-      val name = schema.fields(i).name
-      vals(i) =
-        if (name == LakeRowLevel.FileCol) fileKeyStr
-        else if (name == LakeRowLevel.PosCol) pos
-        else if (t.containsField(phys(i))) {
-          val idx = t.getFieldIndex(phys(i))
-          if (cur.getFieldRepetitionCount(idx) == 0) null
-          else extract(idx, schema.fields(i).dataType, name)
-        } else partValue(i).orNull
+    while (i < source.length) {
+      val j = source(i)
+      out.update(i,
+        if (j == FileSlot) fileKeyStr
+        else if (j == PosSlot) cur.getLong(posOrdinal)
+        else if (cur.isNullAt(j)) partValue(i)
+        else cur.get(j, types(i)))
       i += 1
     }
-    InternalRow.fromSeq(vals.toSeq)
+    out
   }
 
-  private def extract(idx: Int, dt: DataType, name: String): Any =
-    dt match {
-      case LongType => cur.getLong(idx, 0)
-      case IntegerType => cur.getInteger(idx, 0)
-      case DoubleType => cur.getDouble(idx, 0)
-      case FloatType => cur.getFloat(idx, 0)
-      case BooleanType => cur.getBoolean(idx, 0)
-      case StringType => UTF8String.fromString(cur.getString(idx, 0))
-      case DateType => cur.getInteger(idx, 0) // parquet DATE = int32 days
-      case TimestampType =>
-        // Spark's default parquet timestamp encoding is INT96 (julian
-        // day + nanos-of-day), with INT64 micros behind a conf — decode
-        // whichever the file carries; the file schema is fixed for the
-        // reader's lifetime, so the discrimination is cached per field
-        if (isInt96(idx)) {
-          val buf = java.nio.ByteBuffer
-            .wrap(cur.getInt96(idx, 0).getBytes)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val nanosOfDay = buf.getLong
-          val julianDay = buf.getInt
-          (julianDay - 2440588).toLong * 86400L * 1000000L +
-            nanosOfDay / 1000L
-        } else cur.getLong(idx, 0) // TIMESTAMP_MICROS int64
-      case other => throw new UnsupportedOperationException(
-        s"graft-lake: column '$name' of type $other is not supported " +
-          "by the DSv2 row decoder; read it via Versioned.read")
-    }
-
-  override def close(): Unit = reader.close()
+  override def close(): Unit = rows match {
+    case c: java.io.Closeable => c.close()
+    case _ => ()
+  }
 }

@@ -1,15 +1,13 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.simple.SimpleGroup
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Types}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.datasources.OutputWriter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -77,9 +75,7 @@ final class LakeDeltaOperation(path: String, tableSchema: StructType,
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
       override def build(): DeltaWrite = new LakeDeltaWrite(path,
-        info.schema(), LakeRowLevel.opNameOf(cmd),
-        new SerializableHadoopConf(
-          SparkSession.active.sparkContext.hadoopConfiguration))
+        info.schema(), LakeRowLevel.opNameOf(cmd))
     }
 
   override def rowId(): Array[NamedReference] = LakeRowLevel.rowIdRefs
@@ -96,13 +92,16 @@ final class LakeDeltaOperation(path: String, tableSchema: StructType,
 }
 
 final class LakeDeltaWrite(path: String, rowSchema: StructType,
-    op: String, conf: SerializableHadoopConf) extends DeltaWrite {
+    op: String) extends DeltaWrite {
 
   override def toBatch: DeltaBatchWrite = new DeltaBatchWrite {
 
     override def createBatchWriterFactory(
-        info: PhysicalWriteInfo): DeltaWriterFactory =
-      new LakeDeltaWriterFactory(path, rowSchema, conf)
+        info: PhysicalWriteInfo): DeltaWriterFactory = {
+      val spark = SparkSession.active
+      new LakeDeltaWriterFactory(path, LakeParquetSink(spark, rowSchema),
+        LakeParquetSink(spark, Versioned.dvFields))
+    }
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val ms = messages.filter(_ != null)
@@ -138,11 +137,11 @@ final class LakeDeltaWrite(path: String, rowSchema: StructType,
 final case class LakeDeltaMessage(dataFiles: Seq[String],
     dvFiles: Seq[String]) extends WriterCommitMessage
 
-final class LakeDeltaWriterFactory(path: String, rowSchema: StructType,
-    conf: SerializableHadoopConf) extends DeltaWriterFactory {
+final class LakeDeltaWriterFactory(path: String, rows: LakeParquetSink,
+    dv: LakeParquetSink) extends DeltaWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DeltaWriter[InternalRow] =
-    new LakeDeltaTaskWriter(path, rowSchema, partitionId, taskId, conf)
+    new LakeDeltaTaskWriter(path, rows, dv, partitionId, taskId)
 }
 
 /** Per-task row-operation writer: INSERTs stream into one staged
@@ -151,46 +150,36 @@ final class LakeDeltaWriterFactory(path: String, rowSchema: StructType,
   * created lazily, so a task that only deletes stages no row file and
   * vice versa. Nothing accumulates in JVM memory beyond parquet's own
   * column pages. */
-final class LakeDeltaTaskWriter(path: String, rowSchema: StructType,
-    partitionId: Int, taskId: Long, conf: SerializableHadoopConf)
+final class LakeDeltaTaskWriter(path: String, rowSink: LakeParquetSink,
+    dvSink: LakeParquetSink, partitionId: Int, taskId: Long)
   extends DeltaWriter[InternalRow] {
 
   private var rows: LakeRowWriter = _
   private def rowWriter(): LakeRowWriter = {
     if (rows == null)
-      rows = new LakeRowWriter(path, rowSchema,
-        s"rl$partitionId-$taskId", conf)
+      rows = new LakeRowWriter(path, rowSink, s"rl$partitionId-$taskId")
     rows
   }
 
-  private val dvType: MessageType = Types.buildMessage()
-    .addField(Types.optional(PrimitiveType.PrimitiveTypeName.BINARY)
-      .as(LogicalTypeAnnotation.stringType()).named("f"))
-    .addField(Types.optional(PrimitiveType.PrimitiveTypeName.INT64)
-      .named("pos"))
-    .named("spark_schema")
-
   private var dvFile: Path = _
-  private var dv: org.apache.parquet.hadoop.ParquetWriter[
-    org.apache.parquet.example.data.Group] = _
+  private var dv: OutputWriter = _
   private def dvWriter() = {
     if (dv == null) {
       dvFile = new Path(new Path(path, "_dvstage"),
         s"rl$partitionId-$taskId-${java.util.UUID.randomUUID()
           .toString.take(8)}/part-0.parquet")
-      dv = ExampleParquetWriter
-        .builder(HadoopOutputFile.fromPath(dvFile, conf.value))
-        .withConf(conf.value).withType(dvType).build()
+      dv = dvSink.open(dvFile)
     }
     dv
   }
 
+  private val dvRow = new GenericInternalRow(2)
+
   /** `id` rows follow [[LakeRowLevel.rowIdRefs]] order: (file, pos). */
   override def delete(metadata: InternalRow, id: InternalRow): Unit = {
-    val g = new SimpleGroup(dvType)
-    g.add("f", id.getUTF8String(0).toString)
-    g.add("pos", id.getLong(1))
-    dvWriter().write(g)
+    dvRow.update(0, id.getUTF8String(0))
+    dvRow.setLong(1, id.getLong(1))
+    dvWriter().write(dvRow)
   }
 
   override def insert(row: InternalRow): Unit = rowWriter().write(row)
@@ -219,7 +208,7 @@ final class LakeDeltaTaskWriter(path: String, rowSchema: StructType,
     if (rows != null) rows.abort()
     if (dv != null) {
       dv.close()
-      dvFile.getFileSystem(conf.value).delete(dvFile.getParent, true)
+      dvFile.getFileSystem(dvSink.conf.value).delete(dvFile.getParent, true)
     }
   }
 
@@ -238,12 +227,13 @@ final class LakeDeltaTaskWriter(path: String, rowSchema: StructType,
   * writes need in-plan machinery (generated/identity columns, column
   * mapping, partition layouts) take the V1 fallback into
   * [[Versioned.append]] instead — see `LakeTable.newWriteBuilder`. */
-final class LakeBatchWrite(path: String, schema: StructType,
-    conf: SerializableHadoopConf) extends BatchWrite {
+final class LakeBatchWrite(path: String, schema: StructType)
+  extends BatchWrite {
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    new LakeBatchWriterFactory(path, schema, conf)
+    new LakeBatchWriterFactory(path,
+      LakeParquetSink(SparkSession.active, schema))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val files = messages.filter(_ != null).flatMap {
@@ -265,9 +255,9 @@ final class LakeBatchWrite(path: String, schema: StructType,
   }
 }
 
-final class LakeBatchWriterFactory(path: String, schema: StructType,
-    conf: SerializableHadoopConf) extends DataWriterFactory {
+final class LakeBatchWriterFactory(path: String, sink: LakeParquetSink)
+  extends DataWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
-    new LakeRowWriter(path, schema, s"ba$partitionId-$taskId", conf)
+    new LakeRowWriter(path, sink, s"ba$partitionId-$taskId")
 }

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDelete, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.functions.{col, lit, not}
 import org.apache.spark.sql.sources.{And, IsNotNull, IsNull, Not, Or, StringContains, StringEndsWith, StringStartsWith}
@@ -54,11 +55,12 @@ import graft.ops.Versioned
   *
   * Scale: planning cost is manifest-scale (the skipping decision runs
   * through the engine, the DV collect is bounded by outstanding
-  * deletes), and reads parallelize one task per file. The row decoder
-  * is a plain parquet Group reader — correct but not vectorized, so
-  * the hot analytic path stays [[Versioned.read]] (native vectorized
-  * scans); this surface is for ecosystem interop: SQL-first callers,
-  * streaming consumers, engines that speak DSv2.
+  * deletes), and reads parallelize one task per file. Files decode
+  * through Spark's own `ParquetFileFormat` ([[LakeReaderFactory]]),
+  * the vectorized codec [[Versioned.read]] scans with, and the
+  * connector's writers encode through the same format, so SQL,
+  * streaming and DSv2 callers read and write every type the function
+  * API does.
   */
 class LakeSource extends TableProvider with DataSourceRegister {
 
@@ -213,14 +215,11 @@ final class LakeTable(path: String, version: Option[Long],
     require(version.isEmpty,
       s"cannot write to a version-pinned table: $path VERSION AS OF " +
         version.get)
-    val spark = SparkSession.active
     new WriteBuilder {
       override def build(): Write =
         if (directWrite) new Write {
           override def toBatch: BatchWrite =
-            new LakeBatchWrite(path, info.schema(),
-              new SerializableHadoopConf(
-                spark.sparkContext.hadoopConfiguration))
+            new LakeBatchWrite(path, info.schema())
           override def toStreaming: streaming.StreamingWrite =
             new LakeStreamingWrite(path, info.schema(), info.queryId())
         }
@@ -517,17 +516,12 @@ final class LakeScan(path: String, version: Option[Long],
       val phys = required.fields.map(f =>
         f.name -> Versioned.physicalNameOf(f)).toMap
       files = segAllowed.foldLeft(files) { case (fs, (c, allowed)) =>
-        val p = phys.getOrElse(c, c)
-        val segs = allowed.map(a =>
-          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .getPartitionPathString(p, a))
-        val re = ("/" + java.util.regex.Pattern.quote(p) + "=[^/]*/").r
-        fs.filter { f =>
-          re.findFirstIn(f) match {
-            case None => true // not partitioned by c: keep
-            case Some(seg) => segs.contains(seg.stripPrefix("/").stripSuffix("/"))
-          }
-        }
+        val p = ExternalCatalogUtils.escapePathName(phys.getOrElse(c, c))
+        val vals = allowed.map(ExternalCatalogUtils.escapePathName)
+        // segments of the file KEY only: a `c=…` directory above the
+        // table root says nothing about the file
+        fs.filter(f => Versioned.partitionSegmentsOf(f).get(p)
+          .forall(vals.contains)) // not partitioned by c: keep
       }
     }
     val keep = files.toSet
@@ -566,8 +560,7 @@ final class LakeScan(path: String, version: Option[Long],
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new LakeReaderFactory(required, new SerializableHadoopConf(
-      SparkSession.active.sparkContext.hadoopConfiguration))
+    LakeReaderFactory(SparkSession.active, required)
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new LakeMicroBatchStream(path, required, ignoreChanges, startingVersion,

@@ -169,8 +169,7 @@ final class LakeMicroBatchStream(path: String, schema: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new LakeReaderFactory(schema, new SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration))
+    LakeReaderFactory(spark, schema)
 
   override def commit(end: Offset): Unit = ()
 

@@ -1,16 +1,15 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.simple.SimpleGroup
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Types}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.Versioned
 
@@ -42,8 +41,7 @@ final class LakeStreamingWrite(path: String, schema: StructType,
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new LakeStreamWriterFactory(path, schema, new SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration))
+    new LakeStreamWriterFactory(path, LakeParquetSink(spark, schema))
 
   private def spark = SparkSession.active
 
@@ -107,82 +105,58 @@ final class LakeStreamingWrite(path: String, schema: StructType,
 final case class LakeFilesMessage(files: Seq[String])
   extends WriterCommitMessage
 
-final class LakeStreamWriterFactory(path: String, schema: StructType,
-    conf: SerializableHadoopConf) extends StreamingDataWriterFactory {
+final class LakeStreamWriterFactory(path: String, sink: LakeParquetSink)
+  extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new LakeRowWriter(path, schema, s"se$epochId-$partitionId", conf)
+    new LakeRowWriter(path, sink, s"se$epochId-$partitionId")
+}
+
+/** Spark's own parquet writer, prepared on the DRIVER for one schema:
+  * `ParquetFileFormat.prepareWrite` fills the job configuration (write
+  * support, schema, the session's compression and
+  * `outputTimestampType`), which ships through
+  * [[SerializableHadoopConf]] with the serializable
+  * `OutputWriterFactory`. Executor-staged files therefore encode
+  * exactly as [[Versioned]]'s own staged writes do. */
+final class LakeParquetSink private (val conf: SerializableHadoopConf,
+    factory: OutputWriterFactory, schema: StructType) extends Serializable {
+
+  def open(file: Path): OutputWriter =
+    factory.newInstance(file.toString, schema,
+      new TaskAttemptContextImpl(conf.value, new TaskAttemptID()))
+}
+
+object LakeParquetSink {
+  /** Files carry PHYSICAL names (column mapping), every column
+    * nullable, as Spark's file writer stores them. */
+  def apply(spark: SparkSession, schema: StructType): LakeParquetSink = {
+    val physical = StructType(LakeReaderFactory.dataFields(schema))
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, physical)
+    new LakeParquetSink(new SerializableHadoopConf(job.getConfiguration),
+      factory, physical)
+  }
 }
 
 /** One parquet file per (task, epoch), written on the EXECUTOR under
   * the table's staging convention. Only rows the task saw are
   * buffered by parquet's own column pages — nothing accumulates in
   * JVM lists. */
-final class LakeRowWriter(path: String, schema: StructType,
-    tag: String, conf: SerializableHadoopConf)
+final class LakeRowWriter(path: String, sink: LakeParquetSink, tag: String)
   extends DataWriter[InternalRow] {
-
-  private val phys = schema.fields.map(Versioned.physicalNameOf)
-
-  private val messageType: MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.zip(phys).foreach { case (f, p) =>
-      val t = f.dataType match {
-        case LongType =>
-          Types.optional(PrimitiveType.PrimitiveTypeName.INT64)
-        case TimestampType =>
-          Types.optional(PrimitiveType.PrimitiveTypeName.INT64)
-            .as(LogicalTypeAnnotation.timestampType(true,
-              LogicalTypeAnnotation.TimeUnit.MICROS))
-        case IntegerType =>
-          Types.optional(PrimitiveType.PrimitiveTypeName.INT32)
-        case DateType =>
-          Types.optional(PrimitiveType.PrimitiveTypeName.INT32)
-            .as(LogicalTypeAnnotation.dateType())
-        case DoubleType =>
-          Types.optional(PrimitiveType.PrimitiveTypeName.DOUBLE)
-        case FloatType =>
-          Types.optional(PrimitiveType.PrimitiveTypeName.FLOAT)
-        case BooleanType =>
-          Types.optional(PrimitiveType.PrimitiveTypeName.BOOLEAN)
-        case StringType =>
-          Types.optional(PrimitiveType.PrimitiveTypeName.BINARY)
-            .as(LogicalTypeAnnotation.stringType())
-        case other => throw new UnsupportedOperationException(
-          s"graft-lake streaming sink: column '${f.name}' of type " +
-            s"$other is not supported")
-      }
-      b.addField(t.named(p))
-    }
-    b.named("spark_schema")
-  }
 
   private val file = new Path(new Path(path, "data"),
     s"${"gbatch"}=$tag-" +
       s"${java.util.UUID.randomUUID().toString.take(8)}/part-0.parquet")
 
-  private val writer = ExampleParquetWriter
-    .builder(HadoopOutputFile.fromPath(file, conf.value))
-    .withConf(conf.value).withType(messageType).build()
+  private val writer = sink.open(file)
 
   private var n = 0L
 
   override def write(row: InternalRow): Unit = {
-    val g = new SimpleGroup(messageType)
-    var i = 0
-    while (i < schema.length) {
-      if (!row.isNullAt(i)) schema.fields(i).dataType match {
-        case LongType | TimestampType => g.add(phys(i), row.getLong(i))
-        case IntegerType | DateType => g.add(phys(i), row.getInt(i))
-        case DoubleType => g.add(phys(i), row.getDouble(i))
-        case FloatType => g.add(phys(i), row.getFloat(i))
-        case BooleanType => g.add(phys(i), row.getBoolean(i))
-        case StringType => g.add(phys(i), row.getUTF8String(i).toString)
-        case _ => ()
-      }
-      i += 1
-    }
-    writer.write(g)
+    writer.write(row)
     n += 1
   }
 
@@ -190,14 +164,14 @@ final class LakeRowWriter(path: String, schema: StructType,
     writer.close()
     if (n == 0L) {
       // empty task: drop the schema-only file, contribute nothing
-      file.getFileSystem(conf.value).delete(file.getParent, true)
+      file.getFileSystem(sink.conf.value).delete(file.getParent, true)
       LakeFilesMessage(Seq.empty)
     } else LakeFilesMessage(Seq(file.toString))
   }
 
   override def abort(): Unit = {
     writer.close()
-    file.getFileSystem(conf.value).delete(file.getParent, true)
+    file.getFileSystem(sink.conf.value).delete(file.getParent, true)
   }
 
   override def close(): Unit = ()

@@ -9,15 +9,20 @@ import graft.ops.Versioned
 /** MODEL-BASED randomized check of the versioned lake's op algebra:
   * a seeded random interleaving of MERGE (upsert + delete flags),
   * copy-on-write DELETE, vectored DELETE, vectored UPDATE, full and
-  * selective COMPACT is applied both to the real table and to a
-  * trivial in-memory Map model. After every op the current snapshot
-  * must equal the model, and at the end EVERY historical version must
-  * still equal its model snapshot — the strongest practical statement
-  * of snapshot isolation: no op, in any order, may bleed into the
-  * past or lose a row. Seeds are fixed so a failure replays
-  * deterministically. */
+  * selective COMPACT, branch publishes, and SQL `DELETE` / `UPDATE`
+  * (the connector's row-level path, keyed on the reader's row-id
+  * columns) is applied both to the real table and to a trivial
+  * in-memory Map model. After every op the current snapshot must equal
+  * the model on BOTH read surfaces — `Versioned.read` and SQL through
+  * the connector — and at the end EVERY historical version must still
+  * equal its model snapshot on both (`VERSION AS OF` for SQL) — the
+  * strongest practical statement of snapshot isolation: no op, in any
+  * order, may bleed into the past or lose a row. Seeds are fixed so a
+  * failure replays deterministically. */
 class LakeModelSpec extends SparkSuite {
   import spark.implicits._
+
+  spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
 
   private type Model = Map[Long, Long] // k -> n
 
@@ -25,10 +30,16 @@ class LakeModelSpec extends SparkSuite {
     Versioned.read(spark, dir, v).select("k", "n").as[(Long, Long)]
       .collect().toMap
 
+  private def readSql(dir: String, v: Option[Long] = None): Model =
+    spark.sql(s"SELECT k, n FROM lake.`$dir`" +
+        v.fold("")(x => s" VERSION AS OF $x"))
+      .as[(Long, Long)].collect().toMap
+
   private def df(rows: Seq[(Long, Long)]) = rows.toDF("k", "n")
 
   test("random op interleavings preserve the model at every version " +
       "(seeds 7 and 99)") {
+    val sqlOps = mutable.Set[String]()
     Seq(7, 99).foreach { seed =>
       val rnd = new scala.util.Random(seed)
       val dir = java.nio.file.Files
@@ -50,8 +61,18 @@ class LakeModelSpec extends SparkSuite {
           history += model
         }
 
+        /** A SQL statement commits one version, or none when it
+          * matches no row. */
+        def sqlExpected(stmt: String, expected: Model): Unit = {
+          val before = Versioned.currentVersion(spark, dir)
+          spark.sql(stmt)
+          if (Versioned.currentVersion(spark, dir) != before)
+            commitExpected(expected)
+          else assert(expected == model, s"no-op `$stmt` must mean no hits")
+        }
+
         (1 to 14).foreach { step =>
-          rnd.nextInt(7) match {
+          rnd.nextInt(9) match {
             case 0 => // merge: upsert a random batch
               val keys = (1 to 1 + rnd.nextInt(6))
                 .map(_ => 1L + rnd.nextInt(40)).distinct
@@ -120,15 +141,33 @@ class LakeModelSpec extends SparkSuite {
               }
               Versioned.publish(spark, br)
               commitExpected(expected)
+            case 7 => // SQL DELETE: not a source filter, so row-level
+              val m = 2 + rnd.nextInt(6)
+              val r = rnd.nextInt(m)
+              sqlExpected(s"DELETE FROM lake.`$dir` WHERE k % $m = $r",
+                model.filterNot { case (k, _) => k % m == r })
+            case 8 => // SQL UPDATE
+              val m = 2 + rnd.nextInt(4)
+              val r = rnd.nextInt(m)
+              sqlExpected(
+                s"UPDATE lake.`$dir` SET n = n + 1 WHERE k % $m = $r",
+                model.map { case (k, n) =>
+                  k -> (if (k % m == r) n + 1L else n) })
           }
           assert(readState(dir) == model,
             s"seed=$seed step=$step: current snapshot diverged from model")
+          assert(readSql(dir) == model,
+            s"seed=$seed step=$step: SQL read diverged from model")
         }
-        // snapshot isolation across the WHOLE history
+        // snapshot isolation across the WHOLE history, both surfaces
         history.zipWithIndex.foreach { case (m0, i) =>
           assert(readState(dir, Some(i + 1L)) == m0,
             s"seed=$seed: version ${i + 1} no longer matches its model")
+          assert(readSql(dir, Some(i + 1L)) == m0,
+            s"seed=$seed: SQL VERSION AS OF ${i + 1} diverged from model")
         }
+        sqlOps ++= Versioned.history(spark, dir).map(_.operation)
+          .filter(_.endsWith("_SQL"))
       } finally {
         Seq(dir, branchRoot.toString).foreach { d0 =>
           val p = new org.apache.hadoop.fs.Path(d0)
@@ -137,5 +176,7 @@ class LakeModelSpec extends SparkSuite {
         }
       }
     }
+    // the seeds must exercise both SQL row-level kinds
+    assert(sqlOps == Set("DELETE_SQL", "UPDATE_SQL"), s"SQL ops: $sqlOps")
   }
 }

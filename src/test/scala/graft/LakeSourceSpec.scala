@@ -68,6 +68,20 @@ class LakeSourceSpec extends SparkSuite {
     assert(LakeSource.lastPlanned.get()._1 < total)
   }
 
+  test("partition segments come from the file key: a table root under " +
+      "a Hive-style directory of the same column reads and prunes right") {
+    spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
+    val dir = s"${tmp("graft_ds10")}/s=zzz/tbl"
+    Versioned.init(Seq((1L, "a"), (2L, "a"), (3L, "b"))
+      .toDF("k", "s"), dir, partitionCol = Some("s"))
+    val api = Versioned.read(spark, dir)
+    assert(spark.sql(s"SELECT count(*) FROM lake.`$dir` WHERE s = 'a'")
+      .as[Long].head() == api.filter(col("s") === "a").count())
+    assert(spark.sql(s"SELECT k, s FROM lake.`$dir`")
+      .as[(Long, String)].collect().toSet ==
+      api.select("k", "s").as[(Long, String)].collect().toSet)
+  }
+
   test("versionAsOf time-travels; renamed columns read by physical " +
       "identity through the connector") {
     val dir = tmp("graft_ds4")

@@ -536,4 +536,55 @@ class LakeV2Spec extends SparkSuite {
       assert(Versioned.read(spark, dir).count() == 1000L)
     } finally rm(dir)
   }
+
+  test("the connector reads and writes every type Versioned does: " +
+      "decimal, binary, date, timestamp (INT96 and INT64), array, struct") {
+    spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
+    val dir = tmp()
+    val src = tmp()
+    val cp = tmp()
+    def batch(lo: Long) = spark.range(lo, lo + 4).selectExpr(
+      "id AS k",
+      "IF(id % 4 = 3, NULL, CAST(id * 1.25 AS DECIMAL(12,2))) AS amt",
+      "CAST(concat('b', id) AS BINARY) AS bin",
+      "date_add(DATE'2024-01-01', CAST(id AS INT)) AS d",
+      "timestamp_micros(1709296245123456 + id * 86400000001) AS t",
+      "IF(id % 4 = 2, NULL, array(id, id * 2)) AS xs",
+      "named_struct('a', CAST(id AS INT), 'b', concat('s', id)) AS st")
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().sortBy(_.getLong(0)).toSeq
+    def viaSql = spark.sql(s"SELECT * FROM lake.`$dir`")
+    def check(expected: Seq[org.apache.spark.sql.Row], what: String): Unit = {
+      val api = Versioned.read(spark, dir)
+      assert(sorted(api.select(viaSql.columns.map(col).toSeq: _*)) ==
+        sorted(viaSql), s"$what: SQL read differs from Versioned.read")
+      assert(sorted(api) == expected, s"$what: Versioned.read lost rows")
+    }
+    try {
+      Versioned.init(batch(0).coalesce(1), dir) // session default: INT96
+      val key = "spark.sql.parquet.outputTimestampType"
+      spark.conf.set(key, "TIMESTAMP_MICROS")
+      try Versioned.append(batch(10).coalesce(1), dir)
+      finally spark.conf.unset(key)
+      check(sorted(batch(0).union(batch(10))), "INT96 + INT64 appends")
+      // the direct V2 write: executor-staged files, APPEND commit
+      batch(20).createOrReplaceTempView("lake_types_src")
+      spark.sql(s"INSERT INTO lake.`$dir` SELECT * FROM lake_types_src")
+      assert(Versioned.history(spark, dir).last.operation == "APPEND")
+      assert(Versioned.files(spark, dir).exists(_.contains("/gbatch=ba")))
+      check(sorted(batch(0).union(batch(10)).union(batch(20))),
+        "SQL INSERT")
+      // one micro-batch through the streaming sink
+      batch(30).write.mode("overwrite").parquet(src)
+      val q = spark.readStream.schema(batch(30).schema).parquet(src)
+        .writeStream.format("graft-lake").option("path", dir)
+        .option("checkpointLocation", cp)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      assert(Versioned.history(spark, dir).last.operation == "STREAM-APPEND")
+      check(sorted(batch(0).union(batch(10)).union(batch(20))
+        .union(batch(30))), "streaming sink")
+    } finally Seq(dir, src, cp).foreach(rm)
+  }
 }

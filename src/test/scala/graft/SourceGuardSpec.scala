@@ -4,9 +4,10 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-/** One session builder and one scratch owner: `src/main` may build a
-  * `SparkSession` only in Session.scala and create temp directories
-  * only in Scratch.scala. */
+/** One session builder, one scratch owner and one parquet codec:
+  * `src/main` may build a `SparkSession` only in Session.scala, create
+  * temp directories only in Scratch.scala, and the lake connector
+  * encodes data files only through Spark's own parquet format. */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private val main = Paths.get("src/main/scala")
@@ -26,5 +27,16 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("createTempDirectory appears only in Scratch.scala") {
     assert(holders("createTempDirectory") == Seq("graft/Scratch.scala"))
+  }
+
+  test("the lake connector has no hand-rolled parquet codec") {
+    // exempt: Versioned.scala's driver-only manifest codec
+    // (readParquetRows / writeManifestDirect), which keeps a commit
+    // from paying a Spark job; data files go through ParquetFileFormat
+    val sources = holders("org.apache.parquet.example")
+      .filter(_.startsWith("graft/sources/"))
+    assert(sources.isEmpty, s"parquet-mr example codec in: $sources")
+    assert(holders("org.apache.parquet.example") ==
+      Seq("graft/ops/Versioned.scala"))
   }
 }

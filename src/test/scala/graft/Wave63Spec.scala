@@ -73,7 +73,7 @@ class Wave63Spec extends SparkSuite {
   }
 
   test("sink-written timestamps read back through Versioned.read " +
-      "(annotated INT64 micros)") {
+      "(session encoding)") {
     val dir = tmp("graft_sk5")
     val ts = java.sql.Timestamp.valueOf("2024-03-01 12:30:45.123456")
     Versioned.init(Seq.empty[(Long, java.sql.Timestamp)]
