@@ -162,7 +162,7 @@ object ExternalLog {
       } else if (already.contains(lv)) {
         prevExported = Versioned.files(spark, path, Some(v))
         latest = math.max(latest, lv)
-      } else if (Versioned.deletionVector(spark, path, Some(v)).isEmpty) {
+      } else if (Versioned.deletionVectorRows(spark, path, Some(v)).isEmpty) {
         val fileList = Versioned.files(spark, path, Some(v))
         val prevSet = prevExported.toSet
         val curSet = fileList.toSet

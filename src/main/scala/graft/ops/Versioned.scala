@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   *                                          legacy text files readable
   *   <table>/_versions/v<version>.schema    table schema as JSON
   *   <table>/_versions/v<version>.dv        deletion vector (parquet,
-  *                                          (file_name, row_index))
+  *                                          (file key, row_index))
   * }}}
   *
   *  - '''Commit = manifest rename.''' A writer stages its new data
@@ -41,7 +41,10 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   *    only where Spark's scan API itself needs an explicit path list,
   *    i.e. proportional to the files actually being READ or REWRITTEN.
   *    Small collected manifests go through a direct parquet
-  *    reader/writer (no job) plus an immutability-keyed cache.
+  *    reader/writer (no job) plus an immutability-keyed cache; scan
+  *    planning (interval pruning, per-file vectors) runs on the
+  *    driver over those cached entries, so planning a read starts
+  *    no Spark job.
   *  - '''Schema in the log, not the footers.''' Every commit publishes
   *    the table schema (`v<N>.schema`); reads project files through it,
   *    so a file written before a column existed reads as NULL without
@@ -64,9 +67,12 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   *    shuffling only those partitions' data.
   *  - '''Merge-on-read deletes.''' [[deleteVectored]] commits a
   *    DELETE as a deletion vector — (file, row position) pairs stored
-  *    beside the manifest — rewriting ZERO data files; readers
-  *    anti-join the (broadcast-sized) vector; [[compact]]
-  *    materializes and drops it. [[delete]] remains the copy-on-write
+  *    beside the manifest — rewriting ZERO data files. A version's
+  *    vector is immutable driver METADATA like its manifest: written
+  *    and read by the same direct parquet codec, cached per (path,
+  *    version), applied by readers as a per-file row-index predicate
+  *    (no broadcast, no join); [[compact]] materializes and drops
+  *    it. [[delete]] remains the copy-on-write
   *    path. At 100 TB with frequent small erasures, vectored delete is
   *    the right amortization: O(deleted rows) write now, one bounded
   *    rewrite at the next compaction.
@@ -164,11 +170,17 @@ object Versioned {
     new java.util.concurrent.ConcurrentHashMap[(String, Long),
       Seq[(String, Option[String])]]()
 
+  /** Deletion vectors of committed versions, immutable like their
+    * manifests; None = the version has no vector. */
+  private val dvCache =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long), Option[DvRows]]()
+
   private def invalidate(path: String): Unit = {
     manifestCache.keySet.removeIf(_._1 == path)
     schemaCache.keySet.removeIf(_._1 == path)
     segmentCache.keySet.removeIf(_._1 == path)
     rawTopCache.keySet.removeIf(_._1 == path)
+    dvCache.keySet.removeIf(_._1 == path)
   }
 
   /** Manifest rows are (file path, optional per-file column stats as
@@ -180,11 +192,12 @@ object Versioned {
     StructField("f", StringType),
     StructField("stats_json", StringType)))
 
-  /** One parquet manifest/segment FILE → raw (f, stats_json) rows,
-    * through the direct columnar reader — no Spark job. */
-  private def readParquetRows(conf: org.apache.hadoop.conf.Configuration,
-      file: Path): Seq[(String, Option[String])] = {
-    val out = Seq.newBuilder[(String, Option[String])]
+  /** Every record of one parquet FILE through parquet-mr's record
+    * reader — no Spark job. The driver-metadata codec shared by
+    * manifests, segments and deletion vectors; `each` decodes one
+    * record. */
+  private def foreachParquetRecord(conf: org.apache.hadoop.conf.Configuration,
+      file: Path)(each: org.apache.parquet.example.data.Group => Unit): Unit = {
     val rd = org.apache.parquet.hadoop.ParquetReader
       .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
         file)
@@ -192,15 +205,32 @@ object Versioned {
     try {
       var g = rd.read()
       while (g != null) {
-        val sj =
-          if (g.getType.containsField("stats_json") &&
-            g.getFieldRepetitionCount("stats_json") > 0)
-            Some(g.getString("stats_json", 0))
-          else None
-        out += ((g.getString("f", 0), sj))
+        each(g)
         g = rd.read()
       }
     } finally rd.close()
+  }
+
+  private def hasValue(g: org.apache.parquet.example.data.Group,
+      field: String): Boolean =
+    g.getType.containsField(field) && g.getFieldRepetitionCount(field) > 0
+
+  /** The `.parquet` part files under a parquet directory, by name (a
+    * single file is its own part). */
+  private def parquetParts(f: FileSystem, p: Path): Seq[Path] =
+    if (!f.getFileStatus(p).isDirectory) Seq(p)
+    else f.listStatus(p).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
+
+  /** One parquet manifest/segment FILE → raw (f, stats_json) rows. */
+  private def readParquetRows(conf: org.apache.hadoop.conf.Configuration,
+      file: Path): Seq[(String, Option[String])] = {
+    val out = Seq.newBuilder[(String, Option[String])]
+    foreachParquetRecord(conf, file) { g =>
+      out += ((g.getString("f", 0),
+        if (hasValue(g, "stats_json")) Some(g.getString("stats_json", 0))
+        else None))
+    }
     out.result()
   }
 
@@ -212,11 +242,8 @@ object Versioned {
     val f = fs(spark, path)
     val conf = spark.sparkContext.hadoopConfiguration
     val st = f.getFileStatus(p) // throws FileNotFound for vacuumed/absent
-    if (st.isDirectory)
-      f.listStatus(p).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-        .toSeq.flatMap(readParquetRows(conf, _))
-    else if (p.getName.endsWith(".parquet")) readParquetRows(conf, p)
+    if (st.isDirectory || p.getName.endsWith(".parquet"))
+      parquetParts(f, p).flatMap(readParquetRows(conf, _))
     else {
       val in = f.open(p)
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
@@ -508,28 +535,38 @@ object Versioned {
       Encoders.tuple(Encoders.STRING, Encoders.STRING))
       .toDF("f", "stats_json")
 
-  /** Direct single-file parquet write of a small, already-collected
-    * manifest — the common init/compact/delete/clone commit stays a
-    * metadata-speed driver write instead of a Spark job. */
-  private def writeManifestDirect(spark: SparkSession, file: Path,
-      entries: Seq[(String, Option[String])]): Unit = {
+  /** Direct single-file parquet write of small, already-collected
+    * driver metadata — `schema` is the parquet message type, `fill`
+    * sets one record's fields. The common init/compact/delete/clone
+    * commit stays a metadata-speed driver write instead of a Spark
+    * job. */
+  private def writeParquetDirect[T](spark: SparkSession, file: Path,
+      schema: String, rows: Iterator[T])(
+      fill: (org.apache.parquet.example.data.Group, T) => Unit): Unit = {
     import org.apache.parquet.example.data.simple.SimpleGroup
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.hadoop.util.HadoopOutputFile
     import org.apache.parquet.schema.MessageTypeParser
     val conf = spark.sparkContext.hadoopConfiguration
-    val mt = MessageTypeParser.parseMessageType(
-      "message manifest { required binary f (UTF8); " +
-        "optional binary stats_json (UTF8); }")
+    val mt = MessageTypeParser.parseMessageType(schema)
     val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(file, conf))
       .withConf(conf).withType(mt).build()
-    try entries.foreach { case (s, sj) =>
+    try rows.foreach { r =>
       val g = new SimpleGroup(mt)
-      g.append("f", s)
-      sj.foreach(g.append("stats_json", _))
+      fill(g, r)
       w.write(g)
     } finally w.close()
   }
+
+  private def writeManifestDirect(spark: SparkSession, file: Path,
+      entries: Seq[(String, Option[String])]): Unit =
+    writeParquetDirect(spark, file,
+      "message manifest { required binary f (UTF8); " +
+        "optional binary stats_json (UTF8); }", entries.iterator) {
+      case (g, (s, sj)) =>
+        g.append("f", s)
+        sj.foreach(g.append("stats_json", _))
+    }
 
   // ------------------------------------------------------------------
   // per-file column statistics (data skipping inside the manifest)
@@ -952,9 +989,10 @@ object Versioned {
         "updated row images would lack the derived partition column; " +
         "use Versioned.mergeHidden/updateVectored (identity layouts " +
         "are fine: the partition column is a real user column)")
-    val newDv: Option[DataFrame] =
+    val newDv: Option[DvRows] =
       if (dvStagedDirs.isEmpty) None
-      else Some(spark.read.schema(dvFields).parquet(dvStagedDirs: _*))
+      else Some(readDv(spark, dvStagedDirs.flatMap(d =>
+        parquetParts(fs(spark, path), new Path(d)))))
     if (dataFiles.isEmpty && newDv.isEmpty) return resolve(spark, path, None)
     if (dataFiles.nonEmpty)
       enforceConstraints(spark, path,
@@ -968,17 +1006,14 @@ object Versioned {
       newDv.foreach { d =>
         val curKeys = readManifestEntries(spark, path, cur)
           .map(e => fileKey(e._1)).toSet
-        val stale = d.select("f").distinct().collect()
-          .map(_.getString(0)).filterNot(curKeys)
+        val stale = d.keys.toSeq.filterNot(curKeys)
         require(stale.isEmpty,
           s"row-level delta is stale: ${stale.length} referenced " +
             "file(s) left the manifest (concurrent rewrite?) — re-run " +
             s"the statement. First: ${stale.take(3).mkString(", ")}")
       }
-      val combined = (deletionVector(spark, path, Some(cur)), newDv) match {
-        case (Some(prev), Some(n)) => Some(prev.unionByName(n))
-        case (a, b) => b.orElse(a)
-      }
+      val prev = deletionVectorRows(spark, path, Some(cur))
+      val combined = newDv.fold(prev)(n => Some(dvUnion(prev, n)))
       if (commit(spark, path, cur + 1,
           Left(readManifestEntries(spark, path, cur) ++ stagedE),
           tableSchema(spark, path, Some(cur)), combined, op = Some(op)))
@@ -1003,26 +1038,39 @@ object Versioned {
 
   private[graft] def physicalNameOf(f: StructField): String = physicalOf(f)
 
-  /** Files of version `v` whose stats MAY satisfy every (column, lo,
-    * hi) interval — the connector's data-skipping entry point. The
-    * decision runs through the engine exactly like [[readRange]]
-    * (manifest scan + from_json interval overlap), and files without
-    * stats for a constrained column are conservatively KEPT, so the
-    * result is always a superset of the matching rows' files. */
+  /** Entries of version `v` whose stats MAY satisfy every (column,
+    * lo, hi) interval — the one data-skipping test, shared by the
+    * connector's scan planning and [[readRange]]. It runs on the driver
+    * over the cached manifest entries (no Spark job), and is a superset
+    * by construction: an entry without stats, without an entry for a
+    * constrained column, or with unparsable stats is KEPT. */
   private[graft] def candidateFiles(spark: SparkSession, path: String,
-      v: Long, ranges: Seq[(String, Double, Double)]): Seq[String] = {
-    val kept = ranges.foldLeft(manifestDf(spark, path, v)) {
-      case (df, (c, lo, hi)) =>
-        val e = element_at(from_json(col("stats_json"), statsSchema),
-          statsKeyOf(spark, path, v, c))
-        df.filter(col("stats_json").isNull || e.isNull ||
-          when(e("t") === "l",
-            e("mnl").cast("double") <= lit(hi) &&
-              e("mxl").cast("double") >= lit(lo))
-          .when(e("t") === "d", e("mnd") <= lit(hi) && e("mxd") >= lit(lo))
-          .otherwise(lit(true)))
+      v: Long, ranges: Seq[(String, Double, Double)])
+      : Seq[(String, Option[String])] = {
+    val entries = readManifestEntries(spark, path, v)
+    if (ranges.isEmpty) entries
+    else {
+      val keyed = ranges.map { case (c, lo, hi) =>
+        (statsKeyOf(spark, path, v, c), lo, hi) }
+      entries.filter { case (_, sj) =>
+        sj.flatMap(parseStatsDoc).forall(doc => keyed.forall {
+          case (k, lo, hi) => mayOverlap(doc, k, lo, hi) })
+      }
     }
-    kept.select("f").collect().map(_.getString(0)).toSeq
+  }
+
+  /** Interval overlap of one parsed stats document's entry for `key`
+    * with [lo, hi]; true when the entry is absent or incomplete. */
+  private def mayOverlap(doc: StatsDoc, key: String, lo: Double,
+      hi: Double): Boolean = {
+    import org.json4s._
+    doc \ key \ "t" match {
+      case JString("l") => longMinMaxIn(doc, key).forall { case (mn, mx) =>
+        mn.toDouble <= hi && mx.toDouble >= lo }
+      case JString("d") => doubleMinMaxIn(doc, key).forall { case (mn, mx) =>
+        mn <= hi && mx >= lo }
+      case _ => true
+    }
   }
 
   /** The committed table schema of version `v` (default: current);
@@ -1049,21 +1097,130 @@ object Versioned {
     r
   }
 
-  /** The deletion vector of version `v` (default: current), as a
-    * DataFrame of (f = file name, pos = row index) — None when the
-    * version has no outstanding vectored deletes. */
-  def deletionVector(spark: SparkSession, path: String,
-      version: Option[Long] = None): Option[DataFrame] = {
+  /** A deletion vector on the driver: file key → that file's deleted
+    * row positions, sorted ascending and distinct. Keys never map to
+    * an empty array. */
+  private[graft] type DvRows = Map[String, Array[Long]]
+
+  /** The deletion vector of version `v` (default: current) as driver
+    * rows — None when the version has no outstanding vectored
+    * deletes. Reads every parquet part under `v<N>.dv/` through the
+    * direct codec (no Spark job), so the multi-part vectors older
+    * commits wrote through the engine read too, and caches the result
+    * per (path, version): a committed vector never changes. Readers
+    * already needed the whole vector on the driver (each scan plans
+    * its files' positions from it), so holding it as metadata adds no
+    * driver-size limit; it is bounded by outstanding deletes, which
+    * [[compact]] folds away. */
+  def deletionVectorRows(spark: SparkSession, path: String,
+      version: Option[Long] = None): Option[DvRows] = {
     val v = resolve(spark, path, version)
+    val k = (path, v)
+    val hit = dvCache.get(k)
+    if (hit != null) return hit
+    val f = fs(spark, path)
     val p = dvPath(path, v)
-    if (!fs(spark, path).exists(p)) None
-    else Some(spark.read.schema(dvFields).parquet(p.toString))
+    val r =
+      if (!f.exists(p)) None
+      else Some(readDv(spark, parquetParts(f, p))).filter(_.nonEmpty)
+    // cache only a PUBLISHED version: the lock winner writes the
+    // vector before the manifest rename makes the version visible
+    if (f.exists(manifestPath(path, v))) {
+      if (dvCache.size > 256) dvCache.clear()
+      dvCache.put(k, r)
+    }
+    r
   }
+
+  /** The deletion vector of version `v` (default: current) as a
+    * DataFrame of (f = file key, pos = row index) — a local view over
+    * [[deletionVectorRows]]; None when the version has no outstanding
+    * vectored deletes. */
+  def deletionVector(spark: SparkSession, path: String,
+      version: Option[Long] = None): Option[DataFrame] =
+    deletionVectorRows(spark, path, version).map { dv =>
+      val rows = new java.util.ArrayList[Row]()
+      dv.foreach { case (f0, ps) => ps.foreach(pos => rows.add(Row(f0, pos))) }
+      spark.createDataFrame(rows, dvFields)
+    }
 
   /** Deletion-vector rows, also the connector's DV sidecar schema. */
   private[graft] val dvFields = StructType(Seq(
     StructField("f", StringType),
     StructField("pos", org.apache.spark.sql.types.LongType)))
+
+  private val dvMessage =
+    "message dv { required binary f (UTF8); required int64 pos; }"
+
+  /** (f, pos) records of parquet files → driver rows; records with a
+    * NULL key or position name no row and are skipped. */
+  private def readDv(spark: SparkSession, files: Seq[Path]): DvRows = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val acc = scala.collection.mutable.HashMap[String,
+      scala.collection.mutable.ArrayBuilder.ofLong]()
+    files.foreach(foreachParquetRecord(conf, _) { g =>
+      if (hasValue(g, "f") && hasValue(g, "pos"))
+        acc.getOrElseUpdate(g.getString("f", 0),
+          new scala.collection.mutable.ArrayBuilder.ofLong) +=
+          g.getLong("pos", 0)
+    })
+    acc.iterator.map { case (f0, b) => f0 -> sortedDistinct(b.result()) }
+      .toMap
+  }
+
+  private def sortedDistinct(a: Array[Long]): Array[Long] = {
+    val s0 = a.clone()
+    java.util.Arrays.sort(s0)
+    var n = 0
+    var i = 0
+    while (i < s0.length) {
+      if (n == 0 || s0(n - 1) != s0(i)) { s0(n) = s0(i); n += 1 }
+      i += 1
+    }
+    if (n == s0.length) s0 else java.util.Arrays.copyOf(s0, n)
+  }
+
+  /** Collected (file key, row position) rows → driver rows. */
+  private def dvOf(rows: Array[Row]): DvRows =
+    rows.groupBy(_.getString(0)).map { case (f0, rs) =>
+      f0 -> sortedDistinct(rs.map(_.getLong(1))) }
+
+  /** `prev` ∪ `delta`: successive vectored deletes accumulate. */
+  private def dvUnion(prev: Option[DvRows], delta: DvRows): DvRows =
+    prev.fold(delta)(p0 => (p0.keySet ++ delta.keySet).iterator.map { k =>
+      k -> sortedDistinct(p0.getOrElse(k, Array.emptyLongArray) ++
+        delta.getOrElse(k, Array.emptyLongArray))
+    }.toMap)
+
+  /** `dv` minus the entries of files `drop` names (the files a rewrite
+    * materialized); None once nothing is left. */
+  private def dvWithout(dv: Option[DvRows])(
+      drop: String => Boolean): Option[DvRows] =
+    dv.map(_.filterNot(e => drop(e._1))).filter(_.nonEmpty)
+
+  /** Whether two versions' vectors name the same rows (no vector ≡
+    * empty vector). */
+  private[graft] def sameDv(a: Option[DvRows], b: Option[DvRows]): Boolean = {
+    val (x, y) = (a.getOrElse(Map.empty), b.getOrElse(Map.empty))
+    x.keySet == y.keySet &&
+      x.forall { case (k, ps) => java.util.Arrays.equals(ps, y(k)) }
+  }
+
+  /** Total deleted rows a vector names. */
+  private[graft] def dvRowCount(dv: DvRows): Long =
+    dv.valuesIterator.map(_.length.toLong).sum
+
+  /** In-plan test of a deletion vector over the (file key, row
+    * position) meta columns: true iff `dv` names the row, NULL when
+    * the key or position is NULL. The vector rides the task closure
+    * as the per-file sorted position arrays — no broadcast relation,
+    * no join, no extra stage. */
+  private def dvNames(dv: DvRows): Column = {
+    val named = udf((f0: String, pos: Long) =>
+      f0 != null && dv.get(f0).exists(java.util.Arrays.binarySearch(_, pos) >= 0))
+    when(col(metaF).isNotNull && col(metaP).isNotNull,
+      named(col(metaF), col(metaP)))
+  }
 
   // Deletion vectors and per-file stats key rows by (file KEY, row
   // position), where the key is the path RELATIVE to its data root:
@@ -1105,7 +1262,7 @@ object Versioned {
     * schema, project every file through it (absent columns read as
     * NULL — additive evolution without a footer-merge pass); `meta`
     * additionally surfaces the (file, row position) identity the
-    * deletion-vector anti-join keys on. */
+    * deletion-vector predicate keys on. */
   // ---------------------------------------------------------------- //
   // column mapping (RENAME COLUMN without rewriting a single file)    //
   // ---------------------------------------------------------------- //
@@ -1217,21 +1374,21 @@ object Versioned {
 
   /** The LIVE rows of version `v` over `subset` (default: all its
     * files): manifest scan through the logged schema, minus the
-    * version's deletion vector (a broadcast anti-join on file + row
-    * position — the vector holds deleted rows only, small by
-    * construction). */
+    * version's deletion vector — applied from the cached driver rows
+    * as a per-file row-index predicate ([[dvNames]]), restricted to the
+    * vector entries of the files read. A row whose key or position is
+    * NULL is kept. */
   private def readLive(spark: SparkSession, path: String, v: Long,
       subset: Option[Seq[String]], keepMeta: Boolean): DataFrame = {
     val fl = subset.getOrElse(readManifest(spark, path, v))
-    val dv = deletionVector(spark, path, Some(v))
+    val dv = subset.fold(deletionVectorRows(spark, path, Some(v))) { s0 =>
+      val keys = s0.map(fileKey).toSet
+      dvWithout(deletionVectorRows(spark, path, Some(v)))(k => !keys(k))
+    }
     val schemaOpt = tableSchema(spark, path, Some(v))
     val needMeta = keepMeta || dv.nonEmpty
     val base = readFiles(spark, path, fl, schemaOpt, needMeta)
-    val live = dv.fold(base) { d =>
-      base.join(
-        broadcast(d.select(col("f").as(metaF), col("pos").as(metaP))),
-        Seq(metaF, metaP), "left_anti")
-    }
+    val live = dv.fold(base)(d => base.filter(!coalesce(dvNames(d), lit(false))))
     if (keepMeta || !needMeta) live else live.drop(metaF, metaP)
   }
 
@@ -1320,14 +1477,15 @@ object Versioned {
     * check-then-act there); on HDFS `create(overwrite = false)` is
     * namenode-atomic. Only the lock winner writes schema, vector and
     * manifest; the manifest DIRECTORY rename is the publish point, so
-    * readers never observe a torn version. A `Left` (collected) list
-    * is written by the direct parquet writer — no job; a `Right`
+    * readers never observe a torn version. The vector (driver rows)
+    * and a `Left` (collected) list are written by the direct parquet
+    * writer — no job — and enter the caches once published; a `Right`
     * DataFrame (the partition-scoped merge's carried set) is written
     * by the engine and NEVER materialized on the driver. */
   private def commit(spark: SparkSession, path: String, v: Long,
       fileList: Either[Seq[(String, Option[String])], DataFrame],
       schema: Option[StructType] = None,
-      dv: Option[DataFrame] = None,
+      dv: Option[DvRows] = None,
       op: Option[String] = None,
       extraFiles: Seq[(String, Array[Byte])] = Seq.empty): Boolean = {
     val f = fs(spark, path)
@@ -1366,9 +1524,17 @@ object Versioned {
       try out.write(s0.json.getBytes(StandardCharsets.UTF_8))
       finally out.close()
     }
-    dv.foreach { d =>
-      d.select(col("f"), col("pos")).coalesce(16).write
-        .mode("overwrite").parquet(dvPath(path, v).toString)
+    val vector = dv.filter(_.nonEmpty)
+    vector.foreach { d =>
+      val dir = dvPath(path, v)
+      f.delete(dir, true)
+      f.mkdirs(dir)
+      writeParquetDirect(spark, new Path(dir, "part-00000.parquet"), dvMessage,
+        d.iterator.flatMap { case (k, ps) => ps.iterator.map(k -> _) }) {
+        case (g, (k, pos)) =>
+          g.append("f", k)
+          g.append("pos", pos)
+      }
     }
     // per-version sidecars (e.g. the identity high-water `idhw`):
     // written by the lock winner BEFORE the manifest rename publishes,
@@ -1393,7 +1559,12 @@ object Versioned {
         df.select(col("f"), col("stats_json"))
           .write.mode("overwrite").parquet(tmp.toString)
     }
-    f.rename(tmp, manifestPath(path, v))
+    val published = f.rename(tmp, manifestPath(path, v))
+    if (published) {
+      if (dvCache.size > 256) dvCache.clear()
+      dvCache.put((path, v), vector)
+    }
+    published
   }
 
   /** Initialize the table with `df` as version 1. `statsCols`
@@ -1609,13 +1780,8 @@ object Versioned {
       val dvCarried = carriedTop match {
         case None => None
         case Some(_) =>
-          deletionVector(spark, path, Some(cur)).flatMap { d =>
-            val hitNames = hitList.map(fileKey)
-            val rest =
-              if (hitNames.isEmpty) d
-              else d.filter(!col("f").isin(hitNames: _*))
-            if (rest.isEmpty) None else Some(rest)
-          }
+          val hitNames = hitList.map(fileKey).toSet
+          dvWithout(deletionVectorRows(spark, path, Some(cur)))(hitNames)
       }
 
       // the logged schema must CARRY each field's column-mapping
@@ -1751,8 +1917,9 @@ object Versioned {
       stagedE: Seq[(String, Option[String])], outSchema: StructType,
       metaAtRead: String, opName: String, maxTries: Int): Option[Long] = {
     val curSchemaSig = schemaSig(tableSchema(spark, path, Some(cur)))
-    val seg = regexp_extract(col("f"),
-      "/(" + java.util.regex.Pattern.quote(pcPhys) + "=[^/]*)/", 1)
+    val segPattern = "/(" + java.util.regex.Pattern.quote(pcPhys) + "=[^/]*)/"
+    val seg = regexp_extract(col("f"), segPattern, 1)
+    val segRe = segPattern.r
     val touchedDf = spark.createDataset(touched)(Encoders.STRING)
       .toDF("seg")
     def clashes(filesDf: DataFrame): Boolean = {
@@ -1780,18 +1947,13 @@ object Versioned {
         val manifestDelta = mNew.select("f").exceptAll(mCur)
           .unionAll(mCur.exceptAll(mNew.select("f")))
         if (clashes(manifestDelta)) return None
-        val dvC = deletionVector(spark, path, Some(cur))
-        val dvN = deletionVector(spark, path, Some(newest))
-        val dvConflict = (dvC, dvN) match {
-          case (None, None) => false
-          case _ =>
-            val empty = spark.createDataFrame(
-              spark.sparkContext.emptyRDD[Row], dvFields)
-            val a = dvN.getOrElse(empty)
-            val b = dvC.getOrElse(empty)
-            clashes(a.exceptAll(b).unionAll(b.exceptAll(a)))
-        }
-        if (dvConflict) return None
+        val dvN = deletionVectorRows(spark, path, Some(newest))
+        val (c0, n0) = (deletionVectorRows(spark, path, Some(cur))
+          .getOrElse(Map.empty), dvN.getOrElse(Map.empty))
+        val changed = (c0.keySet ++ n0.keySet).filterNot(k =>
+          java.util.Arrays.equals(c0.getOrElse(k, null), n0.getOrElse(k, null)))
+        if (changed.exists(k => segRe.findFirstMatchIn(k)
+            .forall(m => touched.contains(m.group(1))))) return None
         // segment-aware carry against the WINNER's manifest; the
         // clash check proved the winner never touched our partitions,
         // so its hit set must equal ours — any drift falls back to
@@ -1799,13 +1961,8 @@ object Versioned {
         val (keepTop, hitN) = splitTopByPartitions(spark, path, newest,
           pcPhys, touched.toSet)
         if (hitN.map(_._1).toSet != hitList.toSet) return None
-        val hitKeys = hitList.map(fileKey)
-        val dvOut = dvN.flatMap { d0 =>
-          val rest =
-            if (hitKeys.isEmpty) d0
-            else d0.filter(!col("f").isin(hitKeys: _*))
-          if (rest.isEmpty) None else Some(rest)
-        }
+        val hitKeys = hitList.map(fileKey).toSet
+        val dvOut = dvWithout(dvN)(hitKeys)
         if (commit(spark, path, newest + 1,
             Left(sealTop(spark, path, keepTop, stagedE)),
             Some(outSchema), dvOut, op = Some(opName + "+REBASE")))
@@ -1938,7 +2095,7 @@ object Versioned {
       // on a million-file table writes a delta-sized manifest
       def filesAt(v: Long) = Left(segmentedTop(spark, path, v, stagedE))
       if (commit(spark, path, next, filesAt(cur), Some(outSchema),
-          deletionVector(spark, path, Some(cur)), op = Some(opName),
+          deletionVectorRows(spark, path, Some(cur)), op = Some(opName),
           extraFiles = idExtras))
         return next
       // appends never conflict on data: re-point the staged files at
@@ -1957,7 +2114,7 @@ object Versioned {
             bail = true
           else if (commit(spark, path, newest + 1, filesAt(newest),
               Some(outSchema),
-              deletionVector(spark, path, Some(newest)),
+              deletionVectorRows(spark, path, Some(newest)),
               op = Some(opName), extraFiles = idExtras))
             return newest + 1
           else { floor = newest + 1; tries += 1 }
@@ -2027,7 +2184,7 @@ object Versioned {
       val filesArg = Left(segmentedTop(spark, path, cur, stagedE))
       if (commit(spark, path, next, filesArg,
           tableSchema(spark, path, Some(cur)),
-          deletionVector(spark, path, Some(cur)),
+          deletionVectorRows(spark, path, Some(cur)),
           op = Some(opName), extraFiles = extras))
         return next
       Thread.sleep(50)
@@ -2215,7 +2372,7 @@ object Versioned {
     require(commit(spark, dst, 1L,
       Left(readManifestEntries(spark, src, v)),
       tableSchema(spark, src, Some(v)),
-      deletionVector(spark, src, Some(v)),
+      deletionVectorRows(spark, src, Some(v)),
       op = Some(s"CLONE")),
       s"clone lost a commit race: $dst")
     1L
@@ -2364,7 +2521,7 @@ object Versioned {
           writeSegment(spark, path, es) } ++ flatRows
       if (commit(spark, path, next, Left(top),
           tableSchema(spark, path, Some(cur)),
-          deletionVector(spark, path, Some(cur)),
+          deletionVectorRows(spark, path, Some(cur)),
           op = Some("REWRITE_MANIFESTS")))
         return next
       attempt += 1
@@ -2414,12 +2571,8 @@ object Versioned {
       val staged = ensureManifestNonEmpty(rows, path, stagedDir,
         staged0, keepTop.nonEmpty, Some(schema))
       val hitKeys = hit.map(fileKey)
-      val dvCarried = deletionVector(spark, path, Some(cur)).flatMap { d =>
-        val rest =
-          if (hitKeys.isEmpty) d
-          else d.filter(!col("f").isin(hitKeys: _*))
-        if (rest.isEmpty) None else Some(rest)
-      }
+      val dvCarried =
+        dvWithout(deletionVectorRows(spark, path, Some(cur)))(hitKeys.toSet)
       if (commit(spark, path, next,
           Left(sealTop(spark, path, keepTop,
             stagedEntries(spark, path, staged))), Some(schema),
@@ -2507,11 +2660,8 @@ object Versioned {
           val staged = ensureManifestNonEmpty(rows, path, stagedDir,
             staged0, carriedN > 0, Some(schema))
           val newKeys = newFiles.map(fileKey)
-          val dvCarried = deletionVector(spark, path, Some(cur))
-            .flatMap { d =>
-              val rest = d.filter(!col("f").isin(newKeys: _*))
-              if (rest.isEmpty) None else Some(rest)
-            }
+          val dvCarried = dvWithout(
+            deletionVectorRows(spark, path, Some(cur)))(newKeys.toSet)
           if (commit(spark, path, next,
               Left(sealTop(spark, path,
                 carryTopMinus(spark, path, cur, newFiles.toSet),
@@ -2572,10 +2722,8 @@ object Versioned {
         stage(laidOut, path, next, partitionCol, Some(schema))
       val staged = ensureManifestNonEmpty(rows, path, stagedDir,
         staged0, bigE.nonEmpty, Some(schema))
-      val dvCarried = deletionVector(spark, path, Some(cur)).flatMap { d =>
-        val rest = d.filter(!col("f").isin(smallKeys.toSeq: _*))
-        if (rest.isEmpty) None else Some(rest)
-      }
+      val dvCarried =
+        dvWithout(deletionVectorRows(spark, path, Some(cur)))(smallKeys)
       if (commit(spark, path, next,
           Left(sealTop(spark, path,
             carryTopMinus(spark, path, cur, small.toSet),
@@ -2654,12 +2802,8 @@ object Versioned {
         Some(schema))
       val staged = ensureManifestNonEmpty(survivors, path, stagedDir,
         staged0, keepE.nonEmpty, Some(schema))
-      val dvCarried = deletionVector(spark, path, Some(cur)).flatMap { d =>
-        val rest =
-          if (hitNames.isEmpty) d
-          else d.filter(!col("f").isin(hitNames.toSeq: _*))
-        if (rest.isEmpty) None else Some(rest)
-      }
+      val dvCarried =
+        dvWithout(deletionVectorRows(spark, path, Some(cur)))(hitNames)
       if (commit(spark, path, next,
           Left(sealTop(spark, path,
             carryTopMinus(spark, path, cur, hit.toSet),
@@ -2676,13 +2820,15 @@ object Versioned {
   /** DELETE every row matching `pred` as a MERGE-ON-READ deletion
     * vector: commit a new version whose file list is IDENTICAL to the
     * current one, plus a (file, row position) vector of the matched
-    * live rows; [[read]] anti-joins the vector, [[compact]]
+    * live rows; [[read]] skips the vector's row positions, [[compact]]
     * materializes and drops it, [[merge]]/[[delete]] carry it for
-    * files they don't rewrite. Write cost is O(deleted rows) — zero
+    * files they don't rewrite. Write cost is ONE scan (the matched
+    * rows' positions, collected) plus a direct vector write — zero
     * data-file rewrite — which is the right amortization for frequent
     * small erasures on a 100 TB table (Delta/Iceberg v2 deletion
-    * vectors); read cost is one broadcast anti-join until the next
-    * compaction. Successive vectored deletes accumulate by UNION.
+    * vectors); read cost is a per-row position test until the next
+    * compaction. Successive vectored deletes accumulate by UNION on
+    * the driver.
     * Rows where `pred` evaluates NULL are retained, as in [[delete]].
     *
     * Concurrency: the same optimistic loop — the vector is computed
@@ -2695,12 +2841,13 @@ object Versioned {
       val next = cur + 1
       val curEntries = readManifestEntries(spark, path, cur)
       val live = readLive(spark, path, cur, None, keepMeta = true)
-      val newDv = live.filter(pred)
-        .select(col(metaF).as("f"), col(metaP).as("pos"))
-      val deletedRows = newDv.count()
+      // the ONE scan: the matched rows' (file, position) pairs, whose
+      // number is the deleted count
+      val hits = live.filter(pred).select(col(metaF), col(metaP)).collect()
+      val deletedRows = hits.length.toLong
       if (deletedRows == 0L) return Erasure(-1L, 0, curEntries.length, 0L)
-      val combined = deletionVector(spark, path, Some(cur))
-        .fold(newDv)(prev => prev.unionByName(newDv))
+      val combined =
+        dvUnion(deletionVectorRows(spark, path, Some(cur)), dvOf(hits))
       val schema = tableSchema(spark, path, Some(cur)).getOrElse(
         StructType(live.schema.filterNot(f =>
           f.name == metaF || f.name == metaP)))
@@ -2829,33 +2976,31 @@ object Versioned {
     val added = newE.filterNot(oldSet.contains)
     // deletion-vector delta on CARRIED files: rows vectored away
     // between the two versions changed WITHOUT their file changing —
-    // the delta names them (file, position) exactly, so they are read
-    // ONCE and picked by a broadcast semi-join; only genuinely
+    // the delta names them (file, position) exactly, a set difference
+    // of the two versions' driver rows, so they are read ONCE and
+    // picked by the vector's row-index predicate; only genuinely
     // rewritten files need the whole-row bag diff below (a
     // vectored-delete-heavy feed costs one map-side pass, not two
     // full reads plus an exceptAll shuffle). The carried set here is
     // computed over the FULL (cached) expansions — a delta can name a
     // row inside a shared segment's file.
-    val dvOld = deletionVector(spark, path, Some(fromV))
-    val dvNew = deletionVector(spark, path, Some(toV))
-    val dvDelta: Option[DataFrame] = dvNew.map { nw =>
-      dvOld.fold(nw)(od => nw.exceptAll(od))
-    }
+    val dvOld = deletionVectorRows(spark, path, Some(fromV))
+    val dvDelta: Option[DvRows] =
+      deletionVectorRows(spark, path, Some(toV)).map(_.flatMap { case (k, ps) =>
+        val gone = dvOld.flatMap(_.get(k)).fold(ps)(o =>
+          ps.filter(java.util.Arrays.binarySearch(o, _) < 0))
+        if (gone.isEmpty) None else Some(k -> gone)
+      }).filter(_.nonEmpty)
     val dvDeltaFiles: Seq[String] = dvDelta match {
       case None => Seq.empty
       case Some(delta) =>
-        val keys = delta.select("f").distinct().collect()
-          .map(_.getString(0))
-        if (keys.isEmpty) Seq.empty
-        else {
-          val fullOld = readManifestEntries(spark, path, fromV).map(_._1)
-          val fullNewSet =
-            readManifestEntries(spark, path, toV).map(_._1).toSet
-          val carriedKeys = fullOld.filter(fullNewSet.contains)
-            .map(fileKey).toSet
-          keys.toSeq.filter(carriedKeys.contains)
-            .map(k => fullOld.find(f => fileKey(f) == k).get)
-        }
+        val fullOld = readManifestEntries(spark, path, fromV).map(_._1)
+        val fullNewSet =
+          readManifestEntries(spark, path, toV).map(_._1).toSet
+        val carriedKeys = fullOld.filter(fullNewSet.contains)
+          .map(fileKey).toSet
+        delta.keys.toSeq.filter(carriedKeys.contains)
+          .map(k => fullOld.find(f => fileKey(f) == k).get)
     }
     val openOld = removed
     val openNew = added
@@ -2891,13 +3036,12 @@ object Versioned {
       }
     val o = alignTo(o0)
     // newly-vectored rows of carried files: live at fromV, named by
-    // the delta — one read + broadcast semi-join, no bag diff
+    // the delta — one read + row-index predicate, no bag diff
     val dvDels = (dvDelta, dvDeltaFiles) match {
       case (Some(delta), files) if files.nonEmpty =>
         Some(alignTo(
           readLive(spark, path, fromV, Some(files), keepMeta = true)
-            .join(broadcast(delta.select(col("f").as(metaF),
-              col("pos").as(metaP))), Seq(metaF, metaP), "left_semi")
+            .filter(coalesce(dvNames(delta), lit(false)))
             .drop(metaF, metaP)))
       case _ => None
     }
@@ -2930,25 +3074,16 @@ object Versioned {
     * unregistered or unsupported columns) are always kept, so the
     * result is a superset of the matching rows whatever the table's
     * history; apply the exact predicate on `df`. The prune decision is
-    * a distributed filter over the manifest scan (manifest-as-data:
-    * at a million files the decision itself is a Spark job, not a
-    * driver loop), and when the table was clustered on `column`
-    * ([[compact]] or a range-layout [[init]]), the files read shrink
-    * to the predicate's true footprint. */
+    * [[candidateFiles]], the connector's own test: a driver pass over
+    * the cached manifest entries the receipt's `filesTotal` already
+    * loads, so deciding starts no Spark job. When the table was
+    * clustered on `column` ([[compact]] or a range-layout [[init]]),
+    * the files read shrink to the predicate's true footprint. */
   def readRange(spark: SparkSession, path: String, column: String,
       lo: Double, hi: Double, version: Option[Long] = None): Pruned = {
     val v = resolve(spark, path, version)
     val total = readManifestEntries(spark, path, v).length
-    val e = element_at(from_json(col("stats_json"), statsSchema),
-      statsKeyOf(spark, path, v, column))
-    val keepCond = col("stats_json").isNull || e.isNull ||
-      when(e("t") === "l",
-        e("mnl").cast("double") <= lit(hi) &&
-          e("mxl").cast("double") >= lit(lo))
-      .when(e("t") === "d", e("mnd") <= lit(hi) && e("mxd") >= lit(lo))
-      .otherwise(lit(true))
-    val kept = manifestDf(spark, path, v).filter(keepCond)
-      .select("f").collect().map(_.getString(0)).toSeq
+    val kept = candidateFiles(spark, path, v, Seq((column, lo, hi))).map(_._1)
     if (kept.isEmpty) {
       val schema = tableSchema(spark, path, Some(v))
         .getOrElse(read(spark, path, Some(v)).schema)
@@ -2973,7 +3108,7 @@ object Versioned {
   def metadataStats(spark: SparkSession, path: String, column: String,
       version: Option[Long] = None): MetaStats = {
     val v = resolve(spark, path, version)
-    require(deletionVector(spark, path, Some(v)).isEmpty,
+    require(deletionVectorRows(spark, path, Some(v)).isEmpty,
       s"metadataStats needs a deletion-vector-free version — compact " +
         s"$path first to materialize outstanding vectors")
     val st = from_json(col("stats_json"), statsSchema)
@@ -3068,8 +3203,8 @@ object Versioned {
         s"SET columns outside the table schema: " +
           s"${set.keySet -- tableCols.toSet}")
       val hits = live.filter(pred)
-      val newDv = hits.select(col(metaF).as("f"), col(metaP).as("pos"))
-      val updatedRows = newDv.count()
+      val newDv = hits.select(col(metaF), col(metaP)).collect()
+      val updatedRows = newDv.length.toLong
       if (updatedRows == 0L) return Updated(-1L, curEntries.length, 0L)
       val schemaMap = live.schema.map(f => f.name -> f.dataType).toMap
       val updated = hits.select(tableCols.map(c =>
@@ -3080,8 +3215,8 @@ object Versioned {
           f.name == metaF || f.name == metaP)))
       val (stagedDir, staged) = stage(updated, path, next, partitionCol,
         Some(schema))
-      val combined = deletionVector(spark, path, Some(cur))
-        .fold(newDv)(prev => prev.unionByName(newDv))
+      val combined =
+        dvUnion(deletionVectorRows(spark, path, Some(cur)), dvOf(newDv))
       if (commit(spark, path, next,
           Left(segmentedTop(spark, path, cur,
             stagedEntries(spark, path, staged))),
@@ -3411,7 +3546,7 @@ object Versioned {
       if (commit(spark, path, next,
           Left(segmentedTop(spark, path, toVersion, Seq.empty)),
           tableSchema(spark, path, Some(toVersion)),
-          deletionVector(spark, path, Some(toVersion)),
+          deletionVectorRows(spark, path, Some(toVersion)),
           op = Some(s"RESTORE(v$toVersion)")))
         return next
       attempt += 1
@@ -3478,7 +3613,7 @@ object Versioned {
       if (commit(spark, path, cur + 1,
           Left(segmentedTop(spark, path, cur, Seq.empty)),
           Some(newSchema),
-          deletionVector(spark, path, Some(cur)),
+          deletionVectorRows(spark, path, Some(cur)),
           op = Some(s"RENAME_COLUMN($oldName->$newName)")))
         return cur + 1
       attempt += 1
@@ -3561,7 +3696,7 @@ object Versioned {
       if (commit(spark, path, cur + 1,
           Left(segmentedTop(spark, path, cur, Seq.empty)),
           Some(newSchema),
-          deletionVector(spark, path, Some(cur)),
+          deletionVectorRows(spark, path, Some(cur)),
           op = Some(s"DROP_COLUMN($name)")))
         return cur + 1
       attempt += 1
@@ -3596,7 +3731,7 @@ object Versioned {
       if (commit(spark, path, cur + 1,
           Left(segmentedTop(spark, path, cur, Seq.empty)),
           Some(StructType(schema.fields :+ fld)),
-          deletionVector(spark, path, Some(cur)),
+          deletionVectorRows(spark, path, Some(cur)),
           op = Some(s"ADD_COLUMN($name)")))
         return cur + 1
       attempt += 1
@@ -3700,7 +3835,7 @@ object Versioned {
       if (commit(spark, path, cur + 1,
           Left(segmentedTop(spark, path, cur, Seq.empty)),
           Some(newSchema),
-          deletionVector(spark, path, Some(cur)),
+          deletionVectorRows(spark, path, Some(cur)),
           op = Some(s"ALTER_COLUMN_TYPE($name " +
             s"${fld.dataType.simpleString}->${newType.simpleString})")))
         return cur + 1
@@ -4200,12 +4335,9 @@ object Versioned {
         else readManifestEntries(spark, path, cur).length.toLong
       if (hit == 0L) return Dropped(-1L, 0L, total)
       val schema = tableSchema(spark, path, Some(cur))
-      val dvKept = deletionVector(spark, path, Some(cur)).flatMap { d =>
-        val dseg = regexp_extract(col("f"),
-          "/(" + java.util.regex.Pattern.quote(pcPhys) + "=[^/]*)/", 1)
-        val rest = d.filter(!dseg.isInCollection(segs))
-        if (rest.isEmpty) None else Some(rest)
-      }
+      val dseg = ("/(" + java.util.regex.Pattern.quote(pcPhys) + "=[^/]*)/").r
+      val dvKept = dvWithout(deletionVectorRows(spark, path, Some(cur)))(k =>
+        dseg.findFirstMatchIn(k).exists(m => segs.contains(m.group(1))))
       val committed =
         if (hit == total) {
           // dropping every partition: keep a schema-only file so the
@@ -4433,7 +4565,7 @@ object Versioned {
     val v = base + 1L
     val ok = commit(spark, src, v, Left(entries),
       tableSchema(spark, branchPath, Some(head)),
-      deletionVector(spark, branchPath, Some(head)),
+      deletionVectorRows(spark, branchPath, Some(head)),
       op = Some(s"PUBLISH($nCommits commits)"))
     require(ok, s"publish refused: $src moved past v$base since the " +
       "branch was cut — re-branch from the current tip and replay")

@@ -411,8 +411,8 @@ object LakeProcedures {
         result(out,
           v,
           Versioned.files(spark, path).length.toLong,
-          Versioned.deletionVector(spark, path).map(_.count())
-            .getOrElse(0L),
+          Versioned.deletionVectorRows(spark, path)
+            .fold(0L)(Versioned.dvRowCount),
           UTF8String.fromString(
             Versioned.hiddenTransform(spark, path).getOrElse("none")),
           nCols,

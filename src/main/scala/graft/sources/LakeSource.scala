@@ -35,15 +35,17 @@ import graft.ops.Versioned
   *  - **Snapshot isolation**: the version is resolved ONCE at scan
   *    planning; concurrent commits don't tear a running query.
   *  - **Data skipping**: pushed filters on stats-registered columns
-  *    prune the FILE LIST through the manifest (interval overlap,
-  *    engine-side), and string-equality filters on partition columns
-  *    prune by directory segment. All filters are also returned to
-  *    Spark for row-level re-evaluation, so pruning is always a
-  *    superset — `.explain` shows them under `PushedFilters`, and the
-  *    `BatchScan` input is exactly the kept files.
+  *    prune the FILE LIST through the manifest (interval overlap over
+  *    the cached entries, on the driver), and string-equality filters
+  *    on partition columns prune by directory segment. All filters
+  *    are also returned to Spark for row-level re-evaluation, so
+  *    pruning is always a superset — `.explain` shows them under
+  *    `PushedFilters`, and the `BatchScan` input is exactly the kept
+  *    files.
   *  - **Deletion vectors**: each file's deleted row positions ride
-  *    its input partition; readers skip them by position — merge-on-
-  *    read without reading the vector side twice.
+  *    its input partition, taken from the version's cached driver
+  *    rows; readers skip them by position — merge-on-read without a
+  *    vector scan or join.
   *  - **Schema evolution + column mapping**: rows are projected
   *    through the LOGGED schema — absent physical columns surface
   *    NULL, renamed columns read by physical identity.
@@ -53,14 +55,15 @@ import graft.ops.Versioned
   *    contract, including the `ignoreChanges` gate on non-append
   *    commits.
   *
-  * Scale: planning cost is manifest-scale (the skipping decision runs
-  * through the engine, the DV collect is bounded by outstanding
-  * deletes), and reads parallelize one task per file. Files decode
-  * through Spark's own `ParquetFileFormat` ([[LakeReaderFactory]]),
-  * the vectorized codec [[Versioned.read]] scans with, and the
-  * connector's writers encode through the same format, so SQL,
-  * streaming and DSv2 callers read and write every type the function
-  * API does.
+  * Scale: planning is a driver pass over immutable, cached metadata
+  * — the manifest entries and the deletion vector, both bounded by
+  * what every reader already held on the driver — so planning a scan
+  * starts no Spark job; reads parallelize one task per file. Files
+  * decode through Spark's own `ParquetFileFormat`
+  * ([[LakeReaderFactory]]), the vectorized codec [[Versioned.read]]
+  * scans with, and the connector's writers encode through the same
+  * format, so SQL, streaming and DSv2 callers read and write every
+  * type the function API does.
   */
 class LakeSource extends TableProvider with DataSourceRegister {
 
@@ -490,8 +493,7 @@ final class LakeScan(path: String, version: Option[Long],
   private lazy val prunedEntries: Seq[(String, Option[String])] = {
     val spark = SparkSession.active
     val v = Versioned.resolveVersion(spark, path, version)
-    val entries = Versioned.manifestEntries(spark, path, v)
-    // interval skipping through the manifest (engine-side)
+    // interval skipping over the cached manifest entries (driver)
     val ranges = pushed.toSeq.flatMap {
       case EqualTo(c, x: Number) =>
         Some((c, x.doubleValue(), x.doubleValue()))
@@ -505,28 +507,24 @@ final class LakeScan(path: String, version: Option[Long],
         Some((c, Double.NegativeInfinity, x.doubleValue()))
       case _ => None
     }
-    var files = Versioned.candidateFiles(spark, path, v, ranges)
+    val kept = Versioned.candidateFiles(spark, path, v, ranges)
     // partition-directory pruning for string equality / IN
     val segAllowed: Seq[(String, Set[String])] = pushed.toSeq.collect {
       case EqualTo(c, s: String) => c -> Set(s)
       case In(c, vs) if vs.forall(_.isInstanceOf[String]) =>
         c -> vs.map(_.asInstanceOf[String]).toSet
     }
-    if (segAllowed.nonEmpty) {
-      val phys = required.fields.map(f =>
-        f.name -> Versioned.physicalNameOf(f)).toMap
-      files = segAllowed.foldLeft(files) { case (fs, (c, allowed)) =>
-        val p = ExternalCatalogUtils.escapePathName(phys.getOrElse(c, c))
-        val vals = allowed.map(ExternalCatalogUtils.escapePathName)
-        // segments of the file KEY only: a `c=…` directory above the
-        // table root says nothing about the file
-        fs.filter(f => Versioned.partitionSegmentsOf(f).get(p)
-          .forall(vals.contains)) // not partitioned by c: keep
-      }
+    val phys = required.fields.map(f =>
+      f.name -> Versioned.physicalNameOf(f)).toMap
+    totalEntryCount = Versioned.manifestEntries(spark, path, v).length
+    segAllowed.foldLeft(kept) { case (es, (c, allowed)) =>
+      val p = ExternalCatalogUtils.escapePathName(phys.getOrElse(c, c))
+      val vals = allowed.map(ExternalCatalogUtils.escapePathName)
+      // segments of the file KEY only: a `c=…` directory above the
+      // table root says nothing about the file
+      es.filter { case (f, _) => Versioned.partitionSegmentsOf(f).get(p)
+        .forall(vals.contains) } // not partitioned by c: keep
     }
-    val keep = files.toSet
-    totalEntryCount = entries.length
-    entries.filter { case (f, _) => keep(f) }
   }
 
   /** Total manifest entries before pruning, for the receipt counter.
@@ -547,13 +545,8 @@ final class LakeScan(path: String, version: Option[Long],
     // OPTIMIZATION time, and in a plan with several lake scans the
     // optimizer's traversal order is not the execution order
     LakeSource.lastPlanned.set((files.length, totalEntryCount))
-    val dv: Map[String, Array[Long]] =
-      Versioned.deletionVector(spark, path, Some(v)) match {
-        case None => Map.empty
-        case Some(d) => d.collect()
-          .map(r => (r.getString(0), r.getLong(1)))
-          .groupBy(_._1).map { case (k, xs) => k -> xs.map(_._2).sorted }
-      }
+    val dv = Versioned.deletionVectorRows(spark, path, Some(v))
+      .getOrElse(Map.empty)
     files.map(f => LakeInputPartition(f,
       dv.getOrElse(Versioned.fileKeyOf(f), Array.empty))
       .asInstanceOf[InputPartition]).toArray

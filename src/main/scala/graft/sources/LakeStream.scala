@@ -150,14 +150,10 @@ final class LakeMicroBatchStream(path: String, schema: StructType,
               "deletes need .option(\"ignoreChanges\", true) (rows may " +
               "be re-delivered) or a key-based consumer on " +
               "Versioned.changes.")
-        def dvSet(ver: Long): Set[(String, Long)] =
-          if (ver < 1) Set.empty
-          else Versioned.deletionVector(spark, path, Some(ver)) match {
-            case None => Set.empty
-            case Some(d) => d.collect()
-              .map(r => (r.getString(0), r.getLong(1))).toSet
-          }
-        if (dvSet(v) != dvSet(v - 1))
+        def dvAt(ver: Long) =
+          if (ver < 1) None
+          else Versioned.deletionVectorRows(spark, path, Some(ver))
+        if (!Versioned.sameDv(dvAt(v), dvAt(v - 1)))
           throw new IllegalStateException(
             s"graft-lake stream: version $v of $path changed its " +
               "deletion vector — not an append. Use " +

@@ -15,7 +15,8 @@ import graft.ops.Versioned
   * in-memory Map model. After every op the current snapshot must equal
   * the model on BOTH read surfaces — `Versioned.read` and SQL through
   * the connector — and at the end EVERY historical version must still
-  * equal its model snapshot on both (`VERSION AS OF` for SQL) — the
+  * equal its model snapshot on both (`VERSION AS OF` for SQL), also
+  * through a byte copy of the table read with cold caches — the
   * strongest practical statement of snapshot isolation: no op, in any
   * order, may bleed into the past or lose a row. Seeds are fixed so a
   * failure replays deterministically. */
@@ -166,10 +167,24 @@ class LakeModelSpec extends SparkSuite {
           assert(readSql(dir, Some(i + 1L)) == m0,
             s"seed=$seed: SQL VERSION AS OF ${i + 1} diverged from model")
         }
+        // a byte copy at a new path starts with cold metadata caches
+        // (manifests, vectors) and must read every version the same
+        val copy = dir + "_copy"
+        val hconf = spark.sparkContext.hadoopConfiguration
+        val hfs = new org.apache.hadoop.fs.Path(dir).getFileSystem(hconf)
+        assert(org.apache.hadoop.fs.FileUtil.copy(hfs,
+          new org.apache.hadoop.fs.Path(dir), hfs,
+          new org.apache.hadoop.fs.Path(copy), false, hconf))
+        history.zipWithIndex.foreach { case (m0, i) =>
+          assert(readState(copy, Some(i + 1L)) == m0,
+            s"seed=$seed: copied version ${i + 1} diverged from model")
+          assert(readSql(copy, Some(i + 1L)) == m0,
+            s"seed=$seed: copied SQL VERSION AS OF ${i + 1} diverged")
+        }
         sqlOps ++= Versioned.history(spark, dir).map(_.operation)
           .filter(_.endsWith("_SQL"))
       } finally {
-        Seq(dir, branchRoot.toString).foreach { d0 =>
+        Seq(dir, dir + "_copy", branchRoot.toString).foreach { d0 =>
           val p = new org.apache.hadoop.fs.Path(d0)
           p.getFileSystem(spark.sparkContext.hadoopConfiguration)
             .delete(p, true)

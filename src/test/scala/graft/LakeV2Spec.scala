@@ -138,22 +138,21 @@ class LakeV2Spec extends SparkSuite {
     } finally rm(dir)
   }
 
-  test("plan shape: a vectored read is ONE broadcast anti-join over " +
-      "the scan — no shuffle, no sort-merge") {
+  test("plan shape: a vectored read is one row-position filter over " +
+      "the scan, no join") {
     import spark.implicits._
     val dir = tmp()
     try {
       Versioned.init((1L to 1000L).map(i => (i, s"v$i")).toDF("k", "v")
         .repartition(4), dir)
       Versioned.deleteVectored(spark, dir, col("k") <= 10L)
-      val plan = Versioned.read(spark, dir).queryExecution
-        .explainString(org.apache.spark.sql.execution.ExplainMode
-          .fromString("formatted"))
-      assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-        "the vector must anti-join as a broadcast build side")
-      assert(!plan.contains("SortMergeJoin") &&
-        !plan.contains("Exchange hashpartitioning"),
-        s"a vectored read must not shuffle the table:\n$plan")
+      val df = Versioned.read(spark, dir)
+      val plan = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      assert(plan.contains("Filter") && !plan.contains("Join") &&
+        !plan.contains("Exchange") && !plan.contains("LocalTableScan"),
+        s"the vector must apply as a filter over the one scan:\n$plan")
+      assert(df.count() == 990L)
     } finally rm(dir)
   }
 

@@ -6,8 +6,9 @@ import scala.jdk.CollectionConverters._
 
 /** One session builder, one scratch owner and one parquet codec:
   * `src/main` may build a `SparkSession` only in Session.scala, create
-  * temp directories only in Scratch.scala, and the lake connector
-  * encodes data files only through Spark's own parquet format. */
+  * temp directories only in Scratch.scala, the lake connector
+  * encodes data files only through Spark's own parquet format, and
+  * deletion vectors are read only through the driver-rows accessor. */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private val main = Paths.get("src/main/scala")
@@ -30,13 +31,23 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("the lake connector has no hand-rolled parquet codec") {
-    // exempt: Versioned.scala's driver-only manifest codec
-    // (readParquetRows / writeManifestDirect), which keeps a commit
-    // from paying a Spark job; data files go through ParquetFileFormat
+    // exempt: Versioned.scala's driver-only metadata codec for
+    // manifests, segments and deletion vectors (foreachParquetRecord /
+    // writeParquetDirect), which keeps a commit and scan planning from
+    // paying a Spark job; data files go through ParquetFileFormat
     val sources = holders("org.apache.parquet.example")
       .filter(_.startsWith("graft/sources/"))
     assert(sources.isEmpty, s"parquet-mr example codec in: $sources")
     assert(holders("org.apache.parquet.example") ==
       Seq("graft/ops/Versioned.scala"))
+  }
+
+  test("one DV codec: deletion vectors are read only as driver rows") {
+    assert(holders("spark.read.schema(dvFields)").isEmpty,
+      "deletion vectors must read through Versioned.deletionVectorRows")
+    val viaFrame = holders("deletionVector(")
+      .filter(_.startsWith("graft/sources/"))
+    assert(viaFrame.isEmpty,
+      s"connector files reading a vector as a DataFrame: $viaFrame")
   }
 }
