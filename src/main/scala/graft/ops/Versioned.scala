@@ -32,19 +32,15 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   *    forever (its files are never mutated or deleted until
   *    [[vacuum]]), and a half-crashed writer leaves only unreferenced
   *    stage files, never a torn table.
-  *  - '''Manifest as data.''' The manifest is itself parquet, written
-  *    and read through the engine where cardinality matters: a
-  *    partition-scoped MERGE's carried file set flows from old
-  *    manifest to new manifest as a DataFrame — the million-file
-  *    table's untouched entries are never materialized on the driver
-  *    (the Iceberg manifest-list shape). Driver-side collects happen
-  *    only where Spark's scan API itself needs an explicit path list,
-  *    i.e. proportional to the files actually being READ or REWRITTEN.
-  *    Small collected manifests go through a direct parquet
-  *    reader/writer (no job) plus an immutability-keyed cache; scan
-  *    planning (interval pruning, per-file vectors) runs on the
-  *    driver over those cached entries, so planning a read starts
-  *    no Spark job.
+  *  - '''Manifest as data.''' The manifest is itself parquet: a
+  *    small top level whose `seg:` rows reference immutable segment
+  *    files (the Iceberg manifest-list shape), so a commit copies
+  *    untouched segments forward by reference and writes O(delta)
+  *    rows. Manifests go through a direct parquet reader/writer (no
+  *    job) plus an immutability-keyed cache; scan planning (interval
+  *    pruning, per-file vectors) and commit conflict checks run on
+  *    the driver over those cached entries, so neither starts a
+  *    Spark job.
   *  - '''Schema in the log, not the footers.''' Every commit publishes
   *    the table schema (`v<N>.schema`); reads project files through it,
   *    so a file written before a column existed reads as NULL without
@@ -55,9 +51,10 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   *    EXCLUSIVE CREATE of a `.v<N+1>.lock` marker (O_CREAT|O_EXCL on
   *    local disks, namenode-atomic `create(overwrite=false)` on
   *    HDFS), so two writers racing to commit produce exactly one
-  *    winner — the loser re-reads the new current and retries its
-  *    merge (bounded retries, then error). Only the winner writes the
-  *    manifest, still tmp+rename so readers never see a torn list.
+  *    winner — the loser waits for the winner's version to publish
+  *    and retries against it ([[occ]]), failing only when that
+  *    version never publishes. Only the winner writes the manifest,
+  *    still tmp+rename so readers never see a torn list.
   *  - '''Partition-scoped rewrite.''' MERGE with `partitionCol`
   *    rewrites only the partitions present in the source batch:
   *    untouched partitions' files carry over into the new manifest BY
@@ -183,15 +180,6 @@ object Versioned {
     dvCache.keySet.removeIf(_._1 == path)
   }
 
-  /** Manifest rows are (file path, optional per-file column stats as
-    * canonical JSON). Stats ride IN the manifest — metadata as data,
-    * the Iceberg shape — so file pruning is a filter over the manifest
-    * scan, and carrying a file by reference carries its stats for
-    * free (no recomputation, no footer reads at plan time). */
-  private val manifestFields = StructType(Seq(
-    StructField("f", StringType),
-    StructField("stats_json", StringType)))
-
   /** Every record of one parquet FILE through parquet-mr's record
     * reader — no Spark job. The driver-metadata codec shared by
     * manifests, segments and deletion vectors; `each` decodes one
@@ -275,7 +263,6 @@ object Versioned {
   // ---------------------------------------------------------------- //
 
   private val segRefPrefix = "seg:"
-  private val segmentedMarker = "_segmented"
   private def segsDir(path: String) = new Path(manifestDir(path), "segs")
   private def isSegRef(e: (String, Option[String])): Boolean =
     e._1.startsWith(segRefPrefix)
@@ -501,39 +488,6 @@ object Versioned {
   private def readManifest(spark: SparkSession, path: String,
       v: Long): Seq[String] =
     readManifestEntries(spark, path, v).map(_._1)
-
-  /** The manifest as a DataFrame (column `f`) — the distributed path
-    * for set operations whose cardinality is O(table files), e.g. the
-    * carried side of a partition-scoped [[merge]]. A segmented
-    * manifest's top level is small by construction: its segment
-    * parquet reads stay distributed, spliced under the inline rows. */
-  private def manifestDf(spark: SparkSession, path: String,
-      v: Long): DataFrame = {
-    val f = fs(spark, path)
-    val p = manifestPath(path, v)
-    if (!f.getFileStatus(p).isDirectory) // legacy text manifest: tiny
-      spark.createDataset(readManifest(spark, path, v))(Encoders.STRING)
-        .toDF("f").withColumn("stats_json", lit(null).cast("string"))
-    else if (!f.exists(new Path(p, segmentedMarker)))
-      spark.read.schema(manifestFields).parquet(p.toString)
-    else {
-      val (refs, inline) = rawTop(spark, path, v).partition(isSegRef)
-      val segPaths = refs.map(r => new Path(manifestDir(path),
-        r._1.stripPrefix(segRefPrefix)).toString)
-      val segDf =
-        if (segPaths.isEmpty) null
-        else spark.read.schema(manifestFields).parquet(segPaths: _*)
-      if (segDf == null) entriesDf(spark, inline)
-      else if (inline.isEmpty) segDf
-      else segDf.unionByName(entriesDf(spark, inline))
-    }
-  }
-
-  private def entriesDf(spark: SparkSession,
-      entries: Seq[(String, Option[String])]): DataFrame =
-    spark.createDataset(entries.map { case (f0, sj) => (f0, sj.orNull) })(
-      Encoders.tuple(Encoders.STRING, Encoders.STRING))
-      .toDF("f", "stats_json")
 
   /** Direct single-file parquet write of small, already-collected
     * driver metadata — `schema` is the parquet message type, `fill`
@@ -972,7 +926,7 @@ object Versioned {
     * Concurrent APPENDs keep positions valid and simply retry. */
   private[graft] def commitRowDelta(spark: SparkSession, path: String,
       dataFiles: Seq[String], dvStagedDirs: Seq[String],
-      op: String, maxRetries: Int = 5): Long = {
+      op: String): Long = {
     require(generatedColumns(spark, path).isEmpty &&
       identityColumns(spark, path).isEmpty,
       s"SQL row-level DML refuses generated/identity tables: $path — " +
@@ -1000,9 +954,7 @@ object Versioned {
     val stagedE =
       if (dataFiles.isEmpty) Seq.empty
       else stagedEntries(spark, path, dataFiles)
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val cur = resolve(spark, path, None)
+    occ(spark, path, "row-level delta") { (cur, _) =>
       newDv.foreach { d =>
         val curKeys = readManifestEntries(spark, path, cur)
           .map(e => fileKey(e._1)).toSet
@@ -1013,14 +965,10 @@ object Versioned {
             s"the statement. First: ${stale.take(3).mkString(", ")}")
       }
       val prev = deletionVectorRows(spark, path, Some(cur))
-      val combined = newDv.fold(prev)(n => Some(dvUnion(prev, n)))
-      if (commit(spark, path, cur + 1,
-          Left(readManifestEntries(spark, path, cur) ++ stagedE),
-          tableSchema(spark, path, Some(cur)), combined, op = Some(op)))
-        return cur + 1
-      attempt += 1
+      Right(Commit(readManifestEntries(spark, path, cur) ++ stagedE,
+        tableSchema(spark, path, Some(cur)),
+        newDv.fold(prev)(n => Some(dvUnion(prev, n))), op, identity))
     }
-    sys.error(s"row-level delta lost ${maxRetries + 1} commit races: $path")
   }
 
   /** The PART FILES of version `v`'s parquet manifest — the `\$files`
@@ -1054,22 +1002,28 @@ object Versioned {
         (statsKeyOf(spark, path, v, c), lo, hi) }
       entries.filter { case (_, sj) =>
         sj.flatMap(parseStatsDoc).forall(doc => keyed.forall {
-          case (k, lo, hi) => mayOverlap(doc, k, lo, hi) })
+          case ((k, scale), lo, hi) => boundsIn(doc, k, scale)
+            .forall { case (mn, mx) => mn <= hi && mx >= lo } })
       }
     }
   }
 
-  /** Interval overlap of one parsed stats document's entry for `key`
-    * with [lo, hi]; true when the entry is absent or incomplete. */
-  private def mayOverlap(doc: StatsDoc, key: String, lo: Double,
-      hi: Double): Boolean = {
+  /** The recorded [min, max] of stats key `key` in a parsed stats
+    * document, in column units: a DECIMAL column logs its unscaled
+    * long at the column's `scale` ("t":"l"), so it is divided back —
+    * exactly, via BigDecimal, so it compares as the same double as a
+    * filter value. None when the entry is absent or incomplete. */
+  private def boundsIn(doc: StatsDoc, key: String,
+      scale: Int): Option[(Double, Double)] = {
     import org.json4s._
+    def units(n: Long): Double =
+      if (scale == 0) n.toDouble
+      else java.math.BigDecimal.valueOf(n, scale).doubleValue
     doc \ key \ "t" match {
-      case JString("l") => longMinMaxIn(doc, key).forall { case (mn, mx) =>
-        mn.toDouble <= hi && mx.toDouble >= lo }
-      case JString("d") => doubleMinMaxIn(doc, key).forall { case (mn, mx) =>
-        mn <= hi && mx >= lo }
-      case _ => true
+      case JString("l") => longMinMaxIn(doc, key).map { case (mn, mx) =>
+        (units(mn), units(mx)) }
+      case JString("d") => doubleMinMaxIn(doc, key)
+      case _ => None
     }
   }
 
@@ -1287,15 +1241,19 @@ object Versioned {
     * per-file stats stay valid forever; lookups translate. A name
     * absent from the logged schema is an error, NOT a raw-key
     * fallback: a pre-rename name must not silently answer with the
-    * renamed column's stats. */
+    * renamed column's stats. Also returns the column's decimal scale
+    * (0 for other types): a DECIMAL logs its bounds unscaled. */
   private def statsKeyOf(spark: SparkSession, path: String, v: Long,
-      column: String): String =
+      column: String): (String, Int) =
     tableSchema(spark, path, Some(v)) match {
-      case None => column // legacy table without a logged schema
+      case None => (column, 0) // legacy table without a logged schema
       case Some(s0) =>
         val f0 = s0.fields.find(_.name == column)
         require(f0.isDefined, s"no such column '$column' on $path at v$v")
-        physicalOf(f0.get)
+        (physicalOf(f0.get), f0.get.dataType match {
+          case d: org.apache.spark.sql.types.DecimalType => d.scale
+          case _ => 0
+        })
     }
 
   /** Rename `df`'s columns logical→physical per `schema` (identity
@@ -1477,13 +1435,13 @@ object Versioned {
     * check-then-act there); on HDFS `create(overwrite = false)` is
     * namenode-atomic. Only the lock winner writes schema, vector and
     * manifest; the manifest DIRECTORY rename is the publish point, so
-    * readers never observe a torn version. The vector (driver rows)
-    * and a `Left` (collected) list are written by the direct parquet
-    * writer — no job — and enter the caches once published; a `Right`
-    * DataFrame (the partition-scoped merge's carried set) is written
-    * by the engine and NEVER materialized on the driver. */
+    * readers never observe a torn version. The vector and the
+    * top-level manifest rows (driver rows) are written by the direct
+    * parquet writer — no job — and enter the caches once published.
+    * Writers that may retry reach this only through [[occ]] and
+    * [[rebase]]. */
   private def commit(spark: SparkSession, path: String, v: Long,
-      fileList: Either[Seq[(String, Option[String])], DataFrame],
+      fileList: Seq[(String, Option[String])],
       schema: Option[StructType] = None,
       dv: Option[DvRows] = None,
       op: Option[String] = None,
@@ -1508,8 +1466,8 @@ object Versioned {
         }
       } else {
         // hadoop's FileAlreadyExistsException extends IOException; any
-        // other IO failure here is indistinguishable from a lost race
-        // and the caller's bounded retry surfaces a persistent fault
+        // other IO failure here is indistinguishable from a lost race;
+        // [[occ]] surfaces a persistent one as a never-published version
         try { f.create(lock, false).close(); true }
         catch { case _: java.io.IOException => false }
       }
@@ -1545,26 +1503,125 @@ object Versioned {
     }
     val tmp = new Path(manifestDir(path),
       s".v$v.manifest.tmp.${java.util.UUID.randomUUID()}")
-    fileList match {
-      case Left(seq) =>
-        f.mkdirs(tmp)
-        writeManifestDirect(spark, new Path(tmp, "part-00000.parquet"), seq)
-        if (seq.exists(isSegRef)) {
-          // segmented top level: the marker tells readers to splice
-          // segments; the expanded-entry cache fills on first read
-          f.create(new Path(tmp, segmentedMarker), true).close()
-        } else manifestCache.put((path, v), seq.toList)
-        rawTopCache.put((path, v), seq.toList)
-      case Right(df) =>
-        df.select(col("f"), col("stats_json"))
-          .write.mode("overwrite").parquet(tmp.toString)
-    }
+    f.mkdirs(tmp)
+    writeManifestDirect(spark, new Path(tmp, "part-00000.parquet"), fileList)
+    // a segmented top level's expanded-entry cache fills on first read
+    if (!fileList.exists(isSegRef)) manifestCache.put((path, v), fileList.toList)
+    rawTopCache.put((path, v), fileList.toList)
     val published = f.rename(tmp, manifestPath(path, v))
     if (published) {
       if (dvCache.size > 256) dvCache.clear()
       dvCache.put((path, v), vector)
     }
     published
+  }
+
+  /** One optimistic attempt's commit, built against version `cur`:
+    * the next version's top-level rows, schema, vector and op record,
+    * the receipt of the version it lands as, the staging directory to
+    * remove if it loses, and per-version sidecars. `rebase`, when set,
+    * re-points the already-staged files at a newer tip before the
+    * attempt is re-run from scratch. */
+  private final case class Commit[R](top: Seq[(String, Option[String])],
+      schema: Option[StructType], dv: Option[DvRows], op: String,
+      receipt: Long => R, staged: Option[Path] = None,
+      extraFiles: Seq[(String, Array[Byte])] = Seq.empty,
+      rebase: Option[Rebase] = None)
+
+  /** How a lost [[Commit]] rebases: `meta` is the
+    * [[metadataFingerprint]] the writer validated against, `op` the
+    * history record of a rebased commit, and `onto(newest)` the
+    * top-level rows and vector against tip `newest` — None when the
+    * winners' commits overlap the writer's footprint. */
+  private final case class Rebase(meta: String, op: String,
+      onto: Long => Option[(Seq[(String, Option[String])], Option[DvRows])])
+
+  /** A metadata-only [[Commit]]: version `from`'s top-level rows and
+    * deletion vector carried forward under `schema`. */
+  private def carryForward(spark: SparkSession, path: String, from: Long,
+      schema: Option[StructType], op: String): Either[Long, Commit[Long]] =
+    Right(Commit(segmentedTop(spark, path, from, Seq.empty), schema,
+      deletionVectorRows(spark, path, Some(from)), op, identity))
+
+  /** The one optimistic-concurrency loop, run by every writer that
+    * retries. `attempt(cur, first)` computes the write against version
+    * `cur` (`pinned` on the first attempt, else the tip) and returns a
+    * result that needs no commit (Left) or the [[Commit]] of version
+    * `cur + 1`. A lost race first tries the commit's [[rebase]]; failing
+    * that it removes the staging directory, waits for the version it
+    * lost to publish ([[awaitPublished]]) and re-runs the attempt on the
+    * new tip. There is no retry count: every lost race means another
+    * writer's version landed, and the loop fails only when the lost
+    * version never publishes. */
+  private def occ[R](spark: SparkSession, path: String, what: String,
+      pinned: Option[Long] = None)(
+      attempt: (Long, Boolean) => Either[R, Commit[R]]): R = {
+    @annotation.tailrec
+    def run(cur: Long, first: Boolean): R = attempt(cur, first) match {
+      case Left(r) => r
+      case Right(c) =>
+        var won: Option[Long] = None
+        try won =
+          if (commit(spark, path, cur + 1, c.top, c.schema, c.dv,
+              Some(c.op), c.extraFiles)) Some(cur + 1)
+          else c.rebase.flatMap(rebase(spark, path, what, cur, c, _))
+        finally if (won.isEmpty) c.staged.foreach(fs(spark, path).delete(_, true))
+        won match {
+          case Some(v) => c.receipt(v)
+          case None => run(awaitPublished(spark, path, what, cur + 1), false)
+        }
+    }
+    run(pinned.getOrElse(resolve(spark, path, None)), first = true)
+  }
+
+  /** The one rebase loop: re-commit a lost [[Commit]]'s ALREADY-STAGED
+    * files on top of newer tips — no data re-read or re-write — while
+    * the table metadata and schema are unchanged since `base` (the
+    * snapshot the writer validated and staged against) and `rb.onto`
+    * finds the winners disjoint. [[append]]'s always are (appends never
+    * conflict on data); [[merge]]'s are when no commit since `base`
+    * added or removed a manifest or vector entry inside its touched
+    * partitions. Each round first waits for the version it lost to
+    * publish. Returns the committed version, or None on a conflict
+    * (the caller restages). */
+  private def rebase(spark: SparkSession, path: String, what: String,
+      base: Long, c: Commit[_], rb: Rebase): Option[Long] = {
+    val sig = schemaSig(tableSchema(spark, path, Some(base)))
+    @annotation.tailrec
+    def onto(lost: Long): Option[Long] = {
+      val newest = awaitPublished(spark, path, what, lost)
+      val next =
+        if (metadataFingerprint(spark, path) != rb.meta ||
+            schemaSig(tableSchema(spark, path, Some(newest))) != sig) None
+        else rb.onto(newest)
+      next match {
+        case None => None
+        case Some((top, dv)) =>
+          if (commit(spark, path, newest + 1, top, c.schema, dv,
+              Some(rb.op), c.extraFiles)) Some(newest + 1)
+          else onto(newest + 1)
+      }
+    }
+    onto(base + 1)
+  }
+
+  /** Wait for version `v`, whose commit race this writer just lost, to
+    * publish, and return the tip. A winner's manifest lands moments
+    * after its lock; a version that does not publish within the grace
+    * has a stale lock (its writer died between lock and publish) or a
+    * persistent IO fault ([[commit]]), and no retry can get past it. */
+  private def awaitPublished(spark: SparkSession, path: String,
+      what: String, v: Long): Long = {
+    var newest = resolve(spark, path, None)
+    val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
+    while (newest < v && System.nanoTime() < deadline) {
+      Thread.sleep(50)
+      newest = resolve(spark, path, None)
+    }
+    if (newest < v) sys.error(s"$what lost the commit race for v$v of " +
+      s"$path, and v$v never published (stale .v$v.lock or a " +
+      "persistent IO fault)")
+    newest
   }
 
   /** Initialize the table with `df` as version 1. `statsCols`
@@ -1598,7 +1655,7 @@ object Versioned {
     val staged = ensureManifestNonEmpty(df, path, dir, staged0,
       carriedNonEmpty = false)
     require(commit(spark, path, 1L,
-      Left(stagedEntries(spark, path, staged)), Some(df.schema),
+      stagedEntries(spark, path, staged), Some(df.schema),
       op = Some(opName)),
       s"init lost a commit race: $path")
     1L
@@ -1629,7 +1686,7 @@ object Versioned {
     * deterministic to exercise. */
   def merge(source: DataFrame, path: String, keys: Seq[String],
       partitionCol: Option[String] = None,
-      deleteCol: Option[String] = None, maxRetries: Int = 5,
+      deleteCol: Option[String] = None,
       evolveSchema: Boolean = false, opName: String = "MERGE",
       baseVersion: Option[Long] = None): Long = {
     require(keys.nonEmpty, "merge needs at least one key column")
@@ -1645,11 +1702,7 @@ object Versioned {
     // concurrent constraint / generated-column / skipping-registration
     // change means our pre-staging validation may be stale
     val meta0 = metadataFingerprint(spark, path)
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val cur =
-        if (attempt == 0 && baseVersion.isDefined) baseVersion.get
-        else resolve(spark, path, None)
+    occ(spark, path, "merge", baseVersion) { (cur, first) =>
       val next = cur + 1
       val curSchema = tableSchema(spark, path, Some(cur))
       // under column mapping, partition DIRECTORIES carry the
@@ -1749,7 +1802,7 @@ object Versioned {
       // supplied generated-column values must match their expression
       // (delete-flagged rows are already excluded — their key-only
       // images would falsely mismatch); retries keep the verdict
-      if (attempt == 0)
+      if (first)
         validateGeneratedColumns(spark, path, srcClean, gensSupplied)
       val inserts =
         if (evolveSchema) srcClean else srcClean.select(tgtCols.map(col): _*)
@@ -1764,7 +1817,7 @@ object Versioned {
       // Under additive evolution the images are aligned to the union
       // schema so a constraint on a carried-only column reads NULL
       // (passes, SQL semantics) instead of failing analysis.
-      if (attempt == 0) {
+      if (first) {
         val images =
           if (!evolveSchema) inserts
           else merged.schema.fields.foldLeft(inserts) { (df, fld) =>
@@ -1804,46 +1857,25 @@ object Versioned {
       }
       val (stagedDir, staged0) = stage(merged, path, next, partitionCol,
         Some(outSchema))
-      val carriedNonEmpty = carriedTop match {
-        case None => false
-        case Some(k) => k.nonEmpty
-      }
       val staged = ensureManifestNonEmpty(merged, path, stagedDir,
-        staged0, carriedNonEmpty, Some(outSchema))
+        staged0, carriedTop.exists(_.nonEmpty), Some(outSchema))
       val stagedE = stagedEntries(spark, path, staged)
-      val filesArg: Either[Seq[(String, Option[String])], DataFrame] =
-        carriedTop match {
-          case None => Left(stagedE)
-          case Some(k) => Left(sealTop(spark, path, k, stagedE))
-        }
-      if (commit(spark, path, next, filesArg, Some(outSchema), dvCarried,
-          op = Some(opName), extraFiles = idExtras))
-        return next
-      // lost the race. First try the OCC fast path: if everything that
-      // committed since `cur` is disjoint from our partition footprint
-      // (and table metadata/schema are unchanged), re-commit our
-      // ALREADY-STAGED files against the winner's manifest — a
-      // metadata-only rebase, no restage. Only a real overlap falls
-      // through to the full re-merge below. Identity-bearing merges
-      // never rebase: two racing allocators extending from the same
+      // a lost race first tries the fast path: re-commit the
+      // ALREADY-STAGED files against the winner's manifest when every
+      // commit since `cur` is disjoint from our partition footprint.
+      // Only a real overlap re-merges. Identity-bearing merges never
+      // rebase: two racing allocators extending from the same
       // high-water would collide, so the retry recomputes allocation
       // against the winner instead.
-      if (partitionCol.isDefined && idents.isEmpty) {
-        tryRebase(spark, path, cur, physOf(partitionCol.get), touchedSegs,
-          hitList, stagedE, outSchema, meta0, opName,
-          maxTries = maxRetries + 1) match {
-          case Some(v) => return v
-          case None => ()
-        }
+      val fastPath = partitionCol.filter(_ => idents.isEmpty).map { pc =>
+        Rebase(meta0, opName + "+REBASE", newest =>
+          partitionRebase(spark, path, cur, newest, physOf(pc),
+            touchedSegs.toSet, hitList, stagedE))
       }
-      // conflicting race: clean up OUR OWN staging directory only
-      // (uuid-suffixed, so the winner's files are untouchable by
-      // construction) and re-merge against the new current
-      fs(spark, path).delete(stagedDir, true)
-      attempt += 1
+      Right(Commit(carriedTop.fold(stagedE)(sealTop(spark, path, _, stagedE)),
+        Some(outSchema), dvCarried, opName, identity, Some(stagedDir),
+        idExtras, fastPath))
     }
-    sys.error(s"merge lost ${maxRetries + 1} commit races " +
-      s"(1 attempt + $maxRetries retries): $path")
   }
 
   /** One string capturing every piece of table metadata a write
@@ -1859,47 +1891,6 @@ object Versioned {
       statsColumns(spark, path).map("s:" + _) ++
       bloomColumns(spark, path).map("b:" + _)).mkString("\n")
 
-  /** Wait (bounded) for the table tip to reach `floor` — the grace a
-    * loser gives a winner whose LOCK exists but whose manifest (an
-    * engine write job) hasn't published yet. Returns the tip, which
-    * is < `floor` only for a stale never-publishing lock. */
-  private def waitUntilAtLeast(spark: SparkSession, path: String,
-      floor: Long): Long = {
-    var newest = resolve(spark, path, None)
-    val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-    while (newest < floor && System.nanoTime() < deadline) {
-      Thread.sleep(50)
-      newest = resolve(spark, path, None)
-    }
-    newest
-  }
-
-  /** The OCC fast path for a [[merge]] that lost its commit race.
-    *
-    * Sound iff every commit in `(cur, newest]` is DISJOINT from this
-    * writer's footprint; concretely, ALL of:
-    *  - the table schema at `newest` equals the schema at `cur` (a
-    *    concurrent evolution would be silently dropped by committing
-    *    our staged schema);
-    *  - constraints / generated columns / skipping registrations are
-    *    unchanged (our pre-staging validation would be stale);
-    *  - no manifest entry was added or removed inside our touched
-    *    partitions — and none outside EVERY partition directory (the
-    *    schema-only root file is always rewritten, so a change there
-    *    overlaps by construction);
-    *  - no deletion-vector entry changed (either direction) inside
-    *    our touched partitions — a DV-only DELETE leaves the manifest
-    *    intact, so the manifest diff alone would miss it.
-    *
-    * When disjoint, the new manifest is `manifest(newest)` minus our
-    * hit files plus our ALREADY-STAGED files, and the committed
-    * vector is `dv(newest)` minus entries on hit files (we
-    * materialized those rows); both are engine-side frames, so the
-    * rebase costs a few manifest-scale scans and ZERO data I/O —
-    * Delta's logical conflict detection, which is what keeps many
-    * single-partition writers from serializing behind each other's
-    * full re-merges at 100 TB. The commit lands as `<op>+REBASE` in
-    * [[history]]. Returns None on any conflict (caller re-merges). */
   /** Schema identity for the rebase conflict check: field names,
     * PHYSICAL names (column mapping) and data types. Nullability and
     * field ORDER are deliberately ignored — a merge's union widens
@@ -1912,66 +1903,42 @@ object Versioned {
       s"${f.name}|${physicalOf(f)}|${f.dataType.simpleString}")
       .sorted.mkString(";"))
 
-  private def tryRebase(spark: SparkSession, path: String, cur: Long,
-      pcPhys: String, touched: Seq[String], hitList: Seq[String],
-      stagedE: Seq[(String, Option[String])], outSchema: StructType,
-      metaAtRead: String, opName: String, maxTries: Int): Option[Long] = {
-    val curSchemaSig = schemaSig(tableSchema(spark, path, Some(cur)))
-    val segPattern = "/(" + java.util.regex.Pattern.quote(pcPhys) + "=[^/]*)/"
-    val seg = regexp_extract(col("f"), segPattern, 1)
-    val segRe = segPattern.r
-    val touchedDf = spark.createDataset(touched)(Encoders.STRING)
-      .toDF("seg")
-    def clashes(filesDf: DataFrame): Boolean = {
-      val withSeg = filesDf.select("f").withColumn("seg", seg)
-      withSeg.filter(col("seg") === lit(""))
-        .unionByName(withSeg.join(touchedDf, Seq("seg"), "left_semi"))
-        .limit(1).count() > 0
+  /** [[merge]]'s [[Rebase]] onto tip `newest` for a merge computed at
+    * `base` that rewrote `hitList` in the `touched` partitions. Sound
+    * iff no commit in `(base, newest]` added or removed a manifest
+    * entry, or changed a deletion-vector entry, inside the touched
+    * partitions or outside every partition directory (the schema-only
+    * root file is always rewritten, so a change there overlaps by
+    * construction; a DV-only DELETE leaves the manifest intact, so the
+    * vectors are compared too). Both tests are set differences of the
+    * cached driver metadata — no Spark job. When disjoint, the new top
+    * level is `newest`'s minus the hit files plus the staged ones, and
+    * the vector is `newest`'s minus entries on hit files (the rewrite
+    * materialized those rows). None on any overlap. */
+  private def partitionRebase(spark: SparkSession, path: String,
+      base: Long, newest: Long, pcPhys: String, touched: Set[String],
+      hitList: Seq[String], stagedE: Seq[(String, Option[String])])
+      : Option[(Seq[(String, Option[String])], Option[DvRows])] = {
+    val segRe = ("/(" + java.util.regex.Pattern.quote(pcPhys) + "=[^/]*)/").r
+    val (m0, m1) = (readManifest(spark, path, base).toSet,
+      readManifest(spark, path, newest).toSet)
+    val dvN = deletionVectorRows(spark, path, Some(newest))
+    val (d0, d1) = (deletionVectorRows(spark, path, Some(base))
+      .getOrElse(Map.empty), dvN.getOrElse(Map.empty))
+    val changed = (m0 diff m1) ++ (m1 diff m0) ++ (d0.keySet ++ d1.keySet)
+      .filterNot(k => java.util.Arrays.equals(d0.getOrElse(k, null),
+        d1.getOrElse(k, null)))
+    if (changed.exists(f => segRe.findFirstMatchIn(f)
+        .forall(m => touched(m.group(1))))) None
+    else {
+      // the winners never touched our partitions, so the hit set
+      // against `newest` must equal ours — any drift re-merges
+      val (keepTop, hitN) = splitTopByPartitions(spark, path, newest,
+        pcPhys, touched)
+      if (hitN.map(_._1).toSet != hitList.toSet) None
+      else Some((sealTop(spark, path, keepTop, stagedE),
+        dvWithout(dvN)(hitList.map(fileKey).toSet)))
     }
-    var tries = 0
-    // we lost the lock for cur+1, so SOMEONE holds it: each iteration
-    // first waits for the version we just lost to PUBLISH (the
-    // winner's manifest is an engine write job that lands seconds
-    // after its lock), then rebases onto the new tip; a lock that
-    // never publishes is stale and left to the full re-merge path
-    var floor = cur + 1
-    while (tries < maxTries) {
-      val newest = waitUntilAtLeast(spark, path, floor)
-      if (newest < floor) return None
-      locally {
-        if (metadataFingerprint(spark, path) != metaAtRead) return None
-        if (schemaSig(tableSchema(spark, path, Some(newest)))
-            != curSchemaSig) return None
-        val mCur = manifestDf(spark, path, cur).select("f")
-        val mNew = manifestDf(spark, path, newest)
-        val manifestDelta = mNew.select("f").exceptAll(mCur)
-          .unionAll(mCur.exceptAll(mNew.select("f")))
-        if (clashes(manifestDelta)) return None
-        val dvN = deletionVectorRows(spark, path, Some(newest))
-        val (c0, n0) = (deletionVectorRows(spark, path, Some(cur))
-          .getOrElse(Map.empty), dvN.getOrElse(Map.empty))
-        val changed = (c0.keySet ++ n0.keySet).filterNot(k =>
-          java.util.Arrays.equals(c0.getOrElse(k, null), n0.getOrElse(k, null)))
-        if (changed.exists(k => segRe.findFirstMatchIn(k)
-            .forall(m => touched.contains(m.group(1))))) return None
-        // segment-aware carry against the WINNER's manifest; the
-        // clash check proved the winner never touched our partitions,
-        // so its hit set must equal ours — any drift falls back to
-        // the full re-merge
-        val (keepTop, hitN) = splitTopByPartitions(spark, path, newest,
-          pcPhys, touched.toSet)
-        if (hitN.map(_._1).toSet != hitList.toSet) return None
-        val hitKeys = hitList.map(fileKey).toSet
-        val dvOut = dvWithout(dvN)(hitKeys)
-        if (commit(spark, path, newest + 1,
-            Left(sealTop(spark, path, keepTop, stagedE)),
-            Some(outSchema), dvOut, op = Some(opName + "+REBASE")))
-          return Some(newest + 1)
-        floor = newest + 1 // we lost newest+1's lock: wait for IT
-        tries += 1
-      }
-    }
-    None
   }
 
   /** INSERT-ONLY commit: stage the batch, commit `manifest(cur) ∪
@@ -1993,7 +1960,7 @@ object Versioned {
     * [[merge]] if replacing rows, and duplicate-key appends are
     * visible duplicates, as in any lake. */
   def append(source: DataFrame, path: String,
-      partitionCol: Option[String] = None, maxRetries: Int = 5,
+      partitionCol: Option[String] = None,
       evolveSchema: Boolean = false, opName: String = "APPEND"): Long = {
     val spark = source.sparkSession
     val gensSupplied = generatedColumns(spark, path)
@@ -2002,13 +1969,9 @@ object Versioned {
     validateGeneratedColumns(spark, path, sourceG, gensSupplied)
     val idents = identityColumns(spark, path)
     val meta0 = metadataFingerprint(spark, path)
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val cur = resolve(spark, path, None)
-      val next = cur + 1
+    occ(spark, path, "append") { (cur, first) =>
       val curSchema = tableSchema(spark, path, Some(cur))
       val tgt = curSchema.getOrElse(read(spark, path, Some(cur)).schema)
-      val curSig = schemaSig(Some(tgt))
       // identity: every row is an insert; allocation is ranked over
       // the full row so the assigned multiset is deterministic
       var src = sourceG
@@ -2064,7 +2027,7 @@ object Versioned {
       val inserts =
         if (evolveSchema) src
         else src.select(tgt.fieldNames.toSeq.map(col): _*)
-      if (attempt == 0) {
+      if (first) {
         val images =
           if (!evolveSchema) inserts
           else tgt.fields.foldLeft(inserts) { (df, fld) =>
@@ -2087,43 +2050,22 @@ object Versioned {
             .filterNot(f => cs.fieldNames.contains(f.name))
             .map(freshPhysical(_, taken)))
       }
-      val (stagedDir, staged) = stage(inserts, path, next, partitionCol,
+      val (stagedDir, staged) = stage(inserts, path, cur + 1, partitionCol,
         Some(outSchema))
       val stagedE = stagedEntries(spark, path, staged)
       // O(delta) commit: carried segment refs copy forward, staged
       // entries ride inline (sealing past the threshold) — an append
       // on a million-file table writes a delta-sized manifest
-      def filesAt(v: Long) = Left(segmentedTop(spark, path, v, stagedE))
-      if (commit(spark, path, next, filesAt(cur), Some(outSchema),
-          deletionVectorRows(spark, path, Some(cur)), op = Some(opName),
-          extraFiles = idExtras))
-        return next
-      // appends never conflict on data: re-point the staged files at
-      // each new winner until the commit lands — bail to a restage
-      // only on schema/metadata drift, identity allocation, or a
-      // stale never-publishing lock
-      if (idents.isEmpty) {
-        var tries = 0
-        var bail = false
-        var floor = cur + 1 // the version we just lost the lock for
-        while (!bail && tries <= maxRetries) {
-          val newest = waitUntilAtLeast(spark, path, floor)
-          if (newest < floor) bail = true
-          else if (metadataFingerprint(spark, path) != meta0 ||
-            schemaSig(tableSchema(spark, path, Some(newest))) != curSig)
-            bail = true
-          else if (commit(spark, path, newest + 1, filesAt(newest),
-              Some(outSchema),
-              deletionVectorRows(spark, path, Some(newest)),
-              op = Some(opName), extraFiles = idExtras))
-            return newest + 1
-          else { floor = newest + 1; tries += 1 }
-        }
-      }
-      fs(spark, path).delete(stagedDir, true)
-      attempt += 1
+      def at(v: Long) = (segmentedTop(spark, path, v, stagedE),
+        deletionVectorRows(spark, path, Some(v)))
+      // appends never conflict on data: a lost race re-points the
+      // staged files at each new winner, restaging only on
+      // schema/metadata drift or identity allocation
+      val (top, dv) = at(cur)
+      Right(Commit(top, Some(outSchema), dv, opName, identity,
+        Some(stagedDir), idExtras,
+        Option.when(idents.isEmpty)(Rebase(meta0, opName, v => Some(at(v))))))
     }
-    sys.error(s"append lost ${maxRetries + 1} commit races: $path")
   }
 
   /** The (queryId, epochId) transaction stamp of version `v`, if the
@@ -2155,7 +2097,7 @@ object Versioned {
     * those writers need [[append]]/[[merge]]'s in-plan machinery. */
   private[graft] def appendStaged(spark: SparkSession, path: String,
       files: Seq[String], txn: Option[(String, Long)],
-      maxRetries: Int = 5, opName: String = "STREAM-APPEND"): Long = {
+      opName: String = "STREAM-APPEND"): Long = {
     require(generatedColumns(spark, path).isEmpty &&
       identityColumns(spark, path).isEmpty,
       s"streaming sink refuses generated/identity tables: $path — " +
@@ -2177,20 +2119,12 @@ object Versioned {
     val stagedE = stagedEntries(spark, path, files)
     val extras = txn.map { case (q, e) =>
       ("txn", s"$q\t$e\n".getBytes(StandardCharsets.UTF_8)) }.toSeq
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val cur = resolve(spark, path, None)
-      val next = cur + 1
-      val filesArg = Left(segmentedTop(spark, path, cur, stagedE))
-      if (commit(spark, path, next, filesArg,
-          tableSchema(spark, path, Some(cur)),
-          deletionVectorRows(spark, path, Some(cur)),
-          op = Some(opName), extraFiles = extras))
-        return next
-      Thread.sleep(50)
-      attempt += 1
+    occ(spark, path, "appendStaged") { (cur, _) =>
+      Right(Commit(segmentedTop(spark, path, cur, stagedE),
+        tableSchema(spark, path, Some(cur)),
+        deletionVectorRows(spark, path, Some(cur)), opName, identity,
+        extraFiles = extras))
     }
-    sys.error(s"appendStaged lost ${maxRetries + 1} commit races: $path")
   }
 
   /** Receipt of a [[mergeInto]]: the committed version plus per-clause
@@ -2370,7 +2304,7 @@ object Versioned {
           .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
     }
     require(commit(spark, dst, 1L,
-      Left(readManifestEntries(spark, src, v)),
+      readManifestEntries(spark, src, v),
       tableSchema(spark, src, Some(v)),
       deletionVectorRows(spark, src, Some(v)),
       op = Some(s"CLONE")),
@@ -2391,75 +2325,89 @@ object Versioned {
     * rewrite for a scan-optimal layout; readers of older versions are
     * untouched (their files stay until [[vacuum]]).
     *
-    * Without `partitionCol` the rewrite is a round-robin
-    * `repartition(targetFiles)`, so the new version has EXACTLY
-    * `targetFiles` files whenever rows ≥ targetFiles (round-robin
-    * spreads rows evenly — no empty tasks). With `partitionCol` the
-    * data is clustered by partition value first (`repartition(n, pc)`
-    * hash-routes ALL rows of one value into one task) and written
-    * `partitionBy(pc)`, giving ONE file per partition value —
-    * scan-optimal when partitions are date-grain sized — and
-    * preserving partition-scoped [[merge]] carry-over semantics for
-    * subsequent commits.
-    *
-    * Concurrency: same optimistic loop as [[merge]] — losing a commit
-    * race re-reads the new current (which may contain rows the raced
-    * merge just added) and re-compacts, so a compaction can never
-    * silently undo a concurrent writer's committed rows. */
+    * The layouts (round-robin, `partitionCol`, `clusterBy`,
+    * `zOrderBy`) and the concurrency story are [[rewrite]]'s. */
   def compact(spark: SparkSession, path: String, targetFiles: Int,
-      partitionCol: Option[String] = None, maxRetries: Int = 5,
+      partitionCol: Option[String] = None,
       clusterBy: Seq[String] = Seq.empty,
       zOrderBy: Seq[String] = Seq.empty): Long = {
-    require(targetFiles >= 1, "targetFiles must be >= 1")
     require(Seq(partitionCol.nonEmpty, clusterBy.nonEmpty,
         zOrderBy.nonEmpty).count(identity) <= 1,
       "partitionCol, clusterBy and zOrderBy are alternative layouts — " +
         "pick one")
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val cur = resolve(spark, path, None)
-      val next = cur + 1
-      val snap = readLive(spark, path, cur, None, keepMeta = false)
-      // clusterBy: range-partition + sort on the cluster key(s), so
-      // each compacted file covers a narrow key interval — the layout
-      // that makes the manifest's min/max stats (and [[readRange]])
-      // bite: a selective probe after a clustered compact opens the
-      // predicate's true file footprint
-      // zOrderBy: Morton-interleaved multi-dimension clustering — a
-      // range probe on ANY one of the z-ordered columns prunes (linear
-      // clusterBy only prunes its leading column); see [[ZOrder]]
-      val laidOut = (partitionCol, clusterBy, zOrderBy) match {
-        case (Some(pc), _, _) => snap.repartition(targetFiles, col(pc))
-        case (None, cs, _) if cs.nonEmpty =>
-          snap.repartitionByRange(targetFiles, cs.map(col): _*)
-            .sortWithinPartitions(cs.map(col): _*)
-        case (None, _, zs) if zs.nonEmpty =>
-          ZOrder.layout(snap, targetFiles, zs)
-        case _ => snap.repartition(targetFiles)
+    rewrite(spark, path, "COMPACT", targetFiles, partitionCol, clusterBy,
+      zOrderBy)(_ => Right(Pick(None, Seq.empty, identity)))
+  }
+
+  /** What a compaction rewrites at the version it reads: `files` (None
+    * = the whole live snapshot, committed as a flat manifest), the
+    * top-level manifest rows that carry by reference, and the receipt
+    * of the committed version. */
+  private final case class Pick[R](files: Option[Seq[String]],
+      carried: Seq[(String, Option[String])], receipt: Long => R)
+
+  /** The provenance a clustered layout records (`v<N>.cluster`). */
+  private def clusterMark(clusterBy: Seq[String],
+      zOrderBy: Seq[String]): Option[String] =
+    if (clusterBy.nonEmpty) Some(s"c:${clusterBy.mkString(",")}")
+    else if (zOrderBy.nonEmpty) Some(s"z:${zOrderBy.mkString(",")}")
+    else None
+
+  /** The one rewrite core of the data compactions ([[compact]],
+    * [[compactPartitions]], [[compactIncremental]], [[compactSmall]]),
+    * run under [[occ]]. `pick` selects the files at the current
+    * version (Left = nothing to do, with its receipt); their live rows
+    * are laid out into `targetFiles` files and staged:
+    *  - `partitionCol`: hash-clustered by value (`repartition(n, pc)`
+    *    routes ALL rows of one value into one task) and written
+    *    `partitionBy`, one file per value, which keeps partition-scoped
+    *    [[merge]] carry-over working;
+    *  - `clusterBy`: range-partitioned and sorted on the key(s), so
+    *    each file covers a narrow key interval — the layout that makes
+    *    min/max stats (and [[readRange]]) prune;
+    *  - `zOrderBy`: Morton-interleaved ([[ZOrder]]), so a range probe
+    *    on ANY one of the columns prunes;
+    *  - otherwise round-robin, exactly `targetFiles` files whenever
+    *    rows ≥ targetFiles.
+    * Vector entries on the picked files are dropped (the rewrite
+    * materialized them), the rest carry with the carried rows, and a
+    * clustered layout records its [[clusterMark]] — what
+    * [[compactIncremental]] reads to find the files already laid out on
+    * those columns. A lost race re-picks against the winner, so a
+    * compaction never undoes a concurrent writer's committed rows. */
+  private def rewrite[R](spark: SparkSession, path: String, op: String,
+      targetFiles: Int, partitionCol: Option[String] = None,
+      clusterBy: Seq[String] = Seq.empty,
+      zOrderBy: Seq[String] = Seq.empty)(
+      pick: Long => Either[R, Pick[R]]): R = {
+    require(targetFiles >= 1, "targetFiles must be >= 1")
+    val mark = clusterMark(clusterBy, zOrderBy).map(m =>
+      ("cluster", s"$m\n".getBytes(StandardCharsets.UTF_8))).toSeq
+    occ(spark, path, op) { (cur, _) =>
+      pick(cur).map { p =>
+        val rows = readLive(spark, path, cur, p.files, keepMeta = false)
+        val laidOut = (partitionCol, clusterBy, zOrderBy) match {
+          case (Some(pc), _, _) => rows.repartition(targetFiles, col(pc))
+          case (None, cs, _) if cs.nonEmpty =>
+            rows.repartitionByRange(targetFiles, cs.map(col): _*)
+              .sortWithinPartitions(cs.map(col): _*)
+          case (None, _, zs) if zs.nonEmpty =>
+            ZOrder.layout(rows, targetFiles, zs)
+          case _ => rows.repartition(targetFiles)
+        }
+        val schema = tableSchema(spark, path, Some(cur)).getOrElse(rows.schema)
+        val (stagedDir, staged0) = stage(laidOut, path, cur + 1,
+          partitionCol, Some(schema))
+        val staged = stagedEntries(spark, path, ensureManifestNonEmpty(rows,
+          path, stagedDir, staged0, p.carried.nonEmpty, Some(schema)))
+        val dv = p.files.flatMap { picked =>
+          dvWithout(deletionVectorRows(spark, path, Some(cur)))(
+            picked.map(fileKey).toSet)
+        }
+        Commit(p.files.fold(staged)(_ => sealTop(spark, path, p.carried, staged)),
+          Some(schema), dv, op, p.receipt, Some(stagedDir), mark)
       }
-      val schema = tableSchema(spark, path, Some(cur)).getOrElse(snap.schema)
-      val (stagedDir, staged0) = stage(laidOut, path, next, partitionCol,
-        Some(schema))
-      val staged = ensureManifestNonEmpty(laidOut, path, stagedDir,
-        staged0, carriedNonEmpty = false, Some(schema))
-      // cluster provenance sidecar: what [[compactIncremental]] uses
-      // to find the files already laid out on these columns
-      val clusterMark: Seq[(String, Array[Byte])] =
-        if (clusterBy.nonEmpty)
-          Seq(("cluster", s"c:${clusterBy.mkString(",")}\n"
-            .getBytes(StandardCharsets.UTF_8)))
-        else if (zOrderBy.nonEmpty)
-          Seq(("cluster", s"z:${zOrderBy.mkString(",")}\n"
-            .getBytes(StandardCharsets.UTF_8)))
-        else Seq.empty
-      if (commit(spark, path, next,
-        Left(stagedEntries(spark, path, staged)), Some(schema),
-        op = Some("COMPACT"), extraFiles = clusterMark)) return next
-      fs(spark, path).delete(stagedDir, true)
-      attempt += 1
     }
-    sys.error(s"compact lost ${maxRetries + 1} commit races " +
-      s"(1 attempt + $maxRetries retries): $path")
   }
 
   /** Receipt of a [[compactSmall]]: the committed version, how many
@@ -2480,12 +2428,8 @@ object Versioned {
     * minimal top level. Unpartitioned tables seal into one segment.
     * Returns the committed version (or the current one unchanged if
     * the top level is already minimal). */
-  def rewriteManifests(spark: SparkSession, path: String,
-      maxRetries: Int = 5): Long = {
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val cur = resolve(spark, path, None)
-      val next = cur + 1
+  def rewriteManifests(spark: SparkSession, path: String): Long =
+    occ(spark, path, "rewriteManifests") { (cur, _) =>
       val entries = readManifestEntries(spark, path, cur)
       val groups = entries.groupBy { e =>
         val k = fileKey(e._1).split('/')
@@ -2511,24 +2455,18 @@ object Versioned {
             refs0.size == partGroups.size &&
             refs0.forall(r => footprintOf(r._2).exists {
               case (ps, fl) => !fl && ps.size == 1 })
-      if (alreadyMinimal) return cur
-      val top =
+      if (alreadyMinimal) Left(cur)
+      else Right(Commit(
         if (partGroups.isEmpty)
           if (flatRows.size > manifestInlineRows(spark))
             Seq(writeSegment(spark, path, flatRows))
           else flatRows
         else partGroups.map { case (_, es) =>
-          writeSegment(spark, path, es) } ++ flatRows
-      if (commit(spark, path, next, Left(top),
-          tableSchema(spark, path, Some(cur)),
-          deletionVectorRows(spark, path, Some(cur)),
-          op = Some("REWRITE_MANIFESTS")))
-        return next
-      attempt += 1
+          writeSegment(spark, path, es) } ++ flatRows,
+        tableSchema(spark, path, Some(cur)),
+        deletionVectorRows(spark, path, Some(cur)), "REWRITE_MANIFESTS",
+        identity))
     }
-    sys.error(s"rewriteManifests lost ${maxRetries + 1} commit races " +
-      s"(1 attempt + $maxRetries retries): $path")
-  }
 
   /** Partition-scoped OPTIMIZE (Delta's `OPTIMIZE … WHERE`): rewrite
     * ONLY the named partitions' files into `targetFiles` files per
@@ -2540,15 +2478,12 @@ object Versioned {
     * carry. Returns the [[Compaction]] receipt (`version == -1` =
     * no file in the named partitions, nothing committed). */
   def compactPartitions(spark: SparkSession, path: String,
-      partitionCol: String, values: Seq[String], targetFiles: Int,
-      maxRetries: Int = 5): Compaction = {
+      partitionCol: String, values: Seq[String],
+      targetFiles: Int): Compaction = {
     require(values.nonEmpty, "compactPartitions needs at least one value")
-    require(targetFiles >= 1, "targetFiles must be >= 1")
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val cur = resolve(spark, path, None)
-      val next = cur + 1
+    rewrite(spark, path, s"COMPACT_PARTITION($partitionCol)", targetFiles,
+        Some(partitionCol)) { cur =>
       val pcPhys = tableSchema(spark, path, Some(cur))
         .flatMap(_.fields.find(_.name == partitionCol)).map(physicalOf)
         .getOrElse(partitionCol)
@@ -2562,27 +2497,10 @@ object Versioned {
       val carriedN =
         if (refNs.forall(_.isDefined)) refNs.flatten.sum + keepInline.size
         else readManifestEntries(spark, path, cur).length - hit.size.toLong
-      if (hit.isEmpty) return Compaction(-1L, 0, carriedN.toInt)
-      val rows = readLive(spark, path, cur, Some(hit), keepMeta = false)
-      val laidOut = rows.repartition(targetFiles, col(partitionCol))
-      val schema = tableSchema(spark, path, Some(cur)).getOrElse(rows.schema)
-      val (stagedDir, staged0) = stage(laidOut, path, next,
-        Some(partitionCol), Some(schema))
-      val staged = ensureManifestNonEmpty(rows, path, stagedDir,
-        staged0, keepTop.nonEmpty, Some(schema))
-      val hitKeys = hit.map(fileKey)
-      val dvCarried =
-        dvWithout(deletionVectorRows(spark, path, Some(cur)))(hitKeys.toSet)
-      if (commit(spark, path, next,
-          Left(sealTop(spark, path, keepTop,
-            stagedEntries(spark, path, staged))), Some(schema),
-          dvCarried, op = Some(s"COMPACT_PARTITION($partitionCol)")))
-        return Compaction(next, hit.size, carriedN.toInt)
-      fs(spark, path).delete(stagedDir, true)
-      attempt += 1
+      if (hit.isEmpty) Left(Compaction(-1L, 0, carriedN.toInt))
+      else Right(Pick(Some(hit), keepTop,
+        Compaction(_, hit.size, carriedN.toInt)))
     }
-    sys.error(s"compactPartitions lost ${maxRetries + 1} commit races " +
-      s"(1 attempt + $maxRetries retries): $path")
   }
 
   /** The newest RETAINED version whose cluster sidecar matches
@@ -2622,60 +2540,29 @@ object Versioned {
     * `version == -1` = nothing new since the base, no commit. */
   def compactIncremental(spark: SparkSession, path: String,
       targetFiles: Int, clusterBy: Seq[String] = Seq.empty,
-      zOrderBy: Seq[String] = Seq.empty,
-      maxRetries: Int = 5): Compaction = {
+      zOrderBy: Seq[String] = Seq.empty): Compaction = {
     require(clusterBy.nonEmpty ^ zOrderBy.nonEmpty,
       "compactIncremental needs exactly one of clusterBy / zOrderBy")
-    require(targetFiles >= 1, "targetFiles must be >= 1")
-    val cols = if (clusterBy.nonEmpty) clusterBy else zOrderBy
-    val mark = (if (clusterBy.nonEmpty) "c:" else "z:") + cols.mkString(",")
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val cur = resolve(spark, path, None)
-      val next = cur + 1
+    val mark = clusterMark(clusterBy, zOrderBy).get
+    rewrite(spark, path, "COMPACT_INCR", targetFiles, clusterBy = clusterBy,
+        zOrderBy = zOrderBy) { cur =>
       lastClusterVersion(spark, path, mark) match {
         case None =>
           // no surviving base: one full clustered rewrite seeds it
           val v = compact(spark, path, targetFiles,
-            clusterBy = clusterBy, zOrderBy = zOrderBy,
-            maxRetries = maxRetries)
-          return Compaction(v, readManifestEntries(spark, path, v).length, 0)
+            clusterBy = clusterBy, zOrderBy = zOrderBy)
+          Left(Compaction(v, readManifestEntries(spark, path, v).length, 0))
         case Some(base) =>
           val clustered = readManifest(spark, path, base).toSet
           val curFiles = readManifest(spark, path, cur)
           val newFiles = curFiles.filterNot(clustered.contains)
           val carriedN = curFiles.length - newFiles.length
-          if (newFiles.isEmpty) return Compaction(-1L, 0, carriedN)
-          val rows = readLive(spark, path, cur, Some(newFiles),
-            keepMeta = false)
-          val laidOut =
-            if (clusterBy.nonEmpty)
-              rows.repartitionByRange(targetFiles, cols.map(col): _*)
-                .sortWithinPartitions(cols.map(col): _*)
-            else ZOrder.layout(rows, targetFiles, cols)
-          val schema = tableSchema(spark, path, Some(cur))
-            .getOrElse(rows.schema)
-          val (stagedDir, staged0) = stage(laidOut, path, next, None,
-            Some(schema))
-          val staged = ensureManifestNonEmpty(rows, path, stagedDir,
-            staged0, carriedN > 0, Some(schema))
-          val newKeys = newFiles.map(fileKey)
-          val dvCarried = dvWithout(
-            deletionVectorRows(spark, path, Some(cur)))(newKeys.toSet)
-          if (commit(spark, path, next,
-              Left(sealTop(spark, path,
-                carryTopMinus(spark, path, cur, newFiles.toSet),
-                stagedEntries(spark, path, staged))), Some(schema),
-              dvCarried, op = Some("COMPACT_INCR"),
-              extraFiles = Seq(("cluster",
-                s"$mark\n".getBytes(StandardCharsets.UTF_8)))))
-            return Compaction(next, newFiles.length, carriedN)
-          fs(spark, path).delete(stagedDir, true)
+          if (newFiles.isEmpty) Left(Compaction(-1L, 0, carriedN))
+          else Right(Pick(Some(newFiles),
+            carryTopMinus(spark, path, cur, newFiles.toSet),
+            Compaction(_, newFiles.length, carriedN)))
       }
-      attempt += 1
     }
-    sys.error(s"compactIncremental lost ${maxRetries + 1} commit " +
-      s"races (1 attempt + $maxRetries retries): $path")
   }
 
   /** OPTIMIZE-style SELECTIVE compaction: coalesce only the files
@@ -2692,13 +2579,9 @@ object Versioned {
     * (metadata arithmetic; a filesystem stat only for legacy entries
     * without one). */
   def compactSmall(spark: SparkSession, path: String, minBytes: Long,
-      targetFiles: Int, partitionCol: Option[String] = None,
-      maxRetries: Int = 5): Compaction = {
-    require(targetFiles >= 1, "targetFiles must be >= 1")
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val cur = resolve(spark, path, None)
-      val next = cur + 1
+      targetFiles: Int,
+      partitionCol: Option[String] = None): Compaction =
+    rewrite(spark, path, "COMPACT_SMALL", targetFiles, partitionCol) { cur =>
       val curEntries = readManifestEntries(spark, path, cur)
       val f = fs(spark, path)
       // size probe from the manifest's own `#bytes` stats — logged on
@@ -2708,34 +2591,13 @@ object Versioned {
         sj.flatMap(bytesStatOf).getOrElse(
           f.getFileStatus(new Path(p)).getLen) < minBytes
       }
-      if (smallE.length <= 1)
-        return Compaction(-1L, 0, curEntries.length)
-      val small = smallE.map(_._1)
-      val smallKeys = small.map(fileKey).toSet
-      val rows = readLive(spark, path, cur, Some(small), keepMeta = false)
-      val laidOut = partitionCol match {
-        case Some(pc) => rows.repartition(targetFiles, col(pc))
-        case None     => rows.repartition(targetFiles)
+      if (smallE.length <= 1) Left(Compaction(-1L, 0, curEntries.length))
+      else {
+        val small = smallE.map(_._1)
+        Right(Pick(Some(small), carryTopMinus(spark, path, cur, small.toSet),
+          Compaction(_, smallE.length, bigE.length)))
       }
-      val schema = tableSchema(spark, path, Some(cur)).getOrElse(rows.schema)
-      val (stagedDir, staged0) =
-        stage(laidOut, path, next, partitionCol, Some(schema))
-      val staged = ensureManifestNonEmpty(rows, path, stagedDir,
-        staged0, bigE.nonEmpty, Some(schema))
-      val dvCarried =
-        dvWithout(deletionVectorRows(spark, path, Some(cur)))(smallKeys)
-      if (commit(spark, path, next,
-          Left(sealTop(spark, path,
-            carryTopMinus(spark, path, cur, small.toSet),
-            stagedEntries(spark, path, staged))), Some(schema),
-          dvCarried, op = Some("COMPACT_SMALL")))
-        return Compaction(next, smallE.length, bigE.length)
-      fs(spark, path).delete(stagedDir, true)
-      attempt += 1
     }
-    sys.error(s"compactSmall lost ${maxRetries + 1} commit races " +
-      s"(1 attempt + $maxRetries retries): $path")
-  }
 
   /** Receipt of a [[delete]] / [[deleteVectored]]: the committed
     * version, how many files were rewritten vs carried by reference,
@@ -2769,12 +2631,8 @@ object Versioned {
     * commit race re-resolves current and re-runs the find pass, so a
     * racing writer's committed rows are never clobbered. */
   def delete(spark: SparkSession, path: String, pred: Column,
-      partitionCol: Option[String] = None,
-      maxRetries: Int = 5): Erasure = {
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val cur = resolve(spark, path, None)
-      val next = cur + 1
+      partitionCol: Option[String] = None): Erasure =
+    occ(spark, path, "delete") { (cur, _) =>
       val curEntries = readManifestEntries(spark, path, cur)
       // find pass: which files hold matching LIVE rows? Column-pruned
       // scan (only the predicate's inputs are read); result
@@ -2789,33 +2647,28 @@ object Versioned {
       require(hit.length == hitNames.size,
         s"delete find-pass returned files outside the manifest: " +
           s"${hitNames.size} scanned vs ${hit.length} matched in $path")
-      if (hit.isEmpty) return Erasure(-1L, 0, curEntries.length, 0L)
-      val hitLive = readLive(spark, path, cur, Some(hit), keepMeta = false)
-      val deletedRows = hitLive.filter(pred).count()
-      // SQL DELETE removes rows where pred IS TRUE; under three-valued
-      // logic `!pred` also drops NULL-evaluating rows, which must be
-      // RETAINED — coalesce pins NULL to "not deleted"
-      val survivors = hitLive.filter(!coalesce(pred, lit(false)))
-      val schema = tableSchema(spark, path, Some(cur))
-        .getOrElse(survivors.schema)
-      val (stagedDir, staged0) = stage(survivors, path, next, partitionCol,
-        Some(schema))
-      val staged = ensureManifestNonEmpty(survivors, path, stagedDir,
-        staged0, keepE.nonEmpty, Some(schema))
-      val dvCarried =
-        dvWithout(deletionVectorRows(spark, path, Some(cur)))(hitNames)
-      if (commit(spark, path, next,
-          Left(sealTop(spark, path,
+      if (hit.isEmpty) Left(Erasure(-1L, 0, curEntries.length, 0L))
+      else {
+        val hitLive = readLive(spark, path, cur, Some(hit), keepMeta = false)
+        val deletedRows = hitLive.filter(pred).count()
+        // SQL DELETE removes rows where pred IS TRUE; under three-valued
+        // logic `!pred` also drops NULL-evaluating rows, which must be
+        // RETAINED — coalesce pins NULL to "not deleted"
+        val survivors = hitLive.filter(!coalesce(pred, lit(false)))
+        val schema = tableSchema(spark, path, Some(cur))
+          .getOrElse(survivors.schema)
+        val (stagedDir, staged0) = stage(survivors, path, cur + 1,
+          partitionCol, Some(schema))
+        val staged = ensureManifestNonEmpty(survivors, path, stagedDir,
+          staged0, keepE.nonEmpty, Some(schema))
+        Right(Commit(sealTop(spark, path,
             carryTopMinus(spark, path, cur, hit.toSet),
-            stagedEntries(spark, path, staged))), Some(schema),
-          dvCarried, op = Some("DELETE")))
-        return Erasure(next, hit.length, keepE.length, deletedRows)
-      fs(spark, path).delete(stagedDir, true)
-      attempt += 1
+            stagedEntries(spark, path, staged)), Some(schema),
+          dvWithout(deletionVectorRows(spark, path, Some(cur)))(hitNames),
+          "DELETE", Erasure(_, hit.length, keepE.length, deletedRows),
+          Some(stagedDir)))
+      }
     }
-    sys.error(s"delete lost ${maxRetries + 1} commit races " +
-      s"(1 attempt + $maxRetries retries): $path")
-  }
 
   /** DELETE every row matching `pred` as a MERGE-ON-READ deletion
     * vector: commit a new version whose file list is IDENTICAL to the
@@ -2833,33 +2686,23 @@ object Versioned {
     *
     * Concurrency: the same optimistic loop — the vector is computed
     * against the version it commits on top of. */
-  def deleteVectored(spark: SparkSession, path: String, pred: Column,
-      maxRetries: Int = 5): Erasure = {
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val cur = resolve(spark, path, None)
-      val next = cur + 1
+  def deleteVectored(spark: SparkSession, path: String,
+      pred: Column): Erasure =
+    occ(spark, path, "deleteVectored") { (cur, _) =>
       val curEntries = readManifestEntries(spark, path, cur)
       val live = readLive(spark, path, cur, None, keepMeta = true)
       // the ONE scan: the matched rows' (file, position) pairs, whose
       // number is the deleted count
       val hits = live.filter(pred).select(col(metaF), col(metaP)).collect()
       val deletedRows = hits.length.toLong
-      if (deletedRows == 0L) return Erasure(-1L, 0, curEntries.length, 0L)
-      val combined =
-        dvUnion(deletionVectorRows(spark, path, Some(cur)), dvOf(hits))
-      val schema = tableSchema(spark, path, Some(cur)).getOrElse(
-        StructType(live.schema.filterNot(f =>
-          f.name == metaF || f.name == metaP)))
-      if (commit(spark, path, next,
-          Left(segmentedTop(spark, path, cur, Seq.empty)), Some(schema),
-          Some(combined), op = Some("DELETE_VECTORED")))
-        return Erasure(next, 0, curEntries.length, deletedRows)
-      attempt += 1
+      if (deletedRows == 0L) Left(Erasure(-1L, 0, curEntries.length, 0L))
+      else Right(Commit(segmentedTop(spark, path, cur, Seq.empty),
+        Some(tableSchema(spark, path, Some(cur)).getOrElse(
+          StructType(live.schema.filterNot(f =>
+            f.name == metaF || f.name == metaP)))),
+        Some(dvUnion(deletionVectorRows(spark, path, Some(cur)), dvOf(hits))),
+        "DELETE_VECTORED", Erasure(_, 0, curEntries.length, deletedRows)))
     }
-    sys.error(s"deleteVectored lost ${maxRetries + 1} commit races " +
-      s"(1 attempt + $maxRetries retries): $path")
-  }
 
   /** Resolve the newest version whose COMMIT TIME (the manifest's
     * filesystem mtime — set by the atomic publish rename, immutable
@@ -3060,14 +2903,6 @@ object Versioned {
     * row filter. */
   final case class Pruned(df: DataFrame, filesRead: Int, filesTotal: Int)
 
-  private val statsSchema = org.apache.spark.sql.types.MapType(StringType,
-    StructType(Seq(
-      StructField("t", StringType),
-      StructField("mnl", org.apache.spark.sql.types.LongType),
-      StructField("mxl", org.apache.spark.sql.types.LongType),
-      StructField("mnd", org.apache.spark.sql.types.DoubleType),
-      StructField("mxd", org.apache.spark.sql.types.DoubleType))))
-
   /** Read the snapshot OPENING ONLY the files whose [min, max] stats
     * interval for `column` overlaps [lo, hi] — the Delta/Iceberg
     * data-skipping scan. Files without stats (legacy commits,
@@ -3097,9 +2932,10 @@ object Versioned {
   /** Metadata-only aggregate over `column`: exact row COUNT and
     * min/max answered entirely FROM THE MANIFEST — zero data files
     * opened (the Iceberg metadata-tables economics: counting a 100 TB
-    * table costs one manifest scan). Requires every file to carry
-    * stats for the column (commits since registration) and the
-    * version to be deletion-vector-free — vectored rows would make
+    * table costs one driver pass over the cached manifest entries, no
+    * Spark job). Requires every file to carry stats for the column
+    * (commits since registration) and the version to be
+    * deletion-vector-free — vectored rows would make
     * manifest counts and extrema stale, so this fails LOUDLY with a
     * compact-first hint rather than return bounds as answers. */
   final case class MetaStats(rows: Long, min: Double, max: Double,
@@ -3111,25 +2947,20 @@ object Versioned {
     require(deletionVectorRows(spark, path, Some(v)).isEmpty,
       s"metadataStats needs a deletion-vector-free version — compact " +
         s"$path first to materialize outstanding vectors")
-    val st = from_json(col("stats_json"), statsSchema)
-    val e = element_at(st, statsKeyOf(spark, path, v, column))
-    val n = element_at(st, "#rows")
-    val agg = manifestDf(spark, path, v).agg(
-      sum(n("mnl")).as("rows"),
-      count(lit(1)).as("files"),
-      sum(when(n("mnl").isNull, 1).otherwise(0)).as("no_count"),
-      sum(when(col("stats_json").isNotNull && e.isNull, 1).otherwise(0))
-        .as("no_stats"),
-      min(when(e("t") === "l", e("mnl").cast("double"))
-        .otherwise(e("mnd"))).as("mn"),
-      max(when(e("t") === "l", e("mxl").cast("double"))
-        .otherwise(e("mxd"))).as("mx")).head()
-    require(agg.getLong(2) == 0L && agg.getLong(3) == 0L,
+    val (key, scale) = statsKeyOf(spark, path, v, column)
+    val docs = readManifestEntries(spark, path, v).map(_._2)
+      .map(sj => (sj, sj.flatMap(parseStatsDoc)))
+    val rows = docs.map(_._2.flatMap(longMinMaxIn(_, "#rows")).map(_._1))
+    val bounds = docs.map(_._2.flatMap(boundsIn(_, key, scale)))
+    val noCount = rows.count(_.isEmpty)
+    val noStats = docs.zip(bounds).count { case ((sj, _), b) =>
+      sj.isDefined && b.isEmpty }
+    require(noCount == 0 && noStats == 0,
       s"metadataStats needs stats on every file for '$column' " +
-        s"(files without row counts: ${agg.getLong(2)}, without " +
-        s"column stats: ${agg.getLong(3)}) — compact after registering")
-    MetaStats(agg.getLong(0), agg.getDouble(4), agg.getDouble(5),
-      agg.getLong(1).toInt)
+        s"(files without row counts: $noCount, without " +
+        s"column stats: $noStats) — compact after registering")
+    MetaStats(rows.flatten.sum, bounds.flatten.map(_._1).min,
+      bounds.flatten.map(_._2).max, docs.length)
   }
 
   /** POINT-LOOKUP read: open only the files whose per-file BLOOM
@@ -3152,7 +2983,7 @@ object Versioned {
         case None => true
         case Some(js) =>
           (JsonMethods.parse(js) \
-              s"#bloom:${statsKeyOf(spark, path, v, column)}" \ "b") match {
+              s"#bloom:${statsKeyOf(spark, path, v, column)._1}" \ "b") match {
             case JString(b64) =>
               val bytes = java.util.Base64.getMimeDecoder.decode(b64)
               org.apache.spark.util.sketch.BloomFilter
@@ -3189,13 +3020,10 @@ object Versioned {
     * `set` values are cast back to each column's declared type so the
     * staged batch can never fork the physical schema. */
   def updateVectored(spark: SparkSession, path: String, pred: Column,
-      set: Map[String, Column], partitionCol: Option[String] = None,
-      maxRetries: Int = 5): Updated = {
+      set: Map[String, Column],
+      partitionCol: Option[String] = None): Updated = {
     require(set.nonEmpty, "updateVectored needs at least one SET column")
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val cur = resolve(spark, path, None)
-      val next = cur + 1
+    occ(spark, path, "updateVectored") { (cur, first) =>
       val curEntries = readManifestEntries(spark, path, cur)
       val live = readLive(spark, path, cur, None, keepMeta = true)
       val tableCols = live.columns.filterNot(c => c == metaF || c == metaP)
@@ -3205,28 +3033,25 @@ object Versioned {
       val hits = live.filter(pred)
       val newDv = hits.select(col(metaF), col(metaP)).collect()
       val updatedRows = newDv.length.toLong
-      if (updatedRows == 0L) return Updated(-1L, curEntries.length, 0L)
-      val schemaMap = live.schema.map(f => f.name -> f.dataType).toMap
-      val updated = hits.select(tableCols.map(c =>
-        set.get(c).map(_.cast(schemaMap(c)).as(c)).getOrElse(col(c))): _*)
-      if (attempt == 0) enforceConstraints(spark, path, updated)
-      val schema = tableSchema(spark, path, Some(cur)).getOrElse(
-        StructType(live.schema.filterNot(f =>
-          f.name == metaF || f.name == metaP)))
-      val (stagedDir, staged) = stage(updated, path, next, partitionCol,
-        Some(schema))
-      val combined =
-        dvUnion(deletionVectorRows(spark, path, Some(cur)), dvOf(newDv))
-      if (commit(spark, path, next,
-          Left(segmentedTop(spark, path, cur,
-            stagedEntries(spark, path, staged))),
-          Some(schema), Some(combined), op = Some("UPDATE_VECTORED")))
-        return Updated(next, curEntries.length, updatedRows)
-      fs(spark, path).delete(stagedDir, true)
-      attempt += 1
+      if (updatedRows == 0L) Left(Updated(-1L, curEntries.length, 0L))
+      else {
+        val schemaMap = live.schema.map(f => f.name -> f.dataType).toMap
+        val updated = hits.select(tableCols.map(c =>
+          set.get(c).map(_.cast(schemaMap(c)).as(c)).getOrElse(col(c))): _*)
+        if (first) enforceConstraints(spark, path, updated)
+        val schema = tableSchema(spark, path, Some(cur)).getOrElse(
+          StructType(live.schema.filterNot(f =>
+            f.name == metaF || f.name == metaP)))
+        val (stagedDir, staged) = stage(updated, path, cur + 1, partitionCol,
+          Some(schema))
+        Right(Commit(segmentedTop(spark, path, cur,
+            stagedEntries(spark, path, staged)), Some(schema),
+          Some(dvUnion(deletionVectorRows(spark, path, Some(cur)),
+            dvOf(newDv))),
+          "UPDATE_VECTORED", Updated(_, curEntries.length, updatedRows),
+          Some(stagedDir)))
+      }
     }
-    sys.error(s"updateVectored lost ${maxRetries + 1} commit races " +
-      s"(1 attempt + $maxRetries retries): $path")
   }
 
   // ------------------------------------------------------------------
@@ -3491,10 +3316,9 @@ object Versioned {
     * automatically (identity column, hidden transform, or none) —
     * what SQL `INSERT INTO` routes through: the writer states WHAT
     * to append, the table owns HOW it is laid out. */
-  def appendAuto(source: DataFrame, path: String,
-      maxRetries: Int = 5): Long = {
+  def appendAuto(source: DataFrame, path: String): Long = {
     val (src, pc) = withLayout(source, path)
-    append(src, path, partitionCol = pc, maxRetries = maxRetries)
+    append(src, path, partitionCol = pc)
   }
 
   /** MERGE into a hidden-partitioned table: the layout is resolved
@@ -3503,14 +3327,13 @@ object Versioned {
     * table is laid out. Untouched partitions carry by reference
     * exactly as with an explicit partition column. */
   def mergeHidden(source: DataFrame, path: String, keys: Seq[String],
-      deleteCol: Option[String] = None, maxRetries: Int = 5): Long = {
+      deleteCol: Option[String] = None): Long = {
     val spark = source.sparkSession
     require(hiddenTransform(spark, path).isDefined,
       s"no hidden partition transform registered at $path — " +
         "use merge() for explicit layouts")
     val (src, pc) = withLayout(source, path)
-    merge(src, path, keys, partitionCol = pc, deleteCol = deleteCol,
-      maxRetries = maxRetries)
+    merge(src, path, keys, partitionCol = pc, deleteCol = deleteCol)
   }
 
   /** Read a hidden-partitioned snapshot with the derived partition
@@ -3525,11 +3348,10 @@ object Versioned {
     * time-travelable until [[vacuum]] — and the restored version
     * carries `toVersion`'s manifest entries (files + stats BY
     * REFERENCE, zero data movement), logged schema, and deletion
-    * vector. The manifest flows manifest→manifest as a DataFrame,
-    * never materialized on the driver, so restoring a million-file
-    * table is a metadata-speed operation. */
-  def restore(spark: SparkSession, path: String, toVersion: Long,
-      maxRetries: Int = 5): Long = {
+    * vector. The commit copies `toVersion`'s top-level manifest rows
+    * (segment refs unopened), so restoring a million-file table is a
+    * metadata-speed operation. */
+  def restore(spark: SparkSession, path: String, toVersion: Long): Long = {
     val f = fs(spark, path)
     require(f.exists(manifestPath(path, toVersion)),
       s"cannot restore $path to v$toVersion: no such version " +
@@ -3539,20 +3361,10 @@ object Versioned {
     // gate (one filter + limit(1) scan per constraint — restore is a
     // maintenance-time statement)
     enforceConstraints(spark, path, read(spark, path, Some(toVersion)))
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val cur = resolve(spark, path, None)
-      val next = cur + 1
-      if (commit(spark, path, next,
-          Left(segmentedTop(spark, path, toVersion, Seq.empty)),
-          tableSchema(spark, path, Some(toVersion)),
-          deletionVectorRows(spark, path, Some(toVersion)),
-          op = Some(s"RESTORE(v$toVersion)")))
-        return next
-      attempt += 1
+    occ(spark, path, "restore") { (_, _) =>
+      carryForward(spark, path, toVersion,
+        tableSchema(spark, path, Some(toVersion)), s"RESTORE(v$toVersion)")
     }
-    sys.error(s"restore lost ${maxRetries + 1} commit races " +
-      s"(1 attempt + $maxRetries retries): $path")
   }
 
   // case-insensitive: Spark resolves identifiers case-insensitively
@@ -3575,7 +3387,7 @@ object Versioned {
     * partition transform references the column (rename or drop those
     * first — the Delta rule). */
   def renameColumn(spark: SparkSession, path: String, oldName: String,
-      newName: String, maxRetries: Int = 5): Long = {
+      newName: String): Long = {
     require(newName.nonEmpty && !newName.exists(c =>
         c == '\t' || c == '\n' || c == '/' || c == '`' || c == '.'),
       s"bad column name: '$newName'")
@@ -3592,9 +3404,7 @@ object Versioned {
         s"rename blocked: hidden partition transform references " +
           s"'$oldName'")
     }
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val cur = resolve(spark, path, None)
+    occ(spark, path, "renameColumn") { (cur, _) =>
       val schema = tableSchema(spark, path, Some(cur)).getOrElse(
         sys.error(s"renameColumn needs a logged schema: $path"))
       require(schema.fieldNames.contains(oldName),
@@ -3610,16 +3420,9 @@ object Versioned {
             .withMetadata(f.metadata)
             .putString(physicalKey, physicalOf(f)).build())
       })
-      if (commit(spark, path, cur + 1,
-          Left(segmentedTop(spark, path, cur, Seq.empty)),
-          Some(newSchema),
-          deletionVectorRows(spark, path, Some(cur)),
-          op = Some(s"RENAME_COLUMN($oldName->$newName)")))
-        return cur + 1
-      attempt += 1
+      carryForward(spark, path, cur, Some(newSchema),
+        s"RENAME_COLUMN($oldName->$newName)")
     }
-    sys.error(s"renameColumn lost ${maxRetries + 1} commit races " +
-      s"(1 attempt + $maxRetries retries): $path")
   }
 
   /** Physical names of DROPPED columns: their bytes remain inside
@@ -3657,8 +3460,7 @@ object Versioned {
     * the drop still reads the column. Blocked while a CHECK
     * constraint, generated column, or hidden transform references
     * it (drop those first). */
-  def dropColumn(spark: SparkSession, path: String, name: String,
-      maxRetries: Int = 5): Long = {
+  def dropColumn(spark: SparkSession, path: String, name: String): Long = {
     constraints(spark, path).foreach { case (n, p) =>
       require(!mentionsIdent(p, name),
         s"drop blocked: CHECK constraint '$n' references '$name'")
@@ -3671,9 +3473,7 @@ object Versioned {
       require(!mentionsIdent(t, name),
         s"drop blocked: hidden partition transform references '$name'")
     }
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val cur = resolve(spark, path, None)
+    occ(spark, path, "dropColumn") { (cur, _) =>
       val schema = tableSchema(spark, path, Some(cur)).getOrElse(
         sys.error(s"dropColumn needs a logged schema: $path"))
       require(schema.fieldNames.contains(name),
@@ -3693,16 +3493,8 @@ object Versioned {
       // toward a fresh physical name (harmless), never toward
       // resurrecting dead bytes
       addRetired(spark, path, physicalOf(dropped))
-      if (commit(spark, path, cur + 1,
-          Left(segmentedTop(spark, path, cur, Seq.empty)),
-          Some(newSchema),
-          deletionVectorRows(spark, path, Some(cur)),
-          op = Some(s"DROP_COLUMN($name)")))
-        return cur + 1
-      attempt += 1
+      carryForward(spark, path, cur, Some(newSchema), s"DROP_COLUMN($name)")
     }
-    sys.error(s"dropColumn lost ${maxRetries + 1} commit races " +
-      s"(1 attempt + $maxRetries retries): $path")
   }
 
   /** ADD COLUMN as a metadata-only commit: the field joins the logged
@@ -3713,13 +3505,11 @@ object Versioned {
     * new field maps to a fresh physical name, so old bytes stay
     * dead. */
   def addColumn(spark: SparkSession, path: String, name: String,
-      dataType: DataType, maxRetries: Int = 5): Long = {
+      dataType: DataType): Long = {
     require(name.nonEmpty && !name.exists(c =>
         c == '\t' || c == '\n' || c == '/' || c == '`' || c == '.'),
       s"bad column name: '$name'")
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val cur = resolve(spark, path, None)
+    occ(spark, path, "addColumn") { (cur, _) =>
       val schema = tableSchema(spark, path, Some(cur)).getOrElse(
         sys.error(s"addColumn needs a logged schema: $path"))
       require(!schema.fieldNames.exists(_.equalsIgnoreCase(name)),
@@ -3728,16 +3518,9 @@ object Versioned {
         schema.fields.map(physicalOf).toSet ++ retiredPhysicals(spark, path)
       val fld = freshPhysical(
         StructField(name, dataType, nullable = true), taken)
-      if (commit(spark, path, cur + 1,
-          Left(segmentedTop(spark, path, cur, Seq.empty)),
-          Some(StructType(schema.fields :+ fld)),
-          deletionVectorRows(spark, path, Some(cur)),
-          op = Some(s"ADD_COLUMN($name)")))
-        return cur + 1
-      attempt += 1
+      carryForward(spark, path, cur, Some(StructType(schema.fields :+ fld)),
+        s"ADD_COLUMN($name)")
     }
-    sys.error(s"addColumn lost ${maxRetries + 1} commit races " +
-      s"(1 attempt + $maxRetries retries): $path")
   }
 
   /** The widening promotions the vectorized parquet reader performs
@@ -3812,37 +3595,27 @@ object Versioned {
     * would silently false-negative against pre-alter files (rebuild
     * path: deregister or compact, then widen). */
   def alterColumnType(spark: SparkSession, path: String, name: String,
-      newType: DataType, maxRetries: Int = 5): Long = {
+      newType: DataType): Long = {
     requireWidenSafe(spark, path, name, via = "")
     require(!identityColumns(spark, path).exists(_._1 == name),
       s"cannot retype identity column '$name' of $path")
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val cur = resolve(spark, path, None)
+    occ(spark, path, "alterColumnType") { (cur, _) =>
       val schema = tableSchema(spark, path, Some(cur)).getOrElse(
         sys.error(s"alterColumnType needs a logged schema: $path"))
       val fld = schema.fields.find(_.name == name).getOrElse(
         sys.error(s"no such column on $path: '$name'"))
-      if (fld.dataType == newType) return cur // idempotent
-      require(widens(fld.dataType, newType),
+      require(fld.dataType == newType || widens(fld.dataType, newType),
         s"refusing lossy/unsupported retype of '$name' on $path: " +
           s"${fld.dataType.simpleString} -> ${newType.simpleString} " +
           "(supported: integral widening, float->double, decimal " +
           "precision growth at the same scale)")
-      val newSchema = StructType(schema.fields.map { f =>
-        if (f.name != name) f else f.copy(dataType = newType)
-      })
-      if (commit(spark, path, cur + 1,
-          Left(segmentedTop(spark, path, cur, Seq.empty)),
-          Some(newSchema),
-          deletionVectorRows(spark, path, Some(cur)),
-          op = Some(s"ALTER_COLUMN_TYPE($name " +
-            s"${fld.dataType.simpleString}->${newType.simpleString})")))
-        return cur + 1
-      attempt += 1
+      if (fld.dataType == newType) Left(cur) // idempotent
+      else carryForward(spark, path, cur,
+        Some(StructType(schema.fields.map { f =>
+          if (f.name != name) f else f.copy(dataType = newType) })),
+        s"ALTER_COLUMN_TYPE($name " +
+          s"${fld.dataType.simpleString}->${newType.simpleString})")
     }
-    sys.error(s"alterColumnType lost ${maxRetries + 1} commit races " +
-      s"(1 attempt + $maxRetries retries): $path")
   }
 
   /** True when ANY retained version's schema carries column-mapping
@@ -4306,14 +4079,10 @@ object Versioned {
     * SEGMENT-AWARE: disjoint segments carry as unopened refs and the
     * receipt counts come from their recorded row counts. */
   def dropPartitions(spark: SparkSession, path: String,
-      partitionCol: String, values: Seq[String],
-      maxRetries: Int = 5): Dropped = {
+      partitionCol: String, values: Seq[String]): Dropped = {
     require(values.nonEmpty, "dropPartitions needs at least one value")
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      val cur = resolve(spark, path, None)
-      val next = cur + 1
+    occ(spark, path, "dropPartitions") { (cur, _) =>
       // partition directories carry the PHYSICAL column name
       val pcPhys = tableSchema(spark, path, Some(cur))
         .flatMap(_.fields.find(_.name == partitionCol)).map(physicalOf)
@@ -4333,33 +4102,30 @@ object Versioned {
         if (refNs.forall(_.isDefined))
           refNs.flatten.sum + keepInline.size + hit
         else readManifestEntries(spark, path, cur).length.toLong
-      if (hit == 0L) return Dropped(-1L, 0L, total)
       val schema = tableSchema(spark, path, Some(cur))
-      val dseg = ("/(" + java.util.regex.Pattern.quote(pcPhys) + "=[^/]*)/").r
-      val dvKept = dvWithout(deletionVectorRows(spark, path, Some(cur)))(k =>
-        dseg.findFirstMatchIn(k).exists(m => segs.contains(m.group(1))))
-      val committed =
-        if (hit == total) {
-          // dropping every partition: keep a schema-only file so the
-          // empty table stays readable (same contract as a
-          // table-emptying merge)
-          val s0 = schema.getOrElse(read(spark, path, Some(cur)).schema)
-          val empty = spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row], s0)
-          val (stagedDir, _) = stage(empty, path, next, None, schema)
-          val staged = ensureManifestNonEmpty(empty, path, stagedDir,
-            Seq.empty, carriedNonEmpty = false, schema)
-          commit(spark, path, next,
-            Left(stagedEntries(spark, path, staged)), schema, None,
-            op = Some(s"DROP_PARTITION($partitionCol)"))
-        } else commit(spark, path, next,
-          Left(sealTop(spark, path, keepTop, Seq.empty)), schema, dvKept,
-          op = Some(s"DROP_PARTITION($partitionCol)"))
-      if (committed) return Dropped(next, hit, total - hit)
-      attempt += 1
+      val op = s"DROP_PARTITION($partitionCol)"
+      def receipt(v: Long) = Dropped(v, hit, total - hit)
+      if (hit == 0L) Left(Dropped(-1L, 0L, total))
+      else if (hit == total) {
+        // dropping every partition: keep a schema-only file so the
+        // empty table stays readable (same contract as a
+        // table-emptying merge)
+        val s0 = schema.getOrElse(read(spark, path, Some(cur)).schema)
+        val empty = spark.createDataFrame(
+          spark.sparkContext.emptyRDD[Row], s0)
+        val (stagedDir, _) = stage(empty, path, cur + 1, None, schema)
+        val staged = ensureManifestNonEmpty(empty, path, stagedDir,
+          Seq.empty, carriedNonEmpty = false, schema)
+        Right(Commit(stagedEntries(spark, path, staged), schema, None, op,
+          receipt, Some(stagedDir)))
+      } else {
+        val dseg = ("/(" + java.util.regex.Pattern.quote(pcPhys) + "=[^/]*)/").r
+        Right(Commit(sealTop(spark, path, keepTop, Seq.empty), schema,
+          dvWithout(deletionVectorRows(spark, path, Some(cur)))(k =>
+            dseg.findFirstMatchIn(k).exists(m => segs.contains(m.group(1)))),
+          op, receipt))
+      }
     }
-    sys.error(s"dropPartitions lost ${maxRetries + 1} commit races " +
-      s"(1 attempt + $maxRetries retries): $path")
   }
 
   // ------------------------------------------------------------------
@@ -4563,12 +4329,12 @@ object Versioned {
         }
       }
     val v = base + 1L
-    val ok = commit(spark, src, v, Left(entries),
+    require(commit(spark, src, v, entries,
       tableSchema(spark, branchPath, Some(head)),
       deletionVectorRows(spark, branchPath, Some(head)),
-      op = Some(s"PUBLISH($nCommits commits)"))
-    require(ok, s"publish refused: $src moved past v$base since the " +
-      "branch was cut — re-branch from the current tip and replay")
+      op = Some(s"PUBLISH($nCommits commits)")),
+      s"publish refused: $src moved past v$base since the " +
+        "branch was cut — re-branch from the current tip and replay")
     if (!localize)
       // shallow-publish contract marker: the source now reads through
       // this branch directory — branch dropTable/vacuum check it

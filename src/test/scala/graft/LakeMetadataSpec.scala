@@ -1,13 +1,9 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.graftspec.Bus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
@@ -36,27 +32,8 @@ class LakeMetadataSpec extends SparkSuite {
     require(FileUtil.copy(hfs, new Path(src), hfs, new Path(dst), false,
       spark.sparkContext.hadoopConfiguration))
 
-  /** The call sites of the Spark jobs `body` started on this thread. */
-  private def jobsDuring[T](body: => T): (T, Seq[String]) = {
-    val sc = spark.sparkContext
-    val tag = s"lake-metadata-${java.util.UUID.randomUUID()}"
-    val sites = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("graft.spec.probe") == tag))
-          sites.add(j.stageInfos.maxBy(_.stageId).name)
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.spec.probe", tag)
-    try {
-      val r = body
-      Bus.drain(sc)
-      (r, sites.asScala.toSeq)
-    } finally {
-      sc.setLocalProperty("graft.spec.probe", null)
-      sc.removeSparkListener(listener)
-    }
-  }
+  private def jobsDuring[T](body: => T): (T, Seq[String]) =
+    Bus.jobsDuring(spark.sparkContext)(body)
 
   /** 200 rows over 4 range-clustered files with `k` stats. */
   private def initTable(dir: String): Unit =

@@ -115,4 +115,22 @@ class LakeStatsSpec extends SparkSuite {
         .delete(p, true)
     }
   }
+
+  test("DECIMAL stats prune in column units: p = 0.37 returns its row " +
+      "on both surfaces") {
+    import spark.implicits._
+    spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
+    Scratch.withDir("graft_st_dec") { dir =>
+      // p = k / 100 holds 0.01 … 1.00 over 4 range-clustered files
+      Versioned.init(spark.range(1, 101).select(col("id").as("k"),
+          (col("id") / 100).cast("decimal(10,2)").as("p"))
+        .repartitionByRange(4, col("k")), dir, statsCols = Seq("p"))
+      val r = Versioned.readRange(spark, dir, "p", 0.37, 0.37)
+      assert((r.filesRead, r.filesTotal) == ((1, 4)))
+      assert(r.df.filter(col("p") === lit(BigDecimal("0.37"))).select("k")
+        .as[Long].collect().toSeq == Seq(37L))
+      assert(spark.sql(s"SELECT k FROM lake.`$dir` WHERE p = 0.37")
+        .as[Long].collect().toSeq == Seq(37L))
+    }
+  }
 }

@@ -403,7 +403,7 @@ class LakeV2Spec extends SparkSuite {
           (1 to 2).map { i =>
             val k = t * 100L + i
             Versioned.merge(Seq((k, s"w$t-$i")).toDF("k", "v"),
-              dir, Seq("k"), maxRetries = 20)
+              dir, Seq("k"))
           }
         }
       }

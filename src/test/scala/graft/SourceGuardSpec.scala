@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 /** One session builder, one scratch owner and one parquet codec:
   * `src/main` may build a `SparkSession` only in Session.scala, create
   * temp directories only in Scratch.scala, the lake connector
-  * encodes data files only through Spark's own parquet format, and
-  * deletion vectors are read only through the driver-rows accessor. */
+  * encodes data files only through Spark's own parquet format,
+  * deletion vectors are read only through the driver-rows accessor,
+  * and lake commits retry only through one optimistic-commit loop. */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private val main = Paths.get("src/main/scala")
@@ -49,5 +50,26 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
       .filter(_.startsWith("graft/sources/"))
     assert(viaFrame.isEmpty,
       s"connector files reading a vector as a DataFrame: $viaFrame")
+  }
+
+  test("one commit loop: no retry count, and commit( is called only by " +
+      "the OCC and rebase helpers and the single-shot commits") {
+    assert(holders("maxRetries").isEmpty,
+      s"retry-count parameters in: ${holders("maxRetries")}")
+    val lines = Files.readAllLines(main.resolve("graft/ops/Versioned.scala"))
+      .asScala
+    // the object member each line belongs to
+    val member = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r
+    val call = """(?<![\w.])commit\(""".r
+    var enclosing = ""
+    val callers = lines.flatMap { l =>
+      member.findFirstMatchIn(l).foreach(m => enclosing = m.group(1))
+      if (call.findFirstIn(l).isDefined && !l.contains("def commit("))
+        Some(enclosing) else None
+    }.toSet
+    // init, clone and publish target one fixed version: they must fail
+    // rather than retry
+    assert(callers == Set("occ", "rebase", "init", "clone", "publish"),
+      s"commit( called from: $callers")
   }
 }
