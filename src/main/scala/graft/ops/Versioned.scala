@@ -47,6 +47,14 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   *    any per-scan footer-merge pass — additive schema evolution, the
   *    Delta/Iceberg upgrade path that never rewrites history (see
   *    [[merge]]'s `evolveSchema`).
+  *  - '''One read path.''' Every read of data files — [[read]], time
+  *    travel, [[readRange]], merge and compaction rewrites, vectored
+  *    DML matching, [[changes]], the commit-time stats pass — is a
+  *    DSv2 scan over the connector's `LakeTable` ([[readLive]]),
+  *    pinned to a version and, internally, to a file subset. Its one
+  *    reader maps columns, fills partition values and skips deleted
+  *    positions; row identity is its `__lake_file`/`__lake_pos`
+  *    columns, the key the vectors use.
   *  - '''Optimistic concurrency.''' Version N+1 is claimed by an
   *    EXCLUSIVE CREATE of a `.v<N+1>.lock` marker (O_CREAT|O_EXCL on
   *    local disks, namenode-atomic `create(overwrite=false)` on
@@ -67,10 +75,10 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   *    beside the manifest — rewriting ZERO data files. A version's
   *    vector is immutable driver METADATA like its manifest: written
   *    and read by the same direct parquet codec, cached per (path,
-  *    version), applied by readers as a per-file row-index predicate
-  *    (no broadcast, no join); [[compact]] materializes and drops
-  *    it. [[delete]] remains the copy-on-write
-  *    path. At 100 TB with frequent small erasures, vectored delete is
+  *    version), and shipped with each file's scan partition, whose
+  *    reader skips those row positions (no broadcast, no join);
+  *    [[compact]] materializes and drops it. [[delete]] remains the
+  *    copy-on-write path. At 100 TB with frequent small erasures, vectored delete is
   *    the right amortization: O(deleted rows) write now, one bounded
   *    rewrite at the next compaction.
   *
@@ -620,9 +628,11 @@ object Versioned {
     * pruned — conservative and exact). All-NULL columns carry no
     * entry either (kept on probe; their rows can't match a range
     * anyway). Every staged file additionally carries `#rows` and
-    * `#bytes`. Returned map is keyed by file NAME. */
+    * `#bytes`. `written` is the schema the files were staged with,
+    * under PHYSICAL names (what stats key on). Returned map is keyed
+    * by file NAME. */
   private def statsJsonFor(spark: SparkSession, path: String,
-      staged: Seq[String], cols: Seq[String],
+      staged: Seq[String], written: StructType, cols: Seq[String],
       bloomCols: Seq[String]): Map[String, String] = {
     if (staged.isEmpty) return Map.empty
     if (cols.isEmpty && bloomCols.isEmpty) {
@@ -644,7 +654,7 @@ object Versioned {
       }.toMap
     }
     val bytes = stagedBytes(spark, staged)
-    val df = readFiles(spark, path, staged, None, meta = true)
+    val df = scan(spark, path, None, written, Some(staged), keepMeta = true)
     val schema = df.schema
     val present = cols.filter(c => schema.fieldNames.contains(c))
     val bloomPresent = bloomCols.filter(c => schema.fieldNames.contains(c))
@@ -709,12 +719,12 @@ object Versioned {
         // trusts an NDV — a sketch without the null count is ignored
         count(col(c)).as(s"nn_$c"))) :+
       count(lit(1)).as("__n")
-    val rows = df.groupBy(col(metaF)).agg(aggs.head, aggs.tail: _*).collect()
+    val rows = df.groupBy(col(fileCol)).agg(aggs.head, aggs.tail: _*).collect()
     rows.flatMap { r =>
       val rowCount = r.getLong(r.fieldIndex("__n"))
       val extras =
         Seq(s""""#rows":{"t":"l","mnl":$rowCount,"mxl":$rowCount}""") ++
-        bytes.get(r.getString(r.fieldIndex(metaF))).map(b =>
+        bytes.get(r.getString(r.fieldIndex(fileCol))).map(b =>
           s""""#bytes":{"t":"l","mnl":$b,"mxl":$b}""") ++
         bloomPresent.flatMap { c =>
           val i = r.fieldIndex(s"bl_$c")
@@ -762,7 +772,7 @@ object Versioned {
         }
       }
       if (parts.isEmpty) None
-      else Some(r.getString(r.fieldIndex(metaF)) -> parts.mkString("{", ",", "}"))
+      else Some(r.getString(r.fieldIndex(fileCol)) -> parts.mkString("{", ",", "}"))
     }.toMap
   }
 
@@ -770,8 +780,9 @@ object Versioned {
     * per-file `#rows` ALWAYS (footer-read when nothing else is
     * registered), min/max + Bloom for the registered columns. */
   private def stagedEntries(spark: SparkSession, path: String,
-      staged: Seq[String]): Seq[(String, Option[String])] = {
-    val stats = statsJsonFor(spark, path, staged,
+      staged: Seq[String],
+      written: StructType): Seq[(String, Option[String])] = {
+    val stats = statsJsonFor(spark, path, staged, written,
       statsColumns(spark, path), bloomColumns(spark, path))
     staged.map(p => (p, stats.get(fileKey(p))))
   }
@@ -948,12 +959,14 @@ object Versioned {
       else Some(readDv(spark, dvStagedDirs.flatMap(d =>
         parquetParts(fs(spark, path), new Path(d)))))
     if (dataFiles.isEmpty && newDv.isEmpty) return resolve(spark, path, None)
+    // the executors staged the images in the table's own schema
+    val written = schemaOf(spark, path, resolve(spark, path, None))
     if (dataFiles.nonEmpty)
       enforceConstraints(spark, path,
-        readFiles(spark, path, dataFiles, None, false))
+        scan(spark, path, None, written, Some(dataFiles), keepMeta = false))
     val stagedE =
       if (dataFiles.isEmpty) Seq.empty
-      else stagedEntries(spark, path, dataFiles)
+      else stagedEntries(spark, path, dataFiles, written)
     occ(spark, path, "row-level delta") { (cur, _) =>
       newDv.foreach { d =>
         val curKeys = readManifestEntries(spark, path, cur)
@@ -969,19 +982,6 @@ object Versioned {
         tableSchema(spark, path, Some(cur)),
         newDv.fold(prev)(n => Some(dvUnion(prev, n))), op, identity))
     }
-  }
-
-  /** The PART FILES of version `v`'s parquet manifest — the `\$files`
-    * metadata table is served by scanning the manifest itself
-    * (metadata as data: no driver materialization, one task per
-    * manifest part). Empty for a legacy text manifest. */
-  private[graft] def manifestPartFiles(spark: SparkSession, path: String,
-      v: Long): Seq[String] = {
-    val f = fs(spark, path)
-    val p = manifestPath(path, v)
-    if (!f.getFileStatus(p).isDirectory) Seq.empty
-    else f.listStatus(p).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).map(_.toString).toSeq
   }
 
   private[graft] def physicalNameOf(f: StructField): String = physicalOf(f)
@@ -1088,8 +1088,9 @@ object Versioned {
 
   /** The deletion vector of version `v` (default: current) as a
     * DataFrame of (f = file key, pos = row index) — a local view over
-    * [[deletionVectorRows]]; None when the version has no outstanding
-    * vectored deletes. */
+    * [[deletionVectorRows]] for inspection; None when the version has
+    * no outstanding vectored deletes. Reads never join it: the scan
+    * skips the positions per file. */
   def deletionVector(spark: SparkSession, path: String,
       version: Option[Long] = None): Option[DataFrame] =
     deletionVectorRows(spark, path, version).map { dv =>
@@ -1164,17 +1165,14 @@ object Versioned {
   private[graft] def dvRowCount(dv: DvRows): Long =
     dv.valuesIterator.map(_.length.toLong).sum
 
-  /** In-plan test of a deletion vector over the (file key, row
-    * position) meta columns: true iff `dv` names the row, NULL when
-    * the key or position is NULL. The vector rides the task closure
-    * as the per-file sorted position arrays — no broadcast relation,
-    * no join, no extra stage. */
-  private def dvNames(dv: DvRows): Column = {
-    val named = udf((f0: String, pos: Long) =>
-      f0 != null && dv.get(f0).exists(java.util.Arrays.binarySearch(_, pos) >= 0))
-    when(col(metaF).isNotNull && col(metaP).isNotNull,
-      named(col(metaF), col(metaP)))
-  }
+  /** The one inverse test, for [[changes]]: true iff `dv` names the
+    * row, over the connector's (file key, row position) columns. The
+    * vector rides the task closure as the per-file sorted position
+    * arrays — no broadcast relation, no join, no extra stage. */
+  private def dvNames(dv: DvRows): Column =
+    udf((f0: String, pos: Long) =>
+      dv.get(f0).exists(java.util.Arrays.binarySearch(_, pos) >= 0))
+      .apply(col(fileCol), col(posCol))
 
   // Deletion vectors and per-file stats key rows by (file KEY, row
   // position), where the key is the path RELATIVE to its data root:
@@ -1182,41 +1180,22 @@ object Versioned {
   // unique — a dynamic-partition write reuses one task's part name
   // across every partition directory it touches — while the batch
   // uuid + inner path is unique across jobs and clone roots alike.
-  // In-plan the key comes from `_metadata.file_path` URL-DECODED
-  // once: Spark renders the path URI-encoded (a hive-escaped `%3A`
-  // on disk becomes `%253A`), whereas manifest entries carry the raw
-  // on-disk form; one decode maps the former onto the latter.
-  private val metaF = "__graft_dv_f"
-  private val metaP = "__graft_dv_pos"
+  // Reads surface the same key and the row position as the
+  // connector's row-id columns.
+  private val fileCol = graft.sources.LakeRowLevel.FileCol
+  private val posCol = graft.sources.LakeRowLevel.PosCol
 
-  private val metaKeyCol =
-    regexp_extract(url_decode(col("_metadata.file_path")),
-      "/data/(gbatch=.*)$", 1)
-
-  /** The manifest-side rendering of the same key. */
+  /** The manifest-side rendering of the file key. */
   private def fileKey(f: String): String = {
     val i = f.lastIndexOf(s"/data/$batchCol=")
     require(i > 0, s"manifest entry outside a data root: $f")
     f.substring(i + "/data/".length)
   }
 
-  /** Batch-level directory name, partition-style (`gbatch=<v>`) so a
-    * manifest mixing files from several batches still presents ONE
-    * consistent directory structure to partition discovery; the
-    * column is dropped on read. */
+  /** Batch-level directory name, partition-style (`gbatch=<v>`): the
+    * file key starts at it, and no read ever surfaces it as a column. */
   private val batchCol = "gbatch"
 
-  /** A manifest may reference files under SEVERAL data roots — its own
-    * `<table>/data/` plus any [[clone]] source's — and Spark's
-    * partition discovery takes exactly one `basePath`. Group the files
-    * by their data root (the `…/data` prefix before the batch
-    * directory), read each group against its own root so partition
-    * columns reconstruct identically, and union. The common
-    * single-root case stays one scan. When the version logged a
-    * schema, project every file through it (absent columns read as
-    * NULL — additive evolution without a footer-merge pass); `meta`
-    * additionally surfaces the (file, row position) identity the
-    * deletion-vector predicate keys on. */
   // ---------------------------------------------------------------- //
   // column mapping (RENAME COLUMN without rewriting a single file)    //
   // ---------------------------------------------------------------- //
@@ -1257,8 +1236,8 @@ object Versioned {
     }
 
   /** Rename `df`'s columns logical→physical per `schema` (identity
-    * when the schema carries no mapping). The write-side twin of
-    * [[readFiles]]'s scan translation. */
+    * when the schema carries no mapping). The write-side twin of the
+    * connector reader's column mapping. */
   private def toPhysical(df: DataFrame, schema: StructType): DataFrame =
     if (!hasMapping(schema)) df
     else {
@@ -1278,87 +1257,73 @@ object Versioned {
         .putString(physicalKey, field.name + "_" +
           java.util.UUID.randomUUID().toString.take(8)).build())
 
-  private def readFiles(spark: SparkSession, path: String,
-      fileList: Seq[String], schemaOpt: Option[StructType],
-      meta: Boolean): DataFrame = {
-    def root(f: String): String = {
-      val i = f.lastIndexOf(s"/data/$batchCol=")
-      require(i > 0, s"manifest entry outside a data root: $f")
-      f.substring(0, i + "/data".length)
-    }
-    require(fileList.nonEmpty,
-      s"empty manifest for $path — a versioned table must always " +
-        "reference at least one (possibly schema-only) data file")
-    // a manifest may also mix directory DEPTHS under one root: batch
-    // dirs holding files directly (delta row images, schema-only
-    // placeholders) next to batch dirs with partition subdirectories.
-    // Spark's partition discovery refuses that mix inside one scan
-    // (CONFLICTING_PARTITION_COLUMN_NAMES), so depth joins the group
-    // key: each class scans alone, partition columns reconstruct from
-    // its own structure, and flat files carry them as data columns.
-    def depth(f: String): Int = {
-      val i = f.lastIndexOf(s"/data/$batchCol=")
-      f.substring(i).count(_ == '/') - 3
-    }
-    val mapped = schemaOpt.exists(hasMapping)
-    fileList.groupBy(f => (root(f), depth(f))).toSeq.sortBy(_._1)
-      .map { case ((base, _), fps) =>
-      val rdr0 = spark.read.option("basePath", base)
-      val rdr = schemaOpt.fold(rdr0) { s0 =>
-        // read under PHYSICAL names (what the files and partition
-        // directories actually carry), translate to logical below
-        val phys =
-          if (!mapped) s0.fields
-          else s0.fields.map(f => f.copy(name = physicalOf(f)))
-        rdr0.schema(StructType(phys :+ StructField(batchCol, StringType)))
-      }
-      val df0raw = rdr.parquet(fps: _*)
-      // the _metadata columns resolve only against the scan relation,
-      // so the logical rename and the meta projection are ONE select
-      val metaCols =
-        if (meta) Seq(metaKeyCol.as(metaF),
-          col("_metadata.row_index").as(metaP))
-        else Seq.empty
-      val df1 = schemaOpt match {
-        case Some(s0) if mapped =>
-          df0raw.select(s0.fields.map(f =>
-            col(s"`${physicalOf(f)}`").as(f.name)).toSeq ++
-            (col(batchCol) +: metaCols): _*)
-        case _ => df0raw.select(col("*") +: metaCols: _*)
-      }
-      df1.drop(batchCol)
-    }.reduce(_ unionByName _)
+  /** The LIVE rows of version `v` over `subset` (default: all its
+    * files): the one lake read path. A DSv2 scan over
+    * [[graft.sources.LakeTable]] pinned to the version (and to the
+    * subset), so the connector's reader maps columns through the
+    * version's schema, fills partition values and skips the version's
+    * deleted positions. `keepMeta` adds the row-id columns
+    * (`__lake_file` = file key, `__lake_pos` = row position). */
+  private def readLive(spark: SparkSession, path: String, v: Long,
+      subset: Option[Seq[String]], keepMeta: Boolean): DataFrame =
+    scan(spark, path, Some(v), schemaOf(spark, path, v), subset, keepMeta)
+
+  /** A lake scan as a DataFrame: [[graft.sources.LakeTable]] over
+    * `schema` (every column nullable: an older file may lack one),
+    * pinned to `version` and `files`; with files and no version they
+    * are staged files outside every manifest. */
+  private def scan(spark: SparkSession, path: String,
+      version: Option[Long], schema: StructType,
+      files: Option[Seq[String]], keepMeta: Boolean): DataFrame = {
+    val table = new graft.sources.LakeTable(path, version,
+      StructType(schema.fields.map(_.copy(nullable = true))),
+      ignoreChanges = false, pinned = files)
+    val df = org.apache.spark.sql.graftbridge.Bridge.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+        .create(table, None, None,
+          org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()))
+    if (!keepMeta) df
+    else df.select(df.columns.map(c => df.col(s"`$c`")).toSeq ++
+      Seq(df.metadataColumn(fileCol), df.metadataColumn(posCol)): _*)
   }
 
-  /** The LIVE rows of version `v` over `subset` (default: all its
-    * files): manifest scan through the logged schema, minus the
-    * version's deletion vector — applied from the cached driver rows
-    * as a per-file row-index predicate ([[dvNames]]), restricted to the
-    * vector entries of the files read. A row whose key or position is
-    * NULL is kept. */
-  private def readLive(spark: SparkSession, path: String, v: Long,
-      subset: Option[Seq[String]], keepMeta: Boolean): DataFrame = {
-    val fl = subset.getOrElse(readManifest(spark, path, v))
-    val dv = subset.fold(deletionVectorRows(spark, path, Some(v))) { s0 =>
-      val keys = s0.map(fileKey).toSet
-      dvWithout(deletionVectorRows(spark, path, Some(v)))(k => !keys(k))
+  /** Version `v`'s schema: the logged one, or — for a version
+    * committed before schemas were logged — its first file's footer
+    * schema plus that file's partition-directory columns (strings). */
+  private[graft] def schemaOf(spark: SparkSession, path: String,
+      v: Long): StructType =
+    tableSchema(spark, path, Some(v)).getOrElse {
+      val f0 = readManifest(spark, path, v).head
+      val conf = spark.sparkContext.hadoopConfiguration
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(f0), conf))
+      val meta = try r.getFooter.getFileMetaData finally r.close()
+      val data = Option(meta.getKeyValueMetaData.get(sparkRowMetadata))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetToSparkSchemaConverter(conf).convert(meta.getSchema))
+      val parts = partitionSegmentsOf(f0).keys.toSeq.sorted
+        .map(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+          .unescapePathName)
+        .filterNot(data.fieldNames.contains)
+      StructType(data.fields ++ parts.map(StructField(_, StringType)))
     }
-    val schemaOpt = tableSchema(spark, path, Some(v))
-    val needMeta = keepMeta || dv.nonEmpty
-    val base = readFiles(spark, path, fl, schemaOpt, needMeta)
-    val live = dv.fold(base)(d => base.filter(!coalesce(dvNames(d), lit(false))))
-    if (keepMeta || !needMeta) live else live.drop(metaF, metaP)
-  }
+
+  /** The footer key Spark's parquet writer stores the row schema under. */
+  private val sparkRowMetadata = "org.apache.spark.sql.parquet.row.metadata"
 
   /** Read a snapshot (default: current): the manifest's files through
-    * the version's logged schema, minus its deletion vector. */
+    * the version's logged schema, minus its deletion vector — the
+    * connector's scan ([[readLive]]), so filters on the frame prune
+    * files as they do on the SQL surface. */
   def read(spark: SparkSession, path: String,
       version: Option[Long] = None): DataFrame =
     readLive(spark, path, resolve(spark, path, version), None,
       keepMeta = false)
 
   /** Stage a batch's rows as immutable files under a UNIQUE
-    * `data/gbatch=<v>-<uuid>/` directory and return (dir, paths). The
+    * `data/gbatch=<v>-<uuid>/` directory and return (dir, paths, the
+    * schema written under physical names). The
     * uuid suffix is what makes the optimistic-concurrency story sound:
     * two writers racing toward the same version stage into DISJOINT
     * directories, so neither the loser's overwrite nor its post-loss
@@ -1368,7 +1333,8 @@ object Versioned {
     * the suffix is invisible to consumers.) */
   private def stage(df: DataFrame, path: String, v: Long,
       partitionCol: Option[String],
-      logicalSchema: Option[StructType] = None): (Path, Seq[String]) = {
+      logicalSchema: Option[StructType] = None)
+      : (Path, Seq[String], StructType) = {
     val unique = s"$v-${java.util.UUID.randomUUID().toString.take(8)}"
     val dir = new Path(new Path(path, "data"), s"$batchCol=$unique")
     // under column mapping, files (and partition directories) carry
@@ -1389,7 +1355,7 @@ object Versioned {
       if (s.isFile && s.getPath.getName.endsWith(".parquet"))
         out += s.getPath.toString
     }
-    (dir, out.result())
+    (dir, out.result(), dfW.schema)
   }
 
   /** Dynamic-partition writes of an EMPTY DataFrame create zero files
@@ -1651,11 +1617,11 @@ object Versioned {
     // a dynamic-partition write of an EMPTY frame creates zero files
     // (SQL CREATE TABLE … PARTITIONED BY lands here); fall back to one
     // schema-only file so v1 is readable
-    val (dir, staged0) = stage(df, path, 1L, partitionCol)
+    val (dir, staged0, written) = stage(df, path, 1L, partitionCol)
     val staged = ensureManifestNonEmpty(df, path, dir, staged0,
       carriedNonEmpty = false)
     require(commit(spark, path, 1L,
-      stagedEntries(spark, path, staged), Some(df.schema),
+      stagedEntries(spark, path, staged, written), Some(df.schema),
       op = Some(opName)),
       s"init lost a commit race: $path")
     1L
@@ -1741,14 +1707,8 @@ object Versioned {
           val (keepTop, hitE) = splitTopByPartitions(spark, path, cur,
             physOf(pc), touched.toSet)
           val hit = hitE.map(_._1)
-          val hitDf =
-            if (hit.isEmpty) {
-              val schema = tableSchema(spark, path, Some(cur))
-                .getOrElse(read(spark, path, Some(cur)).schema)
-              spark.createDataFrame(
-                spark.sparkContext.emptyRDD[Row], schema)
-            } else readLive(spark, path, cur, Some(hit), keepMeta = false)
-          (Some(keepTop), hit, hitDf, touched)
+          (Some(keepTop), hit,
+            readLive(spark, path, cur, Some(hit), keepMeta = false), touched)
         case None =>
           (None, Seq.empty[String],
             readLive(spark, path, cur, None, keepMeta = false),
@@ -1855,11 +1815,11 @@ object Versioned {
             }
           })
       }
-      val (stagedDir, staged0) = stage(merged, path, next, partitionCol,
-        Some(outSchema))
+      val (stagedDir, staged0, written) = stage(merged, path, next,
+        partitionCol, Some(outSchema))
       val staged = ensureManifestNonEmpty(merged, path, stagedDir,
         staged0, carriedTop.exists(_.nonEmpty), Some(outSchema))
-      val stagedE = stagedEntries(spark, path, staged)
+      val stagedE = stagedEntries(spark, path, staged, written)
       // a lost race first tries the fast path: re-commit the
       // ALREADY-STAGED files against the winner's manifest when every
       // commit since `cur` is disjoint from our partition footprint.
@@ -1971,7 +1931,7 @@ object Versioned {
     val meta0 = metadataFingerprint(spark, path)
     occ(spark, path, "append") { (cur, first) =>
       val curSchema = tableSchema(spark, path, Some(cur))
-      val tgt = curSchema.getOrElse(read(spark, path, Some(cur)).schema)
+      val tgt = schemaOf(spark, path, cur)
       // identity: every row is an insert; allocation is ranked over
       // the full row so the assigned multiset is deterministic
       var src = sourceG
@@ -2050,9 +2010,9 @@ object Versioned {
             .filterNot(f => cs.fieldNames.contains(f.name))
             .map(freshPhysical(_, taken)))
       }
-      val (stagedDir, staged) = stage(inserts, path, cur + 1, partitionCol,
-        Some(outSchema))
-      val stagedE = stagedEntries(spark, path, staged)
+      val (stagedDir, staged, written) = stage(inserts, path, cur + 1,
+        partitionCol, Some(outSchema))
+      val stagedE = stagedEntries(spark, path, staged, written)
       // O(delta) commit: carried segment refs copy forward, staged
       // entries ride inline (sealing past the threshold) — an append
       // on a million-file table writes a delta-sized manifest
@@ -2114,9 +2074,11 @@ object Versioned {
     }, s"streaming sink refuses partition-structured tables: $path — " +
       "use foreachBatch + Versioned.append(partitionCol = …)")
     if (files.isEmpty) return cur0
+    // the sink stages rows in the table's own schema
+    val written = schemaOf(spark, path, cur0)
     enforceConstraints(spark, path,
-      readFiles(spark, path, files, None, meta = false))
-    val stagedE = stagedEntries(spark, path, files)
+      scan(spark, path, None, written, Some(files), keepMeta = false))
+    val stagedE = stagedEntries(spark, path, files, written)
     val extras = txn.map { case (q, e) =>
       ("txn", s"$q\t$e\n".getBytes(StandardCharsets.UTF_8)) }.toSeq
     occ(spark, path, "appendStaged") { (cur, _) =>
@@ -2395,11 +2357,12 @@ object Versioned {
             ZOrder.layout(rows, targetFiles, zs)
           case _ => rows.repartition(targetFiles)
         }
-        val schema = tableSchema(spark, path, Some(cur)).getOrElse(rows.schema)
-        val (stagedDir, staged0) = stage(laidOut, path, cur + 1,
+        val schema = schemaOf(spark, path, cur)
+        val (stagedDir, staged0, written) = stage(laidOut, path, cur + 1,
           partitionCol, Some(schema))
         val staged = stagedEntries(spark, path, ensureManifestNonEmpty(rows,
-          path, stagedDir, staged0, p.carried.nonEmpty, Some(schema)))
+          path, stagedDir, staged0, p.carried.nonEmpty, Some(schema)),
+          written)
         val dv = p.files.flatMap { picked =>
           dvWithout(deletionVectorRows(spark, path, Some(cur)))(
             picked.map(fileKey).toSet)
@@ -2639,7 +2602,7 @@ object Versioned {
       // cardinality is bounded by the FILE count, so the collect is
       // manifest-scale.
       val liveMeta = readLive(spark, path, cur, None, keepMeta = true)
-      val hitNames = liveMeta.filter(pred).select(col(metaF)).distinct()
+      val hitNames = liveMeta.filter(pred).select(col(fileCol)).distinct()
         .collect().map(_.getString(0)).toSet
       val (hitE, keepE) = curEntries.partition(e =>
         hitNames.contains(fileKey(e._1)))
@@ -2655,15 +2618,14 @@ object Versioned {
         // logic `!pred` also drops NULL-evaluating rows, which must be
         // RETAINED — coalesce pins NULL to "not deleted"
         val survivors = hitLive.filter(!coalesce(pred, lit(false)))
-        val schema = tableSchema(spark, path, Some(cur))
-          .getOrElse(survivors.schema)
-        val (stagedDir, staged0) = stage(survivors, path, cur + 1,
+        val schema = schemaOf(spark, path, cur)
+        val (stagedDir, staged0, written) = stage(survivors, path, cur + 1,
           partitionCol, Some(schema))
         val staged = ensureManifestNonEmpty(survivors, path, stagedDir,
           staged0, keepE.nonEmpty, Some(schema))
         Right(Commit(sealTop(spark, path,
             carryTopMinus(spark, path, cur, hit.toSet),
-            stagedEntries(spark, path, staged)), Some(schema),
+            stagedEntries(spark, path, staged, written)), Some(schema),
           dvWithout(deletionVectorRows(spark, path, Some(cur)))(hitNames),
           "DELETE", Erasure(_, hit.length, keepE.length, deletedRows),
           Some(stagedDir)))
@@ -2693,13 +2655,11 @@ object Versioned {
       val live = readLive(spark, path, cur, None, keepMeta = true)
       // the ONE scan: the matched rows' (file, position) pairs, whose
       // number is the deleted count
-      val hits = live.filter(pred).select(col(metaF), col(metaP)).collect()
+      val hits = live.filter(pred).select(col(fileCol), col(posCol)).collect()
       val deletedRows = hits.length.toLong
       if (deletedRows == 0L) Left(Erasure(-1L, 0, curEntries.length, 0L))
       else Right(Commit(segmentedTop(spark, path, cur, Seq.empty),
-        Some(tableSchema(spark, path, Some(cur)).getOrElse(
-          StructType(live.schema.filterNot(f =>
-            f.name == metaF || f.name == metaP)))),
+        Some(schemaOf(spark, path, cur)),
         Some(dvUnion(deletionVectorRows(spark, path, Some(cur)), dvOf(hits))),
         "DELETE_VECTORED", Erasure(_, 0, curEntries.length, deletedRows)))
     }
@@ -2848,11 +2808,7 @@ object Versioned {
     val openOld = removed
     val openNew = added
     def side(v: Long, subset: Seq[String]): DataFrame =
-      if (subset.isEmpty) {
-        val schema = tableSchema(spark, path, Some(v))
-          .getOrElse(read(spark, path, Some(v)).schema)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      } else readLive(spark, path, v, Some(subset), keepMeta = false)
+      readLive(spark, path, v, Some(subset), keepMeta = false)
     val o0 = side(fromV, openOld)
     val n = side(toV, openNew)
     // under additive schema evolution the newer side is a superset:
@@ -2885,7 +2841,7 @@ object Versioned {
         Some(alignTo(
           readLive(spark, path, fromV, Some(files), keepMeta = true)
             .filter(coalesce(dvNames(delta), lit(false)))
-            .drop(metaF, metaP)))
+            .drop(fileCol, posCol)))
       case _ => None
     }
     val dels0 = o.exceptAll(n)
@@ -2919,14 +2875,8 @@ object Versioned {
     val v = resolve(spark, path, version)
     val total = readManifestEntries(spark, path, v).length
     val kept = candidateFiles(spark, path, v, Seq((column, lo, hi))).map(_._1)
-    if (kept.isEmpty) {
-      val schema = tableSchema(spark, path, Some(v))
-        .getOrElse(read(spark, path, Some(v)).schema)
-      Pruned(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
-        0, total)
-    } else
-      Pruned(readLive(spark, path, v, Some(kept), keepMeta = false),
-        kept.length, total)
+    Pruned(readLive(spark, path, v, Some(kept), keepMeta = false),
+      kept.length, total)
   }
 
   /** Metadata-only aggregate over `column`: exact row COUNT and
@@ -2993,14 +2943,8 @@ object Versioned {
           }
       }
     }.map(_._1)
-    if (kept.isEmpty) {
-      val schema = tableSchema(spark, path, Some(v))
-        .getOrElse(read(spark, path, Some(v)).schema)
-      Pruned(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
-        0, entries.length)
-    } else
-      Pruned(readLive(spark, path, v, Some(kept), keepMeta = false),
-        kept.length, entries.length)
+    Pruned(readLive(spark, path, v, Some(kept), keepMeta = false),
+      kept.length, entries.length)
   }
 
   /** Receipt of an [[updateVectored]]: committed version, carried file
@@ -3026,12 +2970,12 @@ object Versioned {
     occ(spark, path, "updateVectored") { (cur, first) =>
       val curEntries = readManifestEntries(spark, path, cur)
       val live = readLive(spark, path, cur, None, keepMeta = true)
-      val tableCols = live.columns.filterNot(c => c == metaF || c == metaP)
+      val tableCols = live.columns.filterNot(c => c == fileCol || c == posCol)
       require(set.keySet.subsetOf(tableCols.toSet),
         s"SET columns outside the table schema: " +
           s"${set.keySet -- tableCols.toSet}")
       val hits = live.filter(pred)
-      val newDv = hits.select(col(metaF), col(metaP)).collect()
+      val newDv = hits.select(col(fileCol), col(posCol)).collect()
       val updatedRows = newDv.length.toLong
       if (updatedRows == 0L) Left(Updated(-1L, curEntries.length, 0L))
       else {
@@ -3039,13 +2983,11 @@ object Versioned {
         val updated = hits.select(tableCols.map(c =>
           set.get(c).map(_.cast(schemaMap(c)).as(c)).getOrElse(col(c))): _*)
         if (first) enforceConstraints(spark, path, updated)
-        val schema = tableSchema(spark, path, Some(cur)).getOrElse(
-          StructType(live.schema.filterNot(f =>
-            f.name == metaF || f.name == metaP)))
-        val (stagedDir, staged) = stage(updated, path, cur + 1, partitionCol,
-          Some(schema))
+        val schema = schemaOf(spark, path, cur)
+        val (stagedDir, staged, written) = stage(updated, path, cur + 1,
+          partitionCol, Some(schema))
         Right(Commit(segmentedTop(spark, path, cur,
-            stagedEntries(spark, path, staged)), Some(schema),
+            stagedEntries(spark, path, staged, written)), Some(schema),
           Some(dvUnion(deletionVectorRows(spark, path, Some(cur)),
             dvOf(newDv))),
           "UPDATE_VECTORED", Updated(_, curEntries.length, updatedRows),
@@ -3786,8 +3728,7 @@ object Versioned {
       column: String, start: Long = 1L, step: Long = 1L): Unit = {
     require(step != 0L, "identity step must be non-zero")
     val cur = resolve(spark, path, None)
-    val schema = tableSchema(spark, path, Some(cur)).getOrElse(
-      read(spark, path, Some(cur)).schema)
+    val schema = schemaOf(spark, path, cur)
     val fld = schema.fields.find(_.name == column)
     require(fld.isDefined,
       s"identity column must exist in the table schema: '$column'")
@@ -4110,13 +4051,13 @@ object Versioned {
         // dropping every partition: keep a schema-only file so the
         // empty table stays readable (same contract as a
         // table-emptying merge)
-        val s0 = schema.getOrElse(read(spark, path, Some(cur)).schema)
         val empty = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], s0)
-        val (stagedDir, _) = stage(empty, path, cur + 1, None, schema)
+          spark.sparkContext.emptyRDD[Row], schemaOf(spark, path, cur))
+        val (stagedDir, _, written) = stage(empty, path, cur + 1, None, schema)
         val staged = ensureManifestNonEmpty(empty, path, stagedDir,
           Seq.empty, carriedNonEmpty = false, schema)
-        Right(Commit(stagedEntries(spark, path, staged), schema, None, op,
+        Right(Commit(stagedEntries(spark, path, staged, written), schema,
+          None, op,
           receipt, Some(stagedDir)))
       } else {
         val dseg = ("/(" + java.util.regex.Pattern.quote(pcPhys) + "=[^/]*)/").r
@@ -4477,6 +4418,10 @@ object Versioned {
           < tsMillis)
     }
 
+  /** How old an unreferenced segment file must be before vacuum
+    * collects it: younger ones may belong to an in-flight append. */
+  private[graft] val segGraceMs: Long = 15 * 60 * 1000L
+
   private def vacuumImpl(spark: SparkSession, path: String)(
       split: (Seq[Long], FileSystem) => (Seq[Long], Seq[Long])): Int = {
     val f = fs(spark, path)
@@ -4561,10 +4506,9 @@ object Versioned {
     // (2) the writer sealed a segment but hasn't won the lock yet at
     //     GC instant — no manifest references it anywhere, so only
     //     its AGE can save it: skip segments younger than a grace
-    //     window (mtime-based, the standard lake-vacuum guard;
-    //     `graft.lake.vacuumSegGraceMs`, default 15 min — tests that
-    //     assert GC set it to 0). A LOSING writer's orphaned segment
-    //     ages past the grace and is collected next vacuum.
+    //     window ([[segGraceMs]], mtime-based, the standard
+    //     lake-vacuum guard). A LOSING writer's orphaned segment ages
+    //     past the grace and is collected next vacuum.
     val segD = segsDir(path)
     if (f.exists(segD)) {
       val present = f.listStatus(dir).map(_.getPath.getName)
@@ -4586,13 +4530,10 @@ object Versioned {
             case _: java.io.FileNotFoundException => Seq.empty[String]
           }
       }.toSet
-      val graceMs = spark.conf
-        .get("graft.lake.vacuumSegGraceMs", (15 * 60 * 1000L).toString)
-        .toLong
       val now = System.currentTimeMillis()
       f.listStatus(segD).foreach { s0 =>
         if (!liveSegs.contains(s0.getPath.getName) &&
-            now - s0.getModificationTime >= graceMs)
+            now - s0.getModificationTime >= segGraceMs)
           f.delete(s0.getPath, true)
       }
     }

@@ -31,8 +31,8 @@ import graft.text.Dedup
   * 100 TB story: the connector makes the table protocol available to
   * anything that speaks Spark SQL — `spark.sql` users, streaming
   * consumers, other DSv2 engines — with snapshot isolation and
-  * manifest-side skipping intact; the vectorized hot path remains
-  * [[Versioned.read]]'s native scans.
+  * manifest-side skipping intact. [[Versioned.read]] plans through
+  * the same scan.
   */
 object Wave57Queries {
 

@@ -112,8 +112,7 @@ class LakeCatalog extends TableCatalog with ProcedureCatalog {
     require(Versioned.currentVersion(spark, path).isDefined,
       s"not a versioned lake table: $path")
     val v = Versioned.resolveVersion(spark, path, version)
-    val full = Versioned.tableSchema(spark, path, Some(v)).getOrElse(
-      Versioned.read(spark, path, Some(v)).schema)
+    val full = Versioned.schemaOf(spark, path, v)
     // the derived hidden-partition column is the engine's, not the
     // user's: SQL reads never request it (the scan projects), and SQL
     // INSERTs are validated against the user columns only — appendAuto

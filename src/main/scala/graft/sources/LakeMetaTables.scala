@@ -22,12 +22,11 @@ import graft.ops.Versioned
   * SELECT * FROM lake.`/data/events$history`  -- (version, operation, files)
   * }}}
   *
-  * `$files` is served by scanning the version's parquet MANIFEST
-  * itself — metadata as data: one task per manifest part file, no
-  * driver materialization, so listing a million-file table
-  * parallelizes like any other scan. `$history` reads the commit
-  * log's per-version operation labels (bounded by version count).
-  * Both compose with `VERSION AS OF`. */
+  * Both are served as driver rows: `$files` lists the version's
+  * manifest entries — segment refs expanded, from the same cached
+  * entries scan planning uses — and `$history` reads the commit log's
+  * per-version operation labels (bounded by version count). `$files`
+  * composes with `VERSION AS OF`. */
 object LakeMetaTables {
 
   val filesSchema: StructType = StructType(Seq(
@@ -40,66 +39,36 @@ object LakeMetaTables {
     StructField("files", LongType)))
 }
 
-/** `$files`: the manifest's own parquet parts through the lake's
-  * reader. */
-final class LakeFilesTable(path: String, version: Option[Long])
+/** A metadata table whose rows are computed on the driver at scan
+  * planning and served as one partition. */
+abstract class DriverRowsTable(tableName: String, tableSchema: StructType)
   extends Table with SupportsRead {
 
-  override def name(): String = s"graft-lake:$path$$files"
-  override def schema(): StructType = LakeMetaTables.filesSchema
+  override def name(): String = tableName
+  override def schema(): StructType = tableSchema
+
+  /** The rows, computed when the scan plans. */
+  protected def rows(spark: SparkSession): Array[InternalRow]
+
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder with Scan with Batch {
       override def build(): Scan = this
-      override def readSchema(): StructType = LakeMetaTables.filesSchema
+      override def readSchema(): StructType = tableSchema
       override def toBatch: Batch = this
-      override def planInputPartitions(): Array[InputPartition] = {
-        val spark = SparkSession.active
-        val v = Versioned.resolveVersion(spark, path, version)
-        val parts = Versioned.manifestPartFiles(spark, path, v)
-        require(parts.nonEmpty,
-          s"$$files needs a parquet manifest: $path v$v is legacy text")
-        parts.map(f =>
-          LakeInputPartition(f, Array.empty): InputPartition).toArray
-      }
-      override def createReaderFactory(): PartitionReaderFactory =
-        LakeReaderFactory(SparkSession.active, LakeMetaTables.filesSchema)
-    }
-}
-
-/** `$history`: the commit log as rows (bounded by version count). */
-final class LakeHistoryTable(path: String) extends Table with SupportsRead {
-
-  override def name(): String = s"graft-lake:$path$$history"
-  override def schema(): StructType = LakeMetaTables.historySchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with Scan with Batch {
-      override def build(): Scan = this
-      override def readSchema(): StructType = LakeMetaTables.historySchema
-      override def toBatch: Batch = this
-      override def planInputPartitions(): Array[InputPartition] = {
-        val spark = SparkSession.active
-        val rows = Versioned.history(spark, path)
-          .map(ci => (ci.version, ci.operation, ci.nFiles)).toArray
-        Array(HistoryPartition(rows))
-      }
+      override def planInputPartitions(): Array[InputPartition] =
+        Array(DriverRowsPartition(rows(SparkSession.active)))
       override def createReaderFactory(): PartitionReaderFactory =
         new PartitionReaderFactory {
           override def createReader(
               p: InputPartition): PartitionReader[InternalRow] = {
-            val rows = p.asInstanceOf[HistoryPartition].rows
+            val rs = p.asInstanceOf[DriverRowsPartition].rows
             new PartitionReader[InternalRow] {
               private var i = -1
-              override def next(): Boolean = { i += 1; i < rows.length }
-              override def get(): InternalRow = {
-                val (v, op, nf) = rows(i)
-                InternalRow(v, UTF8String.fromString(op), nf)
-              }
+              override def next(): Boolean = { i += 1; i < rs.length }
+              override def get(): InternalRow = rs(i)
               override def close(): Unit = ()
             }
           }
@@ -107,5 +76,27 @@ final class LakeHistoryTable(path: String) extends Table with SupportsRead {
     }
 }
 
-final case class HistoryPartition(rows: Array[(Long, String, Long)])
+final case class DriverRowsPartition(rows: Array[InternalRow])
   extends InputPartition
+
+/** `$files`: the version's manifest entries, segment refs expanded. */
+final class LakeFilesTable(path: String, version: Option[Long])
+  extends DriverRowsTable(s"graft-lake:$path$$files",
+    LakeMetaTables.filesSchema) {
+  override protected def rows(spark: SparkSession): Array[InternalRow] =
+    Versioned.manifestEntries(spark, path,
+      Versioned.resolveVersion(spark, path, version)).map { case (f, sj) =>
+      InternalRow(UTF8String.fromString(f),
+        sj.map(UTF8String.fromString).orNull)
+    }.toArray
+}
+
+/** `$history`: the commit log as rows (bounded by version count). */
+final class LakeHistoryTable(path: String)
+  extends DriverRowsTable(s"graft-lake:$path$$history",
+    LakeMetaTables.historySchema) {
+  override protected def rows(spark: SparkSession): Array[InternalRow] =
+    Versioned.history(spark, path).map(ci =>
+      InternalRow(ci.version, UTF8String.fromString(ci.operation),
+        ci.nFiles)).toArray
+}

@@ -404,8 +404,7 @@ object LakeProcedures {
           throw new IllegalArgumentException(
             s"not a versioned lake table: $path"))
         val schema = Versioned.tableSchema(spark, path, Some(v))
-        val nCols = schema.map(_.fields.length).getOrElse(
-          Versioned.read(spark, path).schema.fields.length)
+        val nCols = Versioned.schemaOf(spark, path, v).fields.length
         val mapped = schema.exists(s0 => s0.fields.exists(f =>
           Versioned.physicalNameOf(f) != f.name))
         result(out,

@@ -18,11 +18,14 @@ import graft.ops.Versioned
 final case class LakeInputPartition(file: String,
     dvPositions: Array[Long]) extends InputPartition
 
-/** Reads lake parquet files into `InternalRow`s of the requested
-  * LOGICAL schema through Spark's own `ParquetFileFormat`, the codec
-  * [[graft.ops.Versioned.read]] scans with. The reader function is
-  * built ONCE per scan on the driver; each [[LakeInputPartition]]
-  * becomes a `PartitionedFile`.
+/** The one reader of lake data files: every read of the DataFrame
+  * API ([[graft.ops.Versioned.read]] and the engine's internal
+  * reads), SQL, streaming and row-level DML decodes here, into
+  * `InternalRow`s of the requested LOGICAL schema, through Spark's
+  * own `ParquetFileFormat`. It is the only place that maps columns,
+  * fills partition values and skips deleted positions. The reader
+  * function is built ONCE per scan on the driver; each
+  * [[LakeInputPartition]] becomes a `PartitionedFile`.
   *
   * Per field: the file's column under the field's PHYSICAL name
   * (column mapping; rows are positional, so logical names come for
@@ -111,10 +114,8 @@ final class LakePartitionReader(file: String, dv: Array[Long],
     }
   }
 
-  // the file's manifest KEY — the deletion vectors' own keying. Lazy:
-  // manifest-scan readers ($files) read files OUTSIDE a data root,
-  // where the key is undefined — and they never request it.
-  private lazy val fileKeyStr =
+  // the file's manifest KEY — the deletion vectors' own keying
+  private val fileKeyStr =
     UTF8String.fromString(Versioned.fileKeyOf(file))
 
   private val out = new GenericInternalRow(schema.length)

@@ -59,11 +59,14 @@ import graft.ops.Versioned
   * — the manifest entries and the deletion vector, both bounded by
   * what every reader already held on the driver — so planning a scan
   * starts no Spark job; reads parallelize one task per file. Files
-  * decode through Spark's own `ParquetFileFormat`
-  * ([[LakeReaderFactory]]), the vectorized codec [[Versioned.read]]
-  * scans with, and the connector's writers encode through the same
-  * format, so SQL, streaming and DSv2 callers read and write every
-  * type the function API does.
+  * decode through Spark's own `ParquetFileFormat` in
+  * [[LakeReaderFactory]], the one reader of lake data files: the
+  * function API's reads ([[Versioned.read]], time travel, merge and
+  * compaction rewrites, vectored DML matching, `changes`) plan
+  * through this same scan, pinned to a version and, for internal
+  * callers, to a file subset. The connector's writers encode through
+  * the same format, so SQL, streaming and DSv2 callers read and write
+  * every type the function API does.
   */
 class LakeSource extends TableProvider with DataSourceRegister {
 
@@ -83,8 +86,7 @@ class LakeSource extends TableProvider with DataSourceRegister {
     val spark = SparkSession.active
     val path = pathOf(options)
     val v = Versioned.resolveVersion(spark, path, versionOf(options))
-    Versioned.tableSchema(spark, path, Some(v)).getOrElse(
-      Versioned.read(spark, path, Some(v)).schema)
+    Versioned.schemaOf(spark, path, v)
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -101,15 +103,21 @@ class LakeSource extends TableProvider with DataSourceRegister {
 object LakeSource {
   /** Planning observability for specs and receipts: (files planned,
     * files in the manifest) of the most recent batch scan in this
-    * JVM. */
+    * JVM that planned from the manifest (not a file-pinned one). */
   val lastPlanned = new java.util.concurrent.atomic.AtomicReference[(Int, Int)]((0, 0))
 }
 
+/** A lake table as DSv2 sees it. `pinned` is for internal readers
+  * ([[Versioned]]'s reads): the scan reads exactly these files, with
+  * their stats and deletion vector taken from `version` — or, with no
+  * version, as staged files outside every manifest (no stats, no
+  * vector). A version-pinned or file-pinned table is read-only. */
 final class LakeTable(path: String, version: Option[Long],
     tableSchema: StructType, ignoreChanges: Boolean,
     startingVersion: Option[String] = None,
     maxFilesPerTrigger: Option[Int] = None,
-    maxBytesPerTrigger: Option[Long] = None)
+    maxBytesPerTrigger: Option[Long] = None,
+    pinned: Option[Seq[String]] = None)
   extends Table with SupportsRead with SupportsWrite
   with SupportsDelete with SupportsRowLevelOperations
   with SupportsMetadataColumns {
@@ -127,10 +135,13 @@ final class LakeTable(path: String, version: Option[Long],
     Versioned.canStageDirect(SparkSession.active, path)
 
   override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-      if (directWrite) TableCapability.BATCH_WRITE
-      else TableCapability.V1_BATCH_WRITE,
-      TableCapability.STREAMING_WRITE).asJava
+    if (version.isDefined || pinned.isDefined)
+      Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
+    else
+      Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
+        if (directWrite) TableCapability.BATCH_WRITE
+        else TableCapability.V1_BATCH_WRITE,
+        TableCapability.STREAMING_WRITE).asJava
 
   /** The row-id identity SQL row-level DML keys on — the same
     * (file key, physical position) pair the engine's deletion vectors
@@ -166,7 +177,7 @@ final class LakeTable(path: String, version: Option[Long],
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new LakeScanBuilder(path, version, tableSchema, ignoreChanges,
-      startingVersion, maxFilesPerTrigger, maxBytesPerTrigger)
+      startingVersion, maxFilesPerTrigger, maxBytesPerTrigger, pinned)
 
   private def filterToColumn(f: Filter): Option[Column] = f match {
     case EqualTo(a, v) => Some(col(a) === lit(v))
@@ -250,7 +261,8 @@ final class LakeScanBuilder(path: String, version: Option[Long],
     fullSchema: StructType, ignoreChanges: Boolean,
     startingVersion: Option[String] = None,
     maxFilesPerTrigger: Option[Int] = None,
-    maxBytesPerTrigger: Option[Long] = None)
+    maxBytesPerTrigger: Option[Long] = None,
+    pinned: Option[Seq[String]] = None)
   extends ScanBuilder with SupportsPushDownFilters
   with SupportsPushDownRequiredColumns {
 
@@ -262,8 +274,10 @@ final class LakeScanBuilder(path: String, version: Option[Long],
     * IN on any column (harmless when the column isn't a partition
     * directory — segment pruning only drops a file when the segment
     * PROVES a mismatch). Everything is returned to Spark for row-level
-    * evaluation, so pruning can never change results. */
+    * evaluation, so pruning can never change results. A pinned file
+    * list is read as given. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+    if (pinned.isDefined) return filters
     val stats = Versioned.statsColumns(SparkSession.active, path).toSet
     pushed = filters.filter {
       case EqualTo(c, v) => stats(c) && v.isInstanceOf[Number] ||
@@ -290,14 +304,15 @@ final class LakeScanBuilder(path: String, version: Option[Long],
 
   override def build(): Scan =
     new LakeScan(path, version, required, pushed, ignoreChanges,
-      startingVersion, maxFilesPerTrigger, maxBytesPerTrigger)
+      startingVersion, maxFilesPerTrigger, maxBytesPerTrigger, pinned)
 }
 
 final class LakeScan(path: String, version: Option[Long],
     required: StructType, pushed: Array[Filter], ignoreChanges: Boolean,
     startingVersion: Option[String] = None,
     maxFilesPerTrigger: Option[Int] = None,
-    maxBytesPerTrigger: Option[Long] = None)
+    maxBytesPerTrigger: Option[Long] = None,
+    pinned: Option[Seq[String]] = None)
   extends Scan with Batch with SupportsReportStatistics {
 
   override def readSchema(): StructType = required
@@ -490,9 +505,24 @@ final class LakeScan(path: String, version: Option[Long],
     * computed ONCE per scan and shared by [[estimateStatistics]] (the
     * optimizer may ask before execution) and [[planInputPartitions]] —
     * the estimate and the actual scan always agree on the footprint. */
-  private lazy val prunedEntries: Seq[(String, Option[String])] = {
+  private lazy val prunedEntries: Seq[(String, Option[String])] =
+    pinned match {
+      case Some(files) =>
+        val stats = snapshot.fold(Map.empty[String, Option[String]])(v =>
+          Versioned.manifestEntries(SparkSession.active, path, v).toMap)
+        files.map(f => f -> stats.getOrElse(f, None))
+      case None => manifestPruned(snapshot.get)
+    }
+
+  /** The version the scan reads, resolved ONCE: the file list and the
+    * deletion vector always come from the same snapshot. None only for
+    * staged files pinned without a version. */
+  private lazy val snapshot: Option[Long] =
+    if (pinned.isDefined) version
+    else Some(Versioned.resolveVersion(SparkSession.active, path, version))
+
+  private def manifestPruned(v: Long): Seq[(String, Option[String])] = {
     val spark = SparkSession.active
-    val v = Versioned.resolveVersion(spark, path, version)
     // interval skipping over the cached manifest entries (driver)
     val ranges = pushed.toSeq.flatMap {
       case EqualTo(c, x: Number) =>
@@ -537,16 +567,17 @@ final class LakeScan(path: String, version: Option[Long],
 
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
-    val v = Versioned.resolveVersion(spark, path, version)
     val files = prunedEntries.map(_._1)
     // the files_read/files_total receipt counter reflects EXECUTION
     // order: set here (partition planning), not inside the lazy
     // pruning — estimateStatistics may evaluate the lazy val at
     // OPTIMIZATION time, and in a plan with several lake scans the
-    // optimizer's traversal order is not the execution order
-    LakeSource.lastPlanned.set((files.length, totalEntryCount))
-    val dv = Versioned.deletionVectorRows(spark, path, Some(v))
-      .getOrElse(Map.empty)
+    // optimizer's traversal order is not the execution order. Pinned
+    // scans prune nothing and leave it alone.
+    if (pinned.isEmpty)
+      LakeSource.lastPlanned.set((files.length, totalEntryCount))
+    val dv = snapshot.flatMap(v =>
+      Versioned.deletionVectorRows(spark, path, Some(v))).getOrElse(Map.empty)
     files.map(f => LakeInputPartition(f,
       dv.getOrElse(Versioned.fileKeyOf(f), Array.empty))
       .asInstanceOf[InputPartition]).toArray

@@ -74,11 +74,14 @@ object Events {
     * store per shuffle partition, and store setup/commit dominates the
     * fixed cost of a short query. State cardinality here is bounded by
     * keys (event types, windows, active users) — NOT by event volume —
-    * so the stream runs with its own (small) partition count instead of
-    * inheriting the batch shuffle width; tune `graft.streaming
-    * .statePartitions` upward when the keyspace is genuinely huge. The
-    * batch conf is restored before returning (results are partition-
-    * count-independent: decimal-exact aggs, per-key state). */
+    * so the stream runs with its own small partition count
+    * ([[statePartitions]]) instead of inheriting the batch shuffle
+    * width. The batch conf is restored before returning (results are
+    * partition-count-independent: decimal-exact aggs, per-key state). */
+  /** State stores per streaming run: the keyspaces here are bounded,
+    * so the store count is a fixed cost sized to them. */
+  private val statePartitions = 4
+
   def runToCompletion(spark: SparkSession, agg: DataFrame,
                       mode: String = "complete",
                       wideState: Boolean = false,
@@ -91,18 +94,8 @@ object Events {
     // setup + per-batch commit — for RocksDB that's a native instance
     // and a changelog each. The keyspaces here are bounded (event
     // types, active users), so the store count is a pure fixed cost:
-    // size it to the keyspace, not to the batch shuffle width. On a
-    // real cluster the same knob spreads stores across executors.
-    // wide (row-per-event) state gets its own knob: its store count
-    // should track STATE VOLUME, not just key count — concentrating a
-    // large keyspace's RocksDB state into the narrow default regresses
-    // memory/parallelism on a real cluster, where this is sized to
-    // executors × cores
-    spark.conf.set("spark.sql.shuffle.partitions",
-      if (wideState)
-        spark.conf.get("graft.streaming.wideStatePartitions",
-          spark.conf.get("graft.streaming.statePartitions", "4"))
-      else spark.conf.get("graft.streaming.statePartitions", "4"))
+    // size it to the keyspace, not to the batch shuffle width.
+    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
     // a no-data batch exists to advance the watermark: fire event-time
     // timers and evict expired state. Queries whose RESULT doesn't
     // depend on timers (pure aggregations, dedup counts) skip it — the
@@ -312,8 +305,7 @@ object Events {
     * (no timers needed for completeness on a bounded replay). Join
     * state is only the filtered clicks/errors inside the watermark
     * horizon — small-pool partitions measured 1.6× faster than wide
-    * RocksDB here; raise statePartitions if the filtered streams are
-    * genuinely huge. */
+    * RocksDB here. */
   def clickErrorPairs(spark: SparkSession, sfDir: String): DataFrame = {
     val base = readStream(spark, sfDir)
     val clicks = base.filter(col("event_type") === "click")

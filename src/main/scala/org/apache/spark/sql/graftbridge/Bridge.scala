@@ -32,4 +32,13 @@ object Bridge {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.logical
+
+  /** Logical plan → DataFrame (`Dataset.ofRows`, private[sql]): how a
+    * library turns a relation it built — a DSv2 scan over its own
+    * table — into a frame without a reader option round-trip. */
+  def ofRows(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }

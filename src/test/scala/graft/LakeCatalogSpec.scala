@@ -150,6 +150,20 @@ class LakeCatalogSpec extends SparkSuite {
       s"SELECT version, operation FROM lake.`$dir$$history` ORDER BY 1")
       .as[(Long, String)].collect().toSeq
     assert(hist == Seq((1L, "INIT"), (2L, "MERGE")))
+    // a segmented manifest lists the files its segments reference,
+    // never the `seg:` refs themselves
+    val seg = tmp("graft_cat5s")
+    spark.conf.set("graft.lake.manifestInlineRows", "2")
+    try {
+      Versioned.init(Seq((1L, 10.0)).toDF("k", "p").coalesce(1), seg)
+      (2 to 5).foreach(i => Versioned.append(
+        Seq((i.toLong, i * 10.0)).toDF("k", "p").coalesce(1), seg))
+      assert(Versioned.manifestShape(spark, seg)._2 >= 1L)
+      val segFiles = spark.sql(s"SELECT f FROM lake.`$seg$$files`")
+        .as[String].collect().toSeq
+      assert(segFiles.sorted == Versioned.files(spark, seg).sorted)
+      assert(segFiles.length == 5 && !segFiles.exists(_.startsWith("seg:")))
+    } finally spark.conf.unset("graft.lake.manifestInlineRows")
   }
 
   test("root-configured catalog resolves namespace identifiers and " +

@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.graftspec.Bus
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
@@ -60,6 +62,57 @@ class LakeMetadataSpec extends SparkSuite {
       val expected = (20L to 60L).filter(_ % 7 != 3).map(k => (k, k * 3)).toSet
       assert(kn(q) == expected)
     } finally rm(dir)
+  }
+
+  test("Versioned reads plan through the connector: a BatchScanExec, " +
+      "no file-source scan, and no Spark job while planning") {
+    val dir = tmp()
+    try {
+      initTable(dir)
+      Versioned.deleteVectored(spark, dir, col("k") % 7 === 3)
+      val frames = Seq(
+        "read" -> Versioned.read(spark, dir),
+        "read v1" -> Versioned.read(spark, dir, Some(1L)),
+        "readRange" -> Versioned.readRange(spark, dir, "k", 20, 60).df)
+      val aqe = new AdaptiveSparkPlanHelper {}
+      frames.foreach { case (what, df) =>
+        val (plan, jobs) = jobsDuring {
+          val p = df.queryExecution.executedPlan
+          aqe.collect(p) { case b: BatchScanExec => b }.foreach(_.inputPartitions)
+          p
+        }
+        assert(jobs.isEmpty, s"$what: planning started Spark jobs: $jobs")
+        df.collect()
+        val executed = df.queryExecution.executedPlan
+        assert(aqe.collect(executed) { case b: BatchScanExec => b }.nonEmpty,
+          s"$what: no BatchScanExec in $executed")
+        assert(aqe.collect(executed) { case f: FileSourceScanExec => f }.isEmpty,
+          s"$what: file-source scan in $executed")
+      }
+      val live = (0L until 200L).filter(_ % 7 != 3).map(k => (k, k * 3)).toSet
+      assert(kn(frames(0)._2) == live)
+      assert(kn(frames(1)._2) == (0L until 200L).map(k => (k, k * 3)).toSet)
+      assert(live.filter { case (k, _) => k >= 20 && k <= 60 }
+        .subsetOf(kn(frames(2)._2)))
+    } finally rm(dir)
+  }
+
+  test("a version without a logged schema reads through its files' " +
+      "footer schema on both surfaces") {
+    val dir = tmp(); val copy = tmp()
+    try {
+      Versioned.init(spark.range(0, 40).selectExpr("id AS k", "id * 3 AS n",
+        "CAST(id % 2 AS STRING) AS g"), dir, partitionCol = Some("g"))
+      rm(copy)
+      copyTable(dir, copy)
+      rm(s"$copy/_versions/v1.schema")
+      assert(Versioned.tableSchema(spark, copy).isEmpty)
+      val all = (0L until 40L).map(k => (k, k * 3)).toSet
+      assert(kn(Versioned.read(spark, copy)) == all)
+      assert(kn(spark.sql(s"SELECT k, n FROM lake.`$copy`")) == all)
+      assert(Versioned.read(spark, copy).filter(col("g") === "1")
+        .select("k").as[Long].collect().toSet == (1L until 40L by 2).toSet)
+    } finally rm(dir, copy)
   }
 
   test("a vectored delete runs one scan job and writes its vector " +

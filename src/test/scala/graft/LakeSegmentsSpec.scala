@@ -167,17 +167,16 @@ class LakeSegmentsSpec extends SparkSuite {
         // keepLast=1 drops every segmented version: segments GC'd.
         // Unreferenced segments younger than the grace window survive
         // (in-flight-writer guard) — first prove the guard holds, then
-        // zero the grace and prove the GC fires.
+        // age them past the grace and prove the GC fires.
         Versioned.vacuum(spark, t, keepLast = 1)
         assert(f.exists(segsP) && f.listStatus(segsP).nonEmpty,
           "young unreferenced segments must survive the grace window " +
             "(an in-flight append may be about to commit them)")
-        spark.conf.set("graft.lake.vacuumSegGraceMs", "0")
-        try {
-          Versioned.vacuum(spark, t, keepLast = 1)
-          assert(!f.exists(segsP) || f.listStatus(segsP).isEmpty,
-            "no retained version references a segment — all GC'd")
-        } finally spark.conf.unset("graft.lake.vacuumSegGraceMs")
+        val aged = System.currentTimeMillis() - Versioned.segGraceMs - 1000L
+        f.listStatus(segsP).foreach(s => f.setTimes(s.getPath, aged, -1L))
+        Versioned.vacuum(spark, t, keepLast = 1)
+        assert(!f.exists(segsP) || f.listStatus(segsP).isEmpty,
+          "no retained version references a segment — all GC'd")
         assert(sumK(Versioned.read(spark, t)) == sumK(slice(0, 1800)))
       } finally rm(t)
     }

@@ -9,6 +9,7 @@ import scala.jdk.CollectionConverters._
   * temp directories only in Scratch.scala, the lake connector
   * encodes data files only through Spark's own parquet format,
   * deletion vectors are read only through the driver-rows accessor,
+  * `Versioned` reads data files only through the connector's scan,
   * and lake commits retry only through one optimistic-commit loop. */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
 
@@ -50,6 +51,14 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
       .filter(_.startsWith("graft/sources/"))
     assert(viaFrame.isEmpty,
       s"connector files reading a vector as a DataFrame: $viaFrame")
+  }
+
+  test("one lake read path: Versioned reads only through the connector") {
+    val src = Files.readString(main.resolve("graft/ops/Versioned.scala"))
+    assert(!src.contains("spark.read"),
+      "Versioned.scala must read data files through the connector's scan")
+    assert(!src.contains("_metadata"),
+      "row identity comes from the connector's row-id columns")
   }
 
   test("one commit loop: no retry count, and commit( is called only by " +
