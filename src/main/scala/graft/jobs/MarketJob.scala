@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, Row, SparkSession}
 
 import graft.io.Csv
 import graft.ops.{MarketPipeline, Validation}
@@ -16,20 +16,30 @@ import graft.ops.{MarketPipeline, Validation}
   * and `<output_root>/<job_id>/average_daily_return` as single-part
   * header CSVs (ref `controller/script.py:52-65`), exit code -1 on any
   * failure (ref `controller/script.py:29-31,48-50,63-65`). Differences
-  * by design: in-process session (no spark-submit hop), the returns
-  * lineage is cached instead of recomputed for the average (ref wart,
-  * SURVEY.md §4.3), and validation reports all errors.
+  * by design: in-process session (no spark-submit hop), the average is
+  * observed on the `daily_returns` write instead of recomputing the
+  * returns lineage (ref wart, SURVEY.md §4.3) — nothing is cached — and
+  * validation reports all errors.
   */
 object MarketJob {
 
   def run(spark: SparkSession, initialDate: String, finalDate: String,
           jobId: String, datasetPath: String, outputRoot: String): Unit = {
     val market = Csv.readInferred(spark, datasetPath)
-    val (returns, average) = MarketPipeline.run(market, initialDate, finalDate)
-    try {
-      Csv.writeSingle(returns, s"$outputRoot/$jobId/daily_returns")
-      Csv.writeSingle(average, s"$outputRoot/$jobId/average_daily_return")
-    } finally returns.unpersist() // a long-lived server runs many jobs
+    val assets = MarketPipeline.assetColumns(market)
+    val returns = MarketPipeline.dailyReturns(market, initialDate, finalDate)
+    // the averages ride the returns write: the window output is one
+    // partition, so the observed avg folds the rows in the same order as
+    // averageDailyReturn's aggregate and gives the same doubles
+    val averages = MarketPipeline.averageColumns(assets)
+    val observed = Observation()
+    Csv.writeSingle(returns.observe(observed, averages.head, averages.tail: _*),
+      s"$outputRoot/$jobId/daily_returns")
+    val schema = MarketPipeline.averageDailyReturn(returns, assets).schema
+    val values = observed.get
+    val row = Row.fromSeq(schema.fieldNames.toSeq.map(values))
+    Csv.writeSingle(spark.createDataFrame(java.util.List.of(row), schema),
+      s"$outputRoot/$jobId/average_daily_return")
   }
 
   def main(args: Array[String]): Unit = {

@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -45,9 +47,9 @@ object AsOf {
       base.orderBy(col(timeCol).asc, col(marker).asc)
         .rowsBetween(Window.unboundedPreceding, 0)
     }
-    val carried = valueCols.foldLeft(q.unionByName(t)) { (df, c) =>
-      df.withColumn(c, last(col(c), ignoreNulls = true).over(w))
-    }
+    // one projection: each value column replaced in place
+    val carried = q.unionByName(t).withColumns(ListMap(valueCols.map(c =>
+      c -> last(col(c), ignoreNulls = true).over(w)): _*))
     carried.filter(col(marker) === lit(1)).drop(marker)
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** End-to-end parity with the reference's Spark job
@@ -25,22 +25,28 @@ object MarketPipeline {
                    dateCol: String = "Date"): DataFrame =
     Returns.dailyReturnsWide(df, dateCol, assetColumns(df, dateCol), from, to)
 
-  /** `average_daily_return` output (ref `controller/script.py:92-100`):
-    * one row, `Media_<asset sans '&'>_Retorno` per asset; avg skips NULLs. */
-  def averageDailyReturn(returns: DataFrame, assets: Seq[String]): DataFrame = {
-    val cols = assets.map { a =>
+  /** The `average_daily_return` aggregates: `Media_<asset sans '&'>_Retorno`
+    * per asset; avg skips NULLs. */
+  def averageColumns(assets: Seq[String]): Seq[Column] =
+    assets.map { a =>
       avg(col(s"${a}_Retorno")).as(s"Media_${a.replace("&", "")}_Retorno")
     }
+
+  /** `average_daily_return` output (ref `controller/script.py:92-100`):
+    * one row of [[averageColumns]]. */
+  def averageDailyReturn(returns: DataFrame, assets: Seq[String]): DataFrame = {
+    val cols = averageColumns(assets)
     returns.agg(cols.head, cols.tail: _*)
   }
 
-  /** Full job: returns frame + 1-row average frame. */
+  /** Full job: returns frame + 1-row average frame. Like the reference
+    * (ref `controller/script.py:90-100`), the average recomputes the
+    * returns lineage: nothing is cached, so a long-lived session keeps
+    * no frame behind. [[graft.jobs.MarketJob]] observes the average on
+    * the returns write instead of recomputing it. */
   def run(market: DataFrame, from: String, to: String,
           dateCol: String = "Date"): (DataFrame, DataFrame) = {
-    val assets = assetColumns(market, dateCol)
-    // Reference recomputes the returns lineage for the average (no cache,
-    // ref `controller/script.py:90-100`); we cache — same results, one pass.
-    val rets = dailyReturns(market, from, to, dateCol).cache()
-    (rets, averageDailyReturn(rets, assets))
+    val rets = dailyReturns(market, from, to, dateCol)
+    (rets, averageDailyReturn(rets, assetColumns(market, dateCol)))
   }
 }

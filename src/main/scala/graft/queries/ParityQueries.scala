@@ -30,7 +30,7 @@ object ParityQueries {
       .agg(Q.dsum(Q.revenue))
 
   def marketReturns(spark: SparkSession, dir: String): DataFrame = {
-    val (rets, _) = MarketPipeline.run(wideMarket(spark, dir),
+    val rets = MarketPipeline.dailyReturns(wideMarket(spark, dir),
       CoreQueries.from, CoreQueries.to, dateCol = "day")
     val retCols = flags.map(f => round(col(s"${f}_Retorno"), 6).as(s"${f}_Retorno"))
     rets.select(col("day") +: flags.map(col) ++: retCols: _*).orderBy("day")

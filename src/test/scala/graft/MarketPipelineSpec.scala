@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import graft.io.Csv
 import graft.ops.MarketPipeline
 
@@ -19,17 +19,20 @@ class MarketPipelineSpec extends SparkSuite {
       |2024-09-18,5.46,5618.26
       |""".stripMargin
 
-  private lazy val market = {
-    val dir = Files.createTempDirectory("market").toFile
-    val f = new java.io.File(dir, "market_data.csv")
-    Files.writeString(f.toPath, fixture)
-    Csv.readInferred(spark, f.getAbsolutePath)
-  }
+  /** A test over the fixture, read from a directory removed after it. */
+  private def marketTest(name: String)(body: DataFrame => Unit): Unit =
+    test(name) {
+      Scratch.withDir("market") { dir =>
+        val f = new java.io.File(dir, "market_data.csv")
+        Files.writeString(f.toPath, fixture)
+        body(Csv.readInferred(spark, f.getAbsolutePath))
+      }
+    }
 
   private def d(r: Row, c: String): Option[Double] =
     if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getAs[Double](c))
 
-  test("daily returns preserve reference semantics") {
+  marketTest("daily returns preserve reference semantics") { market =>
     val (rets, _) = MarketPipeline.run(market, "2024-09-13", "2024-09-18")
     assert(rets.columns.toSeq ==
       Seq("Date", "DOLAR", "S&P500", "DOLAR_Retorno", "S&P500_Retorno"))
@@ -47,7 +50,7 @@ class MarketPipelineSpec extends SparkSuite {
     assert(d(rows(3), "DOLAR_Retorno").isEmpty)
   }
 
-  test("average output has reference names (& dropped) and skips NULLs") {
+  marketTest("average output has reference names (& dropped) and skips NULLs") { market =>
     val (_, avg) = MarketPipeline.run(market, "2024-09-13", "2024-09-18")
     assert(avg.columns.toSeq == Seq("Media_DOLAR_Retorno", "Media_SP500_Retorno"))
     val r = avg.first()
@@ -58,20 +61,30 @@ class MarketPipelineSpec extends SparkSuite {
     assert(math.abs(r.getAs[Double]("Media_SP500_Retorno") - sp.sum / 3) < 1e-9)
   }
 
-  test("range filter is inclusive on both bounds") {
+  marketTest("range filter is inclusive on both bounds") { market =>
     val (rets, _) = MarketPipeline.run(market, "2024-09-16", "2024-09-17")
     val days = rets.orderBy("Date").collect().map(_.get(0).toString)
     assert(days.toSeq == Seq("2024-09-16", "2024-09-17"))
   }
 
-  test("single-file CSV sink writes exactly one part file with header") {
-    val out = Files.createTempDirectory("csvout").toString + "/daily_returns"
-    val (rets, _) = MarketPipeline.run(market, "2024-09-13", "2024-09-18")
-    Csv.writeSingle(rets, out)
-    val parts = new java.io.File(out).listFiles()
-      .filter(f => f.getName.startsWith("part") && f.getName.endsWith(".csv"))
-    assert(parts.length == 1) // ref controller requires exactly one (app.py:479-480)
-    val header = scala.io.Source.fromFile(parts.head).getLines().next()
-    assert(header == "Date,DOLAR,S&P500,DOLAR_Retorno,S&P500_Retorno")
+  marketTest("single-file CSV sink writes exactly one part file with header") { market =>
+    Scratch.withDir("csvout") { dir =>
+      val out = s"$dir/daily_returns"
+      val (rets, _) = MarketPipeline.run(market, "2024-09-13", "2024-09-18")
+      Csv.writeSingle(rets, out)
+      val parts = new java.io.File(out).listFiles()
+        .filter(f => f.getName.startsWith("part") && f.getName.endsWith(".csv"))
+      assert(parts.length == 1) // ref controller requires exactly one (app.py:479-480)
+      val header = scala.io.Source.fromFile(parts.head).getLines().next()
+      assert(header == "Date,DOLAR,S&P500,DOLAR_Retorno,S&P500_Retorno")
+    }
+  }
+
+  test("the parity rows leave no cached relation behind") {
+    spark.catalog.clearCache()
+    Seq("q_market_wide_returns", "q_market_avg_return").foreach { q =>
+      assert(SparkEntry.queries(q)(spark, sf("sf0.001")).collect().nonEmpty)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 }

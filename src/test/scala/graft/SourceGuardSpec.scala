@@ -10,7 +10,8 @@ import scala.jdk.CollectionConverters._
   * encodes data files only through Spark's own parquet format,
   * deletion vectors are read only through the driver-rows accessor,
   * `Versioned` reads data files only through the connector's scan,
-  * and lake commits retry only through one optimistic-commit loop. */
+  * lake commits retry only through one optimistic-commit loop, and the
+  * report path (returns, pipeline, jobs) caches no frame. */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private val main = Paths.get("src/main/scala")
@@ -59,6 +60,14 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
       "Versioned.scala must read data files through the connector's scan")
     assert(!src.contains("_metadata"),
       "row identity comes from the connector's row-id columns")
+  }
+
+  test("the report path caches nothing: no .cache() or .persist( in " +
+      "Returns, MarketPipeline or jobs/") {
+    val report = Seq("graft/ops/Returns.scala", "graft/ops/MarketPipeline.scala")
+    val caching = (holders(".cache()") ++ holders(".persist("))
+      .filter(f => report.contains(f) || f.startsWith("graft/jobs/")).distinct
+    assert(caching.isEmpty, s"report-path files that cache: $caching")
   }
 
   test("one commit loop: no retry count, and commit( is called only by " +
