@@ -118,12 +118,7 @@ object Wave25Queries {
     Scratch.withDir("graft_vacuum") { dir =>
       val (_, v3) = buildLake(s, d, dir)
       val deleted = Versioned.vacuum(s, dir, keepLast = 1)
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val nManifests = fs.listStatus(
-          new org.apache.hadoop.fs.Path(dir, "_versions"))
-        .map(_.getPath.getName)
-        .count(n => n.startsWith("v") && n.endsWith(".manifest"))
+      val nManifests = Versioned.versions(s, dir).size
       val v1Gone =
         try { Versioned.files(s, dir, Some(1L)); false }
         catch { case _: java.io.FileNotFoundException => true }

@@ -173,10 +173,12 @@ class LakeCatalog extends TableCatalog with ProcedureCatalog {
           (r +: namespace).mkString("/"))
         val fs = dir.getFileSystem(
           spark.sparkContext.hadoopConfiguration)
+        // a directory is a table once it holds a committed version: a
+        // failed init leaves a log with none, which no read could load
         if (!fs.exists(dir)) Array.empty
         else fs.listStatus(dir)
-          .filter(s => s.isDirectory && fs.exists(
-            new org.apache.hadoop.fs.Path(s.getPath, "_versions")))
+          .filter(s => s.isDirectory &&
+            Versioned.currentVersion(spark, s.getPath.toString).isDefined)
           .map(s => Identifier.of(namespace, s.getPath.getName))
     }
 

@@ -12,7 +12,7 @@ import graft.multimodal.{Codecs, Multimodal}
 class BinaryIngestSpec extends SparkSuite {
 
   test("binaryFile source ingests media files through the decoders") {
-    val dir = Files.createTempDirectory("media").toString
+    val dir = tmp("media")
     val wav = Codecs.encodeWavPcm16(8000,
       Array.tabulate(800)(i => (3000 * math.sin(i / 10.0)).toShort))
     val ppm = Codecs.encodePpm(3, 3, Array.fill(27)(50.toByte))
@@ -39,7 +39,7 @@ class BinaryIngestSpec extends SparkSuite {
   }
 
   test("pathGlobFilter narrows the binary scan to one media type") {
-    val dir = Files.createTempDirectory("media2").toString
+    val dir = tmp("media2")
     Files.write(Paths.get(dir, "x.wav"), Codecs.encodeWavPcm16(8000, Array[Short](1, 2)))
     Files.writeString(Paths.get(dir, "y.txt"), "noise")
     val only = spark.read.format("binaryFile")

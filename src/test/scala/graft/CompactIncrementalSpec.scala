@@ -13,15 +13,7 @@ class CompactIncrementalSpec extends SparkSuite {
 
   private val d = sf("sf0.001")
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).resolve("t").toString
-
-  private def rm(dirs: String*): Unit = dirs.foreach { d0 =>
-    val p = new org.apache.hadoop.fs.Path(
-      new java.io.File(d0).getParent)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(p, true)
-  }
+  private def table(prefix: String): String = s"${tmp(prefix)}/t"
 
   private def slice(lo: Long, hi: Long) = Tables.load(spark, d, "orders")
     .filter(col("o_orderkey") >= lo && col("o_orderkey") < hi)
@@ -32,7 +24,7 @@ class CompactIncrementalSpec extends SparkSuite {
 
   test("no base -> one full clustered rewrite seeds the provenance; " +
       "then only new files lay out, the clustered bulk carries") {
-    val t = tmp("graft_ci1")
+    val t = table("graft_ci1")
     try {
       Versioned.init(slice(0, 1200).repartition(6), t,
         statsCols = Seq("k"))
@@ -69,7 +61,7 @@ class CompactIncrementalSpec extends SparkSuite {
   test("a vacuumed base falls back to one full rewrite; the SQL " +
       "procedure routes both modes") {
     spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-    val t = tmp("graft_ci2")
+    val t = table("graft_ci2")
     try {
       Versioned.init(slice(0, 1200).repartition(4), t,
         statsCols = Seq("k"))

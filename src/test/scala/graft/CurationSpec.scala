@@ -66,7 +66,7 @@ class CurationSpec extends SparkSuite {
 
   test("materialize writes the kept documents partitioned by source and round-trips") {
     val docs = Tables.load(spark, sf("sf0.001"), "documents")
-    val out = java.nio.file.Files.createTempDirectory("curated").toString
+    val out = tmp("curated")
     Curation.materialize(docs, out, threshold)
 
     // the write is REALLY partitioned by source (hive-style dirs)

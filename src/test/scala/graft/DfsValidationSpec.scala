@@ -9,7 +9,7 @@ class DfsValidationSpec extends SparkSuite {
   import spark.implicits._
 
   test("Dfs put/exists/get/delete roundtrip (FileSystem API, no subprocess)") {
-    val dir = Files.createTempDirectory("dfs").toString
+    val dir = tmp("dfs")
     val src = s"$dir/src.txt"
     Files.writeString(java.nio.file.Paths.get(src), "hello")
     val dest = s"$dir/nested/deep/dest.txt"
@@ -25,7 +25,7 @@ class DfsValidationSpec extends SparkSuite {
   }
 
   test("flattenSinglePart moves the lone part file and removes the dir (ref K2)") {
-    val dir = Files.createTempDirectory("flat").toString
+    val dir = tmp("flat")
     val sink = s"$dir/daily_returns_sink"
     Csv.writeSingle(Tables.load(spark, sf("sf0.001"), "region"), sink)
     val dest = s"$dir/daily_returns.csv"
@@ -38,7 +38,7 @@ class DfsValidationSpec extends SparkSuite {
   }
 
   test("flattenSinglePart refuses multi-part sinks (ref app.py:479-480)") {
-    val dir = Files.createTempDirectory("flat2").toString
+    val dir = tmp("flat2")
     val sink = s"$dir/multi"
     Csv.write(Tables.load(spark, sf("sf0.001"), "lineitem").repartition(3), sink)
     intercept[IllegalArgumentException] {

@@ -89,25 +89,27 @@ class EmailSpec extends AnyFunSuite {
 
   test("sendReport: env contract, attachment skip-if-missing, error on no creds") {
     val stub = new LoopbackSmtp
-    val tmp = Files.createTempDirectory("email")
-    val csv = tmp.resolve("out.csv")
-    Files.write(csv, "a,b\n".getBytes)
-    val env = Map(
-      "GRAFT_SMTP_SERVER" -> "127.0.0.1",
-      "GRAFT_SMTP_PORT" -> stub.port.toString,
-      "GRAFT_SMTP_EMAIL" -> "r@x.com",
-      "GRAFT_SMTP_PASSWORD" -> "pw",
-      "GRAFT_SMTP_PLAINTEXT" -> "1")
-    Email.sendReport("S", "<p>b</p>", "u@y.com",
-      Seq(csv, tmp.resolve("missing.pdf")), env.get)
-    stub.thread.join(5000)
-    assert(stub.dataLines.exists(_.contains("name=\"out.csv\"")))
-    assert(!stub.dataLines.exists(_.contains("missing.pdf")), "missing file skipped")
+    Scratch.withDir("email") { dir =>
+      val tmp = java.nio.file.Paths.get(dir)
+      val csv = tmp.resolve("out.csv")
+      Files.write(csv, "a,b\n".getBytes)
+      val env = Map(
+        "GRAFT_SMTP_SERVER" -> "127.0.0.1",
+        "GRAFT_SMTP_PORT" -> stub.port.toString,
+        "GRAFT_SMTP_EMAIL" -> "r@x.com",
+        "GRAFT_SMTP_PASSWORD" -> "pw",
+        "GRAFT_SMTP_PLAINTEXT" -> "1")
+      Email.sendReport("S", "<p>b</p>", "u@y.com",
+        Seq(csv, tmp.resolve("missing.pdf")), env.get)
+      stub.thread.join(5000)
+      assert(stub.dataLines.exists(_.contains("name=\"out.csv\"")))
+      assert(!stub.dataLines.exists(_.contains("missing.pdf")), "missing file skipped")
 
-    val noCreds = intercept[RuntimeException] {
-      Email.sendReport("S", "b", "u@y.com", Nil,
-        Map("GRAFT_SMTP_SERVER" -> "127.0.0.1").get)
+      val noCreds = intercept[RuntimeException] {
+        Email.sendReport("S", "b", "u@y.com", Nil,
+          Map("GRAFT_SMTP_SERVER" -> "127.0.0.1").get)
+      }
+      assert(noCreds.getMessage.contains("email/password"))
     }
-    assert(noCreds.getMessage.contains("email/password"))
   }
 }

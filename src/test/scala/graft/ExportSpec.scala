@@ -21,7 +21,7 @@ class ExportSpec extends SparkSuite {
 
   test("round trip: written shards re-read to the exact input manifest") {
     val docs = graft.io.Tables.load(spark, sf("sf0.001"), "documents")
-    val dir = Files.createTempDirectory("graft_export").toString
+    val dir = tmp("graft_export")
     val shardManifest = Export.writeJsonlShards(docs, dir, targetBytes = 4096L)
       .collect()
     assert(shardManifest.nonEmpty)
@@ -42,7 +42,7 @@ class ExportSpec extends SparkSuite {
 
   test("one gzip jsonl file per shard directory; size target respected") {
     val docs = graft.io.Tables.load(spark, sf("sf0.001"), "documents")
-    val dir = Files.createTempDirectory("graft_export2").toString
+    val dir = tmp("graft_export2")
     val target = 4096L
     val m = Export.writeJsonlShards(docs, dir, targetBytes = target).collect()
     assert(m.map(r => (r.getString(0), r.getLong(1))).distinct.length == m.length)

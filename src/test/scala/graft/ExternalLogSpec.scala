@@ -16,7 +16,7 @@ class ExternalLogSpec extends SparkSuite {
   import spark.implicits._
 
   private def freshTable(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_extspec").toString
+    val dir = tmp("graft_extspec")
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$dir/d0")
     Seq((3L, "c")).toDF("id", "v").write.parquet(s"$dir/d1")
     Seq((10L, "x")).toDF("id", "v").write.parquet(s"$dir/d2")
@@ -61,7 +61,7 @@ class ExternalLogSpec extends SparkSuite {
   }
 
   test("additive schema evolution: old files read NULL for later columns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_evospec").toString
+    val dir = tmp("graft_evospec")
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$dir/d0")
     Seq((3L, "c", 30L)).toDF("id", "v", "extra").write.parquet(s"$dir/d1")
     ExternalLog.commit(spark, dir, 0L, adds = Seq("d0"))
@@ -80,7 +80,7 @@ class ExternalLogSpec extends SparkSuite {
   test("export: a Versioned table's history round-trips through the " +
       "log, version for version, with zero data copy") {
     import graft.ops.Versioned
-    val dir = java.nio.file.Files.createTempDirectory("graft_export").toString
+    val dir = tmp("graft_export")
     Versioned.init(Seq((1L, "a"), (2L, "b")).toDF("id", "v")
       .repartition(2), dir)
     Versioned.merge(Seq((2L, "B"), (3L, "c")).toDF("id", "v"), dir, Seq("id"))
@@ -106,7 +106,7 @@ class ExternalLogSpec extends SparkSuite {
   test("export skips inexpressible deletion-vector versions and " +
       "publishes the materializing compact against the last export") {
     import graft.ops.Versioned
-    val dir = java.nio.file.Files.createTempDirectory("graft_exdv").toString
+    val dir = tmp("graft_exdv")
     Versioned.init(Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1), dir)
     Versioned.deleteVectored(spark, dir, col("id") === 1L)
     // current version carries a vector: only the pre-vector history

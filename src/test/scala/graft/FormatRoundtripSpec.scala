@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Row}
 
 /** The format-matrix round trip on a HOSTILE frame — embedded
@@ -34,19 +32,19 @@ class FormatRoundtripSpec extends SparkSuite {
   private val expected = rows(hostile)
 
   test("ORC round trip is exact") {
-    val dir = Files.createTempDirectory("graft_fmt").toString + "/orc"
+    val dir = tmp("graft_fmt") + "/orc"
     hostile.write.orc(dir)
     assert(rows(spark.read.orc(dir)) == expected)
   }
 
   test("JSON round trip is exact with explicit schema") {
-    val dir = Files.createTempDirectory("graft_fmt").toString + "/json"
+    val dir = tmp("graft_fmt") + "/json"
     hostile.write.json(dir)
     assert(rows(spark.read.schema(hostile.schema).json(dir)) == expected)
   }
 
   test("CSV round trip is exact with the loss-free write+read dial pinned") {
-    val dir = Files.createTempDirectory("graft_fmt").toString + "/csv"
+    val dir = tmp("graft_fmt") + "/csv"
     // the three WRITE-side traps: default escape is \ (not RFC "");
     // the writer TRIMS leading/trailing whitespace by default; ''
     // is written unquoted and reads back as NULL
@@ -64,7 +62,7 @@ class FormatRoundtripSpec extends SparkSuite {
   }
 
   test("CSV WITHOUT the escape pin corrupts quoted rows (the trap is real)") {
-    val dir = Files.createTempDirectory("graft_fmt").toString + "/csv_bad"
+    val dir = tmp("graft_fmt") + "/csv_bad"
     hostile.write.option("header", "true").csv(dir) // default escape is \
     val back = spark.read.option("header", "true").option("escape", "\"")
       .option("multiLine", "true").schema(hostile.schema).csv(dir)

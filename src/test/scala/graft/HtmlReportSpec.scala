@@ -9,7 +9,7 @@ import graft.report.HtmlReport
 class HtmlReportSpec extends SparkSuite {
 
   test("emailReport: run → report → delivered message carries index body + chart attachments") {
-    val out = Files.createTempDirectory("graft-email-report").toString
+    val out = tmp("graft-email-report")
     val stub = new LoopbackSmtp
     val env = Map(
       "GRAFT_SMTP_SERVER" -> "127.0.0.1",
@@ -35,7 +35,7 @@ class HtmlReportSpec extends SparkSuite {
   }
 
   test("writeReport emits index + one chart per asset with real content") {
-    val out = Files.createTempDirectory("graft-report").toString
+    val out = tmp("graft-report")
     val files = HtmlReport.writeReport(spark, sf("sf0.001"), out)
     assert(files.nonEmpty && files.forall(Files.exists(_)))
 
@@ -52,7 +52,7 @@ class HtmlReportSpec extends SparkSuite {
 
   test("saveGraph enforces the reference contract (missing column, empty frame)") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft-report").toString
+    val out = tmp("graft-report")
     val df = Seq(("2024-01-01", 1.0), ("2024-01-02", -0.5)).toDF("day", "ret")
 
     val p = HtmlReport.saveGraph(df, "day", "ret", "t", "t.html", out)

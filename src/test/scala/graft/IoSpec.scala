@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.io.Tables
 
@@ -10,10 +9,10 @@ import graft.io.Tables
 class IoSpec extends SparkSuite {
 
   private val d = sf("sf0.001")
-  private def tmp(p: String) = Files.createTempDirectory("io").toString + "/" + p
+  private def fresh(p: String) = s"${tmp("io")}/$p"
 
   test("JSON roundtrip preserves rows (schema re-declared on read)") {
-    val out = tmp("orders_json")
+    val out = fresh("orders_json")
     val orders = Tables.load(spark, d, "orders")
       .withColumn("o_orderdate", date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss"))
     orders.write.mode("overwrite").json(out)
@@ -23,7 +22,7 @@ class IoSpec extends SparkSuite {
   }
 
   test("ORC roundtrip preserves rows and schema") {
-    val out = tmp("lineitem_orc")
+    val out = fresh("lineitem_orc")
     val li = Tables.load(spark, d, "lineitem")
     li.write.mode("overwrite").orc(out)
     val back = spark.read.orc(out)
@@ -33,7 +32,7 @@ class IoSpec extends SparkSuite {
   }
 
   test("XML roundtrip preserves rows (Spark 4 built-in source)") {
-    val out = tmp("region_xml")
+    val out = fresh("region_xml")
     val region = Tables.load(spark, d, "region")
     region.write.mode("overwrite")
       .option("rootTag", "regions").option("rowTag", "region").xml(out)
@@ -44,7 +43,7 @@ class IoSpec extends SparkSuite {
   }
 
   test("declared-schema CSV read matches inferred read") {
-    val out = tmp("customer_csv")
+    val out = fresh("customer_csv")
     val c = Tables.load(spark, d, "customer")
     graft.io.Csv.write(c, out)
     val declared = graft.io.Csv.read(spark, out, Tables.customer)

@@ -24,7 +24,7 @@ class JobServerSpec extends SparkSuite {
       .GET().build(), HttpResponse.BodyHandlers.ofString())
 
   private def fixture(): (String, String) = {
-    val dir = Files.createTempDirectory("jobsrv").toString
+    val dir = tmp("jobsrv")
     Files.writeString(java.nio.file.Paths.get(s"$dir/market.csv"),
       """Date,DOLAR,S&P500
         |2024-09-13,5.55,5626.02

@@ -12,22 +12,14 @@ class LakeBranchSpec extends SparkSuite {
 
   private val d = sf("sf0.001")
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).resolve("t").toString
-
-  private def rm(dirs: String*): Unit = dirs.foreach { d0 =>
-    val p = new org.apache.hadoop.fs.Path(
-      new java.io.File(d0).getParent)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(p, true)
-  }
+  private def table(prefix: String): String = s"${tmp(prefix)}/t"
 
   private def base() = Tables.load(spark, d, "orders")
     .select(col("o_orderkey").as("k"), col("o_totalprice").as("p"))
 
   test("branch work is invisible to the source; publish folds the " +
       "head back as one metadata commit") {
-    val (main, br) = (tmp("graft_bs1m"), tmp("graft_bs1b"))
+    val (main, br) = (table("graft_bs1m"), table("graft_bs1b"))
     try {
       Versioned.init(base().repartition(4), main)
       val n0 = Versioned.read(spark, main).count()
@@ -55,8 +47,8 @@ class LakeBranchSpec extends SparkSuite {
 
   test("a stale branch (source moved since the cut) is refused with " +
       "zero effect") {
-    val (main, b1, b2) = (tmp("graft_bs2m"), tmp("graft_bs2a"),
-      tmp("graft_bs2b"))
+    val (main, b1, b2) = (table("graft_bs2m"), table("graft_bs2a"),
+      table("graft_bs2b"))
     try {
       Versioned.init(base().repartition(4), main)
       Versioned.branch(spark, main, b1)
@@ -80,7 +72,7 @@ class LakeBranchSpec extends SparkSuite {
   test("the branch workflow runs through pure SQL (CALL lake.branch " +
       "/ lake.publish)") {
     spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-    val (main, br) = (tmp("graft_bs4m"), tmp("graft_bs4b"))
+    val (main, br) = (table("graft_bs4m"), table("graft_bs4b"))
     try {
       Versioned.init(base().repartition(2), main)
       val cut = spark.sql(
@@ -97,8 +89,8 @@ class LakeBranchSpec extends SparkSuite {
 
   test("racing publishes from sibling branches: exactly one wins, " +
       "the loser has zero effect") {
-    val (main, b1, b2) = (tmp("graft_bs5m"), tmp("graft_bs5a"),
-      tmp("graft_bs5b"))
+    val (main, b1, b2) = (table("graft_bs5m"), table("graft_bs5a"),
+      table("graft_bs5b"))
     try {
       Versioned.init(base().repartition(4), main)
       Seq(b1, b2).foreach(Versioned.branch(spark, main, _))
@@ -134,7 +126,7 @@ class LakeBranchSpec extends SparkSuite {
   test("a zero-copy published branch refuses dropTable while the " +
       "source reads through it; compact + vacuum on the source " +
       "releases it") {
-    val (main, br) = (tmp("graft_bs6m"), tmp("graft_bs6b"))
+    val (main, br) = (table("graft_bs6m"), table("graft_bs6b"))
     try {
       Versioned.init(base().repartition(2), main)
       Versioned.branch(spark, main, br)
@@ -168,7 +160,7 @@ class LakeBranchSpec extends SparkSuite {
 
   test("vacuum on a published branch never deletes files the source " +
       "reads through") {
-    val (main, br) = (tmp("graft_bs7m"), tmp("graft_bs7b"))
+    val (main, br) = (table("graft_bs7m"), table("graft_bs7b"))
     try {
       Versioned.init(base().repartition(2), main)
       Versioned.branch(spark, main, br)
@@ -191,7 +183,7 @@ class LakeBranchSpec extends SparkSuite {
 
   test("publish(localize) copies branch-staged files under the " +
       "source root — the branch directory becomes disposable") {
-    val (main, br) = (tmp("graft_bs8m"), tmp("graft_bs8b"))
+    val (main, br) = (table("graft_bs8m"), table("graft_bs8b"))
     try {
       Versioned.init(base().repartition(2), main)
       Versioned.branch(spark, main, br)
@@ -219,9 +211,8 @@ class LakeBranchSpec extends SparkSuite {
   test("`src@name` SQL addressing reads and writes the branch " +
       "through the source path") {
     spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-    val main = tmp("graft_bs9m")
-    val br = java.nio.file.Files.createTempDirectory("graft_bs9b")
-      .resolve("b1").toString
+    val main = table("graft_bs9m")
+    val br = s"${tmp("graft_bs9b")}/b1"
     try {
       Versioned.init(base().repartition(2), main)
       Versioned.branch(spark, main, br)
@@ -256,7 +247,7 @@ class LakeBranchSpec extends SparkSuite {
 
   test("a branch with no commits refuses publish; a non-branch " +
       "refuses publish") {
-    val (main, br) = (tmp("graft_bs3m"), tmp("graft_bs3b"))
+    val (main, br) = (table("graft_bs3m"), table("graft_bs3b"))
     try {
       Versioned.init(base().repartition(2), main)
       Versioned.branch(spark, main, br)

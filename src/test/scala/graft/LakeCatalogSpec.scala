@@ -9,8 +9,6 @@ import graft.ops.Versioned
 class LakeCatalogSpec extends SparkSuite {
   import spark.implicits._
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
-
   private def withCatalog(): Unit =
     spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
 
@@ -177,6 +175,23 @@ class LakeCatalogSpec extends SparkSuite {
     assert(spark.sql("SELECT count(*) AS n FROM laker.t1")
       .as[Long].head() == 2L)
     assert(spark.sql("SHOW TABLES IN laker").collect()
+      .map(_.getString(1)).toSet == Set("t1"))
+  }
+
+  test("the catalog lists a directory only once it holds a committed " +
+      "version: a failed init is not a table") {
+    val root = tmp("graft_cat5")
+    spark.conf.set("spark.sql.catalog.lakel", "graft.sources.LakeCatalog")
+    spark.conf.set("spark.sql.catalog.lakel.root", root)
+    val rows = Seq((1L, 1.0)).toDF("k", "p")
+    Versioned.init(rows, s"$root/t1")
+    // registers its stats columns, then fails staging: a log, no version
+    intercept[Exception] {
+      Versioned.init(rows, s"$root/t2", partitionCol = Some("nope"),
+        statsCols = Seq("k"))
+    }
+    assert(Versioned.currentVersion(spark, s"$root/t2").isEmpty)
+    assert(spark.sql("SHOW TABLES IN lakel").collect()
       .map(_.getString(1)).toSet == Set("t1"))
   }
 }

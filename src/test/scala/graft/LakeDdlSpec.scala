@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.ops.Versioned
@@ -15,13 +13,6 @@ class LakeDdlSpec extends SparkSuite {
   import spark.implicits._
 
   spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-
-  private def tmp() = Files.createTempDirectory("graft_ddl").toString
-
-  private def rm(dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-  }
 
   test("CREATE TABLE: empty v1, schema visible, INSERT + SELECT round-trip") {
     val root = tmp(); val dir = s"$root/t"
@@ -39,6 +30,21 @@ class LakeDdlSpec extends SparkSuite {
       // time travel still sees the empty created table
       assert(spark.sql(s"SELECT * FROM lake.`$dir` VERSION AS OF 1")
         .count() == 0L)
+    } finally rm(root)
+  }
+
+  test("initHidden on an initialized table is refused before it " +
+      "registers a transform: SQL INSERT still lands") {
+    val root = tmp(); val dir = s"$root/t"
+    try {
+      Versioned.init(Seq((1L, "a")).toDF("k", "v"), dir)
+      intercept[IllegalArgumentException] {
+        Versioned.initHidden(Seq((2L, "b")).toDF("k", "v"), dir, "pmod(k, 4)")
+      }
+      assert(Versioned.hiddenTransform(spark, dir).isEmpty)
+      spark.sql(s"INSERT INTO lake.`$dir` VALUES (3, 'c')")
+      assert(spark.sql(s"SELECT k, v FROM lake.`$dir`").as[(Long, String)]
+        .collect().toSet == Set((1L, "a"), (3L, "c")))
     } finally rm(root)
   }
 

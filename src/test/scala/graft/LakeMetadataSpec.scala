@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.graftspec.Bus
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -23,12 +21,7 @@ class LakeMetadataSpec extends SparkSuite {
 
   spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
 
-  private def tmp() = Files.createTempDirectory("graft_lakemeta").toString
-
   private def hfs = new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def rm(dirs: String*): Unit =
-    dirs.foreach(d => hfs.delete(new Path(d), true))
 
   private def copyTable(src: String, dst: String): Unit =
     require(FileUtil.copy(hfs, new Path(src), hfs, new Path(dst), false,

@@ -43,13 +43,11 @@ class LakeModelSpec extends SparkSuite {
     val sqlOps = mutable.Set[String]()
     Seq(7, 99).foreach { seed =>
       val rnd = new scala.util.Random(seed)
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_model_$seed").toString
+      val dir = tmp(s"graft_model_$seed")
       // published branches are referenced IN PLACE by main's
       // manifests (the shallow-clone contract), so branch roots
       // live until the end-of-run history check
-      val branchRoot = java.nio.file.Files
-        .createTempDirectory(s"graft_model_br_$seed")
+      val branchRoot = tmp(s"graft_model_br_$seed")
       try {
         var model: Model = (1L to 30L).map(k => k -> k * 10L).toMap
         Versioned.init(df(model.toSeq).repartition(3), dir,
@@ -125,7 +123,7 @@ class LakeModelSpec extends SparkSuite {
               }
             case 6 => // branch, mutate on the branch, squash publish
               branchNo += 1
-              val br = branchRoot.resolve(s"b$branchNo").toString
+              val br = s"$branchRoot/b$branchNo"
               Versioned.branch(spark, dir, br)
               val keys = (1 to 1 + rnd.nextInt(5))
                 .map(_ => 1L + rnd.nextInt(40)).distinct
@@ -184,7 +182,7 @@ class LakeModelSpec extends SparkSuite {
         sqlOps ++= Versioned.history(spark, dir).map(_.operation)
           .filter(_.endsWith("_SQL"))
       } finally {
-        Seq(dir, dir + "_copy", branchRoot.toString).foreach { d0 =>
+        Seq(dir, dir + "_copy", branchRoot).foreach { d0 =>
           val p = new org.apache.hadoop.fs.Path(d0)
           p.getFileSystem(spark.sparkContext.hadoopConfiguration)
             .delete(p, true)

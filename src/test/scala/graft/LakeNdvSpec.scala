@@ -14,22 +14,13 @@ class LakeNdvSpec extends SparkSuite {
 
   private val d = sf("sf0.001")
 
-  private def tmp(): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_ndv_spec")
-
-  private def rm(p: java.nio.file.Path): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(p.toString)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(hp, true)
-  }
-
   private def data = Tables.load(spark, d, "orders").select(
     col("o_orderkey").as("k"), col("o_totalprice").as("p"),
     (col("o_orderkey") % 5).as("g"))
 
   test("commits log per-file HLL + null counts for stats columns; the " +
       "scan unions them into an exact-ish NDV with nullCount") {
-    val work = tmp(); val t = work.resolve("a").toString
+    val work = tmp("graft_ndv_spec"); val t = s"$work/a"
     try {
       Versioned.init(data.repartition(4), t, statsCols = Seq("g"))
       val entries = Versioned.manifestEntries(spark, t, 1L)
@@ -56,7 +47,7 @@ class LakeNdvSpec extends SparkSuite {
   test("short/byte stats columns sketch through the long cast — " +
       "hll_sketch_agg accepts only int/bigint/string/binary, so the " +
       "narrow integrals must not fail analysis (r14 regression)") {
-    val work = tmp(); val t = work.resolve("a").toString
+    val work = tmp("graft_ndv_spec"); val t = s"$work/a"
     try {
       val narrow = data.select(
         col("k"), col("g").cast("short").as("gs"),
@@ -85,7 +76,7 @@ class LakeNdvSpec extends SparkSuite {
 
   test("date and decimal stats columns sketch distinct-preservingly " +
       "(epoch-days / canonical string) and surface planner NDVs") {
-    val work = tmp(); val t = work.resolve("a").toString
+    val work = tmp("graft_ndv_spec"); val t = s"$work/a"
     try {
       val typed = Tables.load(spark, d, "orders").select(
         col("o_orderkey").as("k"), col("o_orderdate").as("dt"),
@@ -148,8 +139,8 @@ class LakeNdvSpec extends SparkSuite {
 
   test("CBO + manifest NDV flips the post-aggregation join to a " +
       "plan-time broadcast; the unsketched twin sort-merges") {
-    val work = tmp()
-    val a = work.resolve("a").toString; val b = work.resolve("b").toString
+    val work = tmp("graft_ndv_spec")
+    val a = s"$work/a"; val b = s"$work/b"
     val cbo = spark.conf.getOption("spark.sql.cbo.enabled")
     val thr = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
     try {

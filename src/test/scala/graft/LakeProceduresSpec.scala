@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.ops.Versioned
@@ -11,13 +9,6 @@ class LakeProceduresSpec extends SparkSuite {
   import spark.implicits._
 
   spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-
-  private def tmp() = Files.createTempDirectory("graft_proc").toString
-
-  private def rm(dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-  }
 
   private val base = (1L to 20L).map(k => (k, k.toDouble))
 

@@ -18,15 +18,7 @@ class LakeSegmentsSpec extends SparkSuite {
 
   private val d = sf("sf0.001")
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).resolve("t").toString
-
-  private def rm(dirs: String*): Unit = dirs.foreach { d0 =>
-    val p = new org.apache.hadoop.fs.Path(
-      new java.io.File(d0).getParent)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(p, true)
-  }
+  private def table(prefix: String): String = s"${tmp(prefix)}/t"
 
   /** orders slice keyed so batches are disjoint and checkable. */
   private def slice(lo: Long, hi: Long) = Tables.load(spark, d, "orders")
@@ -45,7 +37,7 @@ class LakeSegmentsSpec extends SparkSuite {
   test("appends seal inline rows into segments; every version reads " +
       "exact and the head's top level stays O(segments + delta)") {
     withThreshold(8) {
-      val t = tmp("graft_seg1")
+      val t = table("graft_seg1")
       try {
         Versioned.init(slice(0, 600).repartition(6), t)
         val cuts = Seq(600L, 1200L, 1800L, 2400L, 3000L, 3600L)
@@ -79,7 +71,7 @@ class LakeSegmentsSpec extends SparkSuite {
   test("a later append REUSES committed segments — refs carry " +
       "forward verbatim while the file count grows") {
     withThreshold(4) {
-      val t = tmp("graft_seg2")
+      val t = table("graft_seg2")
       try {
         Versioned.init(slice(0, 600).repartition(5), t)
         Versioned.append(slice(600, 1200).repartition(2), t) // seals 7 > 4
@@ -97,7 +89,7 @@ class LakeSegmentsSpec extends SparkSuite {
   test("metadata-only commits on a segmented table (DV delete, ADD " +
       "COLUMN, RESTORE) copy the top level forward and stay exact") {
     withThreshold(4) {
-      val t = tmp("graft_seg3")
+      val t = table("graft_seg3")
       try {
         Versioned.init(slice(0, 600).repartition(5), t)
         Versioned.append(slice(600, 1200).repartition(2), t)
@@ -127,7 +119,7 @@ class LakeSegmentsSpec extends SparkSuite {
   test("stats pruning reads THROUGH segments (stats ride in segment " +
       "rows) and the distributed manifest path splices them") {
     withThreshold(4) {
-      val t = tmp("graft_seg4")
+      val t = table("graft_seg4")
       try {
         // range-partition so files have disjoint k intervals
         Versioned.init(slice(0, 600).repartitionByRange(5, col("k")), t,
@@ -148,7 +140,7 @@ class LakeSegmentsSpec extends SparkSuite {
   test("compact collapses segments; vacuum then GCs unreferenced " +
       "segment files — and keeps those a retained version still needs") {
     withThreshold(4) {
-      val t = tmp("graft_seg5")
+      val t = table("graft_seg5")
       try {
         Versioned.init(slice(0, 600).repartition(5), t)
         Versioned.append(slice(600, 1200).repartition(2), t)
@@ -185,7 +177,7 @@ class LakeSegmentsSpec extends SparkSuite {
   test("a partition-scoped merge carries disjoint segments unopened " +
       "and rewrites only the touched partition's files") {
     withThreshold(2) {
-      val t = tmp("graft_seg7")
+      val t = table("graft_seg7")
       try {
         def part(g: Int) = slice(0, 1800)
           .filter(col("k") % 3 === g).withColumn("g", lit(g))
@@ -228,7 +220,7 @@ class LakeSegmentsSpec extends SparkSuite {
       "metadata-only; compactPartitions rewrites ONLY the named " +
       "partitions, carrying the rest as refs") {
     withThreshold(2) {
-      val t = tmp("graft_seg8")
+      val t = table("graft_seg8")
       try {
         def part(g: Int) = slice(0, 1800)
           .filter(col("k") % 3 === g).withColumn("g", lit(g))
@@ -276,8 +268,8 @@ class LakeSegmentsSpec extends SparkSuite {
   test("clone and renameTable of a segmented table stay exact (clone " +
       "expands; rename keeps relative refs / rewrites moved roots)") {
     withThreshold(4) {
-      val t = tmp("graft_seg6")
-      val c = tmp("graft_seg6c")
+      val t = table("graft_seg6")
+      val c = table("graft_seg6c")
       val r = new java.io.File(new java.io.File(t).getParent, "r")
         .toString
       try {

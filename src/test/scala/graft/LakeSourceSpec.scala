@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.ops.Versioned
 import graft.sources.LakeSource
@@ -11,8 +9,6 @@ import graft.sources.LakeSource
   * streaming source (wave 57). */
 class LakeSourceSpec extends SparkSuite {
   import spark.implicits._
-
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
 
   private def lake(dir: String): org.apache.spark.sql.DataFrame =
     spark.read.format("graft-lake").option("path", dir).load()

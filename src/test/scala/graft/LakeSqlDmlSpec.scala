@@ -16,13 +16,6 @@ class LakeSqlDmlSpec extends SparkSuite {
 
   spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
 
-  private def tmp() = Files.createTempDirectory("graft_sqldml").toString
-
-  private def rm(dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-  }
-
   private val base = (1L to 20L).map(k => (k, s"v$k", k.toDouble))
 
   private def initBase(dir: String): Unit =

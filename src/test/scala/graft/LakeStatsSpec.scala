@@ -19,7 +19,7 @@ class LakeStatsSpec extends SparkSuite {
 
   test("unfiltered scan reports the manifest's exact row count — " +
       "even with NO registered stats columns (universal #rows)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_st1").toString
+    val dir = tmp("graft_st1")
     try {
       val base = graft.io.Tables.load(spark, d, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("c"),
@@ -42,7 +42,7 @@ class LakeStatsSpec extends SparkSuite {
 
   test("statistics follow file pruning: a selective range probe " +
       "reports fewer rows than the table") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_st2").toString
+    val dir = tmp("graft_st2")
     try {
       val base = graft.io.Tables.load(spark, d, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("c"),
@@ -67,7 +67,7 @@ class LakeStatsSpec extends SparkSuite {
 
   test("wide-string tables report their ACTUAL byte footprint, not " +
       "the 20-byte-per-string width guess (no under-broadcast)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_st4").toString
+    val dir = tmp("graft_st4")
     try {
       // ~200 hex chars per row — far beyond StringType.defaultSize
       // (20), mostly incompressible, so file bytes >> rows × width
@@ -97,7 +97,7 @@ class LakeStatsSpec extends SparkSuite {
   }
 
   test("a small lake dimension broadcasts against a parquet fact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_st3").toString
+    val dir = tmp("graft_st3")
     try {
       Versioned.init(graft.io.Tables.load(spark, d, "customer")
         .select(col("c_custkey"), col("c_mktsegment")), dir,

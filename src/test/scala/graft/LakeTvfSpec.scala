@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftExtensions
@@ -13,13 +11,8 @@ class LakeTvfSpec extends SparkSuite {
 
   GraftExtensions.register(spark)
 
-  private def rm(dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-  }
-
   test("lake_changes equals Versioned.changes row for row") {
-    val dir = Files.createTempDirectory("graft_tvf").toString
+    val dir = tmp("graft_tvf")
     try {
       Versioned.init((1L to 30L).map(k => (k, k.toDouble))
         .toDF("k", "p").repartition(3), dir)
@@ -49,7 +42,7 @@ class LakeTvfSpec extends SparkSuite {
   }
 
   test("lake_changes joins like any table expression") {
-    val dir = Files.createTempDirectory("graft_tvf2").toString
+    val dir = tmp("graft_tvf2")
     try {
       Versioned.init((1L to 10L).map(k => (k, k.toDouble))
         .toDF("k", "p"), dir)

@@ -16,13 +16,6 @@ import graft.ops.Versioned
 class LakeV2Spec extends SparkSuite {
   import spark.implicits._
 
-  private def tmp() = Files.createTempDirectory("graft_lakev2").toString
-
-  private def rm(dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-  }
-
   private val base = Seq(
     (1L, "one", "a"), (2L, "two", "a"), (3L, "three", "b"), (4L, "four", "b"))
 
@@ -584,6 +577,6 @@ class LakeV2Spec extends SparkSuite {
       assert(Versioned.history(spark, dir).last.operation == "STREAM-APPEND")
       check(sorted(batch(0).union(batch(10)).union(batch(20))
         .union(batch(30))), "streaming sink")
-    } finally Seq(dir, src, cp).foreach(rm)
+    } finally rm(dir, src, cp)
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.ExplainMode
 import graft.io.Tables
@@ -17,7 +16,7 @@ class LayoutSpec extends SparkSuite {
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
   test("partitioned write + year predicate prunes partitions at scan") {
-    val dir = Files.createTempDirectory("part").toString + "/lineitem_by_year"
+    val dir = tmp("part") + "/lineitem_by_year"
     val li = Tables.load(spark, d, "lineitem")
       .withColumn("ship_year", year(col("l_shipdate")))
     Scale.writePartitioned(li, dir, "ship_year")
@@ -94,7 +93,7 @@ class LayoutSpec extends SparkSuite {
     val o = Tables.load(spark, d, "orders")
       .select(col("o_orderkey"), col("o_custkey"),
         (col("o_custkey") % 256).as("qx"), (col("o_orderkey") % 256).as("qy"))
-    val base = Files.createTempDirectory("zorder").toString
+    val base = tmp("zorder")
     Scale.writeZOrdered(o, s"$base/z", col("qx"), col("qy"),
       bits = 8, files = 32)
     // 1-D contender: same file count, sorted on qx only

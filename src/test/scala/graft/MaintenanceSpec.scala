@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.io.Tables
 import graft.ops.Maintenance
@@ -10,7 +9,7 @@ class MaintenanceSpec extends SparkSuite {
   private val d = sf("sf0.001")
 
   test("partition upsert rewrites only incoming partitions") {
-    val path = Files.createTempDirectory("upsert").toString + "/li"
+    val path = tmp("upsert") + "/li"
     val li = Tables.load(spark, d, "lineitem")
       .withColumn("ship_year", year(col("l_shipdate")))
     li.write.partitionBy("ship_year").parquet(path)
@@ -35,7 +34,7 @@ class MaintenanceSpec extends SparkSuite {
   }
 
   test("compaction reduces file count and preserves data") {
-    val path = Files.createTempDirectory("compact").toString + "/many"
+    val path = tmp("compact") + "/many"
     val li = Tables.load(spark, d, "lineitem")
     li.repartition(20).write.parquet(path)
     def parts(p: String) = new java.io.File(p).listFiles()

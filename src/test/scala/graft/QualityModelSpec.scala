@@ -74,8 +74,7 @@ class QualityModelSpec extends SparkSuite {
     // parquet once and all three quality queries re-read it; this pins
     // that the round-trip (doubles, strings, token arrays) changes NO
     // z value and no heuristic input
-    val dir = java.nio.file.Files.createTempDirectory("graft_qmtest")
-      .resolve("f").toString
+    val dir = s"${tmp("graft_qmtest")}/f"
     try {
       val featured = QualityModel.features(QualityModel.planted(docs))
       featured.write.parquet(dir)

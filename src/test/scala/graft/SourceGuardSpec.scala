@@ -9,19 +9,31 @@ import scala.jdk.CollectionConverters._
   * temp directories only in Scratch.scala, the lake connector
   * encodes data files only through Spark's own parquet format,
   * deletion vectors are read only through the driver-rows accessor,
-  * `Versioned` reads data files only through the connector's scan,
+  * only `VersionedLog` knows the lake's on-disk log, the lake reads
+  * data files only through the connector's scan,
   * lake commits retry only through one optimistic-commit loop, and the
   * report path (returns, pipeline, jobs) caches no frame. */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private val main = Paths.get("src/main/scala")
+  private val ops = main.resolve("graft/ops")
 
-  /** Files containing `needle`, relative to src/main/scala. */
-  private def holders(needle: String): Seq[String] = {
-    val files = Files.walk(main)
+  /** Files under `root` containing `needle`, relative to `root`. */
+  private def holders(needle: String, root: Path = main): Seq[String] = {
+    val files = Files.walk(root)
     try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
       .filter((p: Path) => Files.readString(p).contains(needle))
-      .map(main.relativize(_).toString).toSeq.sorted
+      .map(root.relativize(_).toString).toSeq.sorted
+    finally files.close()
+  }
+
+  /** The lake's files: the log and the operation families mixed into
+    * `Versioned`. */
+  private val lakeFiles: Seq[Path] = {
+    val files = Files.list(ops)
+    try files.iterator().asScala
+      .filter(_.getFileName.toString.matches("Versioned.*\\.scala"))
+      .toSeq.sortBy(_.toString)
     finally files.close()
   }
 
@@ -31,10 +43,14 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("createTempDirectory appears only in Scratch.scala") {
     assert(holders("createTempDirectory") == Seq("graft/Scratch.scala"))
+    // specs take their directories from Scratch too (this file names
+    // the call only in its test title)
+    assert(holders("createTempDirectory", Paths.get("src/test/scala")) ==
+      Seq("graft/SourceGuardSpec.scala"))
   }
 
   test("the lake connector has no hand-rolled parquet codec") {
-    // exempt: Versioned.scala's driver-only metadata codec for
+    // exempt: VersionedLog.scala's driver-only metadata codec for
     // manifests, segments and deletion vectors (foreachParquetRecord /
     // writeParquetDirect), which keeps a commit and scan planning from
     // paying a Spark job; data files go through ParquetFileFormat
@@ -42,7 +58,24 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
       .filter(_.startsWith("graft/sources/"))
     assert(sources.isEmpty, s"parquet-mr example codec in: $sources")
     assert(holders("org.apache.parquet.example") ==
-      Seq("graft/ops/Versioned.scala"))
+      Seq("graft/ops/VersionedLog.scala"))
+  }
+
+  test("one log module: only VersionedLog.scala names the log layout or " +
+      "opens a log file") {
+    for (needle <- Seq("\"_versions\"", ".manifest\""))
+      assert(holders(needle) == Seq("graft/ops/VersionedLog.scala"),
+        s"$needle named in: ${holders(needle)}")
+    // the operation families read and write the log only through its
+    // API: no text codec, file create, listing or rename of their own
+    val io = Seq("fromInputStream", "readAllBytes", "getBytes(",
+      "listStatus", ".rename(", "new Path(path, ")
+    val families = lakeFiles
+      .filterNot(_.getFileName.toString == "VersionedLog.scala")
+    assert(families.nonEmpty)
+    for (f <- families; needle <- io)
+      assert(!Files.readString(f).contains(needle),
+        s"${f.getFileName} does its own log I/O: $needle")
   }
 
   test("one DV codec: deletion vectors are read only as driver rows") {
@@ -55,11 +88,14 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("one lake read path: Versioned reads only through the connector") {
-    val src = Files.readString(main.resolve("graft/ops/Versioned.scala"))
-    assert(!src.contains("spark.read"),
-      "Versioned.scala must read data files through the connector's scan")
-    assert(!src.contains("_metadata"),
-      "row identity comes from the connector's row-id columns")
+    assert(lakeFiles.size >= 2, s"lake files: $lakeFiles")
+    for (f <- lakeFiles) {
+      val src = Files.readString(f)
+      assert(!src.contains("spark.read"),
+        s"${f.getFileName} must read data files through the connector's scan")
+      assert(!src.contains("_metadata"),
+        "row identity comes from the connector's row-id columns")
+    }
   }
 
   test("the report path caches nothing: no .cache() or .persist( in " +
@@ -74,16 +110,16 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
       "the OCC and rebase helpers and the single-shot commits") {
     assert(holders("maxRetries").isEmpty,
       s"retry-count parameters in: ${holders("maxRetries")}")
-    val lines = Files.readAllLines(main.resolve("graft/ops/Versioned.scala"))
-      .asScala
-    // the object member each line belongs to
-    val member = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r
+    // the member each line belongs to, over every file of the lake
+    val member = """^  (?:(?:private|protected)(?:\[\w+\])? )?def (\w+)""".r
     val call = """(?<![\w.])commit\(""".r
-    var enclosing = ""
-    val callers = lines.flatMap { l =>
-      member.findFirstMatchIn(l).foreach(m => enclosing = m.group(1))
-      if (call.findFirstIn(l).isDefined && !l.contains("def commit("))
-        Some(enclosing) else None
+    val callers = lakeFiles.flatMap { f =>
+      var enclosing = ""
+      Files.readAllLines(f).asScala.flatMap { l =>
+        member.findFirstMatchIn(l).foreach(m => enclosing = m.group(1))
+        if (call.findFirstIn(l).isDefined && !l.contains("def commit("))
+          Some(enclosing) else None
+      }
     }.toSet
     // init, clone and publish target one fixed version: they must fail
     // rather than retry

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.Events
@@ -13,7 +12,7 @@ class StreamingSinkSpec extends SparkSuite {
 
   test("streaming parquet sink writes all rows exactly once") {
     val d = sf("sf0.001")
-    val out = Files.createTempDirectory("ssink").toString
+    val out = tmp("ssink")
     val q = Events.readStream(spark, d)
       .filter(col("event_type") === "purchase")
       .select("event_id", "user_id", "value")
@@ -34,7 +33,7 @@ class StreamingSinkSpec extends SparkSuite {
 
   test("foreachBatch sink: arbitrary per-micro-batch logic (upsert-style)") {
     val d = sf("sf0.001")
-    val out = Files.createTempDirectory("feb").toString
+    val out = tmp("feb")
     val seen = new java.util.concurrent.atomic.AtomicLong(0)
     val q = Events.readStream(spark, d)
       .groupBy(col("event_type")).agg(count(lit(1)).as("n"))

@@ -14,15 +14,7 @@ class TypeWideningSpec extends SparkSuite {
 
   private val d = sf("sf0.001")
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).resolve("t").toString
-
-  private def rm(dirs: String*): Unit = dirs.foreach { d0 =>
-    val p = new org.apache.hadoop.fs.Path(
-      new java.io.File(d0).getParent)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(p, true)
-  }
+  private def table(prefix: String): String = s"${tmp(prefix)}/t"
 
   private def base() = Tables.load(spark, d, "orders")
     .select(col("o_orderkey").cast("int").as("k"),
@@ -30,7 +22,7 @@ class TypeWideningSpec extends SparkSuite {
 
   test("int->long widens metadata-only; post-alter appends exceed " +
       "the narrow range; time travel reads the narrow type") {
-    val t = tmp("graft_tw1")
+    val t = table("graft_tw1")
     try {
       Versioned.init(base().repartition(4), t)
       val files1 = Versioned.files(spark, t).toSet
@@ -63,7 +55,7 @@ class TypeWideningSpec extends SparkSuite {
 
   test("float->double and decimal precision growth widen; lossy and " +
       "cross-family retypes are refused") {
-    val t = tmp("graft_tw2")
+    val t = table("graft_tw2")
     try {
       Versioned.init(base().repartition(2), t)
       val exp = base().agg(sum(col("p").cast("double"))).head()
@@ -83,7 +75,7 @@ class TypeWideningSpec extends SparkSuite {
       }
       assert(Versioned.currentVersion(spark, t).contains(vBefore))
       // decimal precision growth at the same scale
-      val t2 = tmp("graft_tw2d")
+      val t2 = table("graft_tw2d")
       try {
         Versioned.init(Tables.load(spark, d, "orders")
           .select(col("o_orderkey").as("k"),
@@ -106,7 +98,7 @@ class TypeWideningSpec extends SparkSuite {
 
   test("range-skipping stats stay valid across the widen (mixed " +
       "narrow/wide stat encodings prune numerically)") {
-    val t = tmp("graft_tw3")
+    val t = table("graft_tw3")
     try {
       Versioned.init(base().repartitionByRange(4, col("k")), t,
         statsCols = Seq("k"))
@@ -129,7 +121,7 @@ class TypeWideningSpec extends SparkSuite {
   test("an append whose source carries a WIDER type for an existing " +
       "column widens the logged schema in the same commit (and a " +
       "narrower source up-casts; cross-family refuses)") {
-    val t = tmp("graft_tw5")
+    val t = table("graft_tw5")
     try {
       Versioned.init(base().repartition(3), t) // k int, p float
       val sumNarrow = base().agg(sum(col("k"))).head().getLong(0)
@@ -160,7 +152,7 @@ class TypeWideningSpec extends SparkSuite {
 
   test("a merge whose source carries a wider type widens through the " +
       "union coercion and the committed schema follows") {
-    val t = tmp("graft_tw6")
+    val t = table("graft_tw6")
     try {
       Versioned.init(base().repartition(3), t) // k int, p float
       val sumNarrow = base().agg(sum(col("k"))).head().getLong(0)
@@ -179,7 +171,7 @@ class TypeWideningSpec extends SparkSuite {
   test("SQL: ALTER TABLE lake.t ALTER COLUMN k TYPE BIGINT routes to " +
       "the metadata-only widen") {
     spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-    val t = tmp("graft_tw4")
+    val t = table("graft_tw4")
     try {
       Versioned.init(base().repartition(2), t)
       spark.sql(s"ALTER TABLE lake.`$t` ALTER COLUMN k TYPE BIGINT")
@@ -188,7 +180,7 @@ class TypeWideningSpec extends SparkSuite {
       assert(Versioned.history(spark, t).last.operation ==
         "ALTER_COLUMN_TYPE(k int->bigint)")
       // bloom-registered columns refuse the widen
-      val t2 = tmp("graft_tw4b")
+      val t2 = table("graft_tw4b")
       try {
         Versioned.init(base().repartition(2), t2,
           bloomCols = Seq("k"))
@@ -205,7 +197,7 @@ class TypeWideningSpec extends SparkSuite {
       "column, or hidden transform references the column — on ALTER " +
       "and on append's auto-widen alike (type-sensitive derivations " +
       "like hash transforms would split equal values across the widen)") {
-    val t = tmp("graft_tw_guard")
+    val t = table("graft_tw_guard")
     try {
       Versioned.init(base().repartition(2), t)
       // CHECK constraint referencing k blocks the widen
@@ -222,7 +214,7 @@ class TypeWideningSpec extends SparkSuite {
         e2.getMessage.contains("APPEND"))
       Versioned.dropConstraint(spark, t, "k_pos")
       // generated column whose expression reads k blocks the widen
-      val t2 = tmp("graft_tw_guard_g")
+      val t2 = table("graft_tw_guard_g")
       try {
         Versioned.init(base().repartition(2)
           .withColumn("g", expr("cast(k + 1 as bigint)")), t2)
@@ -236,8 +228,7 @@ class TypeWideningSpec extends SparkSuite {
       } finally rm(t2)
       // hash hidden transform reading k blocks the widen: equal
       // logical values would route to different buckets post-widen
-      val root3 = java.nio.file.Files
-        .createTempDirectory("graft_tw_guard_h").toString
+      val root3 = tmp("graft_tw_guard_h")
       val t3 = s"$root3/t"
       try {
         spark.sql(s"CREATE TABLE lake.`$t3` (k INT, v STRING) " +
@@ -256,7 +247,7 @@ class TypeWideningSpec extends SparkSuite {
   test("all-digit tag names are refused at creation (VERSION AS OF " +
       "resolves numerics as versions first — the tag would be " +
       "silently unreachable)") {
-    val t = tmp("graft_tag_num")
+    val t = table("graft_tag_num")
     try {
       Versioned.init(base().repartition(2), t)
       val e = intercept[IllegalArgumentException] {

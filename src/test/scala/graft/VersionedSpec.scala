@@ -13,8 +13,6 @@ import graft.ops.Versioned
 class VersionedSpec extends SparkSuite {
   import spark.implicits._
 
-  private def tmp() = Files.createTempDirectory("graft_versioned").toString
-
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.select("k", "v", "p").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet

@@ -21,7 +21,7 @@ class Wave22Spec extends SparkSuite {
 
   test("skipping never drops a qualifying row (equals the direct filter) " +
       "and really skips files") {
-    val dir = java.nio.file.Files.createTempDirectory("skipspec").toString
+    val dir = tmp("skipspec")
     try {
       cluster(dir)
       val (pruned, total, read) =
@@ -42,7 +42,7 @@ class Wave22Spec extends SparkSuite {
   }
 
   test("a probe inside one quarter opens exactly one file") {
-    val dir = java.nio.file.Files.createTempDirectory("skipspec1").toString
+    val dir = tmp("skipspec1")
     try {
       cluster(dir)
       val (_, total, read) =

@@ -26,7 +26,7 @@ class Wave38Spec extends SparkSuite {
   }
 
   test("delete: no-op predicate commits nothing and carries every file") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_noop").toString
+    val dir = tmp("graft_noop")
     try {
       val base = Tables.load(spark, d, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("c"))
@@ -43,7 +43,7 @@ class Wave38Spec extends SparkSuite {
   }
 
   test("delete: rewrite is row-exact — survivors only, erased only") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_exact").toString
+    val dir = tmp("graft_exact")
     try {
       val base = Tables.load(spark, d, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("c"))
@@ -68,7 +68,7 @@ class Wave38Spec extends SparkSuite {
 
   test("delete: NULL-evaluating predicate rows are RETAINED, not dropped") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_null3vl").toString
+    val dir = tmp("graft_null3vl")
     try {
       // v is NULL for k=2 → `v > 10` evaluates NULL there; SQL DELETE
       // must keep that row (delete only where pred IS TRUE)
@@ -90,7 +90,7 @@ class Wave38Spec extends SparkSuite {
   test("delete everything on a partitioned table leaves a readable " +
       "empty table that a later merge repopulates") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_delall").toString
+    val dir = tmp("graft_delall")
     try {
       val base = Seq((1L, "one", "a"), (2L, "two", "b")).toDF("k", "v", "p")
       Versioned.init(base, dir, partitionCol = Some("p"))

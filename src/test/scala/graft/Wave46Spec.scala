@@ -1,15 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.ops.{Versioned, ZOrder}
 
 /** Multi-clause MERGE INTO semantics and the Z-order compact layout. */
 class Wave46Spec extends SparkSuite {
   import spark.implicits._
-
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
 
   test("mergeInto: delete, additive update, gated insert, untouched rows") {
     val dir = tmp("graft_mi")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.ops.Versioned
 
@@ -9,8 +7,6 @@ import graft.ops.Versioned
   * CHECK constraints. */
 class Wave47Spec extends SparkSuite {
   import spark.implicits._
-
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
 
   test("restore: forward-only commit, content equals target version, " +
       "undone versions stay readable") {

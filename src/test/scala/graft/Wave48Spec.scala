@@ -9,8 +9,6 @@ import graft.ops.{Catalog, Versioned}
 class Wave48Spec extends SparkSuite {
   import spark.implicits._
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
-
   private def mkLake(p: String, rows: (Long, Double)*): String = {
     val dir = tmp(p)
     Versioned.init(rows.toSeq.toDF("k", "p"), dir)

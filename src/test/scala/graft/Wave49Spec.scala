@@ -10,8 +10,6 @@ import graft.ops.Versioned
 class Wave49Spec extends SparkSuite {
   import spark.implicits._
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
-
   test("dropPartitions: metadata-only, content filtered, DV entries " +
       "on dropped files go too") {
     val dir = tmp("graft_dp")

@@ -1,15 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.ops.Versioned
 
 /** Generated columns: computed when omitted, vetoed when wrong. */
 class Wave50Spec extends SparkSuite {
   import spark.implicits._
-
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
 
   test("merge computes an omitted generated column (including the " +
       "partition key) and keeps the merge partition-scoped") {

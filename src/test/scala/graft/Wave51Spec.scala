@@ -1,15 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.ops.Versioned
 
 /** mergeExpect: drop / quarantine policies over CHECK constraints. */
 class Wave51Spec extends SparkSuite {
   import spark.implicits._
-
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
 
   test("mergeExpect drops violations when no quarantine is given and " +
       "commits the clean remainder") {

@@ -9,8 +9,6 @@ import graft.ops.Versioned
 class Wave52Spec extends SparkSuite {
   import spark.implicits._
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
-
   test("rename is metadata-only: same manifest, new logical name, " +
       "old versions still read the old name") {
     val dir = tmp("graft_rn")

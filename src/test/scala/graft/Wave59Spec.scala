@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.ops.Versioned
 
@@ -10,8 +8,6 @@ import graft.ops.Versioned
   * rule (wave 59). */
 class Wave59Spec extends SparkSuite {
   import spark.implicits._
-
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
 
   test("omitted identity: inserts allocate past high-water in key " +
       "order, updates preserve their value") {

@@ -9,8 +9,6 @@ import graft.ops.Versioned
 class Wave61Spec extends SparkSuite {
   import spark.implicits._
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
-
   test("append carries every prior file by reference and the DV rides " +
       "unchanged") {
     val dir = tmp("graft_ap1")

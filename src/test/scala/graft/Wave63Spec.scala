@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.ops.Versioned
@@ -10,8 +8,6 @@ import graft.sources.{LakeFilesMessage, LakeStreamingWrite}
 /** Structured Streaming sink into the lake (wave 63). */
 class Wave63Spec extends SparkSuite {
   import spark.implicits._
-
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
 
   test("writeStream into the lake: per-epoch STREAM-APPEND commits, " +
       "content exactly the streamed rows") {
