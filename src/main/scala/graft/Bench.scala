@@ -3,8 +3,8 @@ object Bench {
   /** The measured action: reference EVERY output column (see the long
     * comment at the call site — a bare .count() lets column pruning
     * delete the aggregates being timed) and COLLECT the one-row sum.
-    * Shared with tools/ProfileQuery so standalone profiling times the
-    * same plan the bench does. */
+    * Shared with tools/Probe so standalone profiling times the same
+    * plan the bench does. */
   private[graft] def timedAction(df: org.apache.spark.sql.DataFrame): Unit = {
     import org.apache.spark.sql.functions._
     def hasMap(dt: org.apache.spark.sql.types.DataType): Boolean =
@@ -29,11 +29,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // optional comma-separated subset for local iteration
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val queries = only.fold(SparkEntry.queries)(names =>
-      SparkEntry.queries.filter { case (n, _) => names(n) })
+    val queries = SparkEntry.only(SparkEntry.queries)
     // per-query: clear cached relations from PREVIOUS queries (several
     // operators legitimately .cache() a shared frame; across 100+
     // queries those pile up, evict each other, and poison timings with

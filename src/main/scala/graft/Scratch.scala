@@ -1,33 +1,31 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.collection.concurrent.TrieMap
 
 import org.apache.hadoop.fs.FileUtil
-import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one owner of scratch space. Everything the engine writes for
   * itself lives under a per-JVM [[root]] in `java.io.tmpdir`, which a
   * shutdown hook deletes, so a long-lived session (the JobServer)
-  * cannot fill the disk. Directories come in three lifetimes:
+  * cannot fill the disk. Directories come in two lifetimes:
   *
   *  - [[withDir]]: removed when its block exits — for queries whose
   *    result is collected (or built from local rows) inside the block;
-  *  - [[generation]]: one live generation per `(op, session)` — for
-  *    operators that return a LAZY frame over their directory or over
-  *    persisted frames, so the scratch can only be released once the
-  *    caller has moved on. Opening the next generation unpersists the
-  *    previous one's frames and deletes its directory. Callers must be
-  *    single-threaded per `(op, session)`: a concurrent action still
-  *    reading the previous generation would lose its files;
   *  - [[memo]]: build-once directories for immutable per-JVM fixtures
   *    (`Memo`, `LakeFixtures`, the streaming input stages).
   *
   * Streaming checkpoints ([[withCheckpoint]]) go to RAM-backed
   * `/dev/shm` when it is writable: a bounded replay's checkpoint has
-  * no recovery value but pays disk I/O every micro-batch. */
+  * no recovery value but pays disk I/O every micro-batch.
+  *
+  * Persisted frames are not scratch. An operator that returns a lazy
+  * frame over persisted frames leaves them in Spark's CacheManager,
+  * where a repeated call with the same plan finds them again, until
+  * the runner clears the cache: Bench, Verify and `tools/Probe` do so
+  * before each row. An operator that collects inside the call
+  * unpersists what it persisted before it returns. */
 object Scratch {
 
   lazy val root: Path = owned(Paths.get(System.getProperty("java.io.tmpdir")))
@@ -60,50 +58,6 @@ object Scratch {
     * queries) keep their checkpoint next to their data instead. */
   def withCheckpoint[A](name: String)(body: String => A): A =
     scoped(checkpointRoot, s"graft_ck_$name")(body)
-
-  /** One call's scratch: its directory (made on first use) and the
-    * persisted frames it [[hold]]s. */
-  final class Generation private[Scratch] (key: String) {
-    private val frames = new ConcurrentLinkedQueue[DataFrame]()
-    private var made: Option[Path] = None
-
-    def dir: String = synchronized {
-      if (made.isEmpty) made = Some(Files.createTempDirectory(root, s"gen-$key-"))
-      made.get.toString
-    }
-
-    def hold(dfs: DataFrame*): Unit = dfs.foreach(frames.add)
-
-    private[Scratch] def release(): Unit = {
-      frames.forEach { df =>
-        try df.unpersist(blocking = false)
-        catch { case _: Exception => () } // session already stopped
-      }
-      synchronized(made.foreach(p => FileUtil.fullyDelete(p.toFile)))
-    }
-  }
-
-  private val live = new ConcurrentHashMap[String, Generation]()
-
-  // per-session ids, minted here because SparkSession's own sessionUUID
-  // is private[sql]: identity-keyed and weakly referenced, so a stopped
-  // session's entry is collectable; unlike hashCode they cannot collide
-  // across live sessions (two colliding sessions would release each
-  // other's live generation)
-  private val sessionIds = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, String]())
-
-  /** Open this call's generation for `op` on `session` and release the
-    * previous call's. */
-  def generation(op: String, session: SparkSession): Generation = {
-    val id = sessionIds.computeIfAbsent(session,
-      _ => java.util.UUID.randomUUID().toString)
-    val key = s"$op@$id"
-    val g = new Generation(key)
-    val old = live.put(key, g)
-    if (old != null) old.release()
-    g
-  }
 
   private val memos = TrieMap[String, String]()
 

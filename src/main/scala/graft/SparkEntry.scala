@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.queries._
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Aggregates the query registry from the per-module query objects under
@@ -16,164 +18,55 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     graft.queries.CoreQueries.dailyReturns(spark, "/root/testdata/sf0.001")
 
+  /** The registry's modules. A row name belongs to one module:
+    * building the registry fails on a name two modules define. */
+  private val modules: Seq[QueryModule] = Seq(
+    CoreQueries, ParityQueries, RelationalQueries, AnalyticQueries,
+    PipelineQueries, StreamingQueries, ExtraQueries, Wave3Queries,
+    Wave4Queries, FinanceQueries, EventAnalytics, Wave5Queries,
+    Wave6Queries, Wave7Queries, Wave8Queries, Wave9Queries, Wave10Queries,
+    Wave11Queries, Wave12Queries, Wave13Queries, Wave15Queries,
+    Wave16Queries, Wave17Queries, Wave18Queries, Wave19Queries,
+    Wave20Queries, Wave21Queries, Wave22Queries, Wave23Queries,
+    Wave24Queries, Wave25Queries, Wave26Queries, Wave27Queries,
+    Wave28Queries, Wave29Queries, Wave30Queries, Wave31Queries,
+    Wave32Queries, Wave33Queries, Wave34Queries, Wave35Queries,
+    Wave36Queries, Wave37Queries, Wave38Queries, Wave39Queries,
+    Wave40Queries, Wave41Queries, Wave42Queries, Wave43Queries,
+    Wave44Queries, Wave45Queries, Wave46Queries, Wave47Queries,
+    Wave48Queries, Wave49Queries, Wave50Queries, Wave51Queries,
+    Wave52Queries, Wave53Queries, Wave54Queries, Wave55Queries,
+    Wave56Queries, Wave57Queries, Wave58Queries, Wave59Queries,
+    Wave60Queries, Wave61Queries, Wave62Queries, Wave63Queries,
+    Wave64Queries, Wave65Queries, Wave66Queries, Wave68Queries,
+    Wave69Queries, Wave70Queries, Wave71Queries, Wave72Queries)
+
+  private def merged[V](part: QueryModule => Map[String, V]): Map[String, V] =
+    modules.foldLeft(Map.empty[String, V]) { (acc, m) =>
+      val rows = part(m)
+      val twice = acc.keySet.intersect(rows.keySet)
+      require(twice.isEmpty,
+        s"rows defined by two modules: ${twice.toSeq.sorted.mkString(", ")}")
+      acc ++ rows
+    }
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.CoreQueries.queries ++
-    graft.queries.ParityQueries.queries ++
-    graft.queries.RelationalQueries.queries ++
-    graft.queries.AnalyticQueries.queries ++
-    graft.queries.PipelineQueries.queries ++
-    graft.queries.StreamingQueries.queries ++
-    graft.queries.ExtraQueries.queries ++
-    graft.queries.Wave3Queries.queries ++
-    graft.queries.Wave4Queries.queries ++
-    graft.queries.FinanceQueries.queries ++
-    graft.queries.EventAnalytics.queries ++
-    graft.queries.Wave5Queries.queries ++
-    graft.queries.Wave6Queries.queries ++
-    graft.queries.Wave7Queries.queries ++
-    graft.queries.Wave8Queries.queries ++
-    graft.queries.Wave9Queries.queries ++
-    graft.queries.Wave10Queries.queries ++
-    graft.queries.Wave11Queries.queries ++
-    graft.queries.Wave12Queries.queries ++
-    graft.queries.Wave13Queries.queries ++
-    graft.queries.Wave15Queries.queries ++
-    graft.queries.Wave16Queries.queries ++
-    graft.queries.Wave17Queries.queries ++
-    graft.queries.Wave18Queries.queries ++
-    graft.queries.Wave19Queries.queries ++
-    graft.queries.Wave20Queries.queries ++
-    graft.queries.Wave21Queries.queries ++
-    graft.queries.Wave22Queries.queries ++
-    graft.queries.Wave23Queries.queries ++
-    graft.queries.Wave24Queries.queries ++
-    graft.queries.Wave25Queries.queries ++
-    graft.queries.Wave26Queries.queries ++
-    graft.queries.Wave27Queries.queries ++
-    graft.queries.Wave28Queries.queries ++
-    graft.queries.Wave29Queries.queries ++
-    graft.queries.Wave30Queries.queries ++
-    graft.queries.Wave31Queries.queries ++
-    graft.queries.Wave32Queries.queries ++
-    graft.queries.Wave33Queries.queries ++
-    graft.queries.Wave34Queries.queries ++
-    graft.queries.Wave35Queries.queries ++
-    graft.queries.Wave36Queries.queries ++
-    graft.queries.Wave37Queries.queries ++
-    graft.queries.Wave38Queries.queries ++
-    graft.queries.Wave39Queries.queries ++
-    graft.queries.Wave40Queries.queries ++
-    graft.queries.Wave41Queries.queries ++
-    graft.queries.Wave42Queries.queries ++
-    graft.queries.Wave43Queries.queries ++
-    graft.queries.Wave44Queries.queries ++
-    graft.queries.Wave45Queries.queries ++
-    graft.queries.Wave46Queries.queries ++
-    graft.queries.Wave47Queries.queries ++
-    graft.queries.Wave48Queries.queries ++
-    graft.queries.Wave49Queries.queries ++
-    graft.queries.Wave50Queries.queries ++
-    graft.queries.Wave51Queries.queries ++
-    graft.queries.Wave52Queries.queries ++
-    graft.queries.Wave53Queries.queries ++
-    graft.queries.Wave54Queries.queries ++
-    graft.queries.Wave55Queries.queries ++
-    graft.queries.Wave56Queries.queries ++
-    graft.queries.Wave57Queries.queries ++
-    graft.queries.Wave58Queries.queries ++
-    graft.queries.Wave59Queries.queries ++
-    graft.queries.Wave60Queries.queries ++
-    graft.queries.Wave61Queries.queries ++
-    graft.queries.Wave62Queries.queries ++
-    graft.queries.Wave63Queries.queries ++
-    graft.queries.Wave64Queries.queries ++
-    graft.queries.Wave65Queries.queries ++
-    graft.queries.Wave66Queries.queries ++
-    graft.queries.Wave68Queries.queries ++
-    graft.queries.Wave69Queries.queries ++
-    graft.queries.Wave70Queries.queries ++
-    graft.queries.Wave71Queries.queries ++
-    graft.queries.Wave72Queries.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    merged(_.queries)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    graft.queries.CoreQueries.oracles ++
-    graft.queries.ParityQueries.oracles ++
-    graft.queries.RelationalQueries.oracles ++
-    graft.queries.AnalyticQueries.oracles ++
-    graft.queries.PipelineQueries.oracles ++
-    graft.queries.StreamingQueries.oracles ++
-    graft.queries.ExtraQueries.oracles ++
-    graft.queries.Wave3Queries.oracles ++
-    graft.queries.Wave4Queries.oracles ++
-    graft.queries.FinanceQueries.oracles ++
-    graft.queries.EventAnalytics.oracles ++
-    graft.queries.Wave5Queries.oracles ++
-    graft.queries.Wave6Queries.oracles ++
-    graft.queries.Wave7Queries.oracles ++
-    graft.queries.Wave8Queries.oracles ++
-    graft.queries.Wave9Queries.oracles ++
-    graft.queries.Wave10Queries.oracles ++
-    graft.queries.Wave11Queries.oracles ++
-    graft.queries.Wave12Queries.oracles ++
-    graft.queries.Wave13Queries.oracles ++
-    graft.queries.Wave15Queries.oracles ++
-    graft.queries.Wave16Queries.oracles ++
-    graft.queries.Wave17Queries.oracles ++
-    graft.queries.Wave18Queries.oracles ++
-    graft.queries.Wave19Queries.oracles ++
-    graft.queries.Wave20Queries.oracles ++
-    graft.queries.Wave21Queries.oracles ++
-    graft.queries.Wave22Queries.oracles ++
-    graft.queries.Wave23Queries.oracles ++
-    graft.queries.Wave24Queries.oracles ++
-    graft.queries.Wave25Queries.oracles ++
-    graft.queries.Wave26Queries.oracles ++
-    graft.queries.Wave27Queries.oracles ++
-    graft.queries.Wave28Queries.oracles ++
-    graft.queries.Wave29Queries.oracles ++
-    graft.queries.Wave30Queries.oracles ++
-    graft.queries.Wave31Queries.oracles ++
-    graft.queries.Wave32Queries.oracles ++
-    graft.queries.Wave33Queries.oracles ++
-    graft.queries.Wave34Queries.oracles ++
-    graft.queries.Wave35Queries.oracles ++
-    graft.queries.Wave36Queries.oracles ++
-    graft.queries.Wave37Queries.oracles ++
-    graft.queries.Wave38Queries.oracles ++
-    graft.queries.Wave39Queries.oracles ++
-    graft.queries.Wave40Queries.oracles ++
-    graft.queries.Wave41Queries.oracles ++
-    graft.queries.Wave42Queries.oracles ++
-    graft.queries.Wave43Queries.oracles ++
-    graft.queries.Wave44Queries.oracles ++
-    graft.queries.Wave45Queries.oracles ++
-    graft.queries.Wave46Queries.oracles ++
-    graft.queries.Wave47Queries.oracles ++
-    graft.queries.Wave48Queries.oracles ++
-    graft.queries.Wave49Queries.oracles ++
-    graft.queries.Wave50Queries.oracles ++
-    graft.queries.Wave51Queries.oracles ++
-    graft.queries.Wave52Queries.oracles ++
-    graft.queries.Wave53Queries.oracles ++
-    graft.queries.Wave54Queries.oracles ++
-    graft.queries.Wave55Queries.oracles ++
-    graft.queries.Wave56Queries.oracles ++
-    graft.queries.Wave57Queries.oracles ++
-    graft.queries.Wave58Queries.oracles ++
-    graft.queries.Wave59Queries.oracles ++
-    graft.queries.Wave60Queries.oracles ++
-    graft.queries.Wave61Queries.oracles ++
-    graft.queries.Wave62Queries.oracles ++
-    graft.queries.Wave63Queries.oracles ++
-    graft.queries.Wave64Queries.oracles ++
-    graft.queries.Wave65Queries.oracles ++
-    graft.queries.Wave66Queries.oracles ++
-    graft.queries.Wave68Queries.oracles ++
-    graft.queries.Wave69Queries.oracles ++
-    graft.queries.Wave70Queries.oracles ++
-    graft.queries.Wave71Queries.oracles ++
-    graft.queries.Wave72Queries.oracles
+  lazy val oracleSql: Map[String, String] = merged(_.oracles)
+
+  /** The row names in a comma-separated list. */
+  def names(list: String): Seq[String] =
+    list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+
+  /** `m` limited to the rows named in `SPARK_GRAFT_ONLY`, when it is
+    * set: the subset Bench and Verify run for local iteration. */
+  def only[V](m: Map[String, V]): Map[String, V] =
+    sys.env.get("SPARK_GRAFT_ONLY").fold(m) { list =>
+      val keep = names(list).toSet
+      m.filter { case (n, _) => keep(n) }
+    }
 }

@@ -8,12 +8,7 @@ object Verify {
     val spark = Session.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated subset for local iteration (driver runs full)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val queries = only.fold(SparkEntry.queries)(names =>
-      SparkEntry.queries.filter { case (n, _) => names(n) })
-    queries.foreach { case (name, fn) =>
+    SparkEntry.only(SparkEntry.queries).foreach { case (name, fn) =>
       // several operators legitimately .cache() shared frames; across
       // 200+ queries those accumulate and thrash executor storage (the
       // same reason Bench clears per query)
@@ -37,8 +32,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = only.fold(SparkEntry.oracleSql)(names =>
-        SparkEntry.oracleSql.filter { case (n, _) => names(n) })
+    val json = SparkEntry.only(SparkEntry.oracleSql)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -16,7 +16,7 @@ import graft.io.Tables
   * window in the engine is the reference-parity one in ParityQueries,
   * kept deliberately (SURVEY.md §7.5).
   */
-object AnalyticQueries {
+object AnalyticQueries extends QueryModule {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 

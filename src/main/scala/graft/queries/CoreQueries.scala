@@ -20,7 +20,7 @@ import graft.ops.Returns
   * output; no raw timestamp columns in output (dates/strings only);
   * divisions guarded with nullif on both sides.
   */
-object CoreQueries {
+object CoreQueries extends QueryModule {
 
   val from = "1996-01-01"
   val to   = "1997-12-31"

@@ -11,7 +11,7 @@ import graft.io.Tables
   * aggregations. Both reduce to joins over per-user minima, so they
   * shuffle on user_id once per stage and never materialize event lists.
   */
-object EventAnalytics {
+object EventAnalytics extends QueryModule {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 

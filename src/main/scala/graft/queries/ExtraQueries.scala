@@ -10,7 +10,7 @@ import graft.io.Tables
   * DataFrame API), ordered/exact percentiles, arg-min/max, array
   * aggregation, date arithmetic, regex extraction, statistical
   * aggregates. */
-object ExtraQueries {
+object ExtraQueries extends QueryModule {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 

@@ -13,7 +13,7 @@ import graft.io.Tables
   * revenue series, so they inherit the same order-independence
   * guarantees as the core queries.
   */
-object FinanceQueries {
+object FinanceQueries extends QueryModule {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 

@@ -17,7 +17,7 @@ import graft.ops.MarketPipeline
   * SAME computation in long format with a partitioned window — the
   * 100 TB-safe plan. Keeping both documents the scale trade-off.
   */
-object ParityQueries {
+object ParityQueries extends QueryModule {
 
   private val flags = Seq("A", "N", "R")
 

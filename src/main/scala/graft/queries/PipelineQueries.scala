@@ -16,7 +16,7 @@ import graft.text.{Contamination, Curation, Dedup, Packing, Similarity, TextStat
   * q_dedup_minhash, whose output is exact-Jaccard-verified and therefore
   * oracle-checked against the exact pair query.
   */
-object PipelineQueries {
+object PipelineQueries extends QueryModule {
 
   private def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
   private def embs(s: SparkSession, d: String) = Tables.load(s, d, "embeddings")

@@ -18,7 +18,7 @@ import graft.io.Tables
   * are partial (map-side) by construction since all are hash-aggregable
   * built-ins.
   */
-object RelationalQueries {
+object RelationalQueries extends QueryModule {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 

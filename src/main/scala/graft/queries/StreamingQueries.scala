@@ -13,7 +13,7 @@ import graft.streaming.Events
   * session windows run in batch mode (same `window`/`session_window`
   * expressions Structured Streaming uses).
   */
-object StreamingQueries {
+object StreamingQueries extends QueryModule {
 
   def qStreamHourly(s: SparkSession, d: String): DataFrame =
     Events.hourlyByType(s, d)

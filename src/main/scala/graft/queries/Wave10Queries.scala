@@ -37,7 +37,7 @@ import graft.text.{Dedup, TextStats}
   *    batching — what a serving/training batcher pays at each bucket
   *    ladder rung.
   */
-object Wave10Queries {
+object Wave10Queries extends QueryModule {
 
   private def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
 

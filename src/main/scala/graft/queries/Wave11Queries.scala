@@ -32,7 +32,7 @@ import graft.text.{Dedup, Similarity, TextStats}
   *    doc (corpus saturation curve — falling novelty says more data
   *    stops adding content).
   */
-object Wave11Queries {
+object Wave11Queries extends QueryModule {
 
   private def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
 

@@ -22,7 +22,7 @@ import graft.text.{Search, Similarity, TextStats}
   *    composed from the same expression twins the funnel gates on, so
   *    the card provably describes what the pipeline actually shipped.
   */
-object Wave12Queries {
+object Wave12Queries extends QueryModule {
 
   private def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
 

@@ -25,7 +25,7 @@ import graft.text.TextStats
   *    order-independent windowed max — the marketing-analytics shape
   *    that is really a per-event as-of join.
   */
-object Wave13Queries {
+object Wave13Queries extends QueryModule {
 
   private def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
 

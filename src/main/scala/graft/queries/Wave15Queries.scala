@@ -18,7 +18,7 @@ import graft.io.Tables
   *    → purchase ≤ 3 d) computed from associative min-folds only, so
   *    the result is layout-independent by construction.
   */
-object Wave15Queries {
+object Wave15Queries extends QueryModule {
 
   // ---- temporal (as-of) dimension join ----
 

@@ -23,7 +23,7 @@ import graft.text.{LangId, QualityModel, TextStats}
   *  - `q_curation_model`: the curation funnel with the lang gate
   *    switched to the NB model (the "behind a flag" wiring).
   */
-object Wave16Queries {
+object Wave16Queries extends QueryModule {
 
   private def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
 

@@ -33,7 +33,7 @@ import graft.text.{Dsir, LangId, TextStats}
   *    HAVING-subquery large-order join and the filtered-ON left-join
   *    count distribution.
   */
-object Wave17Queries {
+object Wave17Queries extends QueryModule {
 
   private def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
 

@@ -27,7 +27,7 @@ import graft.text.Dedup
   *    (Σcnt, Σcnt²) so the float step is one closed-form expression,
   *    bit-identical in both engines.
   */
-object Wave18Queries {
+object Wave18Queries extends QueryModule {
 
   private def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
 

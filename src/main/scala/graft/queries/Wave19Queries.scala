@@ -36,7 +36,7 @@ import graft.text.Dedup
   *    working with raw keys never co-located), segment revenue
   *    identical to the plain-key join.
   */
-object Wave19Queries {
+object Wave19Queries extends QueryModule {
 
   private def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
 
@@ -59,8 +59,7 @@ object Wave19Queries {
     // hash-partitioned by src ONCE and cached, so each hop's frontier
     // equi-join needs no exchange on the (large) edge side — the
     // frontier side alone shuffles. CacheManager dedupes the
-    // canonically-identical plan across calls (no Scratch generation —
-    // see Wave29Queries).
+    // canonically-identical plan across calls (see Wave29Queries).
     val ed = und.select(col("u").as("src"), col("v").as("dst"))
       .unionByName(und.select(col("v").as("src"), col("u").as("dst")))
       .repartition(col("src")).cache()
@@ -113,13 +112,12 @@ object Wave19Queries {
     // the vocabulary count and the adjacent-pair zip; the old shape ran
     // the split + per-token rlike over the whole corpus TWICE (the two
     // Generate subtrees have different parents, so exchange reuse can't
-    // fire). Same one-generation persist discipline as qLmBigram;
-    // repartitioned first so a single-file parquet source doesn't pin
-    // the split to one core.
+    // fire). Repartitioned first so a single-file parquet source
+    // doesn't pin the split to one core; released once the edge list
+    // below is collected.
     val base = docs(s, d).repartition(col("doc_id"))
       .select(arr.as("ts"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Scratch.generation("qTextrank", s).hold(base)
     val ts = col("ts")
     val toks = base.select(explode(ts).as("tok"))
     val vocab = toks.groupBy("tok").agg(count(lit(1)).as("c"))
@@ -144,13 +142,14 @@ object Wave19Queries {
     // ([[Q.pageRankLocal]], bit-identical float semantics) instead of
     // 5 eager checkpoint rounds (each ~3 Spark jobs of scheduler
     // overhead at any SF). This also retires the edges/weighted/nodes
-    // caches ADVICE r16 #1 flagged as outside the Scratch generation —
-    // the only persisted frame left is `base`, already registered.
+    // caches that outlived the call — the only persisted frame left
+    // is `base`, unpersisted as soon as the collect returns.
     // The distributed work that REMAINS is the part that scales with
     // data: corpus tokenize → vocab top-100 → pair aggregate.
-    val und = pairs.groupBy("wa", "wb").agg(count(lit(1)).as("w"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    val und =
+      try pairs.groupBy("wa", "wb").agg(count(lit(1)).as("w")).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      finally base.unpersist()
     val edges = (und.iterator.map { case (wa, wb, w) => (wa, wb, w) } ++
       und.iterator.map { case (wa, wb, w) => (wb, wa, w) }).toSeq
     val ranked = Q.pageRankLocal(edges, trIters)

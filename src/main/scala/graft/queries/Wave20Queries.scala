@@ -20,7 +20,7 @@ import graft.io.Tables
   *    terms fold in sorted cell order so the one float reduction is
   *    bit-identical cross-engine.
   */
-object Wave20Queries {
+object Wave20Queries extends QueryModule {
 
   private def events(s: SparkSession, d: String) = Tables.load(s, d, "events")
 

@@ -21,7 +21,7 @@ import graft.streaming.{Events, StatefulTopK, TopKIn}
   *    data-forensics shape (digits from exact integer cents, so no
   *    float log is ever used to EXTRACT a digit).
   */
-object Wave21Queries {
+object Wave21Queries extends QueryModule {
 
   // ---- streaming top-k via transformWithState ----
 

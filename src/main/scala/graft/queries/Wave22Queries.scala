@@ -15,7 +15,7 @@ import graft.ops.Skipping
   *    oracle-replayed (the oracle recomputes each file's stats and
   *    the overlap test, not just the row answer).
   */
-object Wave22Queries {
+object Wave22Queries extends QueryModule {
 
   private val probeFrom = "1995-02-01"
   private val probeTo = "1995-04-15"

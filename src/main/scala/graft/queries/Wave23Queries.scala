@@ -17,7 +17,7 @@ import graft.streaming.{Events, SessIn, StatefulSessions}
   *    `q_stream_sessions` — two independent engine paths pinned to
   *    one ground truth.
   */
-object Wave23Queries {
+object Wave23Queries extends QueryModule {
 
   /** Sessions via the timer-based processor on a bounded replay:
     * state is 3 longs + 1 timer per ACTIVE user (bounded by

@@ -21,7 +21,7 @@ import graft.text.{Dedup, TextStats}
   *    incremental path re-pays it only for the changed sliver (the
   *    receipt columns show the carried/recomputed split).
   */
-object Wave24Queries {
+object Wave24Queries extends QueryModule {
 
   /** Lake keyed by doc_id; updates CHANGE THE PAYLOAD (text + a
     * revision marker) so the signature genuinely differs; same

@@ -39,7 +39,7 @@ import graft.text.Dedup
   * data sits on the cent grid, so both engines land the same integer)
   * and sums use the [[Q.dsum]] exact-decimal discipline.
   */
-object Wave25Queries {
+object Wave25Queries extends QueryModule {
 
   /** 63-bit order-independent row fingerprint over the business
     * columns (md5 upper half >>> 4, XOR-aggregated) — cents, not a

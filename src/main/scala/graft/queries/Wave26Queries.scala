@@ -28,7 +28,7 @@ import graft.text.Dedup
   * delta; if a delta ever weren't small, full recompute would be the
   * right plan anyway.
   */
-object Wave26Queries {
+object Wave26Queries extends QueryModule {
 
   private def fp(df: DataFrame): DataFrame =
     df.withColumn("fp", shiftrightunsigned(Dedup.md5Hash64(

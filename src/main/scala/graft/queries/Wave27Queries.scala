@@ -14,7 +14,7 @@ import graft.streaming.Events
   *    stream. The oracle recomputes both tiers in SQL and applies the
   *    append-mode emission rule (hour end ≤ final watermark).
   */
-object Wave27Queries {
+object Wave27Queries extends QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_stream_cascade" -> ((s, d) => Events.cascadedWindows(s, d)))

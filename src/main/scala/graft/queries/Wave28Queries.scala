@@ -34,7 +34,7 @@ import graft.text.{Dedup, Quantize}
   *    mechanism are identical — only the seed source differs), which
   *    is exactly what a 100 TB pipeline wants for replayable audits.
   */
-object Wave28Queries {
+object Wave28Queries extends QueryModule {
 
   def qKsTest(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

@@ -31,7 +31,7 @@ import graft.text.Dedup
   *    bit-agg pattern), then one narrow unpivot of the per-group
   *    replica columns.
   */
-object Wave29Queries {
+object Wave29Queries extends QueryModule {
 
   // ---- k-core ----
 
@@ -52,11 +52,11 @@ object Wave29Queries {
       .unionByName(und.select(col("v").as("src"), col("u").as("dst")))
       .repartition(col("src"))
       .cache()
-    // no Scratch generation here: und/ed plans are canonically identical
-    // per (session, dir), so CacheManager dedupes repeated .cache()
-    // calls onto ONE entry — registering them in a swap would
-    // unpersist that shared entry and force every later call to
-    // rebuild it (measured +27 jobs per invocation)
+    // und/ed stay cached until the runner clears the cache (see
+    // [[graft.Scratch]]): their plans are canonically identical per
+    // (session, dir), so CacheManager dedupes repeated .cache() calls
+    // onto ONE entry — unpersisting it after each call would force
+    // every later call to rebuild it (measured +27 jobs per invocation)
     var surv = Dedup.truncate(
       ed.select(col("src").as("node")).distinct())
     val rounds = Seq.newBuilder[DataFrame]

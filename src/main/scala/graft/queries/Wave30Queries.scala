@@ -30,7 +30,7 @@ import graft.io.Tables
   *  - `q_tpch_q22`: dormant high-balance customers — scalar avg
   *    subquery + anti join against orders.
   */
-object Wave30Queries {
+object Wave30Queries extends QueryModule {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 

@@ -16,7 +16,7 @@ import graft.text.Search
   *    SELECTION (bit-identical weights make the chosen terms — not
   *    just scores — deterministic).
   */
-object Wave31Queries {
+object Wave31Queries extends QueryModule {
 
   def qRm3Search(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

@@ -28,7 +28,7 @@ import graft.text.Dedup
   *    layout-independent. At 100 TB this is the difference between
   *    scanning 365 daily rows and re-scanning the fact table.
   */
-object Wave32Queries {
+object Wave32Queries extends QueryModule {
 
   def qShallowClone(s: SparkSession, d: String): DataFrame = {
     // the "production" source IS the shared immutable base — cloning

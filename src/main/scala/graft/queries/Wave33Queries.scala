@@ -26,7 +26,7 @@ import graft.text.Dedup
   *    adopts partitioning after the fact: one bounded rewrite, no
   *    downtime, history preserved.
   */
-object Wave33Queries {
+object Wave33Queries extends QueryModule {
 
   private def fp(df: DataFrame): DataFrame =
     df.withColumn("fp", shiftrightunsigned(Dedup.md5Hash64(

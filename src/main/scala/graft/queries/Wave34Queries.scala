@@ -26,7 +26,7 @@ import graft.io.Tables
   *    first-week minimum. All integers; the invariant
   *    `active = new + retained + resurrected` is part of the output.
   */
-object Wave34Queries {
+object Wave34Queries extends QueryModule {
 
   def qRollingDau(s: SparkSession, d: String): DataFrame = {
     val ud = Tables.load(s, d, "events")

@@ -26,7 +26,7 @@ import graft.io.Tables
   *    equi-join back — never the quadratic dominance join the oracle
   *    uses (NOT EXISTS over the month) to prove it equal.
   */
-object Wave35Queries {
+object Wave35Queries extends QueryModule {
 
   def qWeightedMedian(s: SparkSession, d: String): DataFrame = {
     val li = Tables.load(s, d, "lineitem")

@@ -21,7 +21,7 @@ import graft.io.Tables
   *    ceil(n/10) and both sums are integers; one double division at
   *    the end.
   */
-object Wave36Queries {
+object Wave36Queries extends QueryModule {
 
   def qStreaks(s: SparkSession, d: String): DataFrame = {
     val ud = Tables.load(s, d, "events")

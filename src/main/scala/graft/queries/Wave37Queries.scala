@@ -16,7 +16,7 @@ import graft.streaming.Events
   *    watermark — the oracle replays the gap-islands construction and
   *    that emission rule.
   */
-object Wave37Queries {
+object Wave37Queries extends QueryModule {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_session_native" -> ((s, d) => Events.nativeSessions(s, d)))

@@ -31,7 +31,7 @@ import graft.text.Dedup
   * not the table. Money stays on the exact integer-cent grid for the
   * fingerprint; sums use the [[Q.dsum]] exact-decimal discipline.
   */
-object Wave38Queries {
+object Wave38Queries extends QueryModule {
 
   /** Same 63-bit order-independent row fingerprint as the wave-25
     * lake receipts (md5 upper half >>> 4 over k#c#st#cents). */

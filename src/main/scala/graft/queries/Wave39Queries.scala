@@ -44,7 +44,7 @@ import graft.text.Dedup
   * schema evolution through the logged schema costs nothing at scan
   * time; export costs O(total files) metadata lines and no data I/O.
   */
-object Wave39Queries {
+object Wave39Queries extends QueryModule {
 
   /** Same 63-bit order-independent row fingerprint family as the
     * wave-25/38 lake receipts (md5 upper half >>> 4). */

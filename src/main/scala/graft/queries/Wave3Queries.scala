@@ -13,7 +13,7 @@ import graft.text.TextStats
   * posexplode with position semantics, string aggregation, NULL-handling
   * battery, and winnowing (rolling min-hash) document fingerprints.
   */
-object Wave3Queries {
+object Wave3Queries extends QueryModule {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 

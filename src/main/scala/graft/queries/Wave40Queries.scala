@@ -34,7 +34,7 @@ import graft.text.Dedup
   * small-mutation amortization — the hourly metadata-correction pass
   * over a petabyte table costs the corrected rows, not the table.
   */
-object Wave40Queries {
+object Wave40Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

@@ -33,7 +33,7 @@ import graft.text.Dedup
   * the standard two-step that turns a 100 TB range probe into the
   * predicate's true footprint.
   */
-object Wave41Queries {
+object Wave41Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

@@ -32,7 +32,7 @@ import graft.text.Dedup
   * footprint, and maintenance compacts the slivers the merges left,
   * never rewriting the accumulated bulk.
   */
-object Wave42Queries {
+object Wave42Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

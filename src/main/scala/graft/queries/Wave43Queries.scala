@@ -32,7 +32,7 @@ import graft.text.Dedup
   * operations — dashboard counts and primary-key lookups — and both
   * become metadata-speed: O(manifest) and O(1 file) respectively.
   */
-object Wave43Queries {
+object Wave43Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

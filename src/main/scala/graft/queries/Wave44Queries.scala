@@ -31,7 +31,7 @@ import graft.text.Dedup
   * human-scale, and the predicate they build pushes down into the
   * column-pruned find pass.
   */
-object Wave44Queries {
+object Wave44Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

@@ -25,7 +25,7 @@ import graft.text.Dedup
   * economics SAFE at organizational scale — a hundred writers all
   * derive the same layout from one registered expression.
   */
-object Wave45Queries {
+object Wave45Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

@@ -35,7 +35,7 @@ import graft.text.Dedup
   * alternative at 100 TB is either a second copy of the table or full
   * scans for the second dimension.
   */
-object Wave46Queries {
+object Wave46Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

@@ -34,7 +34,7 @@ import graft.text.Dedup
   * (never the table) at write time, and snapshot validation on ADD is
   * the same one-pass scan Delta pays.
   */
-object Wave47Queries {
+object Wave47Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

@@ -27,7 +27,7 @@ import graft.text.Dedup
   *    price sum — at no observable catalog version are the moved
   *    rows in both tables or neither.
   */
-object Wave48Queries {
+object Wave48Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

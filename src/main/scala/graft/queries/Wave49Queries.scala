@@ -35,7 +35,7 @@ import graft.text.Dedup
   * freezing the whole table's retention; downstream consumers read
   * each commit's delta footprint exactly once.
   */
-object Wave49Queries {
+object Wave49Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

@@ -9,7 +9,7 @@ import graft.text.TextStats
 /** Fourth wave: report-layer output (the reference's email/chart
   * contract), column profiling (data-quality gate), math/bit scalar
   * batteries, token-length histogram. */
-object Wave4Queries {
+object Wave4Queries extends QueryModule {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 

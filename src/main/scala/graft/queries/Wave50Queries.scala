@@ -19,7 +19,7 @@ import graft.text.Dedup
   *    at 100 TB it is what makes partition economics safe to rely
   *    on: no writer among hundreds can mis-derive the layout key.
   */
-object Wave50Queries {
+object Wave50Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

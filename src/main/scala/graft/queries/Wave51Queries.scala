@@ -18,7 +18,7 @@ import graft.text.Dedup
   *    constraint, veto vs divert — the two failure policies a
   *    production load needs.
   */
-object Wave51Queries {
+object Wave51Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

@@ -18,7 +18,7 @@ import graft.text.Dedup
   *    difference between a schema cleanup being a metadata commit
   *    and being a full-table rewrite.
   */
-object Wave52Queries {
+object Wave52Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

@@ -18,7 +18,7 @@ import graft.io.Tables
   *    `ops/Scale` + `LayoutSpec`, now oracle-checked end-to-end as a
   *    registry query.
   */
-object Wave53Queries {
+object Wave53Queries extends QueryModule {
 
   def qBucketedJoin(s: SparkSession, d: String): DataFrame = {
     Scratch.withDir("graft_bj") { root =>

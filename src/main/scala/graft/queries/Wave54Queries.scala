@@ -20,7 +20,7 @@ import graft.io.Tables
   *    month and scanning ten years when the month arrives from a
   *    dimension filter instead of a literal.
   */
-object Wave54Queries {
+object Wave54Queries extends QueryModule {
 
   def qDynamicPruning(s: SparkSession, d: String): DataFrame = {
     Scratch.withDir("graft_dpp") { scratch =>

@@ -18,7 +18,7 @@ import graft.io.Tables
   *    stages, this is what keeps the thousands of small stages from
   *    paying thousands of empty tasks each.
   */
-object Wave55Queries {
+object Wave55Queries extends QueryModule {
 
   def qAqeCoalesce(s: SparkSession, d: String): DataFrame = {
     val agg = Tables.load(s, d, "lineitem")

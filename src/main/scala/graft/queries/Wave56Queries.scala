@@ -28,7 +28,7 @@ import graft.text.Dedup
   * with zero data I/O. Only writers that truly overlap pay a re-merge,
   * which is exactly Delta/Iceberg's optimistic-concurrency contract.
   */
-object Wave56Queries {
+object Wave56Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

@@ -34,7 +34,7 @@ import graft.text.Dedup
   * manifest-side skipping intact. [[Versioned.read]] plans through
   * the same scan.
   */
-object Wave57Queries {
+object Wave57Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

@@ -24,7 +24,7 @@ import graft.text.Dedup
   * client code, while keeping the catalog READ-ONLY so writes cannot
   * bypass constraints, generated columns, or the OCC commit path.
   */
-object Wave58Queries {
+object Wave58Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

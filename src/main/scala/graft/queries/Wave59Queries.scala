@@ -27,7 +27,7 @@ import graft.text.Dedup
   * racing allocators would both extend the same mark); the commit
   * retry reallocates against the winner — the Delta contract.
   */
-object Wave59Queries {
+object Wave59Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

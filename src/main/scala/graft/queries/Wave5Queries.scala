@@ -13,7 +13,7 @@ import graft.text.TextStats
   * reporting/curation layer a training-data pipeline runs over its
   * corpus. All counts are integer-exact; the single `ln` per score gets
   * identical integer inputs in both engines. */
-object Wave5Queries {
+object Wave5Queries extends QueryModule {
 
   private def docs(s: SparkSession, d: String) =
     Tables.load(s, d, "documents")

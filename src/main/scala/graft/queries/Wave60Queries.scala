@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * metadata at manifest-scan cost, in SQL, without touching a data
   * byte (the Iceberg metadata-tables economics).
   */
-object Wave60Queries {
+object Wave60Queries extends QueryModule {
 
   def qMetaTables(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")

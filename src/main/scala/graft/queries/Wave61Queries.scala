@@ -23,7 +23,7 @@ import graft.text.Dedup
   * matter how large the table — and it is available to plain SQL
   * writers without giving them a path around the table's invariants.
   */
-object Wave61Queries {
+object Wave61Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

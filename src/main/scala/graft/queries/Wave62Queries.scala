@@ -22,7 +22,7 @@ import graft.text.Dedup
   * is available to plain SQL, and compaction amortizes the rewrite
   * later — the Delta/Iceberg v2 merge-on-read contract end to end.
   */
-object Wave62Queries {
+object Wave62Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

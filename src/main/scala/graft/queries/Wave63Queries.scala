@@ -24,7 +24,7 @@ import graft.text.Dedup
   * and needs zero engine-specific sink code — `writeStream
   * .format("graft-lake")` is the whole contract.
   */
-object Wave63Queries {
+object Wave63Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

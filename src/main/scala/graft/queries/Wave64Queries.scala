@@ -36,7 +36,7 @@ import graft.text.Dedup
   * rows in memory (parquet pages only) and the deletion-vector
   * sidecars ride file-at-a-time into the commit union.
   */
-object Wave64Queries {
+object Wave64Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

@@ -38,7 +38,7 @@ import graft.text.Dedup
   * metastore round-trip, no driver-side listing beyond the manifest
   * the maintenance job already reads.
   */
-object Wave65Queries {
+object Wave65Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

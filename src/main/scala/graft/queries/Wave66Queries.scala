@@ -52,7 +52,7 @@ import graft.ops.Versioned
   * driver-metadata operations on scratch tables — O(file count)
   * manifest work, zero data rewrites, by construction.
   */
-object Wave66Queries {
+object Wave66Queries extends QueryModule {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 

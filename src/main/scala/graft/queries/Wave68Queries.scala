@@ -27,7 +27,7 @@ import graft.ops.Versioned
   * million files reports 3 files' rows, so the planner sees the
   * footprint the scan will actually pay, not the table's.
   */
-object Wave68Queries {
+object Wave68Queries extends QueryModule {
 
   def qLakeCbo(s: SparkSession, d: String): DataFrame = {
     Scratch.withDir("graft_cbo") { scratch =>

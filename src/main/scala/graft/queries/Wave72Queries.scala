@@ -49,7 +49,7 @@ import graft.ops.Versioned
   *    aggregates (map-side combine, zero joins) — the receipt pins
   *    exactly one lineitem scan in the executed plan.
   */
-object Wave72Queries {
+object Wave72Queries extends QueryModule {
 
   // ---------------------------------------------------------------
   // lake star fixture: four lake tables with stats+NDV registered,

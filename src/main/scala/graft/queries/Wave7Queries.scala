@@ -19,7 +19,7 @@ import graft.text.{Bpe, TextStats}
   *    document) is built in-plan so both engines extract the same
   *    payload and the oracle replays the full strip/decode cascade.
   */
-object Wave7Queries {
+object Wave7Queries extends QueryModule {
 
   private def docs(s: SparkSession, d: String) = Tables.load(s, d, "documents")
 

@@ -30,7 +30,7 @@ import graft.text.{Dedup, Search, Similarity, TextStats}
   *    the mismatch count in-plan: the materialized-view pattern that
   *    avoids rescanning 100 TB per daily batch.
   */
-object Wave8Queries {
+object Wave8Queries extends QueryModule {
 
   private def docs(s: SparkSession, d: String) =
     Q.spread(Tables.load(s, d, "documents"))
@@ -65,7 +65,7 @@ object Wave8Queries {
     * the hash. Production dial 16 subspaces × 32 codes (80-bit codes,
     * ~25× smaller than the fp32 vectors) + a 64-candidate exact
     * re-rank; measured recall@5 1.000 / 1.000 / 0.900 at
-    * sf0.001/0.01/0.1 (`tools/PqRecall`), floor 0.6 under the band.
+    * sf0.001/0.01/0.1 against exact top-k, floor 0.6 under the band.
     * Pure-ADC ordering (no re-rank) measures 0.14–0.54 on these
     * near-uniform embeddings — the shortlist re-rank is the
     * production two-stage shape, not a test crutch. */

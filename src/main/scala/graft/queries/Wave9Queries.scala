@@ -31,7 +31,7 @@ import graft.text.{Bpe, Linalg, Search, Similarity, TextStats}
   *  - `q_l_diversity`: l-diversity audit on the k-anonymity
   *    quasi-identifier classes (distinct sensitive values per class).
   */
-object Wave9Queries {
+object Wave9Queries extends QueryModule {
 
   private def docs(s: SparkSession, d: String) =
     Q.spread(Tables.load(s, d, "documents"))

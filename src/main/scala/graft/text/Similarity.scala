@@ -124,8 +124,8 @@ object Similarity {
     * instead of p^c: at the 0.45-threshold margin (p ≈ 0.65) the
     * 8×7-bit dial goes from ≈0.05 to ≈0.23 per table, recall over 8
     * tables from ≈0.33 to ≈0.88 — measured 0.875 / 0.929 / 1.000 at
-    * sf0.1/0.01/0.001 on the near-uniform test embeddings (see
-    * `tools/LshPairRecall`), vs 0.21–0.43 exact-probe. Real near-dup
+    * sf0.1/0.01/0.001 on the near-uniform test embeddings against
+    * the exact all-pairs truth, vs 0.21–0.43 exact-probe. Real near-dup
     * corpora (cos ≥ 0.8, p ≈ 0.8+) bucket far more reliably.
     *
     * Cost: candidate volume per table is (c+1)·Σ bucketᵢ² at

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.graftspec.Bus
 import org.apache.spark.sql.types.{IntegerType, StringType, TimestampNTZType, TimestampType}
 
 import graft.io.Csv
@@ -19,8 +18,9 @@ class CsvSpec extends SparkSuite {
       body(path)
     }
 
-  private def inferring(path: String) = Bus.jobsDuring(spark.sparkContext) {
-    Csv.readInferred(spark, path)
+  private def inferring(path: String) = {
+    val (df, jobs) = Jobs.during(spark.sparkContext)(Csv.readInferred(spark, path))
+    (df, jobs.sites)
   }
 
   test("reading an unchanged CSV again starts no Spark job") {

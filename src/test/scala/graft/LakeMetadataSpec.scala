@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.hadoop.fs.{FileUtil, Path}
-import org.apache.spark.graftspec.Bus
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -27,8 +26,10 @@ class LakeMetadataSpec extends SparkSuite {
     require(FileUtil.copy(hfs, new Path(src), hfs, new Path(dst), false,
       spark.sparkContext.hadoopConfiguration))
 
-  private def jobsDuring[T](body: => T): (T, Seq[String]) =
-    Bus.jobsDuring(spark.sparkContext)(body)
+  private def jobsDuring[T](body: => T): (T, Seq[String]) = {
+    val (r, jobs) = Jobs.during(spark.sparkContext)(body)
+    (r, jobs.sites)
+  }
 
   /** 200 rows over 4 range-clustered files with `k` stats. */
   private def initTable(dir: String): Unit =

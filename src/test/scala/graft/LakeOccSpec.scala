@@ -4,7 +4,6 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
 import org.apache.hadoop.fs.{FileUtil, Path}
-import org.apache.spark.graftspec.Bus
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -114,9 +113,9 @@ class LakeOccSpec extends SparkSuite {
         Versioned.merge(Seq((3L, "b", 33.0)).toDF("k", "pc", "p"), dir,
           Seq("k"), partitionCol = Some("pc"), baseVersion = base)
       val sc = spark.sparkContext
-      val (_, calmJobs) = Bus.jobsDuring(sc)(mergeB(calm, None))
+      val (_, Jobs.Counts(calmJobs, _, _)) = Jobs.during(sc)(mergeB(calm, None))
       // computed against v1, lands after v2: loses, then rebases
-      val (v, racedJobs) = Bus.jobsDuring(sc)(mergeB(raced, Some(1L)))
+      val (v, Jobs.Counts(racedJobs, _, _)) = Jobs.during(sc)(mergeB(raced, Some(1L)))
       assert(v == 3L && ops(raced).last == "MERGE+REBASE")
       assert(racedJobs.sorted == calmJobs.sorted,
         s"the rebase started jobs: raced $racedJobs, uncontended $calmJobs")

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.graftspec.Bus
 
 import graft.io.Csv
 import graft.jobs.MarketJob
@@ -79,7 +78,7 @@ class MarketJobSpec extends SparkSuite {
       "jobs, none of them CSV inference") {
     withMarket { (dir, csv) =>
       MarketJob.run(spark, "2024-09-13", "2024-09-18", "first", csv, s"$dir/out")
-      val (_, sites) = Bus.jobsDuring(spark.sparkContext) {
+      val (_, Jobs.Counts(sites, _, _)) = Jobs.during(spark.sparkContext) {
         MarketJob.run(spark, "2024-09-13", "2024-09-18", "second", csv, s"$dir/out")
       }
       assert(sites.size <= 3, s"jobs: $sites")

@@ -3,10 +3,10 @@ package graft
 import java.io.File
 
 /** The scratch lifecycle: block-scoped directories vanish with their
-  * block, a generation releases its predecessor, memo directories are
-  * built once, and a long-lived session running lake queries leaves
-  * nothing behind in `java.io.tmpdir` except the scratch root's memos
-  * and one generation per key. */
+  * block, memo directories are built once, and a long-lived session
+  * running lake queries leaves nothing behind in `java.io.tmpdir`
+  * except the scratch root's memos. Persisted frames outlive a call
+  * until the runner clears the cache, unless the call collected. */
 class ScratchSpec extends SparkSuite {
 
   private def names(dir: File): Set[String] =
@@ -25,24 +25,6 @@ class ScratchSpec extends SparkSuite {
     assert(failed.nonEmpty && !new File(failed).exists())
   }
 
-  test("a new generation unpersists the previous frames and deletes its directory") {
-    val g1 = Scratch.generation("spec_gen", spark)
-    val df = spark.range(10).toDF("x").cache()
-    df.count()
-    g1.hold(df)
-    val d1 = g1.dir
-    assert(new File(d1).isDirectory)
-    assert(df.storageLevel.isValid)
-    val g2 = Scratch.generation("spec_gen", spark)
-    assert(!new File(d1).exists())
-    assert(!df.storageLevel.isValid)
-    assert(new File(g2.dir).isDirectory)
-    // another session's generation under the same op is independent
-    val other = spark.newSession()
-    val g3 = Scratch.generation("spec_gen", other)
-    assert(new File(g2.dir).isDirectory && new File(g3.dir).isDirectory)
-  }
-
   test("memo builds once per key and keeps its directory") {
     var builds = 0
     def m = Scratch.memo("spec_memo", "k") { dir =>
@@ -55,7 +37,7 @@ class ScratchSpec extends SparkSuite {
     assert(Scratch.memo("spec_memo", "bad")(_ => ()).nonEmpty)
   }
 
-  test("a lake subset run twice leaves only memos and one generation per key") {
+  test("a lake subset run twice leaves only memos in the scratch root") {
     val rows = Seq("q_branch_publish", "q_sql_branch", "q_sql_ddl",
       "q_manifest_segments", "q_sql_tag_travel", "q_winnow")
     val tmp = new File(System.getProperty("java.io.tmpdir"))
@@ -75,9 +57,24 @@ class ScratchSpec extends SparkSuite {
     val (memos, rest) = names(root).partition(_.startsWith("memo-"))
     assert(memos.nonEmpty && memos == firstMemos,
       s"the second run added memo directories: ${memos -- firstMemos}")
-    val gens = rest.filter(_.startsWith("gen-"))
-    assert(rest == gens, s"block-scoped directories outlived their block: ${rest -- gens}")
-    val perOp = gens.groupBy(_.replaceAll("-\\d+$", ""))
-    assert(perOp.values.forall(_.size == 1), s"more than one generation per key: $perOp")
+    // no per-call (`gen-`) or block-scoped directory outlives its call
+    assert(rest.isEmpty, s"directories that outlived their call: $rest")
+  }
+
+  private def cacheEmpty: Boolean = spark.sharedState.cacheManager.isEmpty
+
+  test("two q_lm_bigram runs leave its persisted frames in the CacheManager") {
+    spark.catalog.clearCache()
+    (1 to 2).foreach(_ =>
+      Bench.timedAction(SparkEntry.queries("q_lm_bigram")(spark, sf("sf0.001"))))
+    assert(!cacheEmpty, "the second run released the frames it reads")
+    assert(!spark.sparkContext.getPersistentRDDs.isEmpty)
+    spark.catalog.clearCache()
+  }
+
+  test("q_textrank_keywords leaves nothing cached") {
+    spark.catalog.clearCache()
+    Bench.timedAction(SparkEntry.queries("q_textrank_keywords")(spark, sf("sf0.001")))
+    assert(cacheEmpty, "the collected token frame is still cached")
   }
 }

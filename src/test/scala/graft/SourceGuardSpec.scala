@@ -11,8 +11,9 @@ import scala.jdk.CollectionConverters._
   * deletion vectors are read only through the driver-rows accessor,
   * only `VersionedLog` knows the lake's on-disk log, the lake reads
   * data files only through the connector's scan,
-  * lake commits retry only through one optimistic-commit loop, and the
-  * report path (returns, pipeline, jobs) caches no frame. */
+  * lake commits retry only through one optimistic-commit loop, the
+  * report path (returns, pipeline, jobs) caches no frame, only six
+  * objects are mains, and one helper listens to Spark's jobs. */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private val main = Paths.get("src/main/scala")
@@ -104,6 +105,25 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
     val caching = (holders(".cache()") ++ holders(".persist("))
       .filter(f => report.contains(f) || f.startsWith("graft/jobs/")).distinct
     assert(caching.isEmpty, s"report-path files that cache: $caching")
+  }
+
+  test("def main( appears only in Bench, Verify, Smoke, MarketJob, Probe " +
+      "and ScaleUp") {
+    assert(holders("def main(") == Seq("graft/Bench.scala", "graft/Smoke.scala",
+      "graft/Verify.scala", "graft/jobs/MarketJob.scala",
+      "graft/tools/Probe.scala", "graft/tools/ScaleUp.scala"))
+  }
+
+  test("one job listener: SparkListener is subclassed only in Jobs.scala, " +
+      "and no per-call scratch generation is left") {
+    // this file names both only in its assertions
+    val src = Paths.get("src")
+    val self = "test/scala/graft/SourceGuardSpec.scala"
+    val listeners = Seq("new SparkListener", "extends SparkListener")
+      .flatMap(holders(_, src)).distinct.sorted
+    assert(listeners == Seq("main/scala/graft/Jobs.scala", self),
+      s"SparkListener subclasses in: $listeners")
+    assert(holders("Scratch.generation", src) == Seq(self))
   }
 
   test("one commit loop: no retry count, and commit( is called only by " +
