@@ -14,6 +14,8 @@ import org.apache.spark.sql.SparkSession
   *  - AQE on;
   *  - `legacy.parquet.nanosAsLong` — events.parquet stores
   *    TIMESTAMP(NANOS), read as long and converted in `Tables.load`;
+  *  - the `lake` catalog (`graft.sources.LakeCatalog`), so SQL names
+  *    lake tables as ``lake.`<path>` ``;
   *  - no UI.
   *
   * Callers add only deployment settings: master URL, app name and
@@ -33,5 +35,6 @@ object Session {
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
       .config("spark.ui.enabled", "false")
 }

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, NullType, StringType, StructField, StructType}
 
 /** The versioned lake's on-disk log: the only code that knows where a
   * table keeps its files and how they are encoded. The operation
@@ -21,7 +21,11 @@ import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType
   *                              `gbatch=` on is the file KEY
   *   _versions/v<N>.manifest    manifest: parquet directory of
   *                              (f, stats_json) rows, `seg:` rows
-  *                              referencing segments (legacy: text)
+  *                              referencing segments (legacy: text);
+  *                              a file row's stats_json is written
+  *                              and read only by [[FileStats]], a
+  *                              `seg:` row's holds the segment's
+  *                              footprint ([[writeSegment]])
   *   _versions/segs/seg-<id>.parquet  immutable manifest segment
   *   _versions/v<N>.schema      logged table schema (JSON)
   *   _versions/v<N>.dv/         deletion vector, parquet (f, pos)
@@ -656,102 +660,6 @@ trait VersionedLog {
       version: Option[Long] = None): Seq[String] =
     readManifest(spark, path, resolve(spark, path, version))
 
-  // ---------------------------------------------------------------- //
-  // per-file statistics documents                                    //
-  // ---------------------------------------------------------------- //
-
-  /** Pre-parsed stats document: parse each manifest entry's stats JSON
-    * ONCE per scan and probe the tree for every required column —
-    * string-based probes re-parsed per (file × column × probe), an
-    * O(files × cols) pile of full JSON parses on every planning pass
-    * of a large manifest. */
-  private[graft] type StatsDoc = org.json4s.JValue
-
-  private[graft] def parseStatsDoc(sj: String): Option[StatsDoc] =
-    try Some(org.json4s.jackson.JsonMethods.parse(sj))
-    catch { case _: Exception => None }
-
-  /** The recorded HLL NDV sketch (continuous base64) of column `c` in
-    * a parsed stats document, if present — what the DSv2 scan unions
-    * into a planner-facing distinct count. */
-  private[graft] def hllStatIn(doc: StatsDoc, c: String): Option[String] = {
-    import org.json4s._
-    doc \ s"#hll:$c" \ "b" match {
-      case JString(b) => Some(b)
-      case _ => None
-    }
-  }
-
-  /** The recorded exact null count of column `c` in a parsed stats
-    * document, if present (logged next to the HLL sketch — the
-    * planner's `hasCountStats` gate needs both). */
-  private[graft] def nullStatIn(doc: StatsDoc, c: String): Option[Long] = {
-    import org.json4s._
-    doc \ s"#nulls:$c" \ "mnl" match {
-      case JInt(n) => Some(n.toLong)
-      case _ => None
-    }
-  }
-
-  /** The recorded integral min/max of column `c` in a parsed stats
-    * document ("t":"l" entries). Surfaced as planner column bounds:
-    * Spark's JoinEstimation intersects the two keys' value intervals
-    * BEFORE the NDV formula, and a ColumnStat without bounds reads as
-    * an empty interval — every CBO join estimate collapses to 0 rows
-    * (and zeroed stats wipe the column NDVs the aggregate estimate
-    * above the join needs). */
-  private[graft] def longMinMaxIn(doc: StatsDoc,
-      c: String): Option[(Long, Long)] = {
-    import org.json4s._
-    (doc \ c \ "mnl", doc \ c \ "mxl") match {
-      case (JInt(mn), JInt(mx)) => Some((mn.toLong, mx.toLong))
-      case _ => None
-    }
-  }
-
-  /** The recorded floating min/max of column `c` ("t":"d" entries). */
-  private[graft] def doubleMinMaxIn(doc: StatsDoc,
-      c: String): Option[(Double, Double)] = {
-    import org.json4s._
-    (doc \ c \ "mnd", doc \ c \ "mxd") match {
-      case (JDouble(mn), JDouble(mx)) => Some((mn, mx))
-      case (JInt(mn), JInt(mx)) => Some((mn.toDouble, mx.toDouble))
-      case _ => None
-    }
-  }
-
-  /** The recorded `#bytes` of a manifest entry's stats (logged on every
-    * commit), if present — what size-based compaction and the
-    * streaming source's byte-based admission control read. */
-  private[graft] def entryBytes(sj: Option[String]): Option[Long] =
-    sj.flatMap { js =>
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      JsonMethods.parse(js) \ "#bytes" \ "mnl" match {
-        case JInt(n) => Some(n.toLong)
-        case _ => None
-      }
-    }
-
-  /** The recorded [min, max] of stats key `key` in a parsed stats
-    * document, in column units: a DECIMAL column logs its unscaled
-    * long at the column's `scale` ("t":"l"), so it is divided back —
-    * exactly, via BigDecimal, so it compares as the same double as a
-    * filter value. None when the entry is absent or incomplete. */
-  protected def boundsIn(doc: StatsDoc, key: String,
-      scale: Int): Option[(Double, Double)] = {
-    import org.json4s._
-    def units(n: Long): Double =
-      if (scale == 0) n.toDouble
-      else java.math.BigDecimal.valueOf(n, scale).doubleValue
-    doc \ key \ "t" match {
-      case JString("l") => longMinMaxIn(doc, key).map { case (mn, mx) =>
-        (units(mn), units(mx)) }
-      case JString("d") => doubleMinMaxIn(doc, key)
-      case _ => None
-    }
-  }
-
   /** Entries of version `v` whose stats MAY satisfy every (column,
     * lo, hi) interval — the one data-skipping test, shared by the
     * connector's scan planning and `readRange`. It runs on the driver
@@ -765,11 +673,11 @@ trait VersionedLog {
     if (ranges.isEmpty) entries
     else {
       val keyed = ranges.map { case (c, lo, hi) =>
-        (statsKeyOf(spark, path, v, c), lo, hi) }
+        (statsFieldOf(spark, path, v, c), lo, hi) }
       entries.filter { case (_, sj) =>
-        sj.flatMap(parseStatsDoc).forall(doc => keyed.forall {
-          case ((k, scale), lo, hi) => boundsIn(doc, k, scale)
-            .forall { case (mn, mx) => mn <= hi && mx >= lo } })
+        val stats = FileStats.decode(sj)
+        keyed.forall { case (f, lo, hi) =>
+          stats.units(f).forall { case (mn, mx) => mn <= hi && mx >= lo } }
       }
     }
   }
@@ -830,24 +738,21 @@ trait VersionedLog {
   protected def hasMapping(s: StructType): Boolean =
     s.fields.exists(f => physicalOf(f) != f.name)
 
-  /** Manifest stats (and Bloom sidecars) are keyed by the PHYSICAL
-    * column name — the name is invariant under renames, so historical
-    * per-file stats stay valid forever; lookups translate. A name
-    * absent from the logged schema is an error, NOT a raw-key
-    * fallback: a pre-rename name must not silently answer with the
-    * renamed column's stats. Also returns the column's decimal scale
-    * (0 for other types): a DECIMAL logs its bounds unscaled. */
-  protected def statsKeyOf(spark: SparkSession, path: String, v: Long,
-      column: String): (String, Int) =
+  /** The logged-schema field whose per-file stats answer for
+    * `column` — stats key on its PHYSICAL name ([[FileStats]]), which
+    * is invariant under renames, so historical per-file stats stay
+    * valid forever. A name absent from the logged schema is an error,
+    * NOT a raw-key fallback: a pre-rename name must not silently
+    * answer with the renamed column's stats. A legacy table without a
+    * logged schema keys on the name itself. */
+  protected def statsFieldOf(spark: SparkSession, path: String, v: Long,
+      column: String): StructField =
     tableSchema(spark, path, Some(v)) match {
-      case None => (column, 0) // legacy table without a logged schema
+      case None => StructField(column, NullType)
       case Some(s0) =>
         val f0 = s0.fields.find(_.name == column)
         require(f0.isDefined, s"no such column '$column' on $path at v$v")
-        (physicalOf(f0.get), f0.get.dataType match {
-          case d: org.apache.spark.sql.types.DecimalType => d.scale
-          case _ => 0
-        })
+        f0.get
     }
 
   /** Schema identity for the rebase conflict check: field names,

@@ -128,7 +128,7 @@ trait VersionedReads extends VersionedLog { self: Versioned.type =>
     val oldSet = expand(refsO, inlO).map(_._1).toSet
     val added = expand(refsN, inlN).filterNot(e => oldSet(e._1))
     (added.size.toLong,
-      added.map(e => entryBytes(e._2).getOrElse(0L)).sum)
+      added.map(e => FileStats.decode(e._2).bytes.getOrElse(0L)).sum)
   }
 
   /** Row-level change feed `fromV` → `toV` as a whole-row bag diff:
@@ -293,13 +293,13 @@ trait VersionedReads extends VersionedLog { self: Versioned.type =>
     require(deletionVectorRows(spark, path, Some(v)).isEmpty,
       s"metadataStats needs a deletion-vector-free version — compact " +
         s"$path first to materialize outstanding vectors")
-    val (key, scale) = statsKeyOf(spark, path, v, column)
+    val field = statsFieldOf(spark, path, v, column)
     val docs = manifestEntries(spark, path, v).map(_._2)
-      .map(sj => (sj, sj.flatMap(parseStatsDoc)))
-    val rows = docs.map(_._2.flatMap(longMinMaxIn(_, "#rows")).map(_._1))
-    val bounds = docs.map(_._2.flatMap(boundsIn(_, key, scale)))
+    val stats = docs.map(FileStats.decode)
+    val rows = stats.map(_.rows)
+    val bounds = stats.map(_.units(field))
     val noCount = rows.count(_.isEmpty)
-    val noStats = docs.zip(bounds).count { case ((sj, _), b) =>
+    val noStats = docs.zip(bounds).count { case (sj, b) =>
       sj.isDefined && b.isEmpty }
     require(noCount == 0 && noStats == 0,
       s"metadataStats needs stats on every file for '$column' " +
@@ -322,22 +322,12 @@ trait VersionedReads extends VersionedLog { self: Versioned.type =>
     val v = resolve(spark, path, version)
     val entries = manifestEntries(spark, path, v)
     val hash = spark.range(1).select(xxhash64(value)).head().getLong(0)
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
+    val field = statsFieldOf(spark, path, v, column)
     val kept = entries.filter { case (_, sj) =>
-      sj match {
-        case None => true
-        case Some(js) =>
-          (JsonMethods.parse(js) \
-              s"#bloom:${statsKeyOf(spark, path, v, column)._1}" \ "b") match {
-            case JString(b64) =>
-              val bytes = java.util.Base64.getMimeDecoder.decode(b64)
-              org.apache.spark.util.sketch.BloomFilter
-                .readFrom(new java.io.ByteArrayInputStream(bytes))
-                .mightContainLong(hash)
-            case _ => true
-          }
-      }
+      FileStats.decode(sj).bloom(field).forall(bytes =>
+        org.apache.spark.util.sketch.BloomFilter
+          .readFrom(new java.io.ByteArrayInputStream(bytes))
+          .mightContainLong(hash))
     }.map(_._1)
     Pruned(readLive(spark, path, v, Some(kept), keepMeta = false),
       kept.length, entries.length)

@@ -280,7 +280,7 @@ trait VersionedRewrites extends VersionedLog { self: Versioned.type =>
       // every commit — so a million-file probe is metadata arithmetic,
       // not a million FileStatus calls; legacy entries fall back
       val (smallE, bigE) = curEntries.partition { case (p, sj) =>
-        entryBytes(sj).getOrElse(
+        FileStats.decode(sj).bytes.getOrElse(
           f.getFileStatus(new org.apache.hadoop.fs.Path(p)).getLen) < minBytes
       }
       if (smallE.length <= 1) Left(Compaction(-1L, 0, curEntries.length))

@@ -111,17 +111,14 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
       p.getFileSystem(conf).getFileStatus(p).getLen
     }.map { case (p0, n) => fileKey(p0) -> n }.toMap
 
-  /** Exact per-staged-file min/max of the registered stats columns —
-    * ONE bounded aggregate over the just-staged batch (not the
-    * table), grouped by file. Long-family columns render as
-    * {"t":"l","mnl":…,"mxl":…}, double-family as
-    * {"t":"d","mnd":…,"mxd":…}; other types carry no stats (never
-    * pruned — conservative and exact). All-NULL columns carry no
-    * entry either (kept on probe; their rows can't match a range
-    * anyway). Every staged file additionally carries `#rows` and
-    * `#bytes`. `written` is the schema the files were staged with,
-    * under PHYSICAL names (what stats key on). Returned map is keyed
-    * by file NAME. */
+  /** Per-staged-file statistics ([[FileStats]]) of the registered
+    * stats and Bloom columns — ONE bounded aggregate over the
+    * just-staged batch (not the table), grouped by file: min/max,
+    * Bloom filter, HLL sketch and null count per column, as the codec
+    * maps each type. Every staged file carries `#rows` and `#bytes`.
+    * `written` is the schema the files were staged with, under
+    * PHYSICAL names (what stats key on). Returned map is keyed by file
+    * NAME. */
   private def statsJsonFor(spark: SparkSession, path: String,
       staged: Seq[String], written: StructType, cols: Seq[String],
       bloomCols: Seq[String]): Map[String, String] = {
@@ -140,8 +137,7 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
         val rows = try r.getRecordCount finally r.close()
         (rows, in.getLength)
       }.map { case (p0, (n, b)) =>
-        fileKey(p0) -> (s"""{"#rows":{"t":"l","mnl":$n,"mxl":$n},""" +
-          s""""#bytes":{"t":"l","mnl":$b,"mxl":$b}}""")
+        fileKey(p0) -> FileStats.encode(FileStats(Some(n), Some(b)))
       }.toMap
     }
     val bytes = stagedBytes(spark, staged)
@@ -157,111 +153,32 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
     // turns a post-aggregation join on a low-NDV key into a broadcast
     // instead of a sort-merge. ~1.6 KB per (file, column) at the
     // default lgK=12 — manifest-cheap.
-    //
-    // Spark's hll_sketch_agg accepts ONLY int/bigint/string/binary
-    // (ExpectsInputTypes, no implicit widening — short/byte fail at
-    // analysis), so every sketchable type is mapped to a
-    // DISTINCT-PRESERVING long or string first. Integrals all go
-    // through long so every file's sketch hashes the same physical
-    // type regardless of the column's declared width; dates become
-    // epoch-days, timestamps epoch-micros, decimals their canonical
-    // string form (exact at the column's fixed scale — a double cast
-    // would collide above 2^53).
-    val hllInput: PartialFunction[
-        (String, org.apache.spark.sql.types.DataType), Column] = {
-      case (c, org.apache.spark.sql.types.LongType |
-          org.apache.spark.sql.types.IntegerType |
-          org.apache.spark.sql.types.ShortType |
-          org.apache.spark.sql.types.ByteType) => col(c).cast("long")
-      case (c, org.apache.spark.sql.types.StringType) => col(c)
-      case (c, org.apache.spark.sql.types.DateType) => unix_date(col(c)).cast("long")
-      case (c, org.apache.spark.sql.types.TimestampType) => unix_micros(col(c))
-      case (c, _: org.apache.spark.sql.types.DecimalType) => col(c).cast("string")
-    }
-    val hllPresent = present.filter(c => hllInput.isDefinedAt((c, schema(c).dataType)))
-    // date/timestamp stats columns fold to epoch-day / epoch-micros
-    // longs IN-PLAN — min/max commute with the monotonic conversion,
-    // and no java.sql external round-trip ever touches the JVM default
-    // timezone. Without bounds these columns surfaced NDV-only
-    // ColumnStats, which JoinEstimation reads as an EMPTY value
-    // interval: every CBO join keyed on a date/timestamp/decimal stats
-    // column collapsed to 0-row estimates.
-    def boundInput(c: String): Column = schema(c).dataType match {
-      case org.apache.spark.sql.types.DateType =>
-        unix_date(col(c)).cast("long")
-      case org.apache.spark.sql.types.TimestampType => unix_micros(col(c))
-      case _ => col(c)
-    }
-    val aggs = present.flatMap(c =>
-      Seq(min(boundInput(c)).as(s"mn_$c"), max(boundInput(c)).as(s"mx_$c"))) ++
-      bloomPresent.map(c =>
-        // Spark's base64 chunks with CR/LF (MIME) — illegal inside a
-        // JSON string; strip to the continuous RFC4648 form
-        regexp_replace(base64(graft.functions.Bloom.bloomAgg(col(c),
-          bloomExpected, bloomBits)), "[\\r\\n]", "").as(s"bl_$c")) ++
-      hllPresent.flatMap(c => Seq(
-        regexp_replace(base64(hll_sketch_agg(
-          hllInput((c, schema(c).dataType)))), "[\\r\\n]", "")
-          .as(s"hl_$c"),
+    def inputs(of: (Column, DataType) => Option[Column]) =
+      present.flatMap(c => of(col(c), schema(c).dataType).map(c -> _))
+    val bounded = inputs(FileStats.boundInput)
+    val sketched = inputs(FileStats.sketchInput)
+    val aggs = bounded.flatMap { case (c, in) =>
+        Seq(min(in).as(s"mn_$c"), max(in).as(s"mx_$c")) } ++
+      bloomPresent.map(c => FileStats.loggedBytes(graft.functions.Bloom
+        .bloomAgg(col(c), bloomExpected, bloomBits)).as(s"bl_$c")) ++
+      sketched.flatMap { case (c, in) => Seq(
+        FileStats.loggedBytes(hll_sketch_agg(in)).as(s"hl_$c"),
         // exact non-null count: the CBO's AggregateEstimation demands
         // BOTH distinctCount and nullCount (hasCountStats) before it
         // trusts an NDV — a sketch without the null count is ignored
-        count(col(c)).as(s"nn_$c"))) :+
+        count(col(c)).as(s"nn_$c")) } :+
       count(lit(1)).as("__n")
     val rows = df.groupBy(col(fileCol)).agg(aggs.head, aggs.tail: _*).collect()
-    rows.flatMap { r =>
-      val rowCount = r.getLong(r.fieldIndex("__n"))
-      val extras =
-        Seq(s""""#rows":{"t":"l","mnl":$rowCount,"mxl":$rowCount}""") ++
-        bytes.get(r.getString(r.fieldIndex(fileCol))).map(b =>
-          s""""#bytes":{"t":"l","mnl":$b,"mxl":$b}""") ++
-        bloomPresent.flatMap { c =>
-          val i = r.fieldIndex(s"bl_$c")
-          if (r.isNullAt(i)) None
-          else Some(s""""#bloom:$c":{"t":"b","b":"${r.getString(i)}"}""")
-        } ++
-        hllPresent.flatMap { c =>
-          val i = r.fieldIndex(s"hl_$c")
-          if (r.isNullAt(i)) None
-          else {
-            val nulls = rowCount - r.getLong(r.fieldIndex(s"nn_$c"))
-            Seq(s""""#hll:$c":{"t":"h","b":"${r.getString(i)}"}""",
-              s""""#nulls:$c":{"t":"l","mnl":$nulls,"mxl":$nulls}""")
-          }
-        }
-      val parts = extras ++ present.flatMap { c =>
-        val mnI = r.fieldIndex(s"mn_$c")
-        val mxI = r.fieldIndex(s"mx_$c")
-        if (r.isNullAt(mnI) || r.isNullAt(mxI)) None
-        else schema(c).dataType match {
-          case org.apache.spark.sql.types.LongType |
-              org.apache.spark.sql.types.IntegerType |
-              org.apache.spark.sql.types.ShortType |
-              org.apache.spark.sql.types.ByteType |
-              // dates/timestamps arrive pre-folded to longs (above)
-              org.apache.spark.sql.types.DateType |
-              org.apache.spark.sql.types.TimestampType =>
-            val mn = r.getAs[Number](mnI).longValue()
-            val mx = r.getAs[Number](mxI).longValue()
-            Some(s""""$c":{"t":"l","mnl":$mn,"mxl":$mx}""")
-          case dt: org.apache.spark.sql.types.DecimalType
-              if dt.precision <= 18 =>
-            // unscaled long at the column's fixed scale — exact (a
-            // double render would collide above 2^53, like the HLL
-            // input's canonical-string rationale)
-            def unscaled(i: Int): Long = r.getAs[java.math.BigDecimal](i)
-              .setScale(dt.scale).unscaledValue().longValueExact()
-            Some(s""""$c":{"t":"l","mnl":${unscaled(mnI)},"mxl":${unscaled(mxI)}}""")
-          case org.apache.spark.sql.types.DoubleType |
-              org.apache.spark.sql.types.FloatType =>
-            val mn = r.getAs[Number](mnI).doubleValue()
-            val mx = r.getAs[Number](mxI).doubleValue()
-            Some(s""""$c":{"t":"d","mnd":$mn,"mxd":$mx}""")
-          case _ => None
-        }
-      }
-      if (parts.isEmpty) None
-      else Some(r.getString(r.fieldIndex(fileCol)) -> parts.mkString("{", ",", "}"))
+    rows.map { r =>
+      def get(name: String): Any = r.get(r.fieldIndex(name))
+      val file = r.getString(r.fieldIndex(fileCol))
+      val n = r.getLong(r.fieldIndex("__n"))
+      file -> FileStats.encode(FileStats(Some(n), bytes.get(file),
+        bloomPresent.flatMap(c => Option(get(s"bl_$c")).map(c -> _.toString)),
+        sketched.flatMap { case (c, _) => Option(get(s"hl_$c")).map(b =>
+          c -> (b.toString, n - r.getLong(r.fieldIndex(s"nn_$c")))) },
+        bounded.flatMap { case (c, _) => FileStats.boundOf(schema(c).dataType,
+          get(s"mn_$c"), get(s"mx_$c")).map(c -> _) }))
     }.toMap
   }
 
@@ -907,7 +824,7 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
             s"the statement. First: ${stale.take(3).mkString(", ")}")
       }
       val prev = deletionVectorRows(spark, path, Some(cur))
-      Right(Commit(manifestEntries(spark, path, cur) ++ stagedE,
+      Right(Commit(segmentedTop(spark, path, cur, stagedE),
         tableSchema(spark, path, Some(cur)),
         newDv.fold(prev)(n => Some(dvUnion(prev, n))), op, identity))
     }

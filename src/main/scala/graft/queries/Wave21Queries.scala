@@ -66,18 +66,13 @@ object Wave21Queries extends QueryModule {
       .toDF()
     val emissions = Events.runToCompletion(s, out, mode = "update",
       wideState = true)
-    // per-key max via a window, not a self-join — the memory sink's
-    // view exposes the same attribute ids on both sides of a join
+    // per-key max via a window, not a self-join
     emissions
       .withColumn("mx", max(col("emit_seq")).over(
         org.apache.spark.sql.expressions.Window.partitionBy("event_type")))
       .filter(col("emit_seq") === col("mx"))
       .select(col("event_type"), col("rank"), col("user_id"), col("cnt"))
       .orderBy("event_type", "rank")
-      // materialize before a later run drops the memory-sink view
-      .collect().toSeq
-      .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3)))
-      .toDF("event_type", "rank", "user_id", "cnt")
   }
 
   // ---- Benford first-digit audit ----

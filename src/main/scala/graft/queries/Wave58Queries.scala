@@ -30,7 +30,6 @@ object Wave58Queries extends QueryModule {
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)
 
   def qSqlTimeTravel(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     // r17 (guide §6 I/O amortization; r16 VERDICT #5): the clone + MERGE
     // history is byte-identical every run (metadata-commit clone of the
     // immutable ordersEvens16 base, deterministic k%3 merge), so it is

@@ -23,7 +23,6 @@ import org.apache.spark.sql.functions._
 object Wave60Queries extends QueryModule {
 
   def qMetaTables(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     val dir = LakeFixtures.ordersBuckets(s, d) // read-only shared base
     val files = s.sql(
       s"""SELECT count(*) AS n_files,

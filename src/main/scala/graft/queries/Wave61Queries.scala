@@ -10,14 +10,19 @@ import graft.text.Dedup
 /** Round-9 wave 61 — APPEND, the insert-only commit, end to end
   * through SQL:
   *
-  *  - `q_sql_insert`: `INSERT INTO lake.`<path>` SELECT …` routes
-  *    through [[Versioned.append]] — the batch is staged and the new
-  *    manifest is `old ∪ staged`: every prior file carried BY
-  *    REFERENCE (the receipt pins v2's manifest ⊇ v1's), deletion
-  *    vectors ride unchanged, constraints/generated/identity all
-  *    apply. Appends get the cheapest conflict model in the protocol:
-  *    a lost commit race re-points the already-staged files at the
-  *    winner, never restages (Delta's appends-never-conflict rule).
+  *  - `q_sql_insert`: `INSERT INTO lake.`<path>` SELECT …` on the
+  *    unpartitioned clone takes the connector's real V2 batch write
+  *    (`LakeBatchWrite`, chosen by `Versioned.canStageDirect`):
+  *    executor tasks stage the files and the driver commits them as
+  *    an APPEND whose manifest is `old ∪ staged` — every prior file
+  *    carried BY REFERENCE (the receipt pins v2's manifest ⊇ v1's),
+  *    deletion vectors riding unchanged, constraints checked on the
+  *    staged batch. Tables that need in-plan work (generated or
+  *    identity columns, column mapping, a partition layout) route
+  *    through [[Versioned.append]] instead. Appends get the cheapest
+  *    conflict model in the protocol: a lost commit race re-points the
+  *    already-staged files at the winner, never restages (Delta's
+  *    appends-never-conflict rule).
   *
   * 100 TB story: the hourly load is an O(batch) metadata union no
   * matter how large the table — and it is available to plain SQL
@@ -29,7 +34,6 @@ object Wave61Queries extends QueryModule {
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)
 
   def qSqlInsert(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     LakeFixtures.withClone(s, LakeFixtures.ordersEvens16(s, d),
       "graft_sqlins") { dir =>
       Tables.load(s, d, "orders")

@@ -28,7 +28,6 @@ object Wave62Queries extends QueryModule {
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)
 
   def qSqlDelete(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     LakeFixtures.withClone(s, LakeFixtures.ordersByStatus(s, d),
       "graft_sqldel") { dir =>
       val v1Files = Versioned.files(s, dir, Some(1L)).toSet

@@ -42,7 +42,6 @@ object Wave64Queries extends QueryModule {
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)
 
   def qSqlUpdate(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     LakeFixtures.withClone(s, LakeFixtures.ordersByStatus(s, d),
       "graft_sqlupd") { dir =>
       val v1Files = Versioned.files(s, dir, Some(1L)).toSet
@@ -71,7 +70,6 @@ object Wave64Queries extends QueryModule {
   }
 
   def qSqlMerge(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     LakeFixtures.withClone(s, LakeFixtures.ordersEvens16(s, d),
       "graft_sqlmrg") { dir =>
       val orders = LakeFixtures.ordersBase(s, d)
@@ -104,7 +102,6 @@ object Wave64Queries extends QueryModule {
   }
 
   def qDsv2Write(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     LakeFixtures.withClone(s, LakeFixtures.ordersEvens16(s, d),
       "graft_v2wr") { dir =>
       val v1Files = Versioned.files(s, dir, Some(1L)).toSet

@@ -44,7 +44,6 @@ object Wave65Queries extends QueryModule {
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)
 
   def qSqlOptimize(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     LakeFixtures.withClone(s, LakeFixtures.ordersEvens16(s, d),
       "graft_sqlopt") { dir =>
       val opt1 = s.sql(s"CALL lake.optimize('$dir', 4)").head()

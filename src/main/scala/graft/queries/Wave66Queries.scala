@@ -87,7 +87,6 @@ object Wave66Queries extends QueryModule {
   // ------------------------------------------------------------------
 
   def qSqlDdl(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     Scratch.withDir("graft_sqlddl") { scratch =>
       val dir = scratch + "/t"
       t(s, d, "orders").createOrReplaceTempView("graft_w66_ddl_src")
@@ -131,7 +130,6 @@ object Wave66Queries extends QueryModule {
   }
 
   def qSqlDescribe(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     Scratch.withDir("graft_sqldesc") { scratch =>
       val dir = scratch + "/t"
       t(s, d, "orders").createOrReplaceTempView("graft_w66_desc_src")

@@ -167,7 +167,6 @@ object Wave68Queries extends QueryModule {
     * user path. Receipts pin cut/publish versions, invisibility
     * while the branch works, and the PUBLISH history label. */
   def qSqlBranch(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     Scratch.withDir("graft_sqlbr") { work =>
       val (main, br) = (s"$work/t", s"$work/b1")
       Versioned.clone(s, LakeFixtures.ordersEvens16(s, d), main)

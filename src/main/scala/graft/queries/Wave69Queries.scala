@@ -35,7 +35,6 @@ object Wave69Queries extends QueryModule {
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)
 
   def qSqlOptimizeCluster(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     Scratch.withDir("graft_sqloc") { dir =>
       val base = Tables.load(s, d, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("c"),
@@ -92,7 +91,6 @@ object Wave69Queries extends QueryModule {
   }
 
   def qSqlBranchAt(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     Scratch.withDir("graft_sqlat") { work =>
       val (main, br) = (s"$work/t", s"$work/b1")
       Versioned.clone(s, LakeFixtures.ordersEvens16(s, d), main)

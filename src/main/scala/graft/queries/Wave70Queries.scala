@@ -132,7 +132,6 @@ object Wave70Queries extends QueryModule {
     * (untouched partitions' files identical by path, the named one
     * down to one file) with matching receipt counts. */
   def qOptimizeWhere(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     Scratch.withDir("graft_oww") { scratch =>
       val dir = scratch + "/t"
       val o = Tables.load(s, d, "orders")
@@ -226,7 +225,6 @@ object Wave70Queries extends QueryModule {
     * other historical version (the Iceberg ref-retention contract)
     * and still reads the EXACT pinned content afterwards. */
   def qSqlTagTravel(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     Scratch.withDir("graft_tagq") { scratch =>
       val dir = scratch + "/t"
       val o = Tables.load(s, d, "orders")

@@ -278,7 +278,6 @@ object Wave71Queries extends QueryModule {
     * size — receipt pins shared == total), and writes to the clone
     * stage under its own root (receipt pins the source unchanged). */
   def qSqlClone(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     Scratch.withDir("graft_sqlclone") { work =>
       val (a, b) = (s"$work/a", s"$work/b")
       val o = Tables.load(s, d, "orders").select(

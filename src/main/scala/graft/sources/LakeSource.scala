@@ -18,7 +18,7 @@ import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, Greate
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.ops.Versioned
+import graft.ops.{FileStats, Versioned}
 
 /** DataSource V2 connector over the [[graft.ops.Versioned]] lake:
   *
@@ -278,7 +278,11 @@ final class LakeScanBuilder(path: String, version: Option[Long],
     * list is read as given. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     if (pinned.isDefined) return filters
-    val stats = Versioned.statsColumns(SparkSession.active, path).toSet
+    // registered stats columns are physical names, as stats key
+    val registered = Versioned.statsColumns(SparkSession.active, path).toSet
+    val physical = fullSchema.fields.map(f =>
+      f.name -> Versioned.physicalNameOf(f)).toMap
+    def stats(c: String) = physical.get(c).exists(registered)
     pushed = filters.filter {
       case EqualTo(c, v) => stats(c) && v.isInstanceOf[Number] ||
         v.isInstanceOf[String]
@@ -330,10 +334,8 @@ final class LakeScan(path: String, version: Option[Long],
     * subtracted) and the size takes the larger of two independent
     * over-approximations — both err toward NOT broadcasting. */
   override def estimateStatistics(): Statistics = {
-    val spark = SparkSession.active
-    val counts = plannedFiles(spark).flatMap { case (_, stats) =>
-      stats.flatMap(rowCountRe.findFirstMatchIn(_).map(_.group(1).toLong))
-    }
+    val plannedStats = prunedEntries.map(e => FileStats.decode(e._2))
+    val counts = plannedStats.flatMap(_.rows)
     // size estimate: rows × the pruned read schema's fixed per-type
     // width is exact for numerics but LIES for strings (StringType's
     // defaultSize is a flat 20 bytes — a wide-text table estimated
@@ -357,34 +359,23 @@ final class LakeScan(path: String, version: Option[Long],
     // AT PLAN TIME (AQE could only recover after paying the
     // sort-merge shuffle's map side). A column whose sketch is
     // missing from ANY pruned file reports nothing — conservative,
-    // like every estimate here. Column-mapping renames resolve
-    // through the field's physical name, matching the min/max probes.
-    // parse each pruned entry's stats JSON ONCE, probe the parsed tree
-    // for every required column — not O(files × cols) full re-parses
-    val statDocs: Seq[Option[Versioned.StatsDoc]] =
-      plannedFiles(spark).map(_._2.flatMap(Versioned.parseStatsDoc))
+    // like every estimate here. Lookups key on the field's physical
+    // name, so renamed columns keep their stats.
     val ndvByCol: Map[String, (Long, Long)] = required.fields.flatMap { f =>
-      val names = Seq(f.name, Versioned.physicalNameOf(f)).distinct
-      val parsed = statDocs.map(_.flatMap { doc =>
-        names.iterator.flatMap(n =>
-          Versioned.hllStatIn(doc, n).flatMap(b =>
-            Versioned.nullStatIn(doc, n).map(nl => (b, nl))))
-          .nextOption()
-      })
+      val parsed = plannedStats.map(_.sketch(f))
       if (parsed.isEmpty || parsed.exists(_.isEmpty)) None
       else try {
         val u = new org.apache.datasketches.hll.Union(12)
         parsed.flatten.foreach { case (b, _) =>
-          u.update(org.apache.datasketches.hll.HllSketch.heapify(
-            java.util.Base64.getDecoder.decode(b)))
+          u.update(org.apache.datasketches.hll.HllSketch.heapify(b))
         }
         Some(f.name -> (math.max(1L, math.round(u.getEstimate)),
           parsed.flatten.map(_._2).sum))
       } catch { case _: Exception => None } // malformed sketch: no stat
     }.toMap
     // value BOUNDS for numeric stats columns, folded over the pruned
-    // footprint (min of file minima / max of file maxima) and typed to
-    // the column's JVM value class — JoinEstimation intersects the two
+    // footprint (min of file minima / max of file maxima) in the
+    // column's Catalyst value class — JoinEstimation intersects the two
     // join keys' value intervals BEFORE its NDV formula, and a
     // ColumnStat with NDV but NO bounds reads as an empty interval:
     // every CBO join estimate collapses to 0 rows and the zeroed join
@@ -393,49 +384,13 @@ final class LakeScan(path: String, version: Option[Long],
     // over lake tables CBO-plannable end to end. Conservative like the
     // NDV: a column missing bounds in ANY pruned file reports none.
     val boundsByCol: Map[String, (Any, Any)] = required.fields.flatMap { f =>
-      val names = Seq(f.name, Versioned.physicalNameOf(f)).distinct
-      import org.apache.spark.sql.types._
-      def typedLong(v: Long): Any = f.dataType match {
-        case ByteType => java.lang.Byte.valueOf(v.toByte)
-        case ShortType => java.lang.Short.valueOf(v.toShort)
-        case IntegerType => java.lang.Integer.valueOf(v.toInt)
-        case LongType => java.lang.Long.valueOf(v)
-        // r16 (r15 ADVICE #1): the commit side now logs epoch-day /
-        // epoch-micros / unscaled-at-scale longs for these types —
-        // surface them as the CATALYST-INTERNAL value classes
-        // ColumnStat carries for them (Int days, Long micros,
-        // Decimal), the same encoding ANALYZE TABLE would store, so
-        // JoinEstimation's value intervals are non-empty
-        case DateType => java.lang.Integer.valueOf(v.toInt)
-        case TimestampType => java.lang.Long.valueOf(v)
-        case dt: DecimalType if dt.precision <= 18 =>
-          Decimal(v, dt.precision, dt.scale)
-        case _ => null
-      }
-      def typedDouble(v: Double): Any = f.dataType match {
-        case FloatType => java.lang.Float.valueOf(v.toFloat)
-        case DoubleType => java.lang.Double.valueOf(v)
-        case _ => null
-      }
-      val perFile: Seq[Option[(Any, Any)]] = statDocs.map(_.flatMap { doc =>
-        names.iterator.flatMap { n =>
-          Versioned.longMinMaxIn(doc, n)
-            .map { case (mn, mx) => (typedLong(mn), typedLong(mx)) }
-            .orElse(Versioned.doubleMinMaxIn(doc, n)
-              .map { case (mn, mx) => (typedDouble(mn), typedDouble(mx)) })
-            .filter { case (mn, mx) => mn != null && mx != null }
-        }.nextOption()
-      })
+      val perFile = plannedStats.map(_.catalyst(f))
       if (perFile.isEmpty || perFile.exists(_.isEmpty)) None
       else {
-        def cmp(a: Any, b: Any): Int =
-          a.asInstanceOf[Comparable[Any]].compareTo(b)
+        val order = Ordering.fromLessThan[Any]((x, y) =>
+          x.asInstanceOf[Comparable[Any]].compareTo(y) < 0)
         val all = perFile.flatten
-        Some(f.name ->
-          (all.map(_._1).minBy(identity[Any])(Ordering.fromLessThan(
-            (x, y) => cmp(x, y) < 0)),
-           all.map(_._2).maxBy(identity[Any])(Ordering.fromLessThan(
-            (x, y) => cmp(x, y) < 0))))
+        Some(f.name -> (all.map(_._1).min(order), all.map(_._2).max(order)))
       }
     }.toMap
     val colStats = {
@@ -467,18 +422,15 @@ final class LakeScan(path: String, version: Option[Long],
     }
     new Statistics {
       override def numRows(): java.util.OptionalLong =
-        if (counts.length == plannedFiles(spark).length && counts.nonEmpty)
+        if (counts.length == plannedStats.length && counts.nonEmpty)
           java.util.OptionalLong.of(counts.sum)
         else java.util.OptionalLong.empty()
       override def sizeInBytes(): java.util.OptionalLong =
-        if (counts.length == plannedFiles(spark).length && counts.nonEmpty) {
+        if (counts.length == plannedStats.length && counts.nonEmpty) {
           val widthEst = counts.sum * math.max(1, required.defaultSize)
-          val bytes = plannedFiles(spark).flatMap { case (_, stats) =>
-            stats.flatMap(byteCountRe.findFirstMatchIn(_)
-              .map(_.group(1).toLong))
-          }
+          val bytes = plannedStats.flatMap(_.bytes)
           val est =
-            if (bytes.length == plannedFiles(spark).length)
+            if (bytes.length == plannedStats.length)
               math.max(bytes.sum, widthEst)
             else widthEst
           java.util.OptionalLong.of(est)
@@ -489,11 +441,6 @@ final class LakeScan(path: String, version: Option[Long],
         colStats
     }
   }
-
-  private val rowCountRe =
-    """"#rows":\{"t":"l","mnl":(\d+)""".r
-  private val byteCountRe =
-    """"#bytes":\{"t":"l","mnl":(\d+)""".r
 
   override def description(): String =
     s"graft-lake $path ${version.fold("")(v => s"v$v ")}" +
@@ -561,9 +508,6 @@ final class LakeScan(path: String, version: Option[Long],
     * Written when [[prunedEntries]] first evaluates; read only from
     * [[planInputPartitions]]. */
   @volatile private var totalEntryCount: Int = 0
-
-  private def plannedFiles(spark: SparkSession): Seq[(String, Option[String])] =
-    prunedEntries
 
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active

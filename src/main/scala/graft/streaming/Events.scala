@@ -68,7 +68,8 @@ object Events {
   private val runId = new AtomicInteger(0)
 
   /** Run a streaming aggregation to completion on the bounded input and
-    * return its final result as a batch DataFrame.
+    * return its final result as a local batch DataFrame; the memory
+    * sink's view is dropped before returning.
     *
     * State-store sizing: a stateful streaming op instantiates ONE state
     * store per shuffle partition, and store setup/commit dominates the
@@ -137,7 +138,13 @@ object Events {
         if (!q.awaitTermination(300000L))
           sys.error(s"streaming replay $name did not terminate within 300s")
       } finally q.stop()
+      // the sink's rows already sit on the driver: hand them back as a
+      // local frame, so the view (dropped below) does not hold them in
+      // the session catalog for the JVM's life
+      val out = spark.table(name)
+      spark.createDataFrame(out.collectAsList(), out.schema)
     } finally {
+      spark.catalog.dropTempView(name)
       spark.conf.set("spark.sql.shuffle.partitions", prev)
       spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
       if (wideState && prevProvider.nonEmpty)
@@ -145,7 +152,6 @@ object Events {
       else if (wideState)
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
-    spark.table(name)
   }
 
   /** Sessionization via `flatMapGroupsWithState` — the arbitrary-state

@@ -60,7 +60,6 @@ class CompactIncrementalSpec extends SparkSuite {
 
   test("a vacuumed base falls back to one full rewrite; the SQL " +
       "procedure routes both modes") {
-    spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     val t = table("graft_ci2")
     try {
       Versioned.init(slice(0, 1200).repartition(4), t,

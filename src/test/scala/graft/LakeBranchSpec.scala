@@ -71,7 +71,6 @@ class LakeBranchSpec extends SparkSuite {
 
   test("the branch workflow runs through pure SQL (CALL lake.branch " +
       "/ lake.publish)") {
-    spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     val (main, br) = (table("graft_bs4m"), table("graft_bs4b"))
     try {
       Versioned.init(base().repartition(2), main)
@@ -144,7 +143,6 @@ class LakeBranchSpec extends SparkSuite {
       }
       assert(dsum() == expect)
       // table health surfaces the foreign-root dependency
-      spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
       assert(spark.sql(s"CALL lake.describe('$main')").head()
         .getAs[Long]("n_foreign_files") > 0L)
       // compact localizes the files, vacuum drops the referencing
@@ -210,7 +208,6 @@ class LakeBranchSpec extends SparkSuite {
 
   test("`src@name` SQL addressing reads and writes the branch " +
       "through the source path") {
-    spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     val main = table("graft_bs9m")
     val br = s"${tmp("graft_bs9b")}/b1"
     try {

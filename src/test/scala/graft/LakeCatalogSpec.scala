@@ -9,12 +9,8 @@ import graft.ops.Versioned
 class LakeCatalogSpec extends SparkSuite {
   import spark.implicits._
 
-  private def withCatalog(): Unit =
-    spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-
   test("SQL path identifier reads the current snapshot; VERSION AS OF " +
       "pins history; TIMESTAMP AS OF resolves by commit time") {
-    withCatalog()
     val dir = tmp("graft_cat1")
     Versioned.init(Seq((1L, 10.0), (2L, 20.0)).toDF("k", "p"), dir)
     Thread.sleep(20)
@@ -35,7 +31,6 @@ class LakeCatalogSpec extends SparkSuite {
       "visible to the next current-version statement; VERSION AS OF " +
       "stays pinned (r17 — the memoized-history queries rely on " +
       "per-statement manifest resolution, not a cached relation)") {
-    withCatalog()
     val dir = tmp("graft_cat_occ")
     Versioned.init(Seq((1L, 10.0), (2L, 20.0)).toDF("k", "p"), dir)
     // first read resolves v1 as "current"
@@ -51,7 +46,6 @@ class LakeCatalogSpec extends SparkSuite {
   }
 
   test("SQL joins across two lake tables; filters reach the scan") {
-    withCatalog()
     val d1 = tmp("graft_cat2a")
     val d2 = tmp("graft_cat2b")
     Versioned.init(Seq((1L, "x"), (2L, "y")).toDF("k", "name"), d1)
@@ -67,7 +61,6 @@ class LakeCatalogSpec extends SparkSuite {
   test("INSERT INTO appends through the commit protocol; constraints " +
       "veto violating batches; INSERT OVERWRITE stays refused; " +
       "DROP TABLE removes the table") {
-    withCatalog()
     val dir = tmp("graft_cat3")
     Versioned.init(Seq((1L, 10.0)).toDF("k", "p"), dir)
     Versioned.addConstraint(spark, dir, "p_pos", "p >= 0")
@@ -100,7 +93,6 @@ class LakeCatalogSpec extends SparkSuite {
 
   test("DELETE FROM runs as a vectored merge-on-read delete; " +
       "untranslatable predicates take the row-level delta path") {
-    withCatalog()
     val dir = tmp("graft_cat7")
     Versioned.init(Seq((1L, 1.0), (2L, 2.0), (3L, 3.0), (4L, 4.0))
       .toDF("k", "p"), dir)
@@ -122,7 +114,6 @@ class LakeCatalogSpec extends SparkSuite {
   }
 
   test("df.writeTo(...).append() lands as an APPEND commit") {
-    withCatalog()
     val dir = tmp("graft_cat6")
     Versioned.init(Seq((1L, 10.0)).toDF("k", "p"), dir)
     Seq((2L, 20.0)).toDF("k", "p").writeTo(s"lake.`$dir`").append()
@@ -133,7 +124,6 @@ class LakeCatalogSpec extends SparkSuite {
 
   test("$files scans the manifest itself; $history reads the commit " +
       "log; both compose with VERSION AS OF") {
-    withCatalog()
     val dir = tmp("graft_cat5")
     Versioned.init(Seq((1L, 10.0), (2L, 20.0)).toDF("k", "p"), dir)
     Versioned.merge(Seq((3L, 30.0)).toDF("k", "p"), dir, Seq("k"))

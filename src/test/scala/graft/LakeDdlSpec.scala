@@ -12,8 +12,6 @@ import graft.ops.Versioned
 class LakeDdlSpec extends SparkSuite {
   import spark.implicits._
 
-  spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-
   test("CREATE TABLE: empty v1, schema visible, INSERT + SELECT round-trip") {
     val root = tmp(); val dir = s"$root/t"
     try {

@@ -18,8 +18,6 @@ import graft.sources.LakeSource
 class LakeMetadataSpec extends SparkSuite {
   import spark.implicits._
 
-  spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-
   private def hfs = new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def copyTable(src: String, dst: String): Unit =

@@ -23,8 +23,6 @@ import graft.ops.Versioned
 class LakeModelSpec extends SparkSuite {
   import spark.implicits._
 
-  spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-
   private type Model = Map[Long, Long] // k -> n
 
   private def readState(dir: String, v: Option[Long] = None): Model =

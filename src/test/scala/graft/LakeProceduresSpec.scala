@@ -8,8 +8,6 @@ import graft.ops.Versioned
 class LakeProceduresSpec extends SparkSuite {
   import spark.implicits._
 
-  spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-
   private val base = (1L to 20L).map(k => (k, k.toDouble))
 
   test("CALL lake.optimize compacts and returns the receipt row") {

@@ -34,6 +34,30 @@ class LakeSegmentsSpec extends SparkSuite {
   private def sumK(df: org.apache.spark.sql.DataFrame): Long =
     df.agg(sum(col("k"))).head().getLong(0)
 
+  test("SQL row-level DML keeps a segmented manifest segmented: the " +
+      "commit carries segment refs instead of re-listing every file") {
+    withThreshold(2) {
+      val t = table("graft_seg_sqldml")
+      try {
+        Versioned.init(slice(0, 300).coalesce(1), t)
+        Seq(300L, 600L, 900L, 1200L).foreach(lo =>
+          Versioned.append(slice(lo, lo + 300).coalesce(1), t))
+        val before = Versioned.manifestShape(spark, t)
+        assert(before._2 >= 1L, s"expected a sealed segment, shape=$before")
+        val expect = Versioned.read(spark, t).select(col("k"),
+            when(col("k") < 100, col("p") + 1).otherwise(col("p")).as("p"))
+          .collect().toSet
+        spark.sql(s"UPDATE lake.`$t` SET p = p + 1 WHERE k < 100")
+        val (topRows, segs) = Versioned.manifestShape(spark, t)
+        assert(segs >= 1L && topRows - segs <= 2L,
+          s"UPDATE flattened the manifest: shape ($topRows, $segs), " +
+            s"before $before")
+        assert(Versioned.read(spark, t).select("k", "p").collect().toSet ==
+          expect)
+      } finally rm(t)
+    }
+  }
+
   test("appends seal inline rows into segments; every version reads " +
       "exact and the head's top level stays O(segments + delta)") {
     withThreshold(8) {
@@ -254,8 +278,6 @@ class LakeSegmentsSpec extends SparkSuite {
         assert(g2after.size == 1 && g2after.toSet.intersect(g2.toSet).isEmpty)
         assert(sumK(Versioned.read(spark, t)) == expect)
         // the SQL procedures route to the same engine paths
-        spark.conf.set("spark.sql.catalog.lake",
-          "graft.sources.LakeCatalog")
         val rr = spark.sql(s"CALL lake.rewrite_manifests('$t')").head()
         assert(rr.getLong(2) >= 1L)
         val ro = spark.sql(

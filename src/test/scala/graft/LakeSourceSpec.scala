@@ -66,7 +66,6 @@ class LakeSourceSpec extends SparkSuite {
 
   test("partition segments come from the file key: a table root under " +
       "a Hive-style directory of the same column reads and prunes right") {
-    spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     val dir = s"${tmp("graft_ds10")}/s=zzz/tbl"
     Versioned.init(Seq((1L, "a"), (2L, "a"), (3L, "b"))
       .toDF("k", "s"), dir, partitionCol = Some("s"))
@@ -161,7 +160,6 @@ class LakeSourceSpec extends SparkSuite {
       .toSeq == (1L to 5L))
     assert(q.recentProgress.count(_.numInputRows > 0) == 3)
     // tag time travel through SQL
-    spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     Versioned.tag(spark, dir, "first-cut", Some(1L))
     assert(spark.sql(
         s"SELECT k FROM lake.`$dir` VERSION AS OF 'first-cut'")

@@ -14,8 +14,6 @@ import graft.ops.Versioned
 class LakeSqlDmlSpec extends SparkSuite {
   import spark.implicits._
 
-  spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
-
   private val base = (1L to 20L).map(k => (k, s"v$k", k.toDouble))
 
   private def initBase(dir: String): Unit =

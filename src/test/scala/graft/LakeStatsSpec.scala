@@ -119,7 +119,6 @@ class LakeStatsSpec extends SparkSuite {
   test("DECIMAL stats prune in column units: p = 0.37 returns its row " +
       "on both surfaces") {
     import spark.implicits._
-    spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     Scratch.withDir("graft_st_dec") { dir =>
       // p = k / 100 holds 0.01 … 1.00 over 4 range-clustered files
       Versioned.init(spark.range(1, 101).select(col("id").as("k"),

@@ -531,7 +531,6 @@ class LakeV2Spec extends SparkSuite {
 
   test("the connector reads and writes every type Versioned does: " +
       "decimal, binary, date, timestamp (INT96 and INT64), array, struct") {
-    spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     val dir = tmp()
     val src = tmp()
     val cp = tmp()

@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
   * temp directories only in Scratch.scala, the lake connector
   * encodes data files only through Spark's own parquet format,
   * deletion vectors are read only through the driver-rows accessor,
-  * only `VersionedLog` knows the lake's on-disk log, the lake reads
+  * only `VersionedLog` knows the lake's on-disk log and only
+  * `FileStats` its per-file stats document, the lake reads
   * data files only through the connector's scan,
   * lake commits retry only through one optimistic-commit loop, the
   * report path (returns, pipeline, jobs) caches no frame, only six
@@ -77,6 +78,14 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
     for (f <- families; needle <- io)
       assert(!Files.readString(f).contains(needle),
         s"${f.getFileName} does its own log I/O: $needle")
+  }
+
+  test("one stats codec: only FileStats.scala spells the per-file stats " +
+      "document's keys, and no stats JSON is probed elsewhere") {
+    for (needle <- Seq("\"mnl\"", "\"#rows\"", "\"#bytes\"", "\"#hll:",
+        "\"#nulls:", "\"#bloom:"))
+      assert(holders(needle) == Seq("graft/ops/FileStats.scala"),
+        s"$needle spelled in: ${holders(needle)}")
   }
 
   test("one DV codec: deletion vectors are read only as driver rows") {

@@ -103,4 +103,15 @@ class StreamingSessionSpec extends SparkSuite {
     assert(run1 == closed,
       s"stream emitted ${run1.size} sessions, batch-closed expectation ${closed.size}")
   }
+
+  test("a streaming replay hands back its rows and drops its memory-sink " +
+      "view") {
+    val d = sf("sf0.001")
+    val first = Events.hourlyByType(spark, d)
+    val second = Events.hourlyByType(spark, d)
+    assert(spark.catalog.listTables().collect()
+      .filter(_.name.startsWith("graft_stream_")).isEmpty,
+      "a replay's memory-sink view outlived the call")
+    assert(first.count() > 0 && first.collect().toSet == second.collect().toSet)
+  }
 }

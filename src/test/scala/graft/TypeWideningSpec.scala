@@ -170,7 +170,6 @@ class TypeWideningSpec extends SparkSuite {
 
   test("SQL: ALTER TABLE lake.t ALTER COLUMN k TYPE BIGINT routes to " +
       "the metadata-only widen") {
-    spark.conf.set("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
     val t = table("graft_tw4")
     try {
       Versioned.init(base().repartition(2), t)
