@@ -18,7 +18,7 @@ import org.apache.spark.sql.DataFrame
   *  - [[VersionedRewrites]]: compactions, manifest re-sealing,
   *    partition drops, RESTORE;
   *  - [[VersionedSchema]]: column mapping, constraints, generated and
-  *    identity columns, hidden partitioning, CREATE / DROP;
+  *    identity columns, the partition layout, CREATE / DROP;
   *  - [[VersionedRefs]]: clones, tags, branches, publish, VACUUM.
   *
   * This object mixes them into the one API the queries, the DSv2
@@ -81,6 +81,12 @@ object Versioned extends VersionedLog with VersionedReads
     * answered from the manifest alone. */
   final case class MetaStats(rows: Long, min: Double, max: Double,
     files: Int)
+
+  /** A table's partition layout ([[partitionLayout]]): the column its
+    * files are partitioned by — a user column under an identity
+    * layout, [[hiddenPartColName]] under a hidden one — and the hidden
+    * layout's transform expression. */
+  final case class Layout(column: String, transform: Option[String])
 
   /** One retained commit of [[history]]. */
   final case class CommitInfo(version: Long, operation: String,

@@ -35,7 +35,7 @@ import org.apache.spark.sql.types.{DataType, NullType, StringType, StructField, 
   *   _versions/v<N>.txn         streaming-sink epoch (query, epoch)
   *   _versions/v<N>.cluster     clustered-layout provenance
   *   _versions/statscols        stats columns, `bloom:` Bloom columns
-  *   _versions/ptransform       partition transform expression
+  *   _versions/ptransform       partition layout (column or transform)
   *   _versions/constraints      CHECK constraints (name, predicate)
   *   _versions/gencols          generated columns (column, expression)
   *   _versions/identity         identity columns (column, start, step)

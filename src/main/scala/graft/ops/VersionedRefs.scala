@@ -15,7 +15,7 @@ trait VersionedRefs extends VersionedLog { self: Versioned.type =>
     * sandboxes, WAP staging branches, reproducible experiment pins).
     * Writes to the clone stage their own files under the clone's
     * directory and never touch the source; the clone's first full
-    * rewrite (merge without partitionCol, or compact) ends the
+    * rewrite (a merge on an unpartitioned table, or compact) ends the
     * sharing entirely.
     *
     * Caveat shared with every shallow-clone design: [[vacuum]] is
@@ -28,10 +28,10 @@ trait VersionedRefs extends VersionedLog { self: Versioned.type =>
       s"clone target already initialized: $dst")
     val v = resolve(spark, src, None)
     // table properties travel with the clone: stats registrations, the
-    // partition transform, CHECK constraints, generated columns and
+    // partition layout, CHECK constraints, generated columns and
     // retired physical names
     writeSidecarLines(spark, dst, "statscols", registeredCols(spark, src))
-    hiddenTransform(spark, src).foreach(writeSidecar(spark, dst, "ptransform", _))
+    recordLayout(spark, dst, layoutProperty(spark, src))
     writeConstraints(spark, dst, constraints(spark, src))
     writeGeneratedColumns(spark, dst, generatedColumns(spark, src))
     retiredPhysicals(spark, src).foreach(addRetired(spark, dst, _))

@@ -24,8 +24,11 @@ trait VersionedRewrites extends VersionedLog { self: Versioned.type =>
     * rewrite for a scan-optimal layout; readers of older versions are
     * untouched (their files stay until vacuum).
     *
-    * The layouts (round-robin, `partitionCol`, `clusterBy`,
-    * `zOrderBy`) and the concurrency story are [[rewrite]]'s. */
+    * `partitionCol` RE-LAYS the table: the column becomes its
+    * recorded identity layout ([[partitionLayout]]) from this commit
+    * on; without it the recorded layout, if any, is kept. The file
+    * layouts (by partition, `clusterBy`, `zOrderBy`, round-robin) and
+    * the concurrency story are [[rewrite]]'s. */
   def compact(spark: SparkSession, path: String, targetFiles: Int,
       partitionCol: Option[String] = None,
       clusterBy: Seq[String] = Seq.empty,
@@ -34,8 +37,15 @@ trait VersionedRewrites extends VersionedLog { self: Versioned.type =>
         zOrderBy.nonEmpty).count(identity) <= 1,
       "partitionCol, clusterBy and zOrderBy are alternative layouts — " +
         "pick one")
-    rewrite(spark, path, "COMPACT", targetFiles, partitionCol, clusterBy,
-      zOrderBy)(_ => Right(Pick(None, Seq.empty, identity)))
+    partitionCol.foreach { c =>
+      val f = schemaOf(spark, path, resolve(spark, path, None)).fields
+        .find(_.name == c)
+        .getOrElse(sys.error(s"no such column on $path: '$c'"))
+      // the layout records the PHYSICAL name, as directories do
+      recordLayout(spark, path, Some(physicalOf(f)))
+    }
+    rewrite(spark, path, "COMPACT", targetFiles, clusterBy, zOrderBy)(
+      _ => Right(Pick(None, Seq.empty, identity)))
   }
 
   /** What a compaction rewrites at the version it reads: `files` (None
@@ -56,10 +66,11 @@ trait VersionedRewrites extends VersionedLog { self: Versioned.type =>
     * [[compactPartitions]], [[compactIncremental]], [[compactSmall]]),
     * run under [[occ]]. `pick` selects the files at the current
     * version (Left = nothing to do, with its receipt); their live rows
-    * are laid out into `targetFiles` files and staged:
-    *  - `partitionCol`: hash-clustered by value (`repartition(n, pc)`
-    *    routes ALL rows of one value into one task) and written
-    *    `partitionBy`, one file per value, which keeps partition-scoped
+    * are laid out into `targetFiles` files and staged under the
+    * table's partition layout ([[withLayout]]):
+    *  - partitioned, no clustering: hash-clustered by value
+    *    (`repartition(n, pc)` routes ALL rows of one value into one
+    *    task), one file per value, which keeps partition-scoped
     *    `merge` carry-over working;
     *  - `clusterBy`: range-partitioned and sorted on the key(s), so
     *    each file covers a narrow key interval — the layout that makes
@@ -75,8 +86,7 @@ trait VersionedRewrites extends VersionedLog { self: Versioned.type =>
     * those columns. A lost race re-picks against the winner, so a
     * compaction never undoes a concurrent writer's committed rows. */
   private def rewrite[R](spark: SparkSession, path: String, op: String,
-      targetFiles: Int, partitionCol: Option[String] = None,
-      clusterBy: Seq[String] = Seq.empty,
+      targetFiles: Int, clusterBy: Seq[String] = Seq.empty,
       zOrderBy: Seq[String] = Seq.empty)(
       pick: Long => Either[R, Pick[R]]): R = {
     require(targetFiles >= 1, "targetFiles must be >= 1")
@@ -84,19 +94,19 @@ trait VersionedRewrites extends VersionedLog { self: Versioned.type =>
       .toSeq
     occ(spark, path, op) { (cur, _) =>
       pick(cur).map { p =>
-        val rows = readLive(spark, path, cur, p.files, keepMeta = false)
-        val laidOut = (partitionCol, clusterBy, zOrderBy) match {
-          case (Some(pc), _, _) => rows.repartition(targetFiles, col(pc))
-          case (None, cs, _) if cs.nonEmpty =>
+        val schema = schemaOf(spark, path, cur)
+        val (rows, layoutCol) = withLayout(
+          readLive(spark, path, cur, p.files, keepMeta = false), path, schema)
+        val laidOut = (clusterBy, zOrderBy, layoutCol) match {
+          case (cs, _, _) if cs.nonEmpty =>
             rows.repartitionByRange(targetFiles, cs.map(col): _*)
               .sortWithinPartitions(cs.map(col): _*)
-          case (None, _, zs) if zs.nonEmpty =>
-            ZOrder.layout(rows, targetFiles, zs)
+          case (_, zs, _) if zs.nonEmpty => ZOrder.layout(rows, targetFiles, zs)
+          case (_, _, Some(pc)) => rows.repartition(targetFiles, col(pc))
           case _ => rows.repartition(targetFiles)
         }
-        val schema = schemaOf(spark, path, cur)
         val (stagedDir, staged0, written) = stage(laidOut, path, cur + 1,
-          partitionCol, Some(schema))
+          layoutCol, Some(schema))
         val staged = stagedEntries(spark, path, ensureManifestNonEmpty(rows,
           stagedDir, staged0, p.carried.nonEmpty, Some(schema)), written)
         val dv = p.files.flatMap { picked =>
@@ -197,8 +207,8 @@ trait VersionedRewrites extends VersionedLog { self: Versioned.type =>
       partitionCol: String, values: Seq[String],
       targetFiles: Int): Compaction = {
     require(values.nonEmpty, "compactPartitions needs at least one value")
-    rewrite(spark, path, s"COMPACT_PARTITION($partitionCol)", targetFiles,
-        Some(partitionCol)) { cur =>
+    rewrite(spark, path, s"COMPACT_PARTITION($partitionCol)",
+        targetFiles) { cur =>
       val (pcPhys, segs) = partitionDirs(spark, path, cur, partitionCol, values)
       val (keepTop, hitE) = splitTopByPartitions(spark, path, cur,
         pcPhys, segs.toSet, keepFlat = true)
@@ -271,9 +281,8 @@ trait VersionedRewrites extends VersionedLog { self: Versioned.type =>
     * (metadata arithmetic; a filesystem stat only for legacy entries
     * without one). */
   def compactSmall(spark: SparkSession, path: String, minBytes: Long,
-      targetFiles: Int,
-      partitionCol: Option[String] = None): Compaction =
-    rewrite(spark, path, "COMPACT_SMALL", targetFiles, partitionCol) { cur =>
+      targetFiles: Int): Compaction =
+    rewrite(spark, path, "COMPACT_SMALL", targetFiles) { cur =>
       val curEntries = manifestEntries(spark, path, cur)
       val f = fs(spark, path)
       // size probe from the manifest's own `#bytes` stats — logged on
@@ -295,14 +304,20 @@ trait VersionedRewrites extends VersionedLog { self: Versioned.type =>
     * manifest is the old one minus every file under the dropped
     * partition directories (matched against the Hive-escaped segment,
     * like the partition-scoped merge), and deletion-vector entries on
-    * dropped files go with them. NO data file is read, rewritten, or
-    * deleted (old versions still time-travel; vacuum reclaims the
-    * bytes later) — at 100 TB this is how retention actually runs:
-    * dropping a day costs two manifest writes, where a predicate
-    * delete would open every file of the partition just to discover it
-    * matches everything. The manifest split is SEGMENT-AWARE: disjoint
-    * segments carry as unopened refs and the receipt counts come from
-    * their recorded row counts. */
+    * dropped files go with them. NO data file under a partition
+    * directory is read, rewritten, or deleted (old versions still
+    * time-travel; vacuum reclaims the bytes later) — at 100 TB this is
+    * how retention actually runs: dropping a day costs two manifest
+    * writes, where a predicate delete would open every file of the
+    * partition just to discover it matches everything. The manifest
+    * split is SEGMENT-AWARE: disjoint segments carry as unopened refs
+    * and the receipt counts come from their recorded row counts.
+    *
+    * Rows can also sit OUTSIDE the partition directories: SQL UPDATE /
+    * MERGE images are staged flat by the executor writer. Those flat
+    * files' rows whose `partitionCol` value is dropped join the
+    * deletion vector in the same commit — one scan of the flat files
+    * alone, none when there are none. */
   def dropPartitions(spark: SparkSession, path: String,
       partitionCol: String, values: Seq[String]): Dropped = {
     require(values.nonEmpty, "dropPartitions needs at least one value")
@@ -312,12 +327,23 @@ trait VersionedRewrites extends VersionedLog { self: Versioned.type =>
       // files belong to no droppable partition → keepers)
       val (keepTop, hitE) = splitTopByPartitions(spark, path, cur,
         pcPhys, segs.toSet, keepFlat = true)
+      val flat = keepTop.flatMap { e =>
+        if (!isSegRef(e)) Seq(e)
+        else if (footprintOf(e._2).forall(_._2))
+          readSegmentRows(spark, path, e._1)
+        else Seq.empty
+      }.map(_._1).filterNot(partitionSegmentsOf(_).contains(pcPhys))
+      val flatDv =
+        if (flat.isEmpty) Map.empty[String, Array[Long]]
+        else dvOf(readLive(spark, path, cur, Some(flat), keepMeta = true)
+          .filter(col(partitionCol).cast("string").isin(values: _*))
+          .select(col(fileCol), col(posCol)).collect())
       val hit = hitE.size.toLong
       val total = carriedCount(spark, path, cur, keepTop, hit)(identity)
       val schema = tableSchema(spark, path, Some(cur))
       val op = s"DROP_PARTITION($partitionCol)"
       def receipt(v: Long) = Dropped(v, hit, total - hit)
-      if (hit == 0L) Left(Dropped(-1L, 0L, total))
+      if (hit == 0L && flatDv.isEmpty) Left(Dropped(-1L, 0L, total))
       else if (hit == total) {
         // dropping every partition: keep a schema-only file so the
         // empty table stays readable (same contract as a
@@ -331,10 +357,10 @@ trait VersionedRewrites extends VersionedLog { self: Versioned.type =>
           None, op, receipt, Some(stagedDir)))
       } else {
         val dseg = ("/(" + java.util.regex.Pattern.quote(pcPhys) + "=[^/]*)/").r
+        val dv = dvWithout(deletionVectorRows(spark, path, Some(cur)))(k =>
+          dseg.findFirstMatchIn(k).exists(m => segs.contains(m.group(1))))
         Right(Commit(sealTop(spark, path, keepTop, Seq.empty), schema,
-          dvWithout(deletionVectorRows(spark, path, Some(cur)))(k =>
-            dseg.findFirstMatchIn(k).exists(m => segs.contains(m.group(1)))),
-          op, receipt))
+          if (flatDv.isEmpty) dv else Some(dvUnion(dv, flatDv)), op, receipt))
       }
     }
   }

@@ -5,12 +5,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
-import Versioned.ConstraintViolation
+import Versioned.{ConstraintViolation, Layout}
 
 /** The lake's schema and table properties: column mapping (ADD /
   * RENAME / DROP COLUMN and type widening as metadata-only commits),
-  * CHECK constraints, generated and identity columns, hidden
-  * partitioning, and CREATE / DROP TABLE. Properties live in the log's
+  * CHECK constraints, generated and identity columns, the partition
+  * layout, and CREATE / DROP TABLE. Properties live in the log's
   * sidecars; schema changes are commits that carry the manifest
   * forward untouched. */
 trait VersionedSchema extends VersionedLog { self: Versioned.type =>
@@ -60,8 +60,9 @@ trait VersionedSchema extends VersionedLog { self: Versioned.type =>
       "($|[^A-Za-z0-9_])").r.findFirstIn(e).isDefined
 
   /** Refuse a change to column `name` while a CHECK constraint, a
-    * generated column or the hidden partition transform references it
-    * (drop or rebuild those first — the Delta rule). */
+    * generated column or a hidden partition transform references it
+    * (drop or rebuild those first — the Delta rule). An identity
+    * layout does not: its directories keep the physical name. */
   private def requireUnreferenced(spark: SparkSession, path: String,
       name: String, what: String, why: String = ""): Unit = {
     constraints(spark, path).foreach { case (n, p) =>
@@ -72,7 +73,7 @@ trait VersionedSchema extends VersionedLog { self: Versioned.type =>
       require(gc != name && !mentionsIdent(ge, name),
         s"$what: generated column '$gc' references '$name'$why")
     }
-    hiddenTransform(spark, path).foreach { t =>
+    partitionLayout(spark, path).flatMap(_.transform).foreach { t =>
       require(!mentionsIdent(t, name),
         s"$what: hidden partition transform references " +
           s"'$name'$why")
@@ -157,13 +158,10 @@ trait VersionedSchema extends VersionedLog { self: Versioned.type =>
       require(schema.fields.length > 1,
         s"cannot drop the last column of $path")
       val dropped = schema.fields.find(_.name == name).get
-      // the PARTITION column lives in directory names: Spark's
-      // partition inference would re-surface it on every read with an
-      // inferred type, contradicting the logged schema — block it
-      require(!readManifest(spark, path, cur).exists(
-          _.contains(s"/${physicalOf(dropped)}=")),
-        s"cannot drop partition column '$name' of $path — compact to " +
-          "a non-partitioned layout first")
+      // the PARTITION column lives in directory names and every
+      // writer stages by it — block it
+      require(!partitionLayout(spark, path, Some(cur)).exists(_.column == name),
+        s"cannot drop partition column '$name' of $path")
       val newSchema = StructType(schema.fields.filterNot(_.name == name))
       // retire BEFORE the commit: a crash between the two must err
       // toward a fresh physical name (harmless), never toward
@@ -500,116 +498,71 @@ trait VersionedSchema extends VersionedLog { self: Versioned.type =>
       .getOrElse(sys.error(s"no identity high-water for '$column' on $path at v$v"))
 
   // ------------------------------------------------------------------
-  // HIDDEN partitioning (Iceberg-style partition TRANSFORMS)
+  // PARTITION LAYOUT (identity column or Iceberg-style hidden transform)
   // ------------------------------------------------------------------
 
   /** The hidden derived-partition column — SQL surfaces (catalog
     * schemas) hide it; the engine materializes it. */
   private[graft] final val hiddenPartColName = "__gpart"
 
-  /** The table's registered partition transform (an SQL expression
-    * over its columns), or None for explicit/unpartitioned layouts. */
-  def hiddenTransform(spark: SparkSession, path: String): Option[String] =
+  /** The table's recorded layout property (`ptransform`): an identity
+    * layout's PHYSICAL column name, or a transform expression. */
+  private[ops] def layoutProperty(spark: SparkSession,
+      path: String): Option[String] =
     readSidecar(spark, path, "ptransform").map(_.trim)
 
-  /** Register `transform` on a table that must not exist yet. */
-  private def registerTransform(spark: SparkSession, path: String,
-      transform: String): Unit = {
-    require(currentVersion(spark, path).isEmpty,
-      s"table already initialized: $path")
-    writeSidecar(spark, path, "ptransform", transform)
-  }
+  /** Record (or, with None, clear) the layout property. */
+  private[ops] def recordLayout(spark: SparkSession, path: String,
+      layout: Option[String]): Unit =
+    writeSidecarLines(spark, path, "ptransform", layout.toSeq)
 
-  /** Initialize with HIDDEN partitioning: `transformExpr` is an SQL
-    * expression over the table's own columns (e.g. `"c div 100"`,
-    * `"pmod(k, 16)"`, `"to_date(ts)"`), registered as a TABLE
-    * property — the Iceberg insight that Hive-style layouts miss:
-    * writers and readers should never have to repeat (or even know)
-    * the layout. [[mergeHidden]] derives the partition value for each
-    * source row and scopes the rewrite automatically; [[readHidden]]
-    * hides the derived column. The derived value is materialized as a
-    * real (suffixed) column, so deletion vectors, stats, CDC and
-    * time travel all work unchanged on transformed tables. */
-  def initHidden(df: DataFrame, path: String, transformExpr: String,
-      statsCols: Seq[String] = Seq.empty): Long = {
-    registerTransform(df.sparkSession, path, transformExpr)
-    init(df.withColumn(hiddenPartColName, expr(transformExpr)), path,
-      partitionCol = Some(hiddenPartColName), statsCols = statsCols)
-  }
+  /** The recorded layout resolved against `schema`: a field whose
+    * PHYSICAL name was recorded is an identity layout on that field's
+    * logical name (partition directories keep the physical name, so
+    * the layout survives a rename); anything else is a hidden
+    * transform materialized as [[hiddenPartColName]]. */
+  private def layoutIn(recorded: String, schema: StructType): Layout =
+    schema.fields.find(f => physicalOf(f) == recorded)
+      .fold(Layout(hiddenPartColName, Some(recorded)))(f =>
+        Layout(f.name, None))
+
+  /** The table's partition layout as of `version` (default: current),
+    * None for an unpartitioned table. Set once — by [[init]] /
+    * [[create]], or re-laid by [[compact]] — and resolved by every
+    * writer: callers state WHAT to write, never HOW the table is laid
+    * out. */
+  def partitionLayout(spark: SparkSession, path: String,
+      version: Option[Long] = None): Option[Layout] =
+    layoutProperty(spark, path).map(layoutIn(_,
+      schemaOf(spark, path, resolve(spark, path, version))))
+
+  /** The one layout resolver: `df` as staged under the table's layout
+    * read against `schema` (the version the write commits on top of),
+    * and the column to stage it by. A hidden layout re-derives its
+    * column in-plan for every row — an UPDATE image whose source
+    * columns changed routes to its new partition. */
+  private[ops] def withLayout(df: DataFrame, path: String,
+      schema: StructType): (DataFrame, Option[String]) =
+    layoutProperty(df.sparkSession, path).map(layoutIn(_, schema)) match {
+      case None => (df, None)
+      case Some(Layout(c, None)) => (df, Some(c))
+      case Some(Layout(c, Some(t))) => (df.withColumn(c, expr(t)), Some(c))
+    }
 
   /** CREATE an EMPTY table — the SQL-DDL primitive behind
-    * `CREATE TABLE` / CTAS through [[graft.sources.LakeCatalog]].
-    *
-    * `partitionExpr` registers the table's layout as a transform
-    * property either way (so every later SQL `INSERT` routes through
-    * [[appendAuto]] without restating it): a bare column name is an
-    * IDENTITY layout (files land under real `col=value` directories,
-    * partition pruning sees the user's column); any other expression
-    * is Iceberg-style hidden partitioning (the derived column is
-    * appended to the LOGGED schema and materialized per batch; SQL
-    * surfaces hide it again). Version 1 is a single schema-only
-    * parquet file — the manifest's sole, unpartitioned entry, which
-    * `merge` always rewrites rather than carries, so the layout
-    * stays consistent from the first real batch on. */
+    * `CREATE TABLE` / CTAS through [[graft.sources.LakeCatalog]]:
+    * [[init]] of a schema-only frame, `partitionExpr` recorded as the
+    * table's layout exactly as `init` records it. Version 1 is a single
+    * schema-only parquet file — the manifest's sole, unpartitioned
+    * entry, which `merge` always rewrites rather than carries, so the
+    * layout stays consistent from the first real batch on. */
   def create(spark: SparkSession, path: String, schema: StructType,
       partitionExpr: Option[String] = None,
       statsCols: Seq[String] = Seq.empty,
-      bloomCols: Seq[String] = Seq.empty): Long = {
-    require(currentVersion(spark, path).isEmpty,
-      s"table already initialized: $path")
-    val empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    partitionExpr match {
-      case None =>
-        init(empty, path, None, statsCols, bloomCols, opName = "CREATE")
-      case Some(e) =>
-        registerTransform(spark, path, e)
-        if (schema.fieldNames.contains(e))
-          init(empty, path, Some(e), statsCols, bloomCols,
-            opName = "CREATE")
-        else
-          init(empty.withColumn(hiddenPartColName, expr(e)), path,
-            Some(hiddenPartColName), statsCols, bloomCols, opName = "CREATE")
-    }
-  }
-
-  /** Resolve a write batch's partition layout from the table's
-    * registered transform: an IDENTITY transform (the expression is
-    * exactly one of the batch's columns) partitions by that column
-    * directly — no derived column, and partition-directory pruning
-    * sees the real name; any other expression derives the hidden
-    * column in-plan, the Iceberg hidden-partitioning mechanic. */
-  private def withLayout(source: DataFrame,
-      path: String): (DataFrame, Option[String]) =
-    hiddenTransform(source.sparkSession, path) match {
-      case None => (source, None)
-      case Some(t) if source.columns.contains(t) => (source, Some(t))
-      case Some(t) =>
-        (source.withColumn(hiddenPartColName, expr(t)), Some(hiddenPartColName))
-    }
-
-  /** APPEND with the table's registered partition layout applied
-    * automatically (identity column, hidden transform, or none) —
-    * what SQL `INSERT INTO` routes through: the writer states WHAT
-    * to append, the table owns HOW it is laid out. */
-  def appendAuto(source: DataFrame, path: String): Long = {
-    val (src, pc) = withLayout(source, path)
-    append(src, path, partitionCol = pc)
-  }
-
-  /** MERGE into a hidden-partitioned table: the layout is resolved
-    * from the table property and the source batch's partition values
-    * derive IN-PLAN — callers state WHAT to merge, never HOW the
-    * table is laid out. Untouched partitions carry by reference
-    * exactly as with an explicit partition column. */
-  def mergeHidden(source: DataFrame, path: String, keys: Seq[String],
-      deleteCol: Option[String] = None): Long = {
-    require(hiddenTransform(source.sparkSession, path).isDefined,
-      s"no hidden partition transform registered at $path — " +
-        "use merge() for explicit layouts")
-    val (src, pc) = withLayout(source, path)
-    merge(src, path, keys, partitionCol = pc, deleteCol = deleteCol)
-  }
+      bloomCols: Seq[String] = Seq.empty): Long =
+    init(spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](), schema),
+      path, partitionExpr, statsCols, bloomCols, opName = "CREATE")
 
   /** Read a hidden-partitioned snapshot with the derived partition
     * column hidden again. */

@@ -17,13 +17,16 @@ import Versioned.{Erasure, ExpectStats, MergeStats, Updated}
   * (matched target rows disappear, the flagged source rows are not
   * inserted).
   *
-  *  - '''Partition-scoped rewrite.''' MERGE with `partitionCol`
-  *    rewrites only the partitions present in the source batch:
+  *  - '''Partition-scoped rewrite.''' MERGE into a partitioned
+  *    table rewrites only the partitions present in the source batch:
   *    untouched partitions' files carry over into the new manifest BY
   *    REFERENCE (never copied — at 100 TB the daily delta touches
   *    days, not the table). Within touched partitions the surviving
   *    target rows and the source rows are one anti-join + union,
-  *    shuffling only those partitions' data.
+  *    shuffling only those partitions' data. The layout is the
+  *    table's own ([[partitionLayout]], recorded by [[init]] or
+  *    [[create]]): every writer here resolves it through
+  *    [[withLayout]], so no caller restates it.
   *  - '''Merge-on-read deletes.''' [[deleteVectored]] commits a DELETE
   *    as a deletion vector — (file, row position) pairs stored beside
   *    the manifest — rewriting ZERO data files; compaction
@@ -208,7 +211,7 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
     * consistent directory layout; the column is dropped on read, so
     * the suffix is invisible to consumers.) */
   private[ops] def stage(df: DataFrame, path: String, v: Long,
-      partitionCol: Option[String],
+      partitionBy: Option[String],
       logicalSchema: Option[StructType] = None)
       : (Path, Seq[String], StructType) = {
     val dir = batchDir(path, v)
@@ -217,8 +220,8 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
     val (dfW, pcW) = logicalSchema match {
       case Some(s0) if hasMapping(s0) =>
         val m = s0.fields.map(f => f.name -> physicalOf(f)).toMap
-        (toPhysical(df, s0), partitionCol.map(c => m.getOrElse(c, c)))
-      case _ => (df, partitionCol)
+        (toPhysical(df, s0), partitionBy.map(c => m.getOrElse(c, c)))
+      case _ => (df, partitionBy)
     }
     val w = dfW.write.mode("overwrite")
     pcW.fold(w)(c => w.partitionBy(c)).parquet(dir.toString)
@@ -248,7 +251,17 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
       parquetFiles(df.sparkSession, stagedDir).map(_.toString)
     }
 
-  /** Initialize the table with `df` as version 1. `statsCols`
+  /** Initialize the table with `df` as version 1. `partitionCol`
+    * records the table's partition layout once, as the property every
+    * later writer resolves ([[partitionLayout]]): a bare column name is
+    * an IDENTITY layout (files land under real `col=value`
+    * directories, partition pruning sees the user's column); any other
+    * SQL expression over the table's columns (`"c div 100"`,
+    * `"pmod(k, 16)"`, `"to_date(ts)"`) is Iceberg-style HIDDEN
+    * partitioning — the derived value is materialized as the real
+    * column [[hiddenPartColName]] (so deletion vectors, stats, CDC and
+    * time travel work unchanged), re-derived for every written row,
+    * and hidden again by SQL surfaces and [[readHidden]]. `statsCols`
     * registers per-file min/max statistics columns: every commit from
     * then on computes exact stats for ITS staged files (one bounded
     * aggregate over the batch), carried files keep theirs in the
@@ -265,14 +278,16 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
       s"table already initialized: $path")
     writeSidecarLines(spark, path, "statscols",
       statsCols ++ bloomCols.map("bloom:" + _))
+    recordLayout(spark, path, partitionCol)
+    val (dfL, pc) = withLayout(df, path, df.schema)
     // a dynamic-partition write of an EMPTY frame creates zero files
     // (SQL CREATE TABLE … PARTITIONED BY lands here); fall back to one
     // schema-only file so v1 is readable
-    val (dir, staged0, written) = stage(df, path, 1L, partitionCol)
-    val staged = ensureManifestNonEmpty(df, dir, staged0,
+    val (dir, staged0, written) = stage(dfL, path, 1L, pc)
+    val staged = ensureManifestNonEmpty(dfL, dir, staged0,
       carriedNonEmpty = false)
     require(commit(spark, path, 1L,
-      stagedEntries(spark, path, staged, written), Some(df.schema), None,
+      stagedEntries(spark, path, staged, written), Some(dfL.schema), None,
       opName),
       s"init lost a commit race: $path")
     1L
@@ -367,7 +382,6 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
     * long-running writer uses, and what makes the rebase path
     * deterministic to exercise. */
   def merge(source: DataFrame, path: String, keys: Seq[String],
-      partitionCol: Option[String] = None,
       deleteCol: Option[String] = None,
       evolveSchema: Boolean = false, opName: String = "MERGE",
       baseVersion: Option[Long] = None): Long = {
@@ -387,12 +401,14 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
     occ(spark, path, "merge", baseVersion) { (cur, first) =>
       val next = cur + 1
       val curSchema = tableSchema(spark, path, Some(cur))
+      val (sourceL, layoutCol) =
+        withLayout(sourceG, path, schemaOf(spark, path, cur))
       // under column mapping, partition DIRECTORIES carry the
       // physical name — attribution and staging must speak it
       def physOf(c: String): String = curSchema
         .flatMap(_.fields.find(_.name == c)).map(physicalOf).getOrElse(c)
 
-      val (carriedTop, hitList, rewriteDf, touchedSegs) = partitionCol match {
+      val (carriedTop, hitList, rewriteDf, touchedSegs) = layoutCol match {
         case Some(pc) =>
           // untouched partitions carry over BY REFERENCE. Match against
           // the HIVE-ESCAPED directory name (specials are %-encoded on
@@ -405,7 +421,7 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
           // '…00:00:00.0'), so derive it with the same Cast in-plan
           // rather than Row.get(0).toString on the driver.
           import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          val touched = sourceG
+          val touched = sourceL
             .select(col(pc).cast("string").as("p")).distinct()
             .collect().map { r =>
               ExternalCatalogUtils.getPartitionPathString(physOf(pc),
@@ -437,7 +453,7 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
       // in their partition). Allocation ranks the batch by the merge
       // keys, so the assigned values are deterministic and
       // SQL-replayable.
-      val (sourceI, idExtras) = assignIdentities(spark, path, cur, sourceG) {
+      val (sourceI, idExtras) = assignIdentities(spark, path, cur, sourceL) {
         (batch, c, hw, step) =>
           val prevId = "__graft_prev_id"
           val existing = rewriteDf
@@ -483,7 +499,7 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
         dvWithout(deletionVectorRows(spark, path, Some(cur)))(hitNames)
       }
       val (stagedDir, staged0, written) = stage(merged, path, next,
-        partitionCol, Some(outSchema))
+        layoutCol, Some(outSchema))
       val staged = ensureManifestNonEmpty(merged, stagedDir,
         staged0, carriedTop.exists(_.nonEmpty), Some(outSchema))
       val stagedE = stagedEntries(spark, path, staged, written)
@@ -494,7 +510,7 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
       // rebase: two racing allocators extending from the same
       // high-water would collide, so the retry recomputes allocation
       // against the winner instead.
-      val fastPath = partitionCol.filter(_ => !hasIdentity).map { pc =>
+      val fastPath = layoutCol.filter(_ => !hasIdentity).map { pc =>
         Rebase(meta0, opName + "+REBASE", newest =>
           partitionRebase(spark, path, cur, newest, physOf(pc),
             touchedSegs.toSet, hitList, stagedE))
@@ -562,7 +578,6 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
     * [[merge]] if replacing rows, and duplicate-key appends are
     * visible duplicates, as in any lake. */
   def append(source: DataFrame, path: String,
-      partitionCol: Option[String] = None,
       evolveSchema: Boolean = false, opName: String = "APPEND"): Long = {
     val spark = source.sparkSession
     val gensSupplied = generatedColumns(spark, path)
@@ -574,7 +589,8 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
     occ(spark, path, "append") { (cur, first) =>
       val curSchema = tableSchema(spark, path, Some(cur))
       val tgt = schemaOf(spark, path, cur)
-      var src = sourceG
+      val (sourceL, layoutCol) = withLayout(sourceG, path, tgt)
+      var src = sourceL
       // schema enforcement with AUTOMATIC TYPE WIDENING (the Delta
       // type-widening evolution): a source column NARROWER than the
       // table up-casts in-plan (lossless); a source column WIDER
@@ -620,7 +636,7 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
       val outSchema = admit(spark, path, first, inserts, tgt, evolveSchema,
         curSchema, planned)((_, f) => f)
       val (stagedDir, staged, written) = stage(inserts, path, cur + 1,
-        partitionCol, Some(outSchema))
+        layoutCol, Some(outSchema))
       val stagedE = stagedEntries(spark, path, staged, written)
       // O(delta) commit: carried segment refs copy forward, staged
       // entries ride inline (sealing past the threshold) — an append
@@ -687,32 +703,19 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
   // executor-staged commits (the connector's write paths)
   // ------------------------------------------------------------------
 
-  /** Whether version `v` has files under partition directories. */
-  private def partitioned(spark: SparkSession, path: String,
-      v: Long): Boolean =
-    manifestEntries(spark, path, v).exists { case (f0, _) =>
-      val k = fileKey(f0)
-      k.indexOf('/') >= 0 && k.substring(k.indexOf('/') + 1).contains("=")
-    }
-
   /** Whether the connector may commit executor-staged files directly
     * (the real V2 write path): tables with generated/identity columns
     * need in-plan computation, column-mapped tables need
-    * physical-name translation, and partition-structured layouts need
-    * the partition writer — those route through [[append]]'s driver
-    * API instead. */
+    * physical-name translation, and partitioned tables need the
+    * partition writer — those route through [[append]]'s driver API
+    * instead. */
   private[graft] def canStageDirect(spark: SparkSession,
-      path: String): Boolean = {
-    val cur = resolve(spark, path, None)
+      path: String): Boolean =
     generatedColumns(spark, path).isEmpty &&
       identityColumns(spark, path).isEmpty &&
-      // a registered partition layout (DDL-created) must route through
-      // appendAuto so batches land partitioned, even while the table is
-      // still empty of partition directories
-      hiddenTransform(spark, path).isEmpty &&
-      !tableSchema(spark, path, Some(cur)).exists(hasMapping) &&
-      !partitioned(spark, path, cur)
-  }
+      layoutProperty(spark, path).isEmpty &&
+      !tableSchema(spark, path, Some(resolve(spark, path, None)))
+        .exists(hasMapping)
 
   /** The (queryId, epochId) transaction stamp of version `v`, if the
     * commit carried one (streaming-sink epochs) — Delta's txn action. */
@@ -732,7 +735,7 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
     * carries every prior file and the deletion vector by reference,
     * and records the optional `txn` (queryId, epochId) sidecar the
     * sink's idempotence check reads. Tables with generated or
-    * identity columns, or a partition-structured layout, are refused:
+    * identity columns, or a partition layout, are refused:
     * those writers need [[append]]/[[merge]]'s in-plan machinery. */
   private[graft] def appendStaged(spark: SparkSession, path: String,
       files: Seq[String], txn: Option[(String, Long)],
@@ -746,9 +749,9 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
       s"streaming sink refuses column-mapped tables: $path — the " +
         "executor writers speak the QUERY schema, which carries no " +
         "physical-name mapping; use foreachBatch + Versioned.append")
-    require(!partitioned(spark, path, cur0),
+    require(layoutProperty(spark, path).isEmpty,
       s"streaming sink refuses partition-structured tables: $path — " +
-        "use foreachBatch + Versioned.append(partitionCol = …)")
+        "use foreachBatch + Versioned.append")
     if (files.isEmpty) return cur0
     // the sink stages rows in the table's own schema
     val written = schemaOf(spark, path, cur0)
@@ -795,13 +798,11 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
       s"SQL row-level DML refuses column-mapped tables: $path — the " +
         "executor writers speak the query schema, which carries no " +
         "physical-name mapping")
-    require(hiddenTransform(spark, path).forall(t =>
-        tableSchema(spark, path, Some(resolve(spark, path, None)))
-          .exists(_.fieldNames.contains(t))),
+    require(partitionLayout(spark, path).forall(_.transform.isEmpty),
       s"SQL row-level DML refuses hidden-transform tables: $path — " +
         "updated row images would lack the derived partition column; " +
-        "use Versioned.mergeHidden/updateVectored (identity layouts " +
-        "are fine: the partition column is a real user column)")
+        "use Versioned.merge/updateVectored (identity layouts are " +
+        "fine: the partition column is a real user column)")
     val newDv: Option[DvRows] =
       if (dvStagedDirs.isEmpty) None else Some(stagedDv(spark, dvStagedDirs))
     if (dataFiles.isEmpty && newDv.isEmpty) return resolve(spark, path, None)
@@ -871,8 +872,7 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
       updateSet: Map[String, Column],
       updateCond: Option[Column] = None,
       deleteCond: Option[Column] = None,
-      insertCond: Option[Column] = None,
-      partitionCol: Option[String] = None): MergeStats = {
+      insertCond: Option[Column] = None): MergeStats = {
     require(keys.nonEmpty, "mergeInto needs at least one key column")
     val spark = source.sparkSession
     val tgt = read(spark, path).alias("t")
@@ -910,8 +910,8 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
     val delFlag = "__graft_mi_del"
     // clause images: update rows rebuild the full target row with the
     // updateSet overrides, insert rows take the source's target
-    // columns, delete rows carry keys only (merge drops them before
-    // insert, so the non-key columns just need to exist)
+    // columns, delete rows the matched target row (merge drops them
+    // before insert; their partition value scopes the rewrite)
     val images = joined
       .withColumn(clFlag,
         when(matchedF && del, "D").when(matchedF && upd, "U")
@@ -927,8 +927,7 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
           else lit(null).cast(tgt.schema(c).dataType)
         when(col(clFlag) === "U", up)
           .when(col(clFlag) === "I", srcC)
-          .otherwise(if (keys.contains(c)) col(s"s.$c")
-            else lit(null).cast(tgt.schema(c).dataType))
+          .otherwise(col(s"t.$c"))
           .as(c)
       } :+ (col(clFlag) === "D").as(delFlag) :+ col(clFlag): _*)
       .persist()
@@ -941,7 +940,7 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
         (counts.getLong(0), counts.getLong(1), counts.getLong(2))
       if (nDel + nUpd + nIns == 0)
         return MergeStats(resolve(spark, path, None), 0L, 0L, 0L)
-      val v = merge(images.drop(clFlag), path, keys, partitionCol,
+      val v = merge(images.drop(clFlag), path, keys,
         deleteCol = Some(delFlag), opName = "MERGE_INTO")
       MergeStats(v, nUpd, nDel, nIns)
     } finally images.unpersist()
@@ -960,7 +959,6 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
     * the nightly load and the load landing minus a quarantined
     * remainder the owning team can inspect. */
   def mergeExpect(source: DataFrame, path: String, keys: Seq[String],
-      partitionCol: Option[String] = None,
       deleteCol: Option[String] = None,
       quarantine: Option[String] = None): ExpectStats = {
     val spark = source.sparkSession
@@ -993,7 +991,7 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
       val v =
         if (nClean == 0 && deleteCol.isEmpty)
           resolve(spark, path, None) // nothing clean to commit
-        else merge(clean, path, keys, partitionCol, deleteCol,
+        else merge(clean, path, keys, deleteCol,
           opName = "MERGE_EXPECT")
       ExpectStats(v, nClean, nBad)
     } finally flagged.unpersist()
@@ -1017,16 +1015,12 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
     * TRUE). For frequent small erasures prefer [[deleteVectored]]
     * (merge-on-read) and amortize the rewrite into compaction.
     *
-    * Tables initialized/maintained with a `partitionCol` must pass the
-    * same column here so the rewrite preserves the directory layout
-    * (mixing partitioned and unpartitioned leaf directories under one
-    * data root would break partition discovery).
+    * The survivors are staged under the table's own partition layout.
     *
     * Concurrency: the same optimistic loop as [[merge]] — losing the
     * commit race re-resolves current and re-runs the find pass, so a
     * racing writer's committed rows are never clobbered. */
-  def delete(spark: SparkSession, path: String, pred: Column,
-      partitionCol: Option[String] = None): Erasure =
+  def delete(spark: SparkSession, path: String, pred: Column): Erasure =
     occ(spark, path, "delete") { (cur, _) =>
       val curEntries = manifestEntries(spark, path, cur)
       // find pass: which files hold matching LIVE rows? Column-pruned
@@ -1049,10 +1043,11 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
         // SQL DELETE removes rows where pred IS TRUE; under three-valued
         // logic `!pred` also drops NULL-evaluating rows, which must be
         // RETAINED — coalesce pins NULL to "not deleted"
-        val survivors = hitLive.filter(!coalesce(pred, lit(false)))
         val schema = schemaOf(spark, path, cur)
+        val (survivors, layoutCol) =
+          withLayout(hitLive.filter(!coalesce(pred, lit(false))), path, schema)
         val (stagedDir, staged0, written) = stage(survivors, path, cur + 1,
-          partitionCol, Some(schema))
+          layoutCol, Some(schema))
         val staged = ensureManifestNonEmpty(survivors, stagedDir,
           staged0, keepE.nonEmpty, Some(schema))
         Right(Commit(sealTop(spark, path,
@@ -1105,10 +1100,11 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
     * manifest swap; compaction later folds the vector away. Rows
     * where `pred` evaluates NULL are untouched (SQL UPDATE semantics).
     * `set` values are cast back to each column's declared type so the
-    * staged batch can never fork the physical schema. */
+    * staged batch can never fork the physical schema, and the copies
+    * are staged under the table's partition layout (a changed
+    * partition value moves the row). */
   def updateVectored(spark: SparkSession, path: String, pred: Column,
-      set: Map[String, Column],
-      partitionCol: Option[String] = None): Updated = {
+      set: Map[String, Column]): Updated = {
     require(set.nonEmpty, "updateVectored needs at least one SET column")
     occ(spark, path, "updateVectored") { (cur, first) =>
       val curEntries = manifestEntries(spark, path, cur)
@@ -1127,8 +1123,9 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
           set.get(c).map(_.cast(schemaMap(c)).as(c)).getOrElse(col(c))): _*)
         if (first) enforceConstraints(spark, path, updated)
         val schema = schemaOf(spark, path, cur)
-        val (stagedDir, staged, written) = stage(updated, path, cur + 1,
-          partitionCol, Some(schema))
+        val (images, layoutCol) = withLayout(updated, path, schema)
+        val (stagedDir, staged, written) = stage(images, path, cur + 1,
+          layoutCol, Some(schema))
         Right(Commit(segmentedTop(spark, path, cur,
             stagedEntries(spark, path, staged, written)), Some(schema),
           Some(dvUnion(deletionVectorRows(spark, path, Some(cur)),

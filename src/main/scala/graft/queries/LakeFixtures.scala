@@ -138,11 +138,10 @@ object LakeFixtures {
       Versioned.merge(base.filter(col("k") % 2 === 1 &&
           col("k") % 5 === 0 && col("st") === "O")
         .select(col("k"), col("st"), col("p")),
-        t, Seq("k"), partitionCol = Some("st"))                   // v2
+        t, Seq("k"))                                              // v2
       Versioned.deleteVectored(s, t, col("k") % 7 === 0)          // v3
       Versioned.updateVectored(s, t, col("k") % 9 === 0,
-        Map("p" -> (col("p") + lit(10.0))),
-        partitionCol = Some("st"))                                // v4
+        Map("p" -> (col("p") + lit(10.0))))                       // v4
     } + "/t"
 
   /** Odd order keys in 8 round-robin files — the second leg of the
@@ -157,10 +156,10 @@ object LakeFixtures {
     * hidden-partitioning base. */
   def ordersHidden(s: SparkSession, d: String): String =
     memoDir(s"hid|$d", "graft_base_hid") { dir =>
-      Versioned.initHidden(Tables.load(s, d, "orders")
+      Versioned.init(Tables.load(s, d, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("c"),
           col("o_totalprice").as("p")),
-        dir, "c div 100")
+        dir, partitionCol = Some("c div 100"))
     }
 
   /** (k, c, p, bkt) orders partitioned by the GENERATED `bkt = c div

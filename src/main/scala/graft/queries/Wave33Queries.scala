@@ -112,7 +112,7 @@ object Wave33Queries extends QueryModule {
       // partition-scoped merge against the evolved layout: touch only 'F'
       val upd = lake.filter(col("st") === "F" && col("k") % 3 === 0)
         .withColumn("p", col("p") + lit(10.0))
-      Versioned.merge(upd, dir, Seq("k"), partitionCol = Some("st"))
+      Versioned.merge(upd, dir, Seq("k"))
       val v2Files = Versioned.files(s, dir, Some(2L)).toSet
       val v3Files = Versioned.files(s, dir, Some(3L)).toSet
       val carried = v3Files.count(f => v2Files.contains(f) &&

@@ -102,8 +102,8 @@ object Wave39Queries extends QueryModule {
   }
 
   def qLakeSchemaEvolution(s: SparkSession, d: String): DataFrame = {
-    // the evolving merge is a full rewrite (no partitionCol), so the
-    // base's physical layout is irrelevant — share the range-16 clone
+    // the evolving merge is a full rewrite (the base is unpartitioned),
+    // so its physical layout is irrelevant — share the range-16 clone
     LakeFixtures.withClone(s,
       LakeFixtures.ordersRange16(s, d), "graft_evo2") { dir =>
       val batch = Tables.load(s, d, "orders")

@@ -55,7 +55,7 @@ object Wave41Queries extends QueryModule {
           .withColumn("o_orderkey", col("o_orderkey") + lit(100000000L))
           .withColumn("is_delete", lit(false)))
       Versioned.merge(batch, dir, Seq("o_orderkey"),
-        partitionCol = Some("o_orderstatus"), deleteCol = Some("is_delete"))
+        deleteCol = Some("is_delete"))
       val cf = Versioned.changes(s, dir, 1L, 2L)
       val out = cf.df
         .withColumn("fp", fpCol(col("o_orderkey"), col("o_orderstatus"),

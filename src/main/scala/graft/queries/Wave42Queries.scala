@@ -112,7 +112,7 @@ object Wave42Queries extends QueryModule {
           .withColumn("o_orderkey", col("o_orderkey") + lit(100000000L))
           .withColumn("is_delete", lit(false)))
       Versioned.merge(batch, t, Seq("o_orderkey"),
-        partitionCol = Some("o_orderstatus"), deleteCol = Some("is_delete"))
+        deleteCol = Some("is_delete"))
     } + "/t"
     val mv0 = mvOf(Versioned.read(s, dir, Some(1L)))
     val cf = Versioned.changes(s, dir, 1L, 2L)

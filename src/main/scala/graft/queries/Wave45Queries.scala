@@ -9,14 +9,14 @@ import graft.text.Dedup
 
 /** Round-9 wave 45 — hidden partitioning:
   *
-  *  - `q_hidden_partitioning`: [[Versioned.initHidden]] /
-  *    [[Versioned.mergeHidden]] / [[Versioned.readHidden]] — the
-  *    partition layout is a TABLE PROPERTY (`c div 100`), not a
-  *    per-call argument: the merge derives each source row's bucket
-  *    in-plan and scopes the rewrite to the touched buckets (the
-  *    receipt pins untouched-bucket files carried by reference and
-  *    the touched bucket fully rewritten), and reads never surface
-  *    the derived column. This is the Iceberg correction to
+  *  - `q_hidden_partitioning`: [[Versioned.init]] with the `c div
+  *    100` expression, then plain [[Versioned.merge]] and
+  *    [[Versioned.readHidden]] — the partition layout is a TABLE
+  *    PROPERTY, not a per-call argument: the merge derives each source
+  *    row's bucket in-plan and scopes the rewrite to the touched
+  *    buckets (the receipt pins untouched-bucket files carried by
+  *    reference and the touched bucket fully rewritten), and reads
+  *    never surface the derived column. This is the Iceberg correction to
   *    Hive-style partitioning: writers can't mis-partition and
   *    readers can't depend on the layout, so the layout can EVOLVE
   *    without breaking either.
@@ -43,7 +43,7 @@ object Wave45Queries extends QueryModule {
       // the caller never names the layout
       val batch = base.filter(col("c").between(20L, 29L))
         .withColumn("p", col("p") + lit(50.0))
-      Versioned.mergeHidden(batch, dir, Seq("k"))
+      Versioned.merge(batch, dir, Seq("k"))
       val v2Files = Versioned.files(s, dir, Some(2L)).toSet
       val untouched = v1Files.filterNot(_.contains("/__gpart=0/"))
       val carried = untouched.nonEmpty && untouched.forall(v2Files.contains)

@@ -33,7 +33,7 @@ object Wave50Queries extends QueryModule {
       // the batch OMITS bkt; customers 20..29 = generated bucket 0
       val batch = base.filter(col("c").between(20L, 29L))
         .withColumn("p", col("p") + lit(50.0))
-      Versioned.merge(batch, dir, Seq("k"), partitionCol = Some("bkt"))
+      Versioned.merge(batch, dir, Seq("k"))
       val v2Files = Versioned.files(s, dir, Some(2L)).toSet
       val untouched = v1Files.filterNot(_.contains("/bkt=0/"))
       val carried = untouched.nonEmpty && untouched.forall(v2Files.contains)
@@ -42,7 +42,7 @@ object Wave50Queries extends QueryModule {
       val badRejected = Q.receipt(
         try {
           Versioned.merge(batch.withColumn("bkt", lit(999L)),
-            dir, Seq("k"), partitionCol = Some("bkt"))
+            dir, Seq("k"))
           false
         } catch { case _: Versioned.ConstraintViolation => true },
         "wrong supplied generated value was accepted")

@@ -41,16 +41,13 @@ object Wave56Queries extends QueryModule {
         v1.filter(col("st") === st && col("k") % 10 === mod10)
           .withColumn("p", col("p") + lit(bump))
       // writer A: wins v2 in partition F
-      Versioned.merge(src("F", 0, 5.0), dir, Seq("k"),
-        partitionCol = Some("st"))
+      Versioned.merge(src("F", 0, 5.0), dir, Seq("k"))
       // writer B: stale snapshot (v1), disjoint partition O → its lost
       // commit race resolves by REBASE: staged files re-pointed at v3
-      Versioned.merge(src("O", 6, 7.0), dir, Seq("k"),
-        partitionCol = Some("st"), baseVersion = Some(1L))
+      Versioned.merge(src("O", 6, 7.0), dir, Seq("k"), baseVersion = Some(1L))
       // writer C: stale snapshot, SAME partition as A → conflict is
       // detected and the full re-merge runs (no rebase)
-      Versioned.merge(src("F", 4, 11.0), dir, Seq("k"),
-        partitionCol = Some("st"), baseVersion = Some(1L))
+      Versioned.merge(src("F", 4, 11.0), dir, Seq("k"), baseVersion = Some(1L))
       val ops = Versioned.history(s, dir).map(_.operation)
       val opsOk = ops == Seq("CLONE", "MERGE", "MERGE+REBASE", "MERGE")
       // the rebased commit reuses the staging batch written for the

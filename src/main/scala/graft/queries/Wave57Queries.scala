@@ -70,7 +70,7 @@ object Wave57Queries extends QueryModule {
         .filter(col("o_orderkey") % 2 === 1 && col("o_orderkey") % 5 === 0)
         .select(col("o_orderkey").as("k"), lit("X").as("st"),
           col("o_totalprice").as("p")),
-        dir, Seq("k"), partitionCol = Some("st"))
+        dir, Seq("k"))
       val q = s.readStream.format("graft-lake").option("path", dir)
         .load().writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", cp).start()

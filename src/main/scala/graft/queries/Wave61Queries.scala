@@ -19,7 +19,8 @@ import graft.text.Dedup
   *    deletion vectors riding unchanged, constraints checked on the
   *    staged batch. Tables that need in-plan work (generated or
   *    identity columns, column mapping, a partition layout) route
-  *    through [[Versioned.append]] instead. Appends get the cheapest
+  *    through [[Versioned.append]] instead, which resolves the
+  *    table's recorded layout itself. Appends get the cheapest
   *    conflict model in the protocol: a lost commit race re-points the
   *    already-staged files at the winner, never restages (Delta's
   *    appends-never-conflict rule).

@@ -92,7 +92,7 @@ object Wave65Queries extends QueryModule {
           .withColumn("o_orderkey", col("o_orderkey") + lit(100000000L))
           .withColumn("is_delete", lit(false)))
       Versioned.merge(batch, dir, Seq("o_orderkey"),
-        partitionCol = Some("o_orderstatus"), deleteCol = Some("is_delete"))
+        deleteCol = Some("is_delete"))
       val rows = s.sql(
         s"""SELECT op, count(*) AS n_rows,
            |  ${Q.DSUM_SPARK("o_totalprice")} AS sum_price,

@@ -128,7 +128,7 @@ object Wave7Queries extends QueryModule {
           .withColumn("o_orderkey", col("o_orderkey") + lit(100000000L))
           .withColumn("is_delete", lit(false)))
       val v = Versioned.merge(batch, dir, Seq("o_orderkey"),
-        partitionCol = Some("o_orderstatus"), deleteCol = Some("is_delete"))
+        deleteCol = Some("is_delete"))
       Versioned.read(s, dir)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_orders"),

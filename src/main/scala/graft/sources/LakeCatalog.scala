@@ -35,7 +35,7 @@ import graft.ops.Versioned
   * skipping), `ALTER TABLE ADD/RENAME/DROP COLUMN` (metadata-only
   * commits on the column-mapping layer), `DROP TABLE`,
   * `ALTER TABLE … RENAME TO`, `INSERT INTO` (append-only, through
-  * [[Versioned.appendAuto]]'s commit protocol — constraints,
+  * [[Versioned.append]]'s commit protocol — constraints,
   * generated columns, identity allocation, OCC, the table's
   * registered partition layout), row-level `UPDATE` / `MERGE INTO` /
   * `DELETE` (merge-on-read deltas), and `CALL` maintenance
@@ -115,13 +115,13 @@ class LakeCatalog extends TableCatalog with ProcedureCatalog {
     val full = Versioned.schemaOf(spark, path, v)
     // the derived hidden-partition column is the engine's, not the
     // user's: SQL reads never request it (the scan projects), and SQL
-    // INSERTs are validated against the user columns only — appendAuto
-    // re-derives it per batch. Only hide it when a NON-IDENTITY
-    // transform is registered (identity layouts partition by the real
-    // column); a user table whose own column happens to carry the
-    // engine's name stays fully visible
-    val engineDerived = Versioned.hiddenTransform(spark, path)
-      .exists(t => !full.fieldNames.contains(t))
+    // INSERTs are validated against the user columns only — append
+    // re-derives it per batch. Only hide it under a HIDDEN layout
+    // (identity layouts partition by the real column); a user table
+    // whose own column happens to carry the engine's name stays fully
+    // visible
+    val engineDerived = Versioned.partitionLayout(spark, path, Some(v))
+      .exists(_.transform.isDefined)
     val schema =
       if (engineDerived)
         StructType(full.fields.filterNot(
@@ -205,7 +205,7 @@ class LakeCatalog extends TableCatalog with ProcedureCatalog {
       "graft-lake tables take at most ONE partition transform " +
         s"(got ${partitions.length}: ${partitions.mkString(", ")}) — " +
         "compose a multi-column layout as a single expression via the " +
-        "Scala API (Versioned.initHidden)")
+        "Scala API (Versioned.init with a partition expression)")
     partitions.headOption.map { t =>
       def ref: String = {
         val refs = t.references()

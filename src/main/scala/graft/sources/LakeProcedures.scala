@@ -412,8 +412,8 @@ object LakeProcedures {
           Versioned.files(spark, path).length.toLong,
           Versioned.deletionVectorRows(spark, path)
             .fold(0L)(Versioned.dvRowCount),
-          UTF8String.fromString(
-            Versioned.hiddenTransform(spark, path).getOrElse("none")),
+          UTF8String.fromString(Versioned.partitionLayout(spark, path)
+            .fold("none")(l => l.transform.getOrElse(l.column))),
           nCols,
           UTF8String.fromString(
             Versioned.statsColumns(spark, path).mkString(",")),

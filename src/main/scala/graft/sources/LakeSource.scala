@@ -221,10 +221,12 @@ final class LakeTable(path: String, version: Option[Long],
     * table's convention and the driver folds their commit messages
     * into one append-commit — distributed end to end, only file paths
     * cross the driver. Tables whose writes need in-plan machinery
-    * (generated/identity columns, column mapping, partition layouts)
+    * (generated/identity columns, column mapping, a partition layout)
     * fall back to a `V1Write` into [[Versioned.append]], which owns
-    * exactly that machinery. Overwrites are refused either way: those
-    * semantics belong to the engine's merge/delete primitives. */
+    * exactly that machinery and resolves the table's recorded layout
+    * itself — the writer never states it. Overwrites are refused
+    * either way: those semantics belong to the engine's merge/delete
+    * primitives. */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(version.isEmpty,
       s"cannot write to a version-pinned table: $path VERSION AS OF " +
@@ -245,9 +247,8 @@ final class LakeTable(path: String, version: Option[Long],
                 if (overwrite) throw new UnsupportedOperationException(
                   "graft-lake is append-only through SQL: INSERT " +
                     "OVERWRITE must go through Versioned.merge/delete")
-                // appendAuto applies the table's registered partition
-                // layout (DDL PARTITIONED BY) before the commit
-                Versioned.appendAuto(data, path)
+                // append stages under the table's own partition layout
+                Versioned.append(data, path)
               }
             }
           override def toStreaming: streaming.StreamingWrite =

@@ -31,15 +31,16 @@ class LakeDdlSpec extends SparkSuite {
     } finally rm(root)
   }
 
-  test("initHidden on an initialized table is refused before it " +
-      "registers a transform: SQL INSERT still lands") {
+  test("init with a partition expression on an initialized table is " +
+      "refused before it records a layout: SQL INSERT still lands") {
     val root = tmp(); val dir = s"$root/t"
     try {
       Versioned.init(Seq((1L, "a")).toDF("k", "v"), dir)
       intercept[IllegalArgumentException] {
-        Versioned.initHidden(Seq((2L, "b")).toDF("k", "v"), dir, "pmod(k, 4)")
+        Versioned.init(Seq((2L, "b")).toDF("k", "v"), dir,
+          partitionCol = Some("pmod(k, 4)"))
       }
-      assert(Versioned.hiddenTransform(spark, dir).isEmpty)
+      assert(Versioned.partitionLayout(spark, dir).isEmpty)
       spark.sql(s"INSERT INTO lake.`$dir` VALUES (3, 'c')")
       assert(spark.sql(s"SELECT k, v FROM lake.`$dir`").as[(Long, String)]
         .collect().toSet == Set((1L, "a"), (3L, "c")))
@@ -52,7 +53,8 @@ class LakeDdlSpec extends SparkSuite {
     try {
       spark.sql(s"CREATE TABLE lake.`$dir` (k BIGINT, st STRING, p DOUBLE) " +
         "PARTITIONED BY (st)")
-      assert(Versioned.hiddenTransform(spark, dir).contains("st"))
+      assert(Versioned.partitionLayout(spark, dir)
+        .contains(Versioned.Layout("st", None)))
       spark.sql(s"INSERT INTO lake.`$dir` VALUES (1, 'F', 1.0D), " +
         "(2, 'O', 2.0D), (3, 'F', 3.0D)")
       val added = Versioned.files(spark, dir).filterNot(
@@ -72,7 +74,7 @@ class LakeDdlSpec extends SparkSuite {
     try {
       spark.sql(s"CREATE TABLE lake.`$dir` (k BIGINT, v STRING) " +
         "PARTITIONED BY (bucket(4, k))")
-      assert(Versioned.hiddenTransform(spark, dir)
+      assert(Versioned.partitionLayout(spark, dir).flatMap(_.transform)
         .contains("pmod(hash(k), 4)"))
       assert(spark.sql(s"SELECT * FROM lake.`$dir`").columns.toSeq ==
         Seq("k", "v"), "the derived partition column must stay hidden")
@@ -247,14 +249,20 @@ class LakeDdlSpec extends SparkSuite {
       def msgs(t: Throwable): Seq[String] =
         if (t == null) Seq.empty
         else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-      val rn = intercept[Exception] {
-        spark.sql(s"ALTER TABLE lake.`$dir` RENAME COLUMN st TO s2")
+      // an identity layout's column cannot be dropped (renaming it is
+      // fine: the layout is recorded by physical name)
+      val dpi = intercept[Exception] {
+        spark.sql(s"ALTER TABLE lake.`$dir` DROP COLUMN st")
       }
-      assert(msgs(rn).exists(_.contains("transform")), msgs(rn))
-      // bucket transforms guard their source column the same way
+      assert(msgs(dpi).exists(_.contains("partition column")), msgs(dpi))
+      // a bucket transform guards its source column against both
       val dir2 = s"$root/t2"
       spark.sql(s"CREATE TABLE lake.`$dir2` (k BIGINT, v STRING) " +
         "PARTITIONED BY (bucket(4, k))")
+      val rn = intercept[Exception] {
+        spark.sql(s"ALTER TABLE lake.`$dir2` RENAME COLUMN k TO k2")
+      }
+      assert(msgs(rn).exists(_.contains("transform")), msgs(rn))
       val dp = intercept[Exception] {
         spark.sql(s"ALTER TABLE lake.`$dir2` DROP COLUMN k")
       }

@@ -104,14 +104,14 @@ class LakeOccSpec extends SparkSuite {
         Versioned.init(Seq((1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 30.0),
           (4L, "b", 40.0)).toDF("k", "pc", "p"), dir, partitionCol = Some("pc"))
         Versioned.merge(Seq((1L, "a", 11.0)).toDF("k", "pc", "p"), dir,
-          Seq("k"), partitionCol = Some("pc"))
+          Seq("k"))
       }
       val (raced, calm) = (s"$root/raced", s"$root/calm")
       history(raced)
       history(calm)
       def mergeB(dir: String, base: Option[Long]): Long =
         Versioned.merge(Seq((3L, "b", 33.0)).toDF("k", "pc", "p"), dir,
-          Seq("k"), partitionCol = Some("pc"), baseVersion = base)
+          Seq("k"), baseVersion = base)
       val sc = spark.sparkContext
       val (_, Jobs.Counts(calmJobs, _, _)) = Jobs.during(sc)(mergeB(calm, None))
       // computed against v1, lands after v2: loses, then rebases

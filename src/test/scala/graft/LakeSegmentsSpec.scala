@@ -207,8 +207,8 @@ class LakeSegmentsSpec extends SparkSuite {
           .filter(col("k") % 3 === g).withColumn("g", lit(g))
           .repartition(3)
         Versioned.init(part(0), t, Some("g"))
-        Versioned.append(part(1), t, Some("g")) // seals {g=0,g=1}
-        Versioned.append(part(2), t, Some("g")) // seals {g=2}
+        Versioned.append(part(1), t) // seals {g=0,g=1}
+        Versioned.append(part(2), t) // seals {g=2}
         val (_, segs0) = Versioned.manifestShape(spark, t)
         assert(segs0 == 2L)
         val before = Versioned.files(spark, t)
@@ -217,7 +217,7 @@ class LakeSegmentsSpec extends SparkSuite {
         // merge touching ONLY g=2: bump p for half its keys
         val src = part(2).filter(col("k") % 2 === 0)
           .withColumn("p", col("p") + lit(1000.0))
-        Versioned.merge(src, t, keys = Seq("k"), partitionCol = Some("g"))
+        Versioned.merge(src, t, keys = Seq("k"))
         val after = Versioned.files(spark, t)
         // untouched partitions' files carry BY REFERENCE — same paths
         assert(after.filter(f =>
@@ -250,8 +250,8 @@ class LakeSegmentsSpec extends SparkSuite {
           .filter(col("k") % 3 === g).withColumn("g", lit(g))
           .repartition(3)
         Versioned.init(part(0), t, Some("g"))
-        Versioned.append(part(1), t, Some("g"))
-        Versioned.append(part(2), t, Some("g"))
+        Versioned.append(part(1), t)
+        Versioned.append(part(2), t)
         val expect = sumK(slice(0, 1800))
         val filesBefore = Versioned.files(spark, t).toSet
         val v = Versioned.rewriteManifests(spark, t)

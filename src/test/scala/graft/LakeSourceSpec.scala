@@ -21,7 +21,7 @@ class LakeSourceSpec extends SparkSuite {
       .toDF("k", "pc", "p"), dir, partitionCol = Some("pc"))
     Versioned.deleteVectored(spark, dir, col("k") === 2L)
     Versioned.merge(Seq((5L, "b", 50.0, "x")).toDF("k", "pc", "p", "tag"),
-      dir, Seq("k"), partitionCol = Some("pc"), evolveSchema = true)
+      dir, Seq("k"), evolveSchema = true)
     val viaApi = Versioned.read(spark, dir)
       .select("k", "pc", "p", "tag").as[(Long, String, Double, Option[String])]
       .collect().toSet
@@ -99,7 +99,7 @@ class LakeSourceSpec extends SparkSuite {
       .toDF("k", "pc", "p"), dir, partitionCol = Some("pc"))
     // append-only commit: new partition, carried files untouched
     Versioned.merge(Seq((3L, "c", 3.0)).toDF("k", "pc", "p"), dir,
-      Seq("k"), partitionCol = Some("pc"))
+      Seq("k"))
     val out = tmp("graft_ds5out")
     def runOnce(): Unit = {
       val q = spark.readStream.format("graft-lake").option("path", dir)
@@ -114,7 +114,7 @@ class LakeSourceSpec extends SparkSuite {
     // checkpointed version and delivers ONLY the delta — each key
     // lands in the durable sink exactly once
     Versioned.merge(Seq((4L, "d", 4.0)).toDF("k", "pc", "p"), dir,
-      Seq("k"), partitionCol = Some("pc"))
+      Seq("k"))
     runOnce()
     assert(spark.read.parquet(out).select("k").as[Long].collect().sorted
       .toSeq == Seq(1L, 2L, 3L, 4L))
@@ -189,14 +189,14 @@ class LakeSourceSpec extends SparkSuite {
       .toDF("k", "pc", "p"), dir, partitionCol = Some("pc"))
     Versioned.tag(spark, dir, "pin") // protects v1
     Versioned.merge(Seq((1L, "a", 11.0)).toDF("k", "pc", "p"), dir,
-      Seq("k"), partitionCol = Some("pc"))                        // v2
+      Seq("k"))                                                   // v2
     Versioned.merge(Seq((1L, "a", 12.0)).toDF("k", "pc", "p"), dir,
-      Seq("k"), partitionCol = Some("pc"))                        // v3
+      Seq("k"))                                                   // v3
     Versioned.vacuum(spark, dir, keepLast = 1) // drops v2 (+ its lock)
     // stale writer pinned to the tagged v1, disjoint partition b:
     // must NOT win the recreated v2 slot — it rebases onto the tip
     val v = Versioned.merge(Seq((3L, "b", 30.0)).toDF("k", "pc", "p"),
-      dir, Seq("k"), partitionCol = Some("pc"), baseVersion = Some(1L))
+      dir, Seq("k"), baseVersion = Some(1L))
     assert(v == 4L, s"expected the tip, got v$v")
     assert(Versioned.read(spark, dir).select("k", "p")
       .as[(Long, Double)].collect().toSet ==
@@ -210,7 +210,7 @@ class LakeSourceSpec extends SparkSuite {
       .toDF("k", "pc", "p"), dir, partitionCol = Some("pc"))
     // rewriting commit: updates partition a in place
     Versioned.merge(Seq((1L, "a", 11.0)).toDF("k", "pc", "p"), dir,
-      Seq("k"), partitionCol = Some("pc"))
+      Seq("k"))
     val q = spark.readStream.format("graft-lake").option("path", dir)
       .load().writeStream.format("memory").queryName("ds6a")
       .option("checkpointLocation", cp).start()

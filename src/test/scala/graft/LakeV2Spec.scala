@@ -91,7 +91,7 @@ class LakeV2Spec extends SparkSuite {
       // merge touches only partition a → partition a's vector entries
       // materialize in the rewrite; partition b's carry
       Versioned.merge(Seq((5L, "five", "a")).toDF("k", "v", "p"),
-        dir, Seq("k"), partitionCol = Some("p"))
+        dir, Seq("k"))
       assert(rows(Versioned.read(spark, dir)) == Set(
         (2L, "two", "a"), (4L, "four", "b"), (5L, "five", "a")),
         "deleted rows must stay deleted through the merge")
@@ -282,7 +282,7 @@ class LakeV2Spec extends SparkSuite {
       Versioned.init(base, dir, partitionCol = Some("p"))
       // touch only partition a
       Versioned.merge(Seq((2L, "TWO", "a"), (5L, "five", "a"))
-        .toDF("k", "v", "p"), dir, Seq("k"), partitionCol = Some("p"))
+        .toDF("k", "v", "p"), dir, Seq("k"))
       val cf = Versioned.changes(spark, dir, 1L, 2L)
       val got = cf.df.select("op", "k", "v").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
@@ -473,14 +473,15 @@ class LakeV2Spec extends SparkSuite {
     try {
       val base = (1L to 400L).map(i => (i, i % 40, s"v$i"))
         .toDF("k", "c", "v")
-      Versioned.initHidden(base, dir, "c div 10")
-      assert(Versioned.hiddenTransform(spark, dir).contains("c div 10"))
+      Versioned.init(base, dir, partitionCol = Some("c div 10"))
+      assert(Versioned.partitionLayout(spark, dir).contains(
+        Versioned.Layout("__gpart", Some("c div 10"))))
       assert(Versioned.readHidden(spark, dir).columns.toSeq ==
         Seq("k", "c", "v"), "the derived column must stay hidden")
       val v1Files = Versioned.files(spark, dir, Some(1L))
       // the batch touches only bucket 2 (c in 20..29) — the caller
       // never states that; the transform derives it
-      Versioned.mergeHidden(Seq((21L, 21L, "NEW")).toDF("k", "c", "v"),
+      Versioned.merge(Seq((21L, 21L, "NEW")).toDF("k", "c", "v"),
         dir, Seq("k"))
       val v2Files = Versioned.files(spark, dir, Some(2L)).toSet
       val untouched = v1Files.filterNot(_.contains("/__gpart=2/"))
@@ -515,7 +516,7 @@ class LakeV2Spec extends SparkSuite {
         s"$dir/_versions/v1.manifest")).isDirectory,
         "the manifest must be a parquet directory, not a text file")
       Versioned.merge(Seq((7L, "SEVEN", "7")).toDF("k", "v", "p"),
-        dir, Seq("k"), partitionCol = Some("p"))
+        dir, Seq("k"))
       val v2Files = Versioned.files(spark, dir, Some(2L)).toSet
       val untouched = v1Files.filterNot(_.contains("/p=7/"))
       assert(untouched.nonEmpty && untouched.forall(v2Files.contains),

@@ -12,7 +12,8 @@ import scala.jdk.CollectionConverters._
   * only `VersionedLog` knows the lake's on-disk log and only
   * `FileStats` its per-file stats document, the lake reads
   * data files only through the connector's scan,
-  * lake commits retry only through one optimistic-commit loop, the
+  * lake commits retry only through one optimistic-commit loop, only
+  * the layout-setting operations take a partition column, the
   * report path (returns, pipeline, jobs) caches no frame, only six
   * objects are mains, and one helper listens to Spark's jobs. */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
@@ -154,5 +155,28 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
     // rather than retry
     assert(callers == Set("occ", "rebase", "init", "clone", "publish"),
       s"commit( called from: $callers")
+  }
+
+  test("one partition layout: in ops/, partitionCol appears only on the " +
+      "layout-setting operations and the partition-naming ones") {
+    // the member each code line belongs to; scaladoc and comment lines
+    // are skipped
+    val member = """^  (?:(?:private|protected)(?:\[\w+\])? )?def (\w+)""".r
+    val comment = """^\s*(\*|/\*|//)""".r
+    val files = Files.list(ops)
+    val takers = try files.iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>
+        var enclosing = ""
+        Files.readAllLines(f).asScala.flatMap { l =>
+          member.findFirstMatchIn(l).foreach(m => enclosing = m.group(1))
+          if (comment.findFirstIn(l).isEmpty && l.contains("partitionCol"))
+            Some(enclosing) else None
+        }
+      }.toSet
+    finally files.close()
+    assert(takers.contains("init") && takers.contains("compact"))
+    assert(takers.subsetOf(Set("init", "create", "compact",
+        "compactPartitions", "dropPartitions")),
+      s"partitionCol taken or used by: ${takers.toSeq.sorted}")
   }
 }

@@ -52,7 +52,7 @@ class VersionedSpec extends SparkSuite {
     val v1Files = Versioned.files(spark, dir, Some(1L)).toSet
     // source touches only partition a
     Versioned.merge(Seq((2L, "TWO", "a")).toDF("k", "v", "p"),
-      dir, Seq("k"), partitionCol = Some("p"))
+      dir, Seq("k"))
     val v2Files = Versioned.files(spark, dir, Some(2L)).toSet
     val v1b = v1Files.filter(_.contains("/p=b/"))
     assert(v1b.nonEmpty && v1b.subsetOf(v2Files),
@@ -107,7 +107,7 @@ class VersionedSpec extends SparkSuite {
     // touch ONLY the escaped partition: its old row must be replaced,
     // not carried alongside the new one
     Versioned.merge(Seq((1L, "ONE", "x:y")).toDF("k", "v", "p"),
-      dir, Seq("k"), partitionCol = Some("p"))
+      dir, Seq("k"))
     val got = Versioned.read(spark, dir).select("k", "v").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(got == Set((1L, "ONE"), (2L, "two"), (3L, "three")),
@@ -115,7 +115,7 @@ class VersionedSpec extends SparkSuite {
     // and a null-partition touch rewrites the hive-default directory
     Versioned.merge(Seq((3L, "THREE")).toDF("k", "v")
         .withColumn("p", lit(null).cast("string")),
-      dir, Seq("k"), partitionCol = Some("p"))
+      dir, Seq("k"))
     val got2 = Versioned.read(spark, dir).select("k", "v").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(got2 == Set((1L, "ONE"), (2L, "two"), (3L, "THREE")),
@@ -143,14 +143,14 @@ class VersionedSpec extends SparkSuite {
     val dir = tmp()
     Versioned.init(base.toDF("k", "v", "p"), dir, partitionCol = Some("p"))
     Versioned.merge(Seq((5L, "five", "b")).toDF("k", "v", "p"),
-      dir, Seq("k"), partitionCol = Some("p"))
+      dir, Seq("k"))
     val v3 = Versioned.compact(spark, dir, targetFiles = 2,
       partitionCol = Some("p"))
     assert(v3 == 3L)
     // a post-compaction partition-scoped merge must still match the
     // compacted layout's directory names: touch only partition a
     Versioned.merge(Seq((2L, "TWO", "a")).toDF("k", "v", "p"),
-      dir, Seq("k"), partitionCol = Some("p"))
+      dir, Seq("k"))
     assert(rows(Versioned.read(spark, dir)) == Set(
       (1L, "one", "a"), (2L, "TWO", "a"), (3L, "three", "b"),
       (4L, "four", "b"), (5L, "five", "b")),

@@ -94,8 +94,7 @@ class Wave38Spec extends SparkSuite {
     try {
       val base = Seq((1L, "one", "a"), (2L, "two", "b")).toDF("k", "v", "p")
       Versioned.init(base, dir, partitionCol = Some("p"))
-      val e = Versioned.delete(spark, dir, lit(true),
-        partitionCol = Some("p"))
+      val e = Versioned.delete(spark, dir, lit(true))
       assert(e.deletedRows == 2L && e.carried == 0)
       val empty = Versioned.read(spark, dir)
       assert(empty.count() == 0L, "delete-everything must leave zero rows")
@@ -104,7 +103,7 @@ class Wave38Spec extends SparkSuite {
       // the schema-only file must be rewritten (not carried beside
       // partitioned files) when data comes back
       Versioned.merge(Seq((3L, "three", "a")).toDF("k", "v", "p"),
-        dir, Seq("k"), partitionCol = Some("p"))
+        dir, Seq("k"))
       val back = Versioned.read(spark, dir)
       assert(back.select("k").as[Long].collect().toSeq == Seq(3L))
       assert(Versioned.files(spark, dir).forall(_.contains("/p=")),

@@ -17,7 +17,7 @@ class Wave50Spec extends SparkSuite {
     val v1 = Versioned.files(spark, dir, Some(1L))
     // batch omits b; touches only c=110 -> bucket 1
     Versioned.merge(Seq((2L, 110L, 9.0)).toDF("k", "c", "p"),
-      dir, Seq("k"), partitionCol = Some("b"))
+      dir, Seq("k"))
     val v2 = Versioned.files(spark, dir, Some(2L)).toSet
     assert(v1.filterNot(_.contains("/b=1/")).forall(v2.contains),
       "untouched buckets must carry by reference")

@@ -58,7 +58,7 @@ class Wave52Spec extends SparkSuite {
     Versioned.renameColumn(spark, dir, "pc", "bucket")
     val v2Files = Versioned.files(spark, dir, Some(2L))
     Versioned.merge(Seq((3L, "a", 9.0)).toDF("k", "bucket", "p"),
-      dir, Seq("k"), partitionCol = Some("bucket"))
+      dir, Seq("k"))
     val v3Files = Versioned.files(spark, dir, Some(3L)).toSet
     // the untouched physical pc=b directory carried by reference
     val untouched = v2Files.filter(_.contains("/pc=b/"))

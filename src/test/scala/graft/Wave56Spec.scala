@@ -21,10 +21,10 @@ class Wave56Spec extends SparkSuite {
     val dir = tmp("graft_occ1")
     base(dir)
     Versioned.merge(Seq((1L, "a", 11.0)).toDF("k", "pc", "p"), dir,
-      Seq("k"), partitionCol = Some("pc"))                       // v2
+      Seq("k"))                                                  // v2
     // computed against v1, lands after v2, touches only pc=b
     val v = Versioned.merge(Seq((3L, "b", 33.0)).toDF("k", "pc", "p"),
-      dir, Seq("k"), partitionCol = Some("pc"), baseVersion = Some(1L))
+      dir, Seq("k"), baseVersion = Some(1L))
     assert(v == 3L)
     assert(ops(dir) == Seq("INIT", "MERGE", "MERGE+REBASE"))
     // the staged batch kept its lost-version prefix: nothing restaged
@@ -40,9 +40,9 @@ class Wave56Spec extends SparkSuite {
     val dir = tmp("graft_occ2")
     base(dir)
     Versioned.merge(Seq((1L, "a", 11.0)).toDF("k", "pc", "p"), dir,
-      Seq("k"), partitionCol = Some("pc"))                       // v2
+      Seq("k"))                                                  // v2
     val v = Versioned.merge(Seq((2L, "a", 22.0)).toDF("k", "pc", "p"),
-      dir, Seq("k"), partitionCol = Some("pc"), baseVersion = Some(1L))
+      dir, Seq("k"), baseVersion = Some(1L))
     assert(v == 3L)
     assert(ops(dir) == Seq("INIT", "MERGE", "MERGE"))
     assert(Versioned.read(spark, dir).select("k", "p").as[(Long, Double)]
@@ -56,7 +56,7 @@ class Wave56Spec extends SparkSuite {
     base(dir)
     Versioned.deleteVectored(spark, dir, col("k") === 1L)        // v2, pc=a
     val v = Versioned.merge(Seq((2L, "a", 22.0)).toDF("k", "pc", "p"),
-      dir, Seq("k"), partitionCol = Some("pc"), baseVersion = Some(1L))
+      dir, Seq("k"), baseVersion = Some(1L))
     assert(v == 3L)
     assert(!ops(dir).exists(_.endsWith("+REBASE")))
     // the concurrent delete survives the stale writer's re-merge
@@ -70,7 +70,7 @@ class Wave56Spec extends SparkSuite {
     base(dir)
     Versioned.deleteVectored(spark, dir, col("k") === 1L)        // v2, pc=a
     val v = Versioned.merge(Seq((3L, "b", 33.0)).toDF("k", "pc", "p"),
-      dir, Seq("k"), partitionCol = Some("pc"), baseVersion = Some(1L))
+      dir, Seq("k"), baseVersion = Some(1L))
     assert(v == 3L)
     assert(ops(dir).last == "MERGE+REBASE")
     assert(Versioned.read(spark, dir).select("k", "p").as[(Long, Double)]
@@ -82,9 +82,9 @@ class Wave56Spec extends SparkSuite {
     val dir = tmp("graft_occ5")
     base(dir)
     Versioned.merge(Seq((1L, "a", 11.0, "x")).toDF("k", "pc", "p", "tag"),
-      dir, Seq("k"), partitionCol = Some("pc"), evolveSchema = true) // v2
+      dir, Seq("k"), evolveSchema = true) // v2
     val v = Versioned.merge(Seq((3L, "b", 33.0)).toDF("k", "pc", "p"),
-      dir, Seq("k"), partitionCol = Some("pc"), baseVersion = Some(1L),
+      dir, Seq("k"), baseVersion = Some(1L),
       evolveSchema = true)
     assert(v == 3L)
     assert(!ops(dir).exists(_.endsWith("+REBASE")))
@@ -107,10 +107,10 @@ class Wave56Spec extends SparkSuite {
     import scala.concurrent.duration._
     val fa = Future(Versioned.merge(
       Seq((1L, "a", 11.0)).toDF("k", "pc", "p"), dir, Seq("k"),
-      partitionCol = Some("pc"), baseVersion = Some(1L)))
+      baseVersion = Some(1L)))
     val fb = Future(Versioned.merge(
       Seq((3L, "b", 33.0)).toDF("k", "pc", "p"), dir, Seq("k"),
-      partitionCol = Some("pc"), baseVersion = Some(1L)))
+      baseVersion = Some(1L)))
     val vs = Set(Await.result(fa, 120.seconds),
       Await.result(fb, 120.seconds))
     pool.shutdown()

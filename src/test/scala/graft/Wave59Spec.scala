@@ -73,11 +73,10 @@ class Wave59Spec extends SparkSuite {
     Versioned.init(Seq((1L, 1L, "a"), (2L, 2L, "b"))
       .toDF("id", "k", "pc"), dir, partitionCol = Some("pc"))
     Versioned.addIdentityColumn(spark, dir, "id")
-    Versioned.merge(Seq((3L, "a")).toDF("k", "pc"), dir, Seq("k"),
-      partitionCol = Some("pc"))                                  // v2
+    Versioned.merge(Seq((3L, "a")).toDF("k", "pc"), dir, Seq("k")) // v2
     // stale disjoint writer WOULD rebase, but identity forbids it
     Versioned.merge(Seq((4L, "b")).toDF("k", "pc"), dir, Seq("k"),
-      partitionCol = Some("pc"), baseVersion = Some(1L))          // v3
+      baseVersion = Some(1L))                                     // v3
     assert(!Versioned.history(spark, dir).map(_.operation)
       .exists(_.endsWith("+REBASE")))
     // and the retried allocation continued from the WINNER's mark
