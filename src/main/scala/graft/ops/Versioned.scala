@@ -60,9 +60,11 @@ object Versioned extends VersionedLog with VersionedReads
     * to gain, nothing committed. */
   final case class Compaction(version: Long, coalesced: Int, carried: Int)
 
-  /** Receipt of [[dropPartitions]]. */
+  /** Receipt of [[dropPartitions]]: the committed version, the files
+    * dropped and kept, and the dropped values' rows of flat files
+    * deleted through the deletion vector. */
   final case class Dropped(version: Long, droppedFiles: Long,
-    keptFiles: Long)
+    keptFiles: Long, vectoredRows: Long)
 
   /** Receipt of [[changes]]: the row-level diff plus the file-pruning
     * arithmetic — how many files the diff OPENED vs the union of both

@@ -24,11 +24,16 @@ trait VersionedRewrites extends VersionedLog { self: Versioned.type =>
     * rewrite for a scan-optimal layout; readers of older versions are
     * untouched (their files stay until vacuum).
     *
-    * `partitionCol` RE-LAYS the table: the column becomes its
-    * recorded identity layout ([[partitionLayout]]) from this commit
-    * on; without it the recorded layout, if any, is kept. The file
-    * layouts (by partition, `clusterBy`, `zOrderBy`, round-robin) and
-    * the concurrency story are [[rewrite]]'s. */
+    * `partitionCol` RE-LAYS the table: the compaction stages by the
+    * column, and once it commits the column is the recorded identity
+    * layout ([[partitionLayout]]); without it the recorded layout, if
+    * any, is kept. The layout property belongs to the table, not to a
+    * version: time travel and RESTORE to a version before a re-lay
+    * resolve the new layout (their rows read the same — the files
+    * carry their own partition directories — and a later
+    * partition-scoped write rewrites the files laid out otherwise).
+    * The file layouts (by partition, `clusterBy`, `zOrderBy`,
+    * round-robin) and the concurrency story are [[rewrite]]'s. */
   def compact(spark: SparkSession, path: String, targetFiles: Int,
       partitionCol: Option[String] = None,
       clusterBy: Seq[String] = Seq.empty,
@@ -37,15 +42,16 @@ trait VersionedRewrites extends VersionedLog { self: Versioned.type =>
         zOrderBy.nonEmpty).count(identity) <= 1,
       "partitionCol, clusterBy and zOrderBy are alternative layouts — " +
         "pick one")
-    partitionCol.foreach { c =>
-      val f = schemaOf(spark, path, resolve(spark, path, None)).fields
+    // the layout records the PHYSICAL name, as directories do
+    val relay = partitionCol.map { c =>
+      physicalOf(schemaOf(spark, path, resolve(spark, path, None)).fields
         .find(_.name == c)
-        .getOrElse(sys.error(s"no such column on $path: '$c'"))
-      // the layout records the PHYSICAL name, as directories do
-      recordLayout(spark, path, Some(physicalOf(f)))
+        .getOrElse(sys.error(s"no such column on $path: '$c'")))
     }
-    rewrite(spark, path, "COMPACT", targetFiles, clusterBy, zOrderBy)(
-      _ => Right(Pick(None, Seq.empty, identity)))
+    val v = rewrite(spark, path, "COMPACT", targetFiles, clusterBy, zOrderBy,
+      relay)(_ => Right(Pick(None, Seq.empty, identity)))
+    relay.foreach(l => recordLayout(spark, path, Some(l)))
+    v
   }
 
   /** What a compaction rewrites at the version it reads: `files` (None
@@ -83,11 +89,13 @@ trait VersionedRewrites extends VersionedLog { self: Versioned.type =>
     * materialized them), the rest carry with the carried rows, and a
     * clustered layout records its [[clusterMark]] — what
     * [[compactIncremental]] reads to find the files already laid out on
-    * those columns. A lost race re-picks against the winner, so a
-    * compaction never undoes a concurrent writer's committed rows. */
+    * those columns. `relay` stages by that layout property instead of
+    * the recorded one ([[compact]]'s re-lay). A lost race re-picks
+    * against the winner, so a compaction never undoes a concurrent
+    * writer's committed rows. */
   private def rewrite[R](spark: SparkSession, path: String, op: String,
       targetFiles: Int, clusterBy: Seq[String] = Seq.empty,
-      zOrderBy: Seq[String] = Seq.empty)(
+      zOrderBy: Seq[String] = Seq.empty, relay: Option[String] = None)(
       pick: Long => Either[R, Pick[R]]): R = {
     require(targetFiles >= 1, "targetFiles must be >= 1")
     val mark = clusterMark(clusterBy, zOrderBy).map(m => "cluster" -> s"$m\n")
@@ -96,7 +104,8 @@ trait VersionedRewrites extends VersionedLog { self: Versioned.type =>
       pick(cur).map { p =>
         val schema = schemaOf(spark, path, cur)
         val (rows, layoutCol) = withLayout(
-          readLive(spark, path, cur, p.files, keepMeta = false), path, schema)
+          readLive(spark, path, cur, p.files, keepMeta = false), path, schema,
+          relay)
         val laidOut = (clusterBy, zOrderBy, layoutCol) match {
           case (cs, _, _) if cs.nonEmpty =>
             rows.repartitionByRange(targetFiles, cs.map(col): _*)
@@ -173,9 +182,14 @@ trait VersionedRewrites extends VersionedLog { self: Versioned.type =>
 
   /** Version `cur`'s physical name of partition column `pc` (partition
     * directories carry it), and the Hive-escaped directory names of
-    * `values`. */
+    * `values`. `pc` must be the column of the table's layout: any
+    * other column names no partition. */
   private def partitionDirs(spark: SparkSession, path: String, cur: Long,
       pc: String, values: Seq[String]): (String, Seq[String]) = {
+    val layout = partitionLayout(spark, path, Some(cur))
+    require(layout.exists(_.column == pc),
+      s"'$pc' is not the partition column of $path (layout: " +
+        s"${layout.fold("unpartitioned")(_.column)})")
     val pcPhys = tableSchema(spark, path, Some(cur))
       .flatMap(_.fields.find(_.name == pc)).map(physicalOf).getOrElse(pc)
     (pcPhys, values.map(v => org.apache.spark.sql.catalyst.catalog
@@ -317,7 +331,9 @@ trait VersionedRewrites extends VersionedLog { self: Versioned.type =>
     * MERGE images are staged flat by the executor writer. Those flat
     * files' rows whose `partitionCol` value is dropped join the
     * deletion vector in the same commit — one scan of the flat files
-    * alone, none when there are none. */
+    * alone, none when there are none — and the receipt counts them as
+    * `vectoredRows`. `partitionCol` must be the table's layout
+    * column. */
   def dropPartitions(spark: SparkSession, path: String,
       partitionCol: String, values: Seq[String]): Dropped = {
     require(values.nonEmpty, "dropPartitions needs at least one value")
@@ -342,8 +358,9 @@ trait VersionedRewrites extends VersionedLog { self: Versioned.type =>
       val total = carriedCount(spark, path, cur, keepTop, hit)(identity)
       val schema = tableSchema(spark, path, Some(cur))
       val op = s"DROP_PARTITION($partitionCol)"
-      def receipt(v: Long) = Dropped(v, hit, total - hit)
-      if (hit == 0L && flatDv.isEmpty) Left(Dropped(-1L, 0L, total))
+      def receipt(v: Long) = Dropped(v, hit, total - hit,
+        flatDv.valuesIterator.map(_.length.toLong).sum)
+      if (hit == 0L && flatDv.isEmpty) Left(Dropped(-1L, 0L, total, 0L))
       else if (hit == total) {
         // dropping every partition: keep a schema-only file so the
         // empty table stays readable (same contract as a

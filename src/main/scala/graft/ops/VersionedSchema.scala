@@ -540,10 +540,14 @@ trait VersionedSchema extends VersionedLog { self: Versioned.type =>
     * read against `schema` (the version the write commits on top of),
     * and the column to stage it by. A hidden layout re-derives its
     * column in-plan for every row — an UPDATE image whose source
-    * columns changed routes to its new partition. */
+    * columns changed routes to its new partition. `relay` stands in
+    * for the recorded property (a re-lay stages by the layout it
+    * records once it commits). */
   private[ops] def withLayout(df: DataFrame, path: String,
-      schema: StructType): (DataFrame, Option[String]) =
-    layoutProperty(df.sparkSession, path).map(layoutIn(_, schema)) match {
+      schema: StructType,
+      relay: Option[String] = None): (DataFrame, Option[String]) =
+    relay.orElse(layoutProperty(df.sparkSession, path))
+      .map(layoutIn(_, schema)) match {
       case None => (df, None)
       case Some(Layout(c, None)) => (df, Some(c))
       case Some(Layout(c, Some(t))) => (df.withColumn(c, expr(t)), Some(c))

@@ -18,12 +18,16 @@ import Versioned.{Erasure, ExpectStats, MergeStats, Updated}
   * inserted).
   *
   *  - '''Partition-scoped rewrite.''' MERGE into a partitioned
-  *    table rewrites only the partitions present in the source batch:
+  *    table rewrites only the partitions present in the source batch
+  *    and those where a source key lives now (a row may move):
   *    untouched partitions' files carry over into the new manifest BY
   *    REFERENCE (never copied — at 100 TB the daily delta touches
-  *    days, not the table). Within touched partitions the surviving
-  *    target rows and the source rows are one anti-join + union,
-  *    shuffling only those partitions' data. The layout is the
+  *    days, not the table). Finding the keys' partitions is one
+  *    key-column scan of the other partitions, skipped when the keys
+  *    fix the partition (the layout column is a key, or a hidden
+  *    transform reads key columns alone). Within touched partitions
+  *    the surviving target rows and the source rows are one anti-join
+  *    + union, shuffling only those partitions' data. The layout is the
   *    table's own ([[partitionLayout]], recorded by [[init]] or
   *    [[create]]): every writer here resolves it through
   *    [[withLayout]], so no caller restates it.
@@ -421,7 +425,7 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
           // '…00:00:00.0'), so derive it with the same Cast in-plan
           // rather than Row.get(0).toString on the driver.
           import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          val touched = sourceL
+          def dirsOf(df: DataFrame): Seq[String] = df
             .select(col(pc).cast("string").as("p")).distinct()
             .collect().map { r =>
               ExternalCatalogUtils.getPartitionPathString(physOf(pc),
@@ -436,8 +440,27 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
           // untouched partition, and carrying them next to partitioned
           // files would present an inconsistent directory structure to
           // partition discovery.
-          val (keepTop, hitE) = splitTopByPartitions(spark, path, cur,
-            physOf(pc), touched.toSet)
+          def split(ps: Seq[String]) =
+            splitTopByPartitions(spark, path, cur, physOf(pc), ps.toSet)
+          val batchDirs = dirsOf(sourceL)
+          val (keep0, hit0) = split(batchDirs)
+          // a source key may live OUTSIDE the batch's partitions (an
+          // image that moves its row, a delete image without the
+          // partition value); unless the keys fix the partition, the
+          // partitions holding a source key join the touched set, so
+          // the anti-join below replaces the old row
+          val others = readManifest(spark, path, cur)
+            .filterNot(hit0.map(_._1).toSet)
+          val homes =
+            if (others.isEmpty || keysFixPartition(spark, path, keys, pc))
+              Seq.empty
+            else dirsOf(readLive(spark, path, cur, Some(others),
+              keepMeta = false).join(source.select(keys.map(col): _*)
+              .distinct(), keys, "left_semi"))
+          val touched = (batchDirs ++ homes).distinct
+          val (keepTop, hitE) =
+            if (homes.forall(batchDirs.contains)) (keep0, hit0)
+            else split(touched)
           val hit = hitE.map(_._1)
           (Some(keepTop), hit,
             readLive(spark, path, cur, Some(hit), keepMeta = false), touched)
@@ -449,10 +472,10 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
 
       // identity columns: allocate past the high-water for inserted
       // keys, PRESERVE the existing value for updated keys (looked up
-      // in the already-read rewrite side — partition-scoped keys live
-      // in their partition). Allocation ranks the batch by the merge
-      // keys, so the assigned values are deterministic and
-      // SQL-replayable.
+      // in the already-read rewrite side — the touched partitions
+      // hold every source key's old row). Allocation ranks the batch
+      // by the merge keys, so the assigned values are deterministic
+      // and SQL-replayable.
       val (sourceI, idExtras) = assignIdentities(spark, path, cur, sourceL) {
         (batch, c, hw, step) =>
           val prevId = "__graft_prev_id"
@@ -532,7 +555,11 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
     * cached driver metadata — no Spark job. When disjoint, the new top
     * level is `newest`'s minus the hit files plus the staged ones, and
     * the vector is `newest`'s minus entries on hit files (the rewrite
-    * materialized those rows). None on any overlap. */
+    * materialized those rows). None on any overlap. A winner that put
+    * one of the merge's keys in a partition outside `touched` is not
+    * seen (that would scan the winners' files): concurrent writers of
+    * one key break the single-writer-per-key contract, as in
+    * [[mergeInto]]. */
   private def partitionRebase(spark: SparkSession, path: String,
       base: Long, newest: Long, pcPhys: String, touched: Set[String],
       hitList: Seq[String], stagedE: Seq[(String, Option[String])])
@@ -558,6 +585,22 @@ trait VersionedWrites extends VersionedLog { self: Versioned.type =>
         dvWithout(dvN)(hitList.map(fileKey).toSet)))
     }
   }
+
+  /** Whether a row's merge `keys` fix its partition under layout
+    * column `pc`: an identity layout on a key column, or a hidden
+    * transform over key columns alone. Then a source key can only
+    * live in the partition its row routes to. */
+  private def keysFixPartition(spark: SparkSession, path: String,
+      keys: Seq[String], pc: String): Boolean =
+    keys.contains(pc) || layoutProperty(spark, path)
+      .filter(_ => pc == hiddenPartColName).exists { t =>
+        val refs = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+          .parseExpression(t).collect {
+          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+            a.nameParts.last
+        }
+        refs.nonEmpty && refs.forall(keys.contains)
+      }
 
   /** INSERT-ONLY commit: stage the batch, commit `manifest(cur) ∪
     * staged` — NO existing file is read or rewritten, the prior

@@ -59,6 +59,26 @@ class LakeLayoutSpec extends SparkSuite {
     }
   }
 
+  test("merge replaces a key that lives in another partition: the " +
+      "moved row is read back once") {
+    keepsLayout { dir =>
+      Versioned.merge(Seq((1L, "O", 9.0)).toDF("k", "st", "p"), dir, Seq("k"))
+      assert(Versioned.read(spark, dir).filter(col("k") === 1L)
+        .select("st", "p").as[(String, Double)].collect().toSeq ==
+        Seq(("O", 9.0)))
+    }
+  }
+
+  test("mergeInto UPDATE images that change the partition column move " +
+      "the row, no duplicate left") {
+    keepsLayout { dir =>
+      Versioned.mergeInto(Seq((2L, "O")).toDF("k", "to"), dir, Seq("k"),
+        updateSet = Map("st" -> col("s.to")), insertCond = Some(lit(false)))
+      assert(Versioned.read(spark, dir).filter(col("k") === 2L)
+        .select("st").as[String].collect().toSeq == Seq("O"))
+    }
+  }
+
   test("delete rewrites its hit files under the recorded layout") {
     keepsLayout(dir => Versioned.delete(spark, dir, col("k") === 3L))
   }
@@ -104,9 +124,24 @@ class LakeLayoutSpec extends SparkSuite {
       "in flat files (SQL UPDATE images)") {
     val dir = table()
     spark.sql(s"UPDATE lake.`$dir` SET p = 9.0 WHERE k = 1")
-    Versioned.dropPartitions(spark, dir, "st", Seq("F"))
+    val r = Versioned.dropPartitions(spark, dir, "st", Seq("F"))
     assert(Versioned.read(spark, dir).select("k").as[Long].collect().toSet ==
       Set(3L, 4L))
+    assert(r.vectoredRows == 1L)
+  }
+
+  test("dropPartitions and compactPartitions refuse a column that is " +
+      "not the table's layout") {
+    val dir = table()
+    intercept[IllegalArgumentException](
+      Versioned.dropPartitions(spark, dir, "k", Seq("1")))
+    intercept[IllegalArgumentException](
+      Versioned.compactPartitions(spark, dir, "p", Seq("1.0"), 1))
+    val flatDir = tmp("graft_lay_flat")
+    Versioned.init(Seq((1L, "F")).toDF("k", "st"), flatDir)
+    intercept[IllegalArgumentException](
+      Versioned.dropPartitions(spark, flatDir, "st", Seq("F")))
+    assert(Versioned.read(spark, flatDir).count() == 1L)
   }
 
   test("an identity layout survives renaming its column: writes still " +

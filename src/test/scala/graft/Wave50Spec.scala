@@ -39,7 +39,8 @@ class Wave50Spec extends SparkSuite {
     Versioned.merge(Seq((2L, 250L, 2.0, 2L)).toDF("k", "c", "p", "b"),
       dir, Seq("k"))
     assert(Versioned.read(spark, dir).count() == 2L)
-    // mergeInto delete images carry NULL non-keys — must not trip
+    // mergeInto delete images are exempt from the generated-column
+    // check (they carry the matched target row and are never inserted)
     val stats = Versioned.mergeInto(
       Seq((2L, "D")).toDF("k", "flag"), dir, Seq("k"),
       updateSet = Map.empty, updateCond = Some(lit(false)),
