@@ -19,7 +19,9 @@ import org.apache.spark.sql.SparkSession
   *  - no UI.
   *
   * Callers add only deployment settings: master URL, app name and
-  * warehouse dir. */
+  * warehouse dir. A block that needs other confs for a while sets them
+  * through [[withConf]], the one place session confs are set and put
+  * back. */
 object Session {
 
   /** `SPARK_GRAFT_CPUS`, else `default` — the core count mains run on. */
@@ -37,4 +39,20 @@ object Session {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.catalog.lake", "graft.sources.LakeCatalog")
       .config("spark.ui.enabled", "false")
+
+  /** Run `body` with the session confs `confs` set, then put each key
+    * back as it was — its previous value, or unset when it had none —
+    * even when `body` throws. Nested calls restore innermost first. */
+  def withConf[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    // the explicitly set confs: a key at its default restores to unset
+    val set = spark.conf.getAll
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.reverse.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -1,32 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Scale infrastructure: the techniques that keep plans healthy at
-  * 100 TB — partitioned layout (partition pruning), bucketed layout
-  * (shuffle-free joins), and key salting (skew mitigation). Exercised by
-  * `LayoutSpec`; the query registry runs on the driver's flat parquet, so
-  * these are library operators + tests rather than registry entries.
+/** Key salting, the skew mitigation that keeps a hot key from pinning
+  * one reducer at 100 TB. Exercised by `LayoutSpec` and the
+  * `q_salted_agg` registry row; the layout techniques live with the
+  * lake (partitioned and Z-ordered writes, [[ZOrder]]) and in the
+  * registry (`q_bucketed_join`).
   */
 object Scale {
-
-  /** Write a frame Hive-partitioned by the given columns — scans with
-    * predicates on those columns prune at file-listing time (plan shows
-    * PartitionFilters, not data filters). */
-  def writePartitioned(df: DataFrame, path: String, cols: String*): Unit =
-    df.write.mode("overwrite").partitionBy(cols: _*).parquet(path)
-
-  /** Write a bucketed + sorted table into the session catalog. Two tables
-    * bucketed identically on the join key join WITHOUT a shuffle
-    * (SortMergeJoin with no Exchange). */
-  def writeBucketed(df: DataFrame, table: String, buckets: Int,
-                    bucketCol: String): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
 
   /** Salted high-cardinality aggregation: pre-aggregate on (key, salt),
     * then combine per key. Two shuffles, but the first spreads a hot key
@@ -45,53 +28,4 @@ object Scale {
              .cast("double").as("total"),
            sum(col("_n")).as("n"))
   }
-
-  /** Broadcast-join a skewed fact to a dimension after salting the
-    * replicated dim — included for API completeness; with AQE's skew-join
-    * handling (`spark.sql.adaptive.skewJoin.enabled`, on by default) this
-    * manual path is only needed for extreme single-key skew. */
-  def aqeSkewHints(spark: SparkSession): Map[String, String] = Map(
-    "spark.sql.adaptive.enabled" -> spark.conf.get("spark.sql.adaptive.enabled"),
-    "spark.sql.adaptive.skewJoin.enabled" ->
-      spark.conf.get("spark.sql.adaptive.skewJoin.enabled"))
-
-  /** Two-dimensional Z-order (Morton) value: interleave the low `bits`
-    * bits of `x` (even positions) and `y` (odd positions). Sorting a
-    * table by z clusters BOTH dimensions at once, so a box predicate
-    * (x-range AND y-range) touches O(perimeter) files instead of all
-    * of them — the layout technique for multi-column pruning when
-    * partitioning can spend only one column. Pure shift/and/or
-    * built-ins — codegen'd, row-local, no UDF; inputs must already be
-    * quantized to [0, 2^bits) (callers bucket or rank first).
-    * `Z_VALUE2` is the DuckDB twin generated from the same loop. */
-  def zValue2(x: Column, y: Column, bits: Int): Column = {
-    require(bits >= 1 && bits <= 31, s"bits out of range: $bits")
-    val xl = x.cast("long"); val yl = y.cast("long")
-    (0 until bits).map { i =>
-      shiftleft(shiftrightunsigned(xl, i).bitwiseAND(lit(1L)), 2 * i)
-        .bitwiseOR(shiftleft(
-          shiftrightunsigned(yl, i).bitwiseAND(lit(1L)), 2 * i + 1))
-    }.reduce(_ bitwiseOR _)
-  }
-
-  /** DuckDB twin of [[zValue2]]. */
-  def Z_VALUE2(x: String, y: String, bits: Int): String =
-    (0 until bits).map { i =>
-      s"((((($x) >> $i) & 1) << ${2 * i}) | " +
-        s"(((($y) >> $i) & 1) << ${2 * i + 1}))"
-    }.mkString("(", " | ", ")")
-
-  /** Write `df` clustered by the z-value of two quantized dimensions:
-    * range-partition on z (each output file owns one contiguous
-    * z-range), sort within files so row-group min/max stats stay
-    * tight. `LayoutSpec` measures the effect directly: a box filter
-    * touches a fraction of the z-clustered files but nearly all of a
-    * single-column-sorted layout's files. */
-  def writeZOrdered(df: DataFrame, path: String, x: Column, y: Column,
-      bits: Int, files: Int): Unit =
-    df.withColumn("_z", zValue2(x, y, bits))
-      .repartitionByRange(files, col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z")
-      .write.mode("overwrite").parquet(path)
 }

@@ -268,7 +268,12 @@ trait VersionedReads extends VersionedLog { self: Versioned.type =>
     * the cached manifest entries the receipt's `filesTotal` already
     * loads, so deciding starts no Spark job. When the table was
     * clustered on `column` (`compact` or a range-layout `init`), the
-    * files read shrink to the predicate's true footprint. */
+    * files read shrink to the predicate's true footprint.
+    *
+    * `lo` and `hi` are inclusive and in the column's stats units
+    * ([[FileStats.units]]): epoch days for a date, epoch microseconds
+    * for a timestamp, and the value at its declared scale for a
+    * decimal. */
   def readRange(spark: SparkSession, path: String, column: String,
       lo: Double, hi: Double, version: Option[Long] = None): Pruned = {
     val v = resolve(spark, path, version)

@@ -3,20 +3,21 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Z-order (Morton) LAYOUT for the versioned lake's compaction.
+/** Z-order (Morton) curve: the interleave and the versioned lake's
+  * Z-ordered compaction layout.
   *
   * A linear `clusterBy(c1, c2)` compact sorts lexicographically: files
   * get narrow `c1` intervals but each spans nearly the full `c2`
   * range, so the manifest's min/max skipping bites on `c1` probes
   * only. Interleaving the bits of both columns into one sort key
-  * ([[Scale.zValue2]] — the same codegen'd shift/or expression the
+  * ([[zValue2]] — the same codegen'd shift/or expression the
   * standalone `q_zorder` curve uses) places rows close in EITHER
   * dimension into nearby files, so a range probe on any single
   * clustered dimension prunes to ~sqrt of the files instead of all of
   * them — the Delta `OPTIMIZE ZORDER BY` shape for multi-predicate
   * workloads.
   *
-  * New here is only the normalization: arbitrary-ranged numeric
+  * The layout adds the normalization: arbitrary-ranged numeric
   * columns are min/max-scaled to 16-bit ranks (one column-pruned
   * aggregate over the snapshot supplies the extrema) so the interleave
   * treats both dimensions at equal granularity. Ties within a 2^-16
@@ -24,6 +25,31 @@ import org.apache.spark.sql.functions._
   * stay exact whatever the order.
   */
 object ZOrder {
+
+  /** Two-dimensional Z-order (Morton) value: interleave the low `bits`
+    * bits of `x` (even positions) and `y` (odd positions). Sorting a
+    * table by z clusters BOTH dimensions at once, so a box predicate
+    * (x-range AND y-range) touches O(perimeter) files instead of all
+    * of them. Pure shift/and/or built-ins — codegen'd, row-local, no
+    * UDF; inputs must already be quantized to [0, 2^bits) (callers
+    * bucket or rank first). `Z_VALUE2` is the DuckDB twin generated
+    * from the same loop. */
+  def zValue2(x: Column, y: Column, bits: Int): Column = {
+    require(bits >= 1 && bits <= 31, s"bits out of range: $bits")
+    val xl = x.cast("long"); val yl = y.cast("long")
+    (0 until bits).map { i =>
+      shiftleft(shiftrightunsigned(xl, i).bitwiseAND(lit(1L)), 2 * i)
+        .bitwiseOR(shiftleft(
+          shiftrightunsigned(yl, i).bitwiseAND(lit(1L)), 2 * i + 1))
+    }.reduce(_ bitwiseOR _)
+  }
+
+  /** DuckDB twin of [[zValue2]]. */
+  def Z_VALUE2(x: String, y: String, bits: Int): String =
+    (0 until bits).map { i =>
+      s"((((($x) >> $i) & 1) << ${2 * i}) | " +
+        s"(((($y) >> $i) & 1) << ${2 * i + 1}))"
+    }.mkString("(", " | ", ")")
 
   /** Normalized 16-bit rank of `c` for extrema [mn, mx] → [0, 65535];
     * constant-span and NULL values rank 0 (NULLs sort first — they
@@ -52,7 +78,7 @@ object ZOrder {
       if (r.isNullAt(2 * i) || r.isNullAt(2 * i + 1)) lit(0L)
       else rank16(col(c), r.getDouble(2 * i), r.getDouble(2 * i + 1)) }
     val zc = "__graft_zorder"
-    df.withColumn(zc, Scale.zValue2(ranks(0), ranks(1), 16))
+    df.withColumn(zc, zValue2(ranks(0), ranks(1), 16))
       .repartitionByRange(n, col(zc))
       .sortWithinPartitions(zc)
       .drop(zc)

@@ -14,9 +14,8 @@ import graft.io.Tables
   *    in the executed plan string): each bucket pair joins where it
   *    sits. This is THE 100 TB fact-to-fact join answer when neither
   *    side broadcasts — pay the shuffle once at write time, never
-  *    again on any of the joins that follow — previously proven in
-  *    `ops/Scale` + `LayoutSpec`, now oracle-checked end-to-end as a
-  *    registry query.
+  *    again on any of the joins that follow — oracle-checked
+  *    end-to-end, and `LayoutSpec` runs the row to pin the receipt.
   */
 object Wave53Queries extends QueryModule {
 

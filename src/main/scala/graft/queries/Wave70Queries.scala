@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Scratch
+import graft.{Scratch, Session}
 import graft.io.Tables
 import graft.ops.Versioned
 import graft.text.Dedup
@@ -38,45 +38,40 @@ object Wave70Queries extends QueryModule {
     shiftrightunsigned(Dedup.md5Hash64(concat_ws("#", cols: _*)), 4)
 
   def qManifestSegments(s: SparkSession, d: String): DataFrame = {
-    val prev = s.conf.getOption("graft.lake.manifestInlineRows")
-    s.conf.set("graft.lake.manifestInlineRows", "8")
-    try Scratch.withDir("graft_mseg") { scratch =>
-      val dir = scratch + "/t"
-      val o = Tables.load(s, d, "orders")
-        .select(col("o_orderkey").as("k"), col("o_custkey").as("c"),
-          col("o_totalprice").as("p"))
-      Versioned.init(o.filter(col("k") % 3 === 0).repartition(6), dir)
-      Versioned.append(o.filter(col("k") % 3 === 1).repartition(4), dir)
-      val (top1, seg1) = Versioned.manifestShape(s, dir)
-      val files1 = Versioned.files(s, dir).size
-      Versioned.append(o.filter(col("k") % 3 === 2).repartition(4), dir)
-      val (top2, seg2) = Versioned.manifestShape(s, dir)
-      val files2 = Versioned.files(s, dir).size
-      val er = Versioned.deleteVectored(s, dir, col("k") % 7 === 0)
-      val (top3, seg3) = Versioned.manifestShape(s, dir)
-      val r = Versioned.read(s, dir)
-        .withColumn("fp", fpCol(col("k"), col("c"),
-          floor(col("p") * lit(100.0) + lit(0.5)).cast("long")))
-        .agg(count(lit(1)).as("n"), Q.dsum(col("p")).as("sp"),
-          expr("bit_xor(fp)").as("xf")).head()
-      import s.implicits._
-      Seq((r.getLong(0), r.getDouble(1), r.getLong(2),
-          Q.receipt(seg1 >= 1L && top1 < files1,
-            s"append must seal past the threshold: top=$top1 " +
-              s"segs=$seg1 files=$files1"),
-          Q.receipt(seg2 == seg1 &&
-              top2 == top1 + (files2 - files1) && files2 > files1,
-            s"the sealed segment must carry forward verbatim: " +
-              s"($top1,$seg1,$files1) -> ($top2,$seg2,$files2)"),
-          Q.receipt(top3 == top2 && seg3 == seg2 && er.deletedRows > 0L,
-            s"DV delete must copy the top level forward: " +
-              s"($top2,$seg2) -> ($top3,$seg3) del=${er.deletedRows}")))
-        .toDF("n_rows", "sum_price", "xor_fp", "append_seals",
-          "segments_reused", "dv_metadata_only")
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set("graft.lake.manifestInlineRows", v)
-        case None => s.conf.unset("graft.lake.manifestInlineRows")
+    Session.withConf(s, "graft.lake.manifestInlineRows" -> "8") {
+      Scratch.withDir("graft_mseg") { scratch =>
+        val dir = scratch + "/t"
+        val o = Tables.load(s, d, "orders")
+          .select(col("o_orderkey").as("k"), col("o_custkey").as("c"),
+            col("o_totalprice").as("p"))
+        Versioned.init(o.filter(col("k") % 3 === 0).repartition(6), dir)
+        Versioned.append(o.filter(col("k") % 3 === 1).repartition(4), dir)
+        val (top1, seg1) = Versioned.manifestShape(s, dir)
+        val files1 = Versioned.files(s, dir).size
+        Versioned.append(o.filter(col("k") % 3 === 2).repartition(4), dir)
+        val (top2, seg2) = Versioned.manifestShape(s, dir)
+        val files2 = Versioned.files(s, dir).size
+        val er = Versioned.deleteVectored(s, dir, col("k") % 7 === 0)
+        val (top3, seg3) = Versioned.manifestShape(s, dir)
+        val r = Versioned.read(s, dir)
+          .withColumn("fp", fpCol(col("k"), col("c"),
+            floor(col("p") * lit(100.0) + lit(0.5)).cast("long")))
+          .agg(count(lit(1)).as("n"), Q.dsum(col("p")).as("sp"),
+            expr("bit_xor(fp)").as("xf")).head()
+        import s.implicits._
+        Seq((r.getLong(0), r.getDouble(1), r.getLong(2),
+            Q.receipt(seg1 >= 1L && top1 < files1,
+              s"append must seal past the threshold: top=$top1 " +
+                s"segs=$seg1 files=$files1"),
+            Q.receipt(seg2 == seg1 &&
+                top2 == top1 + (files2 - files1) && files2 > files1,
+              s"the sealed segment must carry forward verbatim: " +
+                s"($top1,$seg1,$files1) -> ($top2,$seg2,$files2)"),
+            Q.receipt(top3 == top2 && seg3 == seg2 && er.deletedRows > 0L,
+              s"DV delete must copy the top level forward: " +
+                s"($top2,$seg2) -> ($top3,$seg3) del=${er.deletedRows}")))
+          .toDF("n_rows", "sum_price", "xor_fp", "append_seals",
+            "segments_reused", "dv_metadata_only")
       }
     }
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Scratch
+import graft.{Scratch, Session}
 import graft.io.Tables
 import graft.text.Similarity
 
@@ -206,9 +206,7 @@ object Wave71Queries extends QueryModule {
     * plans and the CBO's estimated aggregate row count; data columns
     * prove the broadcast plan computes the right answer. */
   def qLakeNdvCbo(s: SparkSession, d: String): DataFrame = {
-    val cboPrev = s.conf.getOption("spark.sql.cbo.enabled")
-    val thrPrev = s.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    try Scratch.withDir("graft_ndv") { work =>
+    Scratch.withDir("graft_ndv") { work =>
       val (withS, noS) = (s"$work/a", s"$work/b")
       val data = Tables.load(s, d, "orders").select(
         col("o_orderkey").as("k"), col("o_totalprice").as("p"),
@@ -216,56 +214,46 @@ object Wave71Queries extends QueryModule {
       graft.ops.Versioned.init(data.repartition(4), withS,
         statsCols = Seq("g"))
       graft.ops.Versioned.init(data.repartition(4), noS)
-      s.conf.set("spark.sql.cbo.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "8192")
-      def shaped(dir: String) = {
-        val t = s.read.format("graft-lake").option("path", dir).load()
-        val agg = t.groupBy("g").agg(count(lit(1)).as("n_g"))
-        t.join(agg, "g")
-      }
-      // r17 (guide §6 metadata, the q_tpcds_share_lake fix): ONE
-      // planned instance of the sketched table feeds both receipts
-      // and the output below — each shaped() call re-loads the lake
-      // table (a manifest-read job) for a byte-identical plan.
-      val withShaped = shaped(withS)
-      val withPlan = withShaped.queryExecution.executedPlan.toString
-      val noPlan = shaped(noS).queryExecution.executedPlan.toString
-      // the estimate the CBO actually used for the sketched aggregate
-      val aggRows = withShaped.queryExecution.optimizedPlan.collect {
-        case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
-          a.stats.rowCount
-      }.flatten.headOption.getOrElse(BigInt(-1))
-      val rNdv = Q.receipt(
-        withPlan.contains("BroadcastHashJoin") &&
-          aggRows >= BigInt(1) && aggRows <= BigInt(10),
-        s"manifest NDV must broadcast the 5-group aggregate: " +
-          s"aggRows=$aggRows plan=${withPlan.take(400)}")
-      val rNo = Q.receipt(
-        noPlan.contains("SortMergeJoin") &&
-          !noPlan.contains("BroadcastHashJoin"),
-        s"without NDV the same shape must sort-merge: " +
-          s"plan=${noPlan.take(400)}")
-      val out = withShaped.groupBy("g")
-        .agg(count(lit(1)).as("n_orders"),
-          Q.dsum(col("p")).as("revenue"),
-          max(col("n_g")).as("n_g"))
-        .orderBy("g")
-      import s.implicits._
-      out.collect().toSeq
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-          r.getLong(3), rNdv, rNo))
-        .toDF("g", "n_orders", "revenue", "n_g",
-          "ndv_broadcast", "no_ndv_sortmerge")
-    } finally {
-      cboPrev match {
-        case Some(v) => s.conf.set("spark.sql.cbo.enabled", v)
-        case None => s.conf.unset("spark.sql.cbo.enabled")
-      }
-      thrPrev match {
-        case Some(v) =>
-          s.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-        case None =>
-          s.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      Session.withConf(s, "spark.sql.cbo.enabled" -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> "8192") {
+        def shaped(dir: String) = {
+          val t = s.read.format("graft-lake").option("path", dir).load()
+          val agg = t.groupBy("g").agg(count(lit(1)).as("n_g"))
+          t.join(agg, "g")
+        }
+        // r17 (guide §6 metadata, the q_tpcds_share_lake fix): ONE
+        // planned instance of the sketched table feeds both receipts
+        // and the output below — each shaped() call re-loads the lake
+        // table (a manifest-read job) for a byte-identical plan.
+        val withShaped = shaped(withS)
+        val withPlan = withShaped.queryExecution.executedPlan.toString
+        val noPlan = shaped(noS).queryExecution.executedPlan.toString
+        // the estimate the CBO actually used for the sketched aggregate
+        val aggRows = withShaped.queryExecution.optimizedPlan.collect {
+          case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
+            a.stats.rowCount
+        }.flatten.headOption.getOrElse(BigInt(-1))
+        val rNdv = Q.receipt(
+          withPlan.contains("BroadcastHashJoin") &&
+            aggRows >= BigInt(1) && aggRows <= BigInt(10),
+          s"manifest NDV must broadcast the 5-group aggregate: " +
+            s"aggRows=$aggRows plan=${withPlan.take(400)}")
+        val rNo = Q.receipt(
+          noPlan.contains("SortMergeJoin") &&
+            !noPlan.contains("BroadcastHashJoin"),
+          s"without NDV the same shape must sort-merge: " +
+            s"plan=${noPlan.take(400)}")
+        val out = withShaped.groupBy("g")
+          .agg(count(lit(1)).as("n_orders"),
+            Q.dsum(col("p")).as("revenue"),
+            max(col("n_g")).as("n_g"))
+          .orderBy("g")
+        import s.implicits._
+        out.collect().toSeq
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+            r.getLong(3), rNdv, rNo))
+          .toDF("g", "n_orders", "revenue", "n_g",
+            "ndv_broadcast", "no_ndv_sortmerge")
       }
     }
   }

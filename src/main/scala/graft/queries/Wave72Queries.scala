@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Session
 import graft.io.Tables
 import graft.ops.Versioned
 
@@ -143,23 +144,20 @@ object Wave72Queries extends QueryModule {
   // ---- Q36 share-within-parent, NDV-driven plan ----
 
   def qTpcdsShareLake(s: SparkSession, d: String): DataFrame = {
-    val cboPrev = s.conf.getOption("spark.sql.cbo.enabled")
-    val thrPrev = s.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      def shaped() = {
-        val byNation = lakeStar(s, d)
-          .groupBy(col("r_name"), col("n_name"))
-          .agg(count(lit(1)).as("n_orders"),
-            Q.dsum(col("o_totalprice")).as("rev_nation"))
-        val byRegion = byNation.groupBy(col("r_name"))
-          .agg(sum(col("rev_nation")).as("rev_region"))
-        byNation.join(byRegion, "r_name")
-      }
-      // the claim is about the r_name-keyed share join specifically —
-      // dim-join strategies elsewhere are SF-dependent (customer
-      // outgrows any fixed broadcast budget) and not part of it
-      s.conf.set("spark.sql.cbo.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "8192")
+    def shaped() = {
+      val byNation = lakeStar(s, d)
+        .groupBy(col("r_name"), col("n_name"))
+        .agg(count(lit(1)).as("n_orders"),
+          Q.dsum(col("o_totalprice")).as("rev_nation"))
+      val byRegion = byNation.groupBy(col("r_name"))
+        .agg(sum(col("rev_nation")).as("rev_region"))
+      byNation.join(byRegion, "r_name")
+    }
+    // the claim is about the r_name-keyed share join specifically —
+    // dim-join strategies elsewhere are SF-dependent (customer
+    // outgrows any fixed broadcast budget) and not part of it
+    Session.withConf(s, "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "8192") {
       // r17 (guide §6 metadata): ONE CBO-planned instance feeds both
       // receipts AND the output below — every shaped() call re-loads
       // all four lake tables (a manifest-read job each), so the former
@@ -172,8 +170,8 @@ object Wave72Queries extends QueryModule {
         case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
           a.stats.rowCount
       }.flatten.headOption.getOrElse(BigInt(-1))
-      s.conf.set("spark.sql.cbo.enabled", "false")
-      val noCboPlan = shaped().queryExecution.executedPlan.toString
+      val noCboPlan = Session.withConf(s, "spark.sql.cbo.enabled" -> "false")(
+        shaped().queryExecution.executedPlan.toString)
       val rNdv = Q.receipt(
         cboPlan.contains("BroadcastHashJoin [r_name") &&
           aggRows >= BigInt(1) && aggRows <= BigInt(200),
@@ -183,7 +181,6 @@ object Wave72Queries extends QueryModule {
         noCboPlan.contains("SortMergeJoin [r_name"),
         s"without CBO the share join must sort-merge: " +
           s"${noCboPlan.take(400)}")
-      s.conf.set("spark.sql.cbo.enabled", "true")
       val out = withCbo
         .select(col("r_name").as("region"), col("n_name").as("nation"),
           col("n_orders"), col("rev_nation"),
@@ -195,15 +192,6 @@ object Wave72Queries extends QueryModule {
           r.getDouble(3), r.getDouble(4), rNdv, rNo))
         .toDF("region", "nation", "n_orders", "rev_nation", "share",
           "ndv_broadcast", "no_cbo_sortmerge")
-    } finally {
-      cboPrev match {
-        case Some(v) => s.conf.set("spark.sql.cbo.enabled", v)
-        case None => s.conf.unset("spark.sql.cbo.enabled")
-      }
-      thrPrev match {
-        case Some(v) => s.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-        case None => s.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      }
     }
   }
 

@@ -214,20 +214,21 @@ object Wave7Queries extends QueryModule {
     }
   }
 
-  /** Z-order (Morton) clustering values ([[graft.ops.Scale.zValue2]]):
+  /** Z-order (Morton) clustering values ([[graft.ops.ZOrder.zValue2]]):
     * orders quantized on (o_custkey mod 256, o_orderkey mod 256) and
     * interleaved to a 16-bit z-value, aggregated per high-byte bucket
     * — the layout key that clusters TWO dimensions into one sort so a
-    * box predicate touches O(perimeter) files ([[graft.ops.Scale
-    * .writeZOrdered]]; the file-count effect is measured directly in
-    * `LayoutSpec`). The oracle replays the interleave loop bit-for-bit
-    * (generated from the same Scala loop), so every bucket's count and
-    * key envelope hash-checks the bit arithmetic cross-engine. */
+    * box predicate touches O(perimeter) files (the lake's Z-ordered
+    * compaction, [[graft.ops.ZOrder.layout]]; the file-count effect is
+    * measured in `Wave46Spec`). The oracle replays the interleave loop
+    * bit-for-bit (generated from the same Scala loop), so every
+    * bucket's count and key envelope hash-checks the bit arithmetic
+    * cross-engine. */
   def qZorder(s: SparkSession, d: String): DataFrame = {
-    import graft.ops.Scale
+    import graft.ops.ZOrder
     Tables.load(s, d, "orders")
       .select(col("o_orderkey"),
-        Scale.zValue2(col("o_custkey") % 256, col("o_orderkey") % 256, 8)
+        ZOrder.zValue2(col("o_custkey") % 256, col("o_orderkey") % 256, 8)
           .as("z"))
       .groupBy(shiftrightunsigned(col("z"), 8).as("z_bucket"))
       .agg(count(lit(1)).as("n_orders"),
@@ -452,7 +453,7 @@ object Wave7Queries extends QueryModule {
     "q_zorder" ->
       s"""WITH z AS (
          |  SELECT o_orderkey,
-         |    ${graft.ops.Scale.Z_VALUE2("o_custkey % 256", "o_orderkey % 256", 8)} AS z
+         |    ${graft.ops.ZOrder.Z_VALUE2("o_custkey % 256", "o_orderkey % 256", 8)} AS z
          |  FROM orders)
          |SELECT z >> 8 AS z_bucket, CAST(count(*) AS BIGINT) AS n_orders,
          |  min(o_orderkey) AS min_key, max(o_orderkey) AS max_key

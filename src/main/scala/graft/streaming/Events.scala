@@ -67,6 +67,10 @@ object Events {
 
   private val runId = new AtomicInteger(0)
 
+  /** State stores per streaming run: the keyspaces here are bounded,
+    * so the store count is a fixed cost sized to them. */
+  private val statePartitions = 4
+
   /** Run a streaming aggregation to completion on the bounded input and
     * return its final result as a local batch DataFrame; the memory
     * sink's view is dropped before returning.
@@ -79,78 +83,65 @@ object Events {
     * ([[statePartitions]]) instead of inheriting the batch shuffle
     * width. The batch conf is restored before returning (results are
     * partition-count-independent: decimal-exact aggs, per-key state). */
-  /** State stores per streaming run: the keyspaces here are bounded,
-    * so the store count is a fixed cost sized to them. */
-  private val statePartitions = 4
-
   def runToCompletion(spark: SparkSession, agg: DataFrame,
                       mode: String = "complete",
                       wideState: Boolean = false,
                       needsTimers: Boolean = false): DataFrame = {
     val name = s"graft_stream_${runId.incrementAndGet()}"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = spark.conf
-      .get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     // state-store count = shuffle partitions, and EVERY store pays
     // setup + per-batch commit — for RocksDB that's a native instance
     // and a changelog each. The keyspaces here are bounded (event
     // types, active users), so the store count is a pure fixed cost:
     // size it to the keyspace, not to the batch shuffle width.
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+    val stores = Seq("spark.sql.shuffle.partitions" -> statePartitions.toString)
     // a no-data batch exists to advance the watermark: fire event-time
     // timers and evict expired state. Queries whose RESULT doesn't
     // depend on timers (pure aggregations, dedup counts) skip it — the
     // eviction batch would re-commit every state store once more for no
     // output change (for large state, that doubles the query's cost)
-    if (!needsTimers)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val noData =
+      if (needsTimers) Nil
+      else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
     // large (row-per-event) state: RocksDB writes an LSM + changelog
     // instead of the HDFS-backed provider's full JVM-heap snapshot per
     // commit — the standard choice once state stops fitting heap
-    val prevProvider = spark.conf
-      .get("spark.sql.streaming.stateStore.providerClass", "")
-    if (wideState) spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val provider =
+      if (!wideState) Nil
+      else Seq("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // a BOUNDED AvailableNow replay into a memory sink is ephemeral by
     // construction — its checkpoint (offset log, commit log, one state
     // snapshot per store per batch) has zero recovery value
-    try graft.Scratch.withCheckpoint(name) { ck =>
-      val q = agg.writeStream
-        .outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      // AvailableNow self-terminates AFTER its final no-data batch — the
-      // batch that advances the watermark and flushes timer/append-mode
-      // emissions. processAllAvailable() alone can return between the
-      // last DATA batch and that final batch, and stop() would then kill
-      // the flush (observed: an append-mode windowed agg emitting 0 rows
-      // on a multi-file replay). Wait for self-termination; the bounded
-      // trigger guarantees it arrives.
-      try {
-        q.processAllAvailable()
-        // a false return means the bounded trigger did NOT finish —
-        // stopping now would truncate the final flush; fail loudly
-        // instead of handing back a silently partial table
-        if (!q.awaitTermination(300000L))
-          sys.error(s"streaming replay $name did not terminate within 300s")
-      } finally q.stop()
-      // the sink's rows already sit on the driver: hand them back as a
-      // local frame, so the view (dropped below) does not hold them in
-      // the session catalog for the JVM's life
-      val out = spark.table(name)
-      spark.createDataFrame(out.collectAsList(), out.schema)
-    } finally {
-      spark.catalog.dropTempView(name)
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      if (wideState && prevProvider.nonEmpty)
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prevProvider)
-      else if (wideState)
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    graft.Session.withConf(spark, stores ++ noData ++ provider: _*) {
+      try graft.Scratch.withCheckpoint(name) { ck =>
+        val q = agg.writeStream
+          .outputMode(mode)
+          .format("memory")
+          .queryName(name)
+          .option("checkpointLocation", ck)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        // AvailableNow self-terminates AFTER its final no-data batch — the
+        // batch that advances the watermark and flushes timer/append-mode
+        // emissions. processAllAvailable() alone can return between the
+        // last DATA batch and that final batch, and stop() would then kill
+        // the flush (observed: an append-mode windowed agg emitting 0 rows
+        // on a multi-file replay). Wait for self-termination; the bounded
+        // trigger guarantees it arrives.
+        try {
+          q.processAllAvailable()
+          // a false return means the bounded trigger did NOT finish —
+          // stopping now would truncate the final flush; fail loudly
+          // instead of handing back a silently partial table
+          if (!q.awaitTermination(300000L))
+            sys.error(s"streaming replay $name did not terminate within 300s")
+        } finally q.stop()
+        // the sink's rows already sit on the driver: hand them back as a
+        // local frame, so the view (dropped below) does not hold them in
+        // the session catalog for the JVM's life
+        val out = spark.table(name)
+        spark.createDataFrame(out.collectAsList(), out.schema)
+      } finally spark.catalog.dropTempView(name)
     }
   }
 

@@ -129,9 +129,8 @@ object Curation {
     * full rows rejoin once, id-keyed, just before the write. */
   def materialize(docs: DataFrame, path: String,
       jacThreshold: Double): Unit =
-    graft.ops.Scale.writePartitioned(
-      docs.join(keepers(docs, jacThreshold).select("doc_id"), "doc_id"),
-      path, "source")
+    docs.join(keepers(docs, jacThreshold).select("doc_id"), "doc_id")
+      .write.mode("overwrite").partitionBy("source").parquet(path)
 
   /** Per-source release manifest: doc count, token mass, and an
     * ORDER-INDEPENDENT content fingerprint (bit_xor of the md5-derived

@@ -77,8 +77,6 @@ object QualityModel {
         / greatest(length(t) - 2, lit(1)),
       "CAST(len(list_distinct(list_transform(generate_series(1, greatest(length(t) - 2, 1)), i -> substr(t, CAST(i AS INTEGER), 3)))) AS DOUBLE) / greatest(length(t) - 2, 1)"))
 
-  val featureNames: Seq[String] = feats.map(_._1)
-
   /** Deterministic planted-junk corpus: every 13th doc's text replaced
     * by one of three junk flavors. Output: doc_id, source, t (the
     * possibly-junked text), planted, is_train. */

@@ -47,15 +47,13 @@ class CsvSpec extends SparkSuite {
   test("changing a conf that inference reads infers again") {
     withCsv("t,v\n2024-01-02 03:04:05,1\n") { path =>
       val key = "spark.sql.timestampType"
-      val was = spark.conf.getOption(key)
-      try {
-        spark.conf.set(key, "TIMESTAMP_LTZ")
-        assert(Csv.readInferred(spark, path).schema("t").dataType == TimestampType)
-        spark.conf.set(key, "TIMESTAMP_NTZ")
+      Session.withConf(spark, key -> "TIMESTAMP_LTZ")(
+        assert(Csv.readInferred(spark, path).schema("t").dataType == TimestampType))
+      Session.withConf(spark, key -> "TIMESTAMP_NTZ") {
         val (df, sites) = inferring(path)
         assert(sites.nonEmpty)
         assert(df.schema("t").dataType == TimestampNTZType)
-      } finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      }
     }
   }
 }

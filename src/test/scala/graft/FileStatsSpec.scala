@@ -159,7 +159,6 @@ class FileStatsSpec extends SparkSuite {
       "the CBO, never those of the column that held its name") {
     import spark.implicits._
     val work = tmp("graft_fs_swap")
-    val cbo = spark.conf.getOption("spark.sql.cbo.enabled")
     try {
       val t = s"$work/t"
       // two files: x 1..50 / 51..100, y 1001..1050 / 1051..1100
@@ -167,9 +166,9 @@ class FileStatsSpec extends SparkSuite {
         .repartitionByRange(2, col("x")), t, statsCols = Seq("x", "y"))
       Versioned.renameColumn(spark, t, "x", "z")
       Versioned.renameColumn(spark, t, "y", "x")
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      val st = spark.sql(s"SELECT x, z FROM lake.`$t`").queryExecution
-        .optimizedPlan.stats.attributeStats.map { case (a, s) => a.name -> s }
+      val st = Session.withConf(spark, "spark.sql.cbo.enabled" -> "true")(
+        spark.sql(s"SELECT x, z FROM lake.`$t`").queryExecution
+          .optimizedPlan.stats.attributeStats.map { case (a, s) => a.name -> s })
       assert(st("x").min.contains(1001L) && st("x").max.contains(1100L),
         s"x holds 1001..1100, got ${st("x")}")
       assert(st("z").min.contains(1L) && st("z").max.contains(100L),
@@ -182,10 +181,6 @@ class FileStatsSpec extends SparkSuite {
         assert(spark.sql(s"SELECT x FROM lake.`$t` WHERE $where").count() == 50)
         assert(graft.sources.LakeSource.lastPlanned.get() == ((1, 2)), where)
       }
-    } finally {
-      cbo.fold(spark.conf.unset("spark.sql.cbo.enabled"))(
-        spark.conf.set("spark.sql.cbo.enabled", _))
-      rm(work)
-    }
+    } finally rm(work)
   }
 }

@@ -141,8 +141,7 @@ class LakeCatalogSpec extends SparkSuite {
     // a segmented manifest lists the files its segments reference,
     // never the `seg:` refs themselves
     val seg = tmp("graft_cat5s")
-    spark.conf.set("graft.lake.manifestInlineRows", "2")
-    try {
+    Session.withConf(spark, "graft.lake.manifestInlineRows" -> "2") {
       Versioned.init(Seq((1L, 10.0)).toDF("k", "p").coalesce(1), seg)
       (2 to 5).foreach(i => Versioned.append(
         Seq((i.toLong, i * 10.0)).toDF("k", "p").coalesce(1), seg))
@@ -151,7 +150,7 @@ class LakeCatalogSpec extends SparkSuite {
         .as[String].collect().toSeq
       assert(segFiles.sorted == Versioned.files(spark, seg).sorted)
       assert(segFiles.length == 5 && !segFiles.exists(_.startsWith("seg:")))
-    } finally spark.conf.unset("graft.lake.manifestInlineRows")
+    }
   }
 
   test("root-configured catalog resolves namespace identifiers and " +

@@ -141,32 +141,25 @@ class LakeNdvSpec extends SparkSuite {
       "plan-time broadcast; the unsketched twin sort-merges") {
     val work = tmp("graft_ndv_spec")
     val a = s"$work/a"; val b = s"$work/b"
-    val cbo = spark.conf.getOption("spark.sql.cbo.enabled")
-    val thr = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
     try {
       Versioned.init(data.repartition(4), a, statsCols = Seq("g"))
       Versioned.init(data.repartition(4), b)
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "8192")
-      def shaped(dir: String) = {
-        val t = spark.read.format("graft-lake").option("path", dir).load()
-        t.join(t.groupBy("g").agg(count(lit(1)).as("n_g")), "g")
+      Session.withConf(spark, "spark.sql.cbo.enabled" -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> "8192") {
+        def shaped(dir: String) = {
+          val t = spark.read.format("graft-lake").option("path", dir).load()
+          t.join(t.groupBy("g").agg(count(lit(1)).as("n_g")), "g")
+        }
+        val withPlan = shaped(a).queryExecution.executedPlan.toString
+        val noPlan = shaped(b).queryExecution.executedPlan.toString
+        assert(withPlan.contains("BroadcastHashJoin"),
+          s"NDV table must broadcast:\n${withPlan.take(500)}")
+        assert(noPlan.contains("SortMergeJoin") &&
+            !noPlan.contains("BroadcastHashJoin"),
+          s"twin without NDV must sort-merge:\n${noPlan.take(500)}")
+        // and the broadcast plan computes the right answer
+        assert(shaped(a).count() == shaped(b).count())
       }
-      val withPlan = shaped(a).queryExecution.executedPlan.toString
-      val noPlan = shaped(b).queryExecution.executedPlan.toString
-      assert(withPlan.contains("BroadcastHashJoin"),
-        s"NDV table must broadcast:\n${withPlan.take(500)}")
-      assert(noPlan.contains("SortMergeJoin") &&
-          !noPlan.contains("BroadcastHashJoin"),
-        s"twin without NDV must sort-merge:\n${noPlan.take(500)}")
-      // and the broadcast plan computes the right answer
-      assert(shaped(a).count() == shaped(b).count())
-    } finally {
-      cbo.fold(spark.conf.unset("spark.sql.cbo.enabled"))(
-        spark.conf.set("spark.sql.cbo.enabled", _))
-      thr.fold(spark.conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
-      rm(work)
-    }
+    } finally rm(work)
   }
 }

@@ -25,11 +25,8 @@ class LakeSegmentsSpec extends SparkSuite {
     .filter(col("o_orderkey") >= lo && col("o_orderkey") < hi)
     .select(col("o_orderkey").as("k"), col("o_totalprice").as("p"))
 
-  private def withThreshold[T](n: Int)(body: => T): T = {
-    spark.conf.set("graft.lake.manifestInlineRows", n.toString)
-    try body
-    finally spark.conf.unset("graft.lake.manifestInlineRows")
-  }
+  private def withThreshold[T](n: Int)(body: => T): T =
+    Session.withConf(spark, "graft.lake.manifestInlineRows" -> n.toString)(body)
 
   private def sumK(df: org.apache.spark.sql.DataFrame): Long =
     df.agg(sum(col("k"))).head().getLong(0)

@@ -554,10 +554,9 @@ class LakeV2Spec extends SparkSuite {
     }
     try {
       Versioned.init(batch(0).coalesce(1), dir) // session default: INT96
-      val key = "spark.sql.parquet.outputTimestampType"
-      spark.conf.set(key, "TIMESTAMP_MICROS")
-      try Versioned.append(batch(10).coalesce(1), dir)
-      finally spark.conf.unset(key)
+      Session.withConf(spark,
+          "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")(
+        Versioned.append(batch(10).coalesce(1), dir))
       check(sorted(batch(0).union(batch(10))), "INT96 + INT64 appends")
       // the direct V2 write: executor-staged files, APPEND commit
       batch(20).createOrReplaceTempView("lake_types_src")

@@ -27,13 +27,10 @@ class LayoutIndependenceSpec extends SparkSuite {
     import graft.queries.Wave19Queries
     // the registry query reads from parquet; repartitioning happens
     // inside via the corpus scan — vary shuffle partitions instead
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    def run(parts: String) = {
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      try Wave19Queries.qTextrankKeywords(spark, sf("sf0.001"))
-        .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
+    def run(parts: String) =
+      Session.withConf(spark, "spark.sql.shuffle.partitions" -> parts)(
+        Wave19Queries.qTextrankKeywords(spark, sf("sf0.001"))
+          .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq)
     assert(run("4") == run("32"))
   }
 
@@ -45,12 +42,9 @@ class LayoutIndependenceSpec extends SparkSuite {
       run: (org.apache.spark.sql.SparkSession, String)
         => org.apache.spark.sql.DataFrame): Unit =
     test(s"$name identical at 4 vs 32 shuffle partitions (Q.gsum grid)") {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      def go(parts: String) = {
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
-        try run(spark, sf("sf0.001")).collect().map(_.toSeq).toSeq
-        finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-      }
+      def go(parts: String) =
+        Session.withConf(spark, "spark.sql.shuffle.partitions" -> parts)(
+          run(spark, sf("sf0.001")).collect().map(_.toSeq).toSeq)
       assert(go("4") == go("32"))
     }
 
@@ -60,14 +54,11 @@ class LayoutIndependenceSpec extends SparkSuite {
 
   test("multi-touch channel credit identical at 4 vs 32 shuffle partitions") {
     import graft.queries.Wave20Queries
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    def run(parts: String) = {
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      try Wave20Queries.qMultiTouch(spark, sf("sf0.001"))
-        .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
-        .toSeq
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
+    def run(parts: String) =
+      Session.withConf(spark, "spark.sql.shuffle.partitions" -> parts)(
+        Wave20Queries.qMultiTouch(spark, sf("sf0.001"))
+          .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
+          .toSeq)
     assert(run("4") == run("32"))
   }
 }

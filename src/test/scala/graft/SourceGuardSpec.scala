@@ -15,7 +15,9 @@ import scala.jdk.CollectionConverters._
   * lake commits retry only through one optimistic-commit loop, only
   * the layout-setting operations take a partition column, the
   * report path (returns, pipeline, jobs) caches no frame, only six
-  * objects are mains, and one helper listens to Spark's jobs. */
+  * objects are mains, one helper listens to Spark's jobs, one helper
+  * sets and restores session confs, and one module holds the Morton
+  * curve. */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private val main = Paths.get("src/main/scala")
@@ -29,6 +31,15 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
       .map(root.relativize(_).toString).toSeq.sorted
     finally files.close()
   }
+
+  /** A scaladoc or comment line. */
+  private val comment = """^\s*(\*|/\*|//)""".r
+
+  /** Files under `src/main` whose CODE lines contain `needle`:
+    * scaladoc and comment lines are skipped. */
+  private def codeHolders(needle: String): Seq[String] =
+    holders(needle).filter(f => Files.readAllLines(main.resolve(f)).asScala
+      .exists(l => comment.findFirstIn(l).isEmpty && l.contains(needle)))
 
   /** The lake's files: the log and the operation families mixed into
     * `Versioned`. */
@@ -87,6 +98,25 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
         "\"#nulls:", "\"#bloom:"))
       assert(holders(needle) == Seq("graft/ops/FileStats.scala"),
         s"$needle spelled in: ${holders(needle)}")
+  }
+
+  test("one stats format: no file outside the lake keeps a _stats.json") {
+    assert(holders("_stats.json").isEmpty,
+      s"_stats.json spelled in: ${holders("_stats.json")}")
+  }
+
+  test("one Morton curve: zValue2 is defined only in ZOrder.scala") {
+    assert(holders("def zValue2") == Seq("graft/ops/ZOrder.scala"))
+    assert(holders("def Z_VALUE2") == Seq("graft/ops/ZOrder.scala"))
+  }
+
+  test("one scoped-conf helper: session confs are set and unset only in " +
+      "Session.scala") {
+    // LakeCatalog's scaladoc shows the catalog registration a user
+    // writes; comment lines are not code
+    for (needle <- Seq("conf.set(", "conf.unset("))
+      assert(codeHolders(needle) == Seq("graft/Session.scala"),
+        s"$needle called in: ${codeHolders(needle)}")
   }
 
   test("one DV codec: deletion vectors are read only as driver rows") {
@@ -162,7 +192,6 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
     // the member each code line belongs to; scaladoc and comment lines
     // are skipped
     val member = """^  (?:(?:private|protected)(?:\[\w+\])? )?def (\w+)""".r
-    val comment = """^\s*(\*|/\*|//)""".r
     val files = Files.list(ops)
     val takers = try files.iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>

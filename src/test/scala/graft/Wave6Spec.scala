@@ -467,12 +467,10 @@ class Wave6Spec extends SparkSuite {
     val d = sf("sf0.001")
     queries.foreach { name =>
       val fn = SparkEntry.queries(name)
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      val a = fn(spark, d).collect().map(_.toString).toSeq
-      spark.conf.set("spark.sql.shuffle.partitions", "32")
-      val b = fn(spark, d).collect().map(_.toString).toSeq
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      assert(a == b, s"$name drifted across shuffle layouts")
+      def at(parts: String) =
+        Session.withConf(spark, "spark.sql.shuffle.partitions" -> parts)(
+          fn(spark, d).collect().map(_.toString).toSeq)
+      assert(at("4") == at("32"), s"$name drifted across shuffle layouts")
     }
   }
 
